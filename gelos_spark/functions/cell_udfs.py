@@ -65,14 +65,3 @@ def cell_parent_col(cell: Column, res: int, parent_res: int) -> Column:
 def cell_child_pos_col(cell: Column) -> Column:
     """Quad position (0..3) within the parent: bit0=x, bit1=y."""
     return cell.bitwiseAND(F.lit(3))
-
-
-def cell_center_udf(res: int):
-    """pandas_udf: cell -> struct(lon, lat) center."""
-
-    @F.pandas_udf("lon double, lat double")
-    def _center(cell: pd.Series) -> pd.DataFrame:
-        lon, lat = cells.cell_to_lonlat(cell.to_numpy(), res)
-        return pd.DataFrame({"lon": lon, "lat": lat})
-
-    return _center

@@ -95,11 +95,6 @@ def cell_parent(cell: np.ndarray, res: int, parent_res: int) -> np.ndarray:
     return np.asarray(cell) >> np.int64(2 * (res - parent_res))
 
 
-def cell_child_pos(cell: np.ndarray) -> np.ndarray:
-    """Quad position 0..3 within the parent: bit0 = x-half, bit1 = y-half."""
-    return (np.asarray(cell) & np.int64(3)).astype(np.int64)
-
-
 def cell_ranges(cells: np.ndarray, res: int, tile_res: int) -> np.ndarray:
     """Merged [lo, hi] inclusive tile-cell id ranges covered by coarse
     cells (G4 grid arithmetic; the table-layer pushdown shape).
@@ -214,27 +209,11 @@ def cell_shell_batch(
     xs = (x[:, None] + off[None, :, 0]) % n
     ys = y[:, None] + off[None, :, 1]
     keep = (ys >= 0) & (ys < n)
-    # when the shell wraps the whole globe in x, offsets alias the
-    # same cell; dedup per row is handled downstream (distinct join key)
+    # when the shell wraps the whole globe in x (2*r1+1 > n), offsets
+    # alias the same cell; the kNN loops never expand that far (they
+    # switch to an exact pass first)
     idx = np.broadcast_to(np.arange(len(x))[:, None], xs.shape)[keep]
     return idx, xy_to_cell(xs[keep], ys[keep])
-
-
-def knn_bound_km(lat: np.ndarray, res: int, r: int) -> np.ndarray:
-    """Lower bound on the distance from a query at latitude ``lat`` to
-    any tile in a cell the disk-of-radius-r exploration has NOT
-    visited (grid Chebyshev distance >= r+1). Such a cell is at least
-    r full cell-extents away in x or y; the x extent is evaluated at
-    the worst (most poleward) latitude reachable within the explored
-    band. Conservative by construction; documented pole limitation in
-    SURVEY.md §7.3 (fixtures exclude |lat| > ~55)."""
-    n = 1 << res
-    lat = np.abs(np.asarray(lat, dtype=np.float64))
-    h_deg = 180.0 / n
-    h_km = h_deg * KM_PER_DEG_LAT_MIN
-    worst_lat = np.minimum(lat + (r + 1) * h_deg, 89.9999)
-    w_km = 360.0 / n * KM_PER_DEG_LAT_MIN * np.cos(worst_lat * np.pi / 180.0)
-    return r * np.minimum(h_km, np.maximum(w_km, 0.0))
 
 
 def unwrap_ring(ring: np.ndarray) -> tuple[np.ndarray, bool]:

@@ -4,42 +4,48 @@ cell disks with a secondary sort on haversine distance (SURVEY.md
 using ring-expansion over H3 disks with a secondary sort on
 haversine distance").
 
-Algorithm (driver-side iterative DataFrame loop — SURVEY.md §4 item 2):
+Algorithm (iterative DataFrame loop — SURVEY.md §4 item 2):
 
   The TILE side is the big side (10^12 rows at target scale): it is
-  cell-indexed by a pure JVM column expression, persisted, and NEVER
-  shuffled — each round equi-joins a broadcast shell-cell table
-  against it and only the matched candidates shuffle (keyed by
-  query_id) into the per-query top-k window.
-
-  The QUERY side is the small side (a retrieval request set). It is
-  pulled to the driver once; ring shells are computed in driver NumPy
-  (functions/cells.cell_shell_batch) and shipped per round as a
-  broadcast DataFrame. This keeps the whole loop at ONE distributed
-  action per round (the per-query aggregate that decides who is
-  finished) with zero Python stages in the executor plan — at local
-  benchmark scale the win is plan-compile/worker-startup latency; on
-  a cluster it means the only Python in the job is the driver loop.
-  Query sets beyond ~10^6 rows would need the (slower) distributed
-  shell variant — out of scope for a retrieval API.
+  cell-indexed by a pure JVM column expression and persisted, and one
+  aggregate over it measures tile density. Each round equi-joins the
+  active queries' shell cells against it and only the matched
+  candidates shuffle (keyed by query_id) into the per-query top-k
+  window.
 
   Round i explores the shell of cells with grid Chebyshev distance in
   (r_{i-1}, r_i] of each ACTIVE query's cell. The initial radius r_0
-  is chosen from measured tile density (one aggregate over the
-  indexed tile table) so the first disk is expected to hold ~3k
-  candidates — the common case finishes in ONE round. A query
-  finalizes when it holds >= k candidates whose k-th distance is <=
-  the conservative lower bound on anything outside the explored disk
-  (functions/cells.knn_bound_km). Queries still unresolved after
-  max_rounds (points in empty deserts) are finalized by ONE exact
-  brute-force pass shared by all stragglers.
+  is chosen from the measured density so the first disk is expected
+  to hold ~3k candidates — the common case finishes in ONE round. A
+  query finalizes when it holds >= k candidates whose k-th distance is
+  <= the conservative lower bound on anything outside the explored
+  disk (``_bound_km_col``). Queries still unresolved after a fixed
+  number of ring rounds, or once the next disk would wrap the grid
+  (2r+1 > n: shells would alias cells of earlier rounds), take ONE
+  exact brute-force pass shared by all of them.
+
+  The QUERY side is carried in one of two ways, chosen by size:
+    - ``knn_join`` (a retrieval request set): pulled to the driver
+      once; shells are computed in driver NumPy
+      (functions/cells.cell_shell_batch) and shipped per round as a
+      broadcast DataFrame — ONE distributed action per round (the ids
+      of the finished queries) and zero Python stages in the executor
+      plan. Small inputs skip the rings and take the exact pass
+      directly (``brute_force_pairs``).
+    - ``knn_join_distributed`` (a corpus-sized query table, dispatched
+      to automatically past ``max_queries``): the query side stays a
+      DataFrame; shells come from the same kernel in a pandas UDF and
+      the finished-query split is a semi/anti join.
+  Both carriers share the tile index, the candidate select, the
+  per-round top-k merge, the stop bound, the wrap rule, the exact pass
+  and the final re-rank, so their outputs are bit-identical.
 
 Determinism: ranking orders by (dist, image_id) — the id tie-break
 makes the output exact-match reproducible at any parallelism
 (SURVEY.md §7.3); distances are float64 column expressions (JVM,
 whole-stage codegen), identical order of operations everywhere. The
-driver-side bound check only decides WHEN a query stops expanding,
-never which rows rank — results are bound-invariant.
+bound only decides WHEN a query stops expanding, never which rows
+rank — results are bound-invariant.
 """
 
 from __future__ import annotations
@@ -52,9 +58,18 @@ from pyspark.sql import functions as F
 from gelos_spark.functions import cells
 from gelos_spark.functions.cell_udfs import cell_encode_col
 from gelos_spark.functions.geometry import haversine_col
+from gelos_spark.plans.materialize import finalize
+
+# ring rounds before the exact terminal pass. A driver round is one
+# action and its stragglers are few, so it hands them to the broadcast
+# pass early; a distributed terminal pass cross-joins a corpus-sized
+# query side, so that carrier keeps expanding longer.
+DRIVER_RING_ROUNDS = 3
+DISTRIBUTED_RING_ROUNDS = 11
+
 
 def _schemas(qid_type: str) -> tuple[str, str, str]:
-    """(shell, straggler, out) schemas with the caller's query-id type
+    """(shell, query, out) schemas with the caller's query-id type
     carried through — string ids work the same as the default long."""
     return (
         f"query_id {qid_type}, qlon double, qlat double, k int, cell long",
@@ -64,7 +79,7 @@ def _schemas(qid_type: str) -> tuple[str, str, str]:
 
 
 def _qid_type(queries, q: pd.DataFrame) -> str:
-    """Spark type for query_id carried through shells/stragglers/output.
+    """Spark type for query_id carried through shells/exact pass/output.
     For a pandas query frame the dtype maps faithfully (float ids were
     previously declared bigint — silent truncation); unsupported id
     dtypes raise instead of guessing."""
@@ -105,6 +120,136 @@ def _initial_radius(stats: dict, res: int, k_max: int, target_mult: float = 3.0)
     return int(np.clip(r, 1, max(n // 2, 1)))
 
 
+def _index_tiles(
+    tiles: DataFrame, res: int, partitions: int | None = None
+) -> tuple[DataFrame, dict]:
+    """The persisted cell-indexed tile frame and its density stats.
+    One aggregate materializes the index AND measures density.
+    ``partitions`` hash-partitions the index by cell first, so each
+    round's shell join reuses that layout and only the shell side
+    shuffles."""
+    tiles_c = tiles.select("image_id", "lon", "lat").withColumn(
+        "cell", cell_encode_col(F.col("lon"), F.col("lat"), res)
+    )
+    if partitions is not None:
+        tiles_c = tiles_c.repartition(partitions, "cell")
+    tiles_c = tiles_c.persist()
+    stats = (
+        tiles_c.agg(
+            F.count("*").alias("n"),
+            F.approx_count_distinct("cell").alias("occ"),
+            F.min("lon").alias("lon0"),
+            F.max("lon").alias("lon1"),
+            F.min("lat").alias("lat0"),
+            F.max("lat").alias("lat1"),
+        )
+        .collect()[0]
+        .asDict()
+    )
+    return tiles_c, stats
+
+
+def _with_dist(pairs: DataFrame) -> DataFrame:
+    """Candidate rows of (query, tile) pairs with their haversine
+    distance."""
+    return pairs.select(
+        "query_id",
+        "qlon",
+        "qlat",
+        "k",
+        "image_id",
+        haversine_col(F.col("qlon"), F.col("qlat"), F.col("lon"), F.col("lat")).alias(
+            "dist_km"
+        ),
+    )
+
+
+def _topk(pool: DataFrame) -> DataFrame:
+    """Each query's k best candidates by (dist_km, image_id), with
+    their rank."""
+    w = Window.partitionBy("query_id").orderBy(F.col("dist_km").asc(), F.col("image_id").asc())
+    return pool.withColumn("rank", F.row_number().over(w)).where(F.col("rank") <= F.col("k"))
+
+
+def _ring_topk(topk: DataFrame | None, shell: DataFrame, tiles_c: DataFrame) -> DataFrame:
+    """One ring round: the shell's (query, cell) rows join the tile
+    index, and their candidates merge into the running top-k
+    (persisted for the next round)."""
+    cand = _with_dist(shell.join(tiles_c, "cell"))
+    pool = cand if topk is None else topk.unionByName(cand)
+    return _topk(pool).drop("rank").persist()
+
+
+def _exact_topk(tiles: DataFrame, queries: DataFrame) -> DataFrame:
+    """The exact brute-force pass: every query (query_id, qlon, qlat,
+    k) against every tile. Complete by construction, so any partial
+    ring candidates of these queries are dropped."""
+    pairs = tiles.select("image_id", "lon", "lat").crossJoin(queries)
+    return _topk(_with_dist(pairs)).drop("rank")
+
+
+def _exact_now(rounds: int, max_rounds: int, r: int, n_grid: int) -> bool:
+    """Hand the active queries to the exact pass: after ``max_rounds``
+    ring rounds, or once the disk would wrap the grid in x (2r+1 > n).
+    Below the wrap, successive shells are disjoint, so no (query,
+    tile) pair enters the pool twice (tests/test_property_kernels)."""
+    return rounds >= max_rounds or 2 * r + 1 > n_grid
+
+
+def _bound_km_col(qlat: F.Column, res: int, r: int) -> F.Column:
+    """Lower bound on the distance from a query at latitude ``qlat``
+    to any tile in a cell the radius-r disk has NOT visited (grid
+    Chebyshev distance >= r+1). Such a cell is at least r full
+    cell-extents away in x or y; the x extent is evaluated at the
+    worst (most poleward) latitude reachable within the explored band.
+    Conservative by construction; documented pole limitation in
+    SURVEY.md §7.3 (fixtures exclude |lat| > ~55)."""
+    n = 1 << res
+    h_deg = 180.0 / n
+    h_km = h_deg * cells.KM_PER_DEG_LAT_MIN
+    worst_lat = F.least(F.abs(qlat) + F.lit((r + 1) * h_deg), F.lit(89.9999))
+    w_km = (
+        F.lit(360.0 / n * cells.KM_PER_DEG_LAT_MIN)
+        * F.cos(F.radians(worst_lat))
+    )
+    return F.lit(float(r)) * F.least(F.lit(h_km), F.greatest(w_km, F.lit(0.0)))
+
+
+def _finished(topk: DataFrame, res: int, r: int) -> DataFrame:
+    """Ids of the queries done after exploring the radius-r disk: they
+    hold >= k candidates and the k-th distance beats the bound."""
+    return (
+        topk.groupBy("query_id")
+        .agg(
+            F.count("*").alias("cnt"),
+            F.max("dist_km").alias("kth"),
+            F.first("qlat").alias("qlat"),
+            F.first("k").alias("kk"),
+        )
+        .where(
+            (F.col("cnt") >= F.col("kk"))
+            & (F.col("kth") <= _bound_km_col(F.col("qlat"), res, r))
+        )
+        .select("query_id")
+    )
+
+
+def _finish(
+    finalized: list[DataFrame], checkpoint: bool | str, caches: list[DataFrame]
+) -> DataFrame:
+    """Union the per-round finalized top-k frames, re-rank, order by
+    (query_id, rank) and apply the materialization policy."""
+    out = finalized[0]
+    for f in finalized[1:]:
+        out = out.unionByName(f)
+    result = (
+        _topk(out)
+        .select("query_id", "rank", "image_id", "dist_km")
+        .orderBy("query_id", "rank")
+    )
+    return finalize(result, checkpoint, caches=caches)
+
+
 def _shell_pdf(q: pd.DataFrame, res: int, r0: int, r1: int) -> pd.DataFrame:
     """Exploded (query_id, qlon, qlat, k, cell) shell pairs for all
     rows of the active query frame — driver NumPy, fully vectorized."""
@@ -117,7 +262,7 @@ def _shell_pdf(q: pd.DataFrame, res: int, r0: int, r1: int) -> pd.DataFrame:
             "k": q["k"].to_numpy()[idx].astype(np.int32),
             "cell": shell,
         }
-    ).drop_duplicates(["query_id", "cell"])
+    )
 
 
 def knn_join(
@@ -126,7 +271,6 @@ def knn_join(
     queries: DataFrame | pd.DataFrame,
     res: int | None = None,
     n_tiles_hint: int | None = None,
-    max_rounds: int = 3,
     brute_force_pairs: int = 2_000_000,
     checkpoint: bool | str = True,
     max_queries: int | None = 100_000,
@@ -148,8 +292,7 @@ def knn_join(
     collect this path needs anyway (``limit(n+1).toPandas()``), so it
     costs ZERO extra Spark actions. ``max_queries=None`` skips the
     guard (caller asserts the frame is request-sized);
-    ``brute_force_pairs``/``max_rounds`` apply only to the
-    driver-resident path.
+    ``brute_force_pairs`` applies only to the driver-resident path.
 
     ``checkpoint``: materialization policy for the returned frame
     (plans/materialize.finalize) — True = eager localCheckpoint
@@ -163,9 +306,11 @@ def knn_join(
     ring expansion (each ring round costs a full distributed action;
     measured crossover on local[32] is ~2-10M pairs — above it the
     brute pass's per-query window shuffle dominates and ring pruning
-    wins), so the rounds are skipped and every query takes the brute
-    pass. Ring expansion is the 10^12-tile design; results are
-    identical either way (both exact, ties broken by id). Set
+    wins), so every query takes the exact pass. The tile count is
+    ``n_tiles_hint`` (or a count) before the tiles are indexed, and
+    the measured count after, so an overestimated hint still ends in
+    the exact pass. Ring expansion is the 10^12-tile design; results
+    are identical either way (both exact, ties broken by id). Set
     ``brute_force_pairs=0`` to force the ring path.
     """
     n_hint = n_tiles_hint if n_tiles_hint is not None else tiles.count()
@@ -195,143 +340,49 @@ def knn_join(
     else:
         q = queries.toPandas()
     q = q[["query_id", "lon", "lat", "k"]].copy()
-    shell_schema, straggler_schema, out_schema = _schemas(_qid_type(queries, q))
+    shell_schema, query_schema, out_schema = _schemas(_qid_type(queries, q))
     if len(q) == 0:
         return spark.createDataFrame([], out_schema)
 
-    w = Window.partitionBy("query_id").orderBy(F.col("dist_km").asc(), F.col("image_id").asc())
-    from gelos_spark.plans.materialize import finalize
-
-    if n_hint * len(q) <= brute_force_pairs:
-        # small input: the cost model (previously evaluated only AFTER
-        # a full cell-encode + persist + stats aggregate) says one
-        # exact brute pass beats ring expansion — so take it directly:
-        # no cell column, no persist, no density aggregate (none of
-        # them feed the brute pass), and the top-k window runs ONCE
-        # (re-ranking a single already-ranked frame is the identity).
-        # Decision now keys off n_tiles_hint / count instead of the
-        # measured stats["n"]; both paths are exact, so a stale hint
-        # can only change the plan, never the rows.
-        straggler = spark.createDataFrame(
-            q[["query_id", "lon", "lat", "k"]].rename(
+    def exact(tiles_df: DataFrame, active: pd.DataFrame) -> DataFrame:
+        # the few queries broadcast against the tile table
+        qdf = spark.createDataFrame(
+            active[["query_id", "lon", "lat", "k"]].rename(
                 columns={"lon": "qlon", "lat": "qlat"}
             ),
-            straggler_schema,
+            query_schema,
         )
-        brute = (
-            tiles.select("image_id", "lon", "lat")
-            .crossJoin(F.broadcast(straggler))
-            .select(
-                "query_id",
-                "k",
-                "image_id",
-                haversine_col(F.col("qlon"), F.col("qlat"), F.col("lon"), F.col("lat")).alias(
-                    "dist_km"
-                ),
-            )
-            .withColumn("rank", F.row_number().over(w))
-            .where(F.col("rank") <= F.col("k"))
-            .select("query_id", "rank", "image_id", "dist_km")
-            .orderBy("query_id", "rank")
-        )
-        return finalize(brute, checkpoint)
+        return _exact_topk(tiles_df, F.broadcast(qdf))
+
+    if n_hint * len(q) <= brute_force_pairs:
+        # small input: no cell column, no persist, no density aggregate
+        # (none of them feed the exact pass)
+        return _finish([exact(tiles, q)], checkpoint, [])
 
     q["qcell"] = cells.cell_encode(q["lon"].to_numpy(), q["lat"].to_numpy(), res)
-
-    tiles_c = (
-        tiles.select("image_id", "lon", "lat")
-        .withColumn("cell", cell_encode_col(F.col("lon"), F.col("lat"), res))
-        .persist()
-    )
-    # one aggregate materializes the index AND measures density
-    stats = (
-        tiles_c.agg(
-            F.count("*").alias("n"),
-            F.approx_count_distinct("cell").alias("occ"),
-            F.min("lon").alias("lon0"),
-            F.max("lon").alias("lon1"),
-            F.min("lat").alias("lat0"),
-            F.max("lat").alias("lat1"),
-        )
-        .collect()[0]
-        .asDict()
-    )
-
-    if stats["n"] * len(q) <= brute_force_pairs:
-        # small input (reachable only when n_tiles_hint overestimated):
-        # zero ring rounds -> every query falls through to the exact
-        # brute-force straggler pass below
-        max_rounds = 0
+    tiles_c, stats = _index_tiles(tiles, res)
+    # the measured count re-applies the size rule (an overestimated
+    # hint), and an empty tile table goes straight to the exact pass
+    small = stats["n"] * len(q) <= brute_force_pairs
 
     topk: DataFrame | None = None  # accumulated per-query top-k so far
     finalized: list[DataFrame] = []
-    persisted: list[DataFrame] = []
+    persisted: list[DataFrame] = [tiles_c]
     active = q
     r_prev = -1
     r_cur = _initial_radius(stats, res, int(q["k"].max()))
     rounds = 0
 
-    while len(active) > 0 and stats["n"] > 0 and rounds < max_rounds and r_prev < n_grid:
+    while len(active) > 0:
+        if small or _exact_now(rounds, DRIVER_RING_ROUNDS, r_cur, n_grid):
+            finalized.append(exact(tiles_c, active))
+            break
         shell = spark.createDataFrame(_shell_pdf(active, res, r_prev, r_cur), shell_schema)
-        cand = (
-            F.broadcast(shell)
-            .join(tiles_c, "cell")
-            .select(
-                "query_id",
-                "qlon",
-                "qlat",
-                "k",
-                "image_id",
-                haversine_col(F.col("qlon"), F.col("qlat"), F.col("lon"), F.col("lat")).alias(
-                    "dist_km"
-                ),
-            )
-        )
-        pool = cand if topk is None else topk.unionByName(cand)
-        if 2 * r_cur + 1 > n_grid:
-            # the shell's x offsets wrap the globe: wrapped cells alias
-            # cells explored in earlier rounds, so the same tile can
-            # enter the pool twice (x wraps; y offsets are discarded,
-            # never clamped, so only x aliases). Dedup keys match the
-            # window partitioning — no extra exchange shape.
-            pool = pool.dropDuplicates(["query_id", "image_id"])
-        topk = (
-            pool.withColumn("rank", F.row_number().over(w)).where(F.col("rank") <= F.col("k"))
-            .drop("rank")
-            .persist()
-        )
+        topk = _ring_topk(topk, F.broadcast(shell), tiles_c)
         persisted.append(topk)
 
-        # ONE distributed action per round: per-query aggregates to the
-        # driver (4 scalars per active query); bound test is driver NumPy
-        qstats = topk.groupBy("query_id").agg(
-            F.count("*").alias("n"),
-            F.max("dist_km").alias("kth"),
-            F.first("qlat").alias("qlat"),
-            F.first("k").alias("kk"),
-        ).collect()
-        # cell_shell_batch wraps x offsets but CLAMPS y, so a radius-r
-        # disk from row y only covers rows [y-r, y+r]: full-grid
-        # coverage from ANY row needs r >= n_grid - 1 (2*r+1 >= n_grid
-        # only guarantees the x axis) — queries near the lat edge would
-        # otherwise finalize with half the grid unexplored
-        whole_grid = r_cur >= n_grid - 1
-        if whole_grid:
-            # explored disk covers the grid: every active query is done
-            # (queries with zero candidates included — empty result)
-            finalized.append(topk)
-            active = active.iloc[0:0]
-            break
-        if qstats:
-            qa = np.array([[s["n"], s["kth"], s["qlat"], s["kk"]] for s in qstats])
-            bound = cells.knn_bound_km(qa[:, 2], res, r_cur)
-            done_ids = [
-                s["query_id"]
-                for s, d in zip(qstats, (qa[:, 0] >= qa[:, 3]) & (qa[:, 1] <= bound))
-                if d
-            ]
-        else:
-            done_ids = []
+        # ONE distributed action per round: the ids of finished queries
+        done_ids = [row["query_id"] for row in _finished(topk, res, r_cur).collect()]
         if done_ids:
             finalized.append(topk.where(F.col("query_id").isin(done_ids)))
             topk = topk.where(~F.col("query_id").isin(done_ids))
@@ -339,49 +390,7 @@ def knn_join(
         rounds += 1
         r_prev, r_cur = r_cur, min(r_cur * 3, n_grid)
 
-    if len(active) > 0:
-        # stragglers: one exact brute-force pass — broadcast the few
-        # unresolved queries against the tile table (complete by
-        # construction, so the partial ring candidates are dropped)
-        straggler = spark.createDataFrame(
-            active[["query_id", "lon", "lat", "k"]].rename(
-                columns={"lon": "qlon", "lat": "qlat"}
-            ),
-            straggler_schema,
-        )
-        brute = (
-            tiles_c.crossJoin(F.broadcast(straggler))
-            .select(
-                "query_id",
-                "qlon",
-                "qlat",
-                "k",
-                "image_id",
-                haversine_col(F.col("qlon"), F.col("qlat"), F.col("lon"), F.col("lat")).alias(
-                    "dist_km"
-                ),
-            )
-            .withColumn("rank", F.row_number().over(w))
-            .where(F.col("rank") <= F.col("k"))
-            .drop("rank")
-        )
-        finalized.append(brute)
-
-    if not finalized:
-        tiles_c.unpersist()
-        return spark.createDataFrame([], out_schema)
-    out = finalized[0]
-    for f in finalized[1:]:
-        out = out.unionByName(f)
-    result = (
-        out.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= F.col("k"))
-        .select("query_id", "rank", "image_id", "dist_km")
-        .orderBy("query_id", "rank")
-    )
-    from gelos_spark.plans.materialize import finalize
-
-    return finalize(result, checkpoint, caches=[tiles_c, *persisted])
+    return _finish(finalized, checkpoint, persisted)
 
 
 def _shell_udf(res: int, r0: int, r1: int):
@@ -401,36 +410,21 @@ def _shell_udf(res: int, r0: int, r1: int):
     return _shell
 
 
-def _bound_km_col(qlat: F.Column, res: int, r: int) -> F.Column:
-    """Column twin of cells.knn_bound_km: lower bound on the distance
-    to any tile outside the explored radius-r disk."""
-    n = 1 << res
-    h_deg = 180.0 / n
-    h_km = h_deg * cells.KM_PER_DEG_LAT_MIN
-    worst_lat = F.least(F.abs(qlat) + F.lit((r + 1) * h_deg), F.lit(89.9999))
-    w_km = (
-        F.lit(360.0 / n * cells.KM_PER_DEG_LAT_MIN)
-        * F.cos(F.radians(worst_lat))
-    )
-    return F.lit(float(r)) * F.least(F.lit(h_km), F.greatest(w_km, F.lit(0.0)))
-
-
 def knn_join_distributed(
     spark: SparkSession,
     tiles: DataFrame,
     queries: DataFrame,
     res: int | None = None,
     n_tiles_hint: int | None = None,
-    max_rounds: int = 12,
-    shuffle_partitions: int | None = None,
     checkpoint: bool | str = True,
 ) -> DataFrame:
     """k nearest tiles per query point for CORPUS-SIZED query sets.
 
     Same semantics (and bit-identical output) as :func:`knn_join`, but
-    the query side stays a distributed DataFrame end-to-end — use this
-    when the "queries" are themselves a table (full-corpus self-kNN,
-    tile-to-tile retrieval) rather than a request batch. Mirrors
+    the query side stays a distributed DataFrame end-to-end — the
+    carrier for "queries" that are themselves a table (full-corpus
+    self-kNN, tile-to-tile retrieval) rather than a request batch;
+    ``knn_join`` dispatches here past its ``max_queries``. Mirrors
     ``ivf_topk(collect_queries=False)``.
 
     Scale design per round (ring radius grows 3x until every query's
@@ -438,13 +432,15 @@ def knn_join_distributed(
       - shell cells come from the SAME cells.cell_shell_batch kernel,
         now a vectorized pandas UDF over the active queries;
       - tiles are shuffled ONCE into a cell-partitioned persisted
-        layout; each round's shell join reuses that partitioning, so
-        only the (much smaller) shell side shuffles per round;
-      - the finalization bound is pure column math (no driver-side
-        per-query state — the driver only sees the active COUNT);
-      - queries still active once the radius covers the grid finalize
-        with whatever candidates exist (k > population returns all,
-        like knn_join).
+        layout (``spark.sql.shuffle.partitions`` buckets); each
+        round's shell join reuses that partitioning, so only the
+        (much smaller) shell side shuffles per round;
+      - the finished-query split is a semi/anti join on the same
+        bound (the driver sees ONE scalar per round — the active
+        count);
+      - queries still active after DISTRIBUTED_RING_ROUNDS rounds, or
+        once the disk would wrap the grid, take the exact cross-join
+        pass (k > population returns all, like knn_join).
 
     ``checkpoint``: materialization policy (plans/materialize.finalize).
     """
@@ -452,30 +448,10 @@ def knn_join_distributed(
         n_hint = n_tiles_hint if n_tiles_hint is not None else tiles.count()
         res = default_res(n_hint)
     n_grid = 1 << res
-    qid_type = queries.schema["query_id"].dataType.simpleString()
-    out_schema = f"query_id {qid_type}, rank int, image_id string, dist_km double"
+    out_schema = _schemas(queries.schema["query_id"].dataType.simpleString())[2]
 
-    parts = shuffle_partitions or int(
-        spark.conf.get("spark.sql.shuffle.partitions", "200")
-    )
-    tiles_c = (
-        tiles.select("image_id", "lon", "lat")
-        .withColumn("cell", cell_encode_col(F.col("lon"), F.col("lat"), res))
-        .repartition(parts, "cell")
-        .persist()
-    )
-    stats = (
-        tiles_c.agg(
-            F.count("*").alias("n"),
-            F.approx_count_distinct("cell").alias("occ"),
-            F.min("lon").alias("lon0"),
-            F.max("lon").alias("lon1"),
-            F.min("lat").alias("lat0"),
-            F.max("lat").alias("lat1"),
-        )
-        .collect()[0]
-        .asDict()
-    )
+    parts = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
+    tiles_c, stats = _index_tiles(tiles, res, parts)
     if stats["n"] == 0:
         tiles_c.unpersist()
         return spark.createDataFrame([], out_schema)
@@ -491,88 +467,25 @@ def knn_join_distributed(
         tiles_c.unpersist()
         return spark.createDataFrame([], out_schema)
 
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("dist_km").asc(), F.col("image_id").asc()
-    )
     topk: DataFrame | None = None
     finalized: list[DataFrame] = []
-    persisted: list[DataFrame] = [active]
+    persisted: list[DataFrame] = [tiles_c, active]
     r_prev = -1
     r_cur = _initial_radius(stats, res, int(k_max_row))
     rounds = 0
-
-    def _dist_cand(cand: DataFrame) -> DataFrame:
-        return cand.select(
-            "query_id",
-            "qlon",
-            "qlat",
-            "k",
-            "image_id",
-            haversine_col(
-                F.col("qlon"), F.col("qlat"), F.col("lon"), F.col("lat")
-            ).alias("dist_km"),
-        )
+    qside = ["query_id", F.col("lon").alias("qlon"), F.col("lat").alias("qlat"), "k"]
 
     while True:
-        # terminal pass: once the next ring's disk would wrap the
-        # cylinder (2r+1 > n) a shell per query costs ~grid-size rows —
-        # the remaining (rare by now) queries instead take one exact
-        # cross-join against the tile table, the distributed twin of
-        # knn_join's broadcast straggler pass. Complete by
-        # construction, so the partial ring candidates are dropped.
-        if rounds >= max_rounds - 1 or 2 * r_cur + 1 > n_grid:
-            cand = _dist_cand(
-                active.select(
-                    "query_id",
-                    F.col("lon").alias("qlon"),
-                    F.col("lat").alias("qlat"),
-                    "k",
-                ).crossJoin(tiles_c.select("image_id", "lon", "lat"))
-            )
-            finalized.append(
-                cand.withColumn("rank", F.row_number().over(w))
-                .where(F.col("rank") <= F.col("k"))
-                .drop("rank")
-            )
+        if _exact_now(rounds, DISTRIBUTED_RING_ROUNDS, r_cur, n_grid):
+            finalized.append(_exact_topk(tiles_c, active.select(*qside)))
             break
         shell = active.select(
-            "query_id",
-            F.col("lon").alias("qlon"),
-            F.col("lat").alias("qlat"),
-            "k",
-            F.explode(_shell_udf(res, r_prev, r_cur)(F.col("qcell"))).alias("cell"),
+            *qside, F.explode(_shell_udf(res, r_prev, r_cur)(F.col("qcell"))).alias("cell")
         )
-        # with 2r+1 <= n (terminal pass excludes the wrap regime) the
-        # cylinder-metric shells of successive rounds are disjoint, so
-        # no (query, tile) pair can enter the pool twice — no dedup
-        cand = _dist_cand(shell.join(tiles_c, "cell"))
-        pool = cand if topk is None else topk.unionByName(cand)
-        topk = (
-            pool.withColumn("rank", F.row_number().over(w))
-            .where(F.col("rank") <= F.col("k"))
-            .drop("rank")
-            .persist()
-        )
+        topk = _ring_topk(topk, shell, tiles_c)
         persisted.append(topk)
 
-        # distributed finalization test: a query is done when it holds
-        # >= k candidates whose k-th distance beats the bound on
-        # anything outside the explored disk (column math only; the
-        # driver sees ONE scalar per round — the active count)
-        qdone = (
-            topk.groupBy("query_id")
-            .agg(
-                F.count("*").alias("cnt"),
-                F.max("dist_km").alias("kth"),
-                F.first("qlat").alias("qlat"),
-                F.first("k").alias("kk"),
-            )
-            .where(
-                (F.col("cnt") >= F.col("kk"))
-                & (F.col("kth") <= _bound_km_col(F.col("qlat"), res, r_cur))
-            )
-            .select("query_id")
-        )
+        qdone = _finished(topk, res, r_cur)
         finalized.append(topk.join(qdone, "query_id", "left_semi"))
         next_active = active.join(qdone, "query_id", "left_anti").persist()
         persisted.append(next_active)
@@ -584,15 +497,4 @@ def knn_join_distributed(
         rounds += 1
         r_prev, r_cur = r_cur, min(r_cur * 3, n_grid)
 
-    out = finalized[0]
-    for f in finalized[1:]:
-        out = out.unionByName(f)
-    result = (
-        out.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= F.col("k"))
-        .select("query_id", "rank", "image_id", "dist_km")
-        .orderBy("query_id", "rank")
-    )
-    from gelos_spark.plans.materialize import finalize
-
-    return finalize(result, checkpoint, caches=[tiles_c, *persisted])
+    return _finish(finalized, checkpoint, persisted)

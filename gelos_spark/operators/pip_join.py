@@ -19,18 +19,12 @@ Three-phase plan, designed for the 10^12-tile scale:
   2. INTERIOR SHORTCUT: tiles in interior cells are contained by
      construction — the bulk of a large AOI's area never reaches the
      refinement at all.
-  3. REFINE (boundary cells only): exact even-odd ray casting, in two
-     interchangeable implementations with bit-identical results:
-       - refine="sql" (default): RELATIONAL ray-cast — candidates
-         equi-join their polygon's broadcast edge table, the crossing
-         predicate is the same IEEE float64 expression as the NumPy
-         kernel, and a parity groupBy keeps odd crossing counts.
-         Zero Python; whole-stage codegen end to end; the only
-         shuffle is the per-candidate parity aggregate (skew-free:
-         every candidate is its own group).
-       - refine="udf": vectorized NumPy inside a scalar pandas UDF,
-         grouped by aoi_id within each Arrow batch (the mapInArrow
-         surface, SURVEY.md §2.8 U4).
+  3. REFINE (boundary cells only): exact even-odd ray casting. Each
+     AOI's edge array rides in a broadcast and the crossing count is a
+     per-row array aggregate with the same IEEE float64 expression as
+     the NumPy kernel (geometry.points_in_polygon): ONE scan, ONE
+     broadcast join, ZERO shuffles, zero Python; whole-stage codegen
+     end to end.
      Only (lon, lat, aoi_id) columns flow through the join — the
      image payload stays out of the shuffle entirely and is
      re-attached by image_id afterwards if the caller needs it
@@ -40,7 +34,7 @@ Determinism: cover affects only performance (refinement is exact and
 the interior shortcut only covers cells where ray-cast would return
 true for every point); output is `orderBy(aoi_id, image_id)` with no
 floating-point reductions, so results are identical at any
-parallelism level and across both refine implementations
+parallelism level and match the NumPy brute-force oracles
 (tests/test_pip_join.py).
 """
 
@@ -50,11 +44,9 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from gelos_spark.functions import cells
 from gelos_spark.functions.cell_udfs import cell_encode_col, cell_parent_col
-from gelos_spark.functions.geometry import points_in_rings
 
 TILE_RES = 16  # fine tile cell resolution (~600 m cells); prefix-shifts to any coarser res
 
@@ -103,7 +95,7 @@ def build_cover_df(
 
     ``interior`` marks cells provably fully inside their polygon —
     tiles landing there skip ray-cast refinement (the bulk of a large
-    AOI's area never touches the Python stage)."""
+    AOI's area never reaches the crossing count)."""
     if classified is None:
         classified = classify_covers(aois, cover_res)
     elif len(classified) != len(aois):
@@ -197,31 +189,6 @@ def pip_join_pruned(
     )
 
 
-def build_edges_df(spark: SparkSession, aois: list[dict]) -> DataFrame:
-    """Exploded polygon-edge table (aoi_id, x1, y1, x2, y2, wrapped)
-    for the relational ray-cast. Horizontal edges are dropped — they
-    never cross under the half-open rule (same as the NumPy kernel
-    where (y1 > p) != (y2 > p) is always false for y1 == y2).
-    Antimeridian-crossing rings store UNWRAPPED edge lons (+360 on the
-    west side) with wrapped=true; candidates shift their lon the same
-    way before the crossing test. AOIs may carry ``holes`` (inner
-    rings): their edges join the table too — the parity count then
-    implements multi-ring even-odd containment with no other change."""
-    rows = []
-    for p in aois:
-        for ring, wrapped in _aoi_rings(p):
-            v = len(ring)
-            for i in range(v):
-                x1, y1 = float(ring[i, 0]), float(ring[i, 1])
-                x2, y2 = float(ring[(i + 1) % v, 0]), float(ring[(i + 1) % v, 1])
-                if y1 != y2:
-                    rows.append((int(p["aoi_id"]), x1, y1, x2, y2, wrapped))
-    return spark.createDataFrame(
-        pd.DataFrame(rows, columns=["aoi_id", "x1", "y1", "x2", "y2", "wrapped"]),
-        schema="aoi_id long, x1 double, y1 double, x2 double, y2 double, wrapped boolean",
-    )
-
-
 def _dedup_close(ring: np.ndarray) -> np.ndarray:
     if len(ring) >= 2 and ring[0, 0] == ring[-1, 0] and ring[0, 1] == ring[-1, 1]:
         return ring[:-1]
@@ -241,9 +208,13 @@ def build_aoi_edges_df(spark: SparkSession, aois: list[dict]) -> DataFrame:
     """(aoi_id, edges: array<struct<x1,y1,x2,y2>>, wrapped) — one row
     per AOI, edges as an array so the whole polygon rides inside the
     broadcast and the crossing count becomes a map-side array
-    aggregate. Antimeridian rings carry unwrapped lons + wrapped=true
-    (see build_edges_df); hole edges ride the same array (multi-ring
-    even-odd parity)."""
+    aggregate. Horizontal edges are dropped — they never cross under
+    the half-open rule (same as the NumPy kernel, where
+    (y1 > p) != (y2 > p) is always false for y1 == y2). Antimeridian
+    rings carry UNWRAPPED edge lons (+360 on the west side) with
+    wrapped=true; candidates shift their lon the same way before the
+    crossing test. Hole edges ride the same array (multi-ring even-odd
+    parity)."""
     rows = []
     for p in aois:
         es = []
@@ -276,68 +247,6 @@ def crossing_count_expr(edges: F.Column, lon: F.Column, lat: F.Column) -> F.Colu
     return F.aggregate(edges, F.lit(0), step)
 
 
-def refine_relational(cand: DataFrame, edges: DataFrame, cols: list[str]) -> DataFrame:
-    """Exact even-odd ray-cast as PURE relational algebra — no Python
-    anywhere: candidates x their polygon's edges (broadcast equi-join
-    on aoi_id), keep crossing edges (the same IEEE float64 expression
-    as geometry.points_in_polygon, so results are bit-identical),
-    count crossings per candidate, keep odd parity. Candidates whose
-    polygon has zero crossing edges never survive the inner join —
-    correctly outside. Runs entirely in whole-stage codegen; the only
-    shuffle is the parity groupBy (map-side combined, keyed by the
-    candidate — skew-free because each candidate is its own group)."""
-    # wrapped AOIs store unwrapped edge lons; shift the point the same
-    # way (lon < 0 -> +360) so both sit in the continuous frame
-    lon_adj = F.when(
-        F.col("wrapped") & (F.col("lon") < 0.0), F.col("lon") + 360.0
-    ).otherwise(F.col("lon"))
-    crossing = (
-        ((F.col("y1") > F.col("lat")) != (F.col("y2") > F.col("lat")))
-        & (
-            lon_adj
-            < (F.col("x2") - F.col("x1"))
-            * (F.col("lat") - F.col("y1"))
-            / (F.col("y2") - F.col("y1"))
-            + F.col("x1")
-        )
-    )
-    return (
-        cand.join(F.broadcast(edges), "aoi_id")
-        .where(crossing)
-        .groupBy(*cols)
-        .agg(F.count("*").alias("_nx"))
-        .where(F.col("_nx") % 2 == 1)
-        .select(*cols)
-    )
-
-
-def contains_udf(spark: SparkSession, aois: list[dict]):
-    """pandas_udf (aoi_id, lon, lat) -> bool, exact ray-cast PIP.
-    Rings ship once per executor via a Spark broadcast variable;
-    the kernel vectorizes over each distinct aoi in the batch."""
-    rings = {}
-    for p in aois:
-        rs = _aoi_rings(p)
-        rings[int(p["aoi_id"])] = ([r for r, _ in rs], rs[0][1])
-    bc = spark.sparkContext.broadcast(rings)
-
-    @F.pandas_udf(T.BooleanType())
-    def _contains(aoi_id: pd.Series, lon: pd.Series, lat: pd.Series) -> pd.Series:
-        r = bc.value
-        ids = aoi_id.to_numpy()
-        px = lon.to_numpy(dtype=np.float64)
-        py = lat.to_numpy(dtype=np.float64)
-        out = np.zeros(len(ids), dtype=bool)
-        for a in np.unique(ids):
-            m = ids == a
-            ring_list, wrapped = r[int(a)]
-            x = np.where(px[m] < 0.0, px[m] + 360.0, px[m]) if wrapped else px[m]
-            out[m] = points_in_rings(x, py[m], ring_list)
-        return pd.Series(out)
-
-    return _contains
-
-
 def pip_join(
     spark: SparkSession,
     tiles: DataFrame,
@@ -346,7 +255,6 @@ def pip_join(
     tile_cell_col: str | None = None,
     broadcast_cover: bool = True,
     ordered: bool = True,
-    refine: str = "expr",
     classified_cover: list[tuple] | None = None,
 ) -> DataFrame:
     """Assign every tile centroid to each AOI polygon containing it.
@@ -367,7 +275,7 @@ def pip_join(
 
     if tile_cell_col is None:
         # pure JVM column expression — the coarse phase runs entirely in
-        # whole-stage codegen; Python appears only in the refine UDF
+        # whole-stage codegen
         tiles = tiles.withColumn("_cell", cell_encode_col(F.col("lon"), F.col("lat"), TILE_RES))
         tile_cell_col = "_cell"
     pts = tiles.select(
@@ -378,37 +286,18 @@ def pip_join(
     )
     coarse = pts.join(cover, "cover_cell")
     # interior cells are provably contained; only boundary-cell tiles
-    # pay exact ray-casting. Three refine strategies, identical results:
-    #   expr (default) — each AOI's edge array rides in a broadcast and
-    #     the crossing count is a per-row array aggregate: ONE scan,
-    #     ONE broadcast join, ZERO shuffles, zero Python;
-    #   sql — relational ray-cast (refine_relational): broadcast edge
-    #     join + skew-free parity groupBy (one shuffle of candidates);
-    #   udf — vectorized NumPy pandas UDF (the mapInArrow surface; the
-    #     split is explicit because Catalyst extracts Python UDFs into
-    #     their own stage — an OR would push every row through Python).
-    cols = ["aoi_id", "image_id", "lon", "lat"]
-    if refine == "expr":
-        aoi_edges = F.broadcast(build_aoi_edges_df(spark, aois))
-        lon_adj = F.when(
-            F.col("wrapped") & (F.col("lon") < 0.0), F.col("lon") + 360.0
-        ).otherwise(F.col("lon"))
-        out = (
-            coarse.join(aoi_edges, "aoi_id")
-            .where(
-                F.col("interior")
-                | (crossing_count_expr(F.col("edges"), lon_adj, F.col("lat")) % 2 == 1)
-            )
-            .select(*cols)
+    # pay the exact ray cast (each AOI's edge array rides in the
+    # broadcast; the crossing count is a per-row array aggregate)
+    aoi_edges = F.broadcast(build_aoi_edges_df(spark, aois))
+    lon_adj = F.when(
+        F.col("wrapped") & (F.col("lon") < 0.0), F.col("lon") + 360.0
+    ).otherwise(F.col("lon"))
+    out = (
+        coarse.join(aoi_edges, "aoi_id")
+        .where(
+            F.col("interior")
+            | (crossing_count_expr(F.col("edges"), lon_adj, F.col("lat")) % 2 == 1)
         )
-        return out.orderBy("aoi_id", "image_id") if ordered else out
-    inside = coarse.where(F.col("interior")).select(*cols)
-    bnd = coarse.where(~F.col("interior"))
-    if refine == "sql":
-        boundary = refine_relational(bnd.select(*cols), build_edges_df(spark, aois), cols)
-    else:
-        boundary = bnd.where(
-            contains_udf(spark, aois)(F.col("aoi_id"), F.col("lon"), F.col("lat"))
-        ).select(*cols)
-    out = inside.unionByName(boundary)
+        .select("aoi_id", "image_id", "lon", "lat")
+    )
     return out.orderBy("aoi_id", "image_id") if ordered else out

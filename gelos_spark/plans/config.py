@@ -688,8 +688,8 @@ def _op_text_features(spark: SparkSession, pipe: Pipeline, conf: dict) -> DataFr
 def _op_knn(spark: SparkSession, pipe: Pipeline, conf: dict) -> DataFrame:
     """kNN retrieval stage: `queries` is a list of [query_id, lon,
     lat, k] rows (config-embedded request set — the driver-resident
-    path; corpus-sized query tables should call knn_join_distributed
-    from code)."""
+    path; from code, knn_join given a Spark query table past its
+    max_queries dispatches to knn_join_distributed by itself)."""
     import pandas as pd
 
     from gelos_spark.operators.knn_join import knn_join

@@ -82,11 +82,13 @@ def get_spark(
         # prefer shuffled-hash over sort-merge when the planner's size
         # conditions hold (guide §3.1/§9): the engine's hot joins are
         # banded equi-self-joins over modest per-partition sides, where
-        # skipping both sorts wins; the planner (and AQE's runtime
-        # SMJ->SHJ rewrite below) still falls back to sort-merge when a
-        # build side is too big to hash, so the spill-safety story at
-        # cluster scale is unchanged. Measured -7% on the
-        # minhash/simhash/knn suite (OPTIMIZATION_r07.md).
+        # skipping both sorts wins. The planner (and AQE's runtime
+        # SMJ->SHJ rewrite below) falls back to sort-merge only when its
+        # SIZE ESTIMATE says a build side is too big to hash: a build
+        # side it underestimates is hashed anyway and can OOM an
+        # executor at cluster scale, where sort-merge would sort and
+        # spill. Measured -7% on the minhash/simhash/knn suite
+        # (OPTIMIZATION_r07.md).
         .config("spark.sql.join.preferSortMergeJoin", "false")
         .config(
             "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",

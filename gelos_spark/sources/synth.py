@@ -117,7 +117,10 @@ def image_row(i: int, w: int, h: int, seed: int) -> dict:
     fmt = codec.FORMATS[i % 3]
     px = _image_pixels(i, w, h, seed)
     lon, lat = tracker_coords(np.asarray([i]), seed)
-    lulc = LULC[int(_splitmix64(np.asarray([i], dtype=np.uint64) ^ np.uint64(seed + 17))[0] % 5)]
+    # explicit float64 modulo: the same semantics as images_df's batch
+    # path under any NumPy promotion rules
+    lulc_hash = _splitmix64(np.asarray([i], dtype=np.uint64) ^ np.uint64(seed + 17))
+    lulc = LULC[int(lulc_hash.astype(np.float64)[0] % 5)]
     encoded = codec.encode(px, fmt)
     decoded = codec.decode(encoded, fmt, w, h)
     return {
@@ -150,10 +153,9 @@ def images_df(spark: SparkSession, n: int, w: int = 64, seed: int = 42, parts: i
                 continue
             u64 = ids.astype(np.uint64)
             lon, lat = tracker_coords(u64, seed)
-            # image_row's ``hash % 5`` mixes a uint64 SCALAR with a
-            # Python int, which NumPy promotes to float64 — reproduce
-            # that exact (precision-lossy) semantics batch-wise, or
-            # lulc diverges from the pinned per-row values
+            # float64 (precision-lossy) modulo, the same explicit cast
+            # as image_row, or lulc diverges from the pinned per-row
+            # values
             lulc_i = (
                 _splitmix64(u64 ^ np.uint64(seed + 17)).astype(np.float64) % 5
             ).astype(np.int64)
@@ -294,36 +296,6 @@ def aoi_polygons(m: int, seed: int = 42, vertices: int | None = None) -> list[di
         ring[:, 1] = np.clip(ring[:, 1], -89.9, 89.9)
         out.append({"aoi_id": a, "ring": ring, "name": f"aoi{a}"})
     return out
-
-
-def aoi_df(spark: SparkSession, m: int, seed: int = 42) -> DataFrame:
-    rows = [
-        (
-            p["aoi_id"],
-            [{"lon": float(x), "lat": float(y)} for x, y in p["ring"]],
-            p["name"],
-        )
-        for p in aoi_polygons(m, seed)
-    ]
-    schema = T.StructType(
-        [
-            T.StructField("aoi_id", T.LongType(), False),
-            T.StructField(
-                "ring",
-                T.ArrayType(
-                    T.StructType(
-                        [
-                            T.StructField("lon", T.DoubleType(), False),
-                            T.StructField("lat", T.DoubleType(), False),
-                        ]
-                    )
-                ),
-                False,
-            ),
-            T.StructField("name", T.StringType(), False),
-        ]
-    )
-    return spark.createDataFrame(rows, schema)
 
 
 def query_points(q: int, n_tiles: int, seed: int = 42) -> pd.DataFrame:

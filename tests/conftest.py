@@ -9,3 +9,24 @@ def spark():
 
     s = get_spark("gelos_spark_tests", cpus=8, shuffle_partitions=8)
     yield s
+
+
+@pytest.fixture
+def collect_sizes(monkeypatch):
+    """Row counts of every ``DataFrame.toPandas()`` collect made while
+    the test runs. The spy sits on the class that defines toPandas in
+    PySpark 4.1 (``pyspark.sql.classic.dataframe.DataFrame``): a patch
+    on ``pyspark.sql.DataFrame`` is bypassed, and one on the caller's
+    instance misses the frames an operator derives from it."""
+    from pyspark.sql.classic.dataframe import DataFrame
+
+    sizes: list[int] = []
+    real = DataFrame.toPandas
+
+    def spy(self, *args, **kwargs):
+        pdf = real(self, *args, **kwargs)
+        sizes.append(len(pdf))
+        return pdf
+
+    monkeypatch.setattr(DataFrame, "toPandas", spy)
+    return sizes

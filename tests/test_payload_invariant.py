@@ -69,3 +69,17 @@ def test_phash_stable_under_lossless_recode(spark):
         px = codec.decode(r.bytes, r.fmt, r.w, r.h)
         png = codec.decode(codec.encode(px, "png"), "png", r.w, r.h)
         assert codec.phash64(png) == codec.phash64(px) == r.phash
+
+
+def test_images_df_rows_equal_image_row(spark):
+    """images_df's batched generator reproduces the per-row reference
+    ``image_row`` exactly, including the caption's lulc (both take the
+    hash modulo in float64, whatever NumPy's promotion rules)."""
+    w, seed = 16, 42
+    rows = synth.images_df(spark, 40, w=w, seed=seed, parts=4).collect()
+    assert len(rows) == 40
+    for r in rows:
+        exp = synth.image_row(int(r.image_id[3:]), w, w, seed)
+        got = {k: r[k] for k in exp}
+        got["bytes"] = bytes(got["bytes"])
+        assert got == exp

@@ -62,21 +62,6 @@ def test_pick_cover_res_bounds():
     assert 3 <= res <= 16
 
 
-def test_refine_variants_identical(spark):
-    """All three ray-cast refine implementations (expr array-aggregate,
-    sql parity join, NumPy pandas UDF) must produce identical
-    assignment sets."""
-    tracker = synth.tracker_df(spark, 3000, seed=11)
-    aois = synth.aoi_polygons(10, seed=11)
-    a = pip_join(spark, tracker, aois, refine="expr").collect()
-    b = pip_join(spark, tracker, aois, refine="udf").collect()
-    c = pip_join(spark, tracker, aois, refine="sql").collect()
-    ka = [(r.aoi_id, r.image_id) for r in a]
-    kb = [(r.aoi_id, r.image_id) for r in b]
-    kc = [(r.aoi_id, r.image_id) for r in c]
-    assert ka == kb == kc and len(ka) > 0
-
-
 # ------------------------------------------------- antimeridian AOIs
 
 
@@ -120,11 +105,10 @@ def _brute_pip_am(pdf: pd.DataFrame, aois: list[dict]) -> set[tuple[int, str]]:
     return out
 
 
-@pytest.mark.parametrize("refine", ["expr", "sql", "udf"])
-def test_pip_join_antimeridian(spark, refine):
+def test_pip_join_antimeridian(spark):
     aois = _am_aois()
     tiles, pdf = _am_points(spark)
-    got = pip_join(spark, tiles, aois, refine=refine).toPandas()
+    got = pip_join(spark, tiles, aois).toPandas()
     exp = _brute_pip_am(pdf, aois)
     assert set(zip(got["aoi_id"].tolist(), got["image_id"].tolist())) == exp
     # sanity: the AOIs really get hits on BOTH sides of +-180
@@ -198,8 +182,7 @@ def _brute_pip_rings(pdf: pd.DataFrame, aois: list[dict]) -> set[tuple[int, str]
     return out
 
 
-@pytest.mark.parametrize("refine", ["expr", "sql", "udf"])
-def test_pip_join_with_holes(spark, refine):
+def test_pip_join_with_holes(spark):
     aois = _donut_aois()
     rng = np.random.default_rng(21)
     pdf = pd.DataFrame(
@@ -209,7 +192,7 @@ def test_pip_join_with_holes(spark, refine):
             "lat": rng.uniform(-15.0, 15.0, 3000),
         }
     )
-    got = pip_join(spark, spark.createDataFrame(pdf), aois, refine=refine).toPandas()
+    got = pip_join(spark, spark.createDataFrame(pdf), aois).toPandas()
     exp = _brute_pip_rings(pdf, aois)
     assert set(zip(got["aoi_id"].tolist(), got["image_id"].tolist())) == exp
     # points strictly inside the hole are excluded

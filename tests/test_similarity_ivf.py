@@ -427,24 +427,21 @@ def test_ivf_portable_matches_numpy_reference(spark):
     assert got == sorted(exp, key=lambda x: (x[0], x[1]))
 
 
-def test_ivf_topk_corpus_sized_queries_auto_dispatch(spark):
+def test_ivf_topk_corpus_sized_queries_auto_dispatch(spark, collect_sizes):
     """ivf_topk(collect_queries=True) must NEVER fully collect a query
     frame past max_queries (the silent-OOM edge the knn_join /
     brute_force_topk guards already close): the probe is the bounded
     limit(max_queries+1).toPandas() collect the path needs anyway, and
     on overflow the call routes to the distributed probe, returning
-    rows identical to calling it directly. The trap asserts the
-    caller's unbounded frame never reaches toPandas()."""
+    rows identical to calling it directly. Every collect the call
+    makes is recorded and must hold at most max_queries+1 rows."""
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     cents = sim.ivf_train(emb, n_centroids=8, iters=2, seed=7)
     index = sim.ivf_index(emb, cents)
     q = emb.where("vec_id < 40").selectExpr("vec_id AS query_id", "embedding")
-
-    def _boom(*a, **k):  # instance-level trap: dispatch must not collect
-        raise AssertionError("corpus-sized query frame reached toPandas()")
-
-    q.toPandas = _boom
+    collect_sizes.clear()  # count only ivf_topk's collects
     got = sim.ivf_topk(spark, index, cents, q, k=5, nprobe=4, max_queries=16)
+    assert collect_sizes and max(collect_sizes) <= 17, collect_sizes
     exp = sim.ivf_topk(
         spark, index, cents,
         emb.where("vec_id < 40").selectExpr("vec_id AS query_id", "embedding"),
