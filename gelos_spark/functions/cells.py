@@ -327,6 +327,14 @@ def polygon_cover_classified(
     cells, (lon0, lat0, lon1, lat1) = _cover_grid(
         outer[:, 0].min(), outer[:, 1].min(), outer[:, 0].max(), outer[:, 1].max(), res
     )
+    # the encoder's float rounding can put a point a few ulps outside
+    # its cell's exact rect (lat -1e-20 lands in the row starting at 0),
+    # so every test below runs on the rect padded by a slack far above
+    # that rounding: kept cells and interior claims hold for the points
+    # the encoder actually maps to the cell
+    n = 1 << res
+    sx, sy = 1e-6 * 360.0 / n, 1e-6 * 180.0 / n
+    lon0, lon1, lat0, lat1 = lon0 - sx, lon1 + sx, lat0 - sy, lat1 + sy
     # (a) any ring vertex inside the cell rect
     vx = np.concatenate([r[:, 0] for r in rings])
     vy = np.concatenate([r[:, 1] for r in rings])

@@ -20,11 +20,15 @@ Three-phase plan, designed for the 10^12-tile scale:
      construction — the bulk of a large AOI's area never reaches the
      refinement at all.
   3. REFINE (boundary cells only): exact even-odd ray casting. Each
-     AOI's edge array rides in a broadcast and the crossing count is a
+     boundary cover row carries its OWN edge list — only the AOI edges
+     whose latitude span overlaps the cell's row band (plus a tiny
+     slack) — in the one cover broadcast, and the crossing count is a
      per-row array aggregate with the same IEEE float64 expression as
      the NumPy kernel (geometry.points_in_polygon): ONE scan, ONE
-     broadcast join, ZERO shuffles, zero Python; whole-stage codegen
-     end to end.
+     broadcast join, ZERO shuffles, zero Python. A dropped edge lies
+     wholly above or below every point the cell can hold, so its
+     ``(y1 > lat) != (y2 > lat)`` term is false and the count is
+     unchanged; interior rows carry an empty list.
      Only (lon, lat, aoi_id) columns flow through the join — the
      image payload stays out of the shuffle entirely and is
      re-attached by image_id afterwards if the caller needs it
@@ -49,6 +53,7 @@ from gelos_spark.functions import cells
 from gelos_spark.functions.cell_udfs import cell_encode_col, cell_parent_col
 
 TILE_RES = 16  # fine tile cell resolution (~600 m cells); prefix-shifts to any coarser res
+_EDGE_FIELDS = ("x1", "y1", "x2", "y2")  # one edge; order of _aoi_edges' columns
 
 
 def pick_cover_res(aois: list[dict], max_cells_per_aoi: int = 2048) -> int:
@@ -88,14 +93,19 @@ def build_cover_df(
     cover_res: int,
     classified: list[tuple] | None = None,
 ) -> DataFrame:
-    """Exploded (aoi_id, cover_cell, interior) DataFrame. Cover
-    generation is driver-side NumPy: the AOI set is the engine's small
-    dimension (SURVEY.md §2.6 G6); at scale with millions of AOIs this
-    same construction runs inside mapInArrow over an AOI DataFrame.
+    """Exploded (aoi_id, cover_cell, interior, wrapped, edges) DataFrame.
+    Cover generation is driver-side NumPy: the AOI set is the engine's
+    small dimension (SURVEY.md §2.6 G6); at scale with millions of AOIs
+    this same construction runs inside mapInArrow over an AOI DataFrame.
 
     ``interior`` marks cells provably fully inside their polygon —
     tiles landing there skip ray-cast refinement (the bulk of a large
-    AOI's area never reaches the crossing count)."""
+    AOI's area never reaches the crossing count). A boundary row's
+    ``edges`` (array<struct<x1, y1, x2, y2>>) holds the AOI's edges
+    that can cross a point of the cell's row band (_cell_edges);
+    ``wrapped`` marks antimeridian AOIs, whose edge lons are unwrapped.
+    The frame is built in pandas with array<double> columns so it goes
+    through Arrow; the structs are zipped JVM-side."""
     if classified is None:
         classified = classify_covers(aois, cover_res)
     elif len(classified) != len(aois):
@@ -105,19 +115,27 @@ def build_cover_df(
             f"build_cover_df: classified has {len(classified)} entries "
             f"for {len(aois)} aois"
         )
-    ids, cels, ints = [], [], []
+    parts = []
     for p, (cover, interior) in zip(aois, classified):
-        ids.append(np.full(len(cover), p["aoi_id"], dtype=np.int64))
-        cels.append(cover)
-        ints.append(interior)
-    pdf = pd.DataFrame(
-        {
-            "aoi_id": np.concatenate(ids) if ids else np.asarray([], dtype=np.int64),
-            "cover_cell": np.concatenate(cels) if cels else np.asarray([], dtype=np.int64),
-            "interior": np.concatenate(ints) if ints else np.asarray([], dtype=bool),
-        }
+        edges, wrapped = _aoi_edges(p)
+        kept = [edges[keep] for keep in _cell_edges(edges, cover, interior, cover_res)]
+        parts.append(pd.DataFrame({
+            "aoi_id": np.full(len(cover), p["aoi_id"], dtype=np.int64),
+            "cover_cell": cover,
+            "interior": interior,
+            "wrapped": wrapped,
+            **{k: [e[:, j] for e in kept] for j, k in enumerate(_EDGE_FIELDS)},
+        }))
+    cover_df = spark.createDataFrame(
+        pd.concat(parts, ignore_index=True) if parts
+        else pd.DataFrame(columns=["aoi_id", "cover_cell", "interior", "wrapped", *_EDGE_FIELDS]),
+        schema="aoi_id long, cover_cell long, interior boolean, wrapped boolean, "
+        "x1 array<double>, y1 array<double>, x2 array<double>, y2 array<double>",
     )
-    return spark.createDataFrame(pdf, schema="aoi_id long, cover_cell long, interior boolean")
+    return cover_df.select(
+        "aoi_id", "cover_cell", "interior", "wrapped",
+        F.arrays_zip(*_EDGE_FIELDS).alias("edges"),
+    )
 
 
 def aoi_cell_ranges(
@@ -195,43 +213,42 @@ def _dedup_close(ring: np.ndarray) -> np.ndarray:
     return ring
 
 
-def _aoi_rings(p: dict) -> list[tuple[np.ndarray, bool]]:
-    """Every ring of an AOI (outer + holes), frame-consistently
-    unwrapped and de-closed, each tagged with the shared wrapped flag."""
+def _aoi_edges(p: dict) -> tuple[np.ndarray, bool]:
+    """(n, 4) float64 [x1, y1, x2, y2] edges of every ring of an AOI
+    (outer + holes, frame-consistently unwrapped, each closed on
+    itself), plus its wrapped flag. Horizontal edges are dropped — they
+    never cross under the half-open rule (same as the NumPy kernel,
+    where (y1 > p) != (y2 > p) is always false for y1 == y2).
+    Antimeridian rings carry UNWRAPPED edge lons (+360 on the west
+    side); candidates shift their lon the same way before the crossing
+    test. Hole edges sit in the same array (multi-ring even-odd
+    parity)."""
     outer, hs, wrapped = cells.unwrap_rings(
         np.asarray(p["ring"], dtype=np.float64), p.get("holes")
     )
-    return [(_dedup_close(r), wrapped) for r in [outer] + hs]
+    rings = [_dedup_close(r) for r in [outer] + hs]
+    e = np.concatenate([np.concatenate([r, np.roll(r, -1, axis=0)], axis=1) for r in rings])
+    return e[e[:, 1] != e[:, 3]], wrapped
 
 
-def build_aoi_edges_df(spark: SparkSession, aois: list[dict]) -> DataFrame:
-    """(aoi_id, edges: array<struct<x1,y1,x2,y2>>, wrapped) — one row
-    per AOI, edges as an array so the whole polygon rides inside the
-    broadcast and the crossing count becomes a map-side array
-    aggregate. Horizontal edges are dropped — they never cross under
-    the half-open rule (same as the NumPy kernel, where
-    (y1 > p) != (y2 > p) is always false for y1 == y2). Antimeridian
-    rings carry UNWRAPPED edge lons (+360 on the west side) with
-    wrapped=true; candidates shift their lon the same way before the
-    crossing test. Hole edges ride the same array (multi-ring even-odd
-    parity)."""
-    rows = []
-    for p in aois:
-        es = []
-        wrapped = False
-        for ring, wrapped in _aoi_rings(p):
-            v = len(ring)
-            for i in range(v):
-                x1, y1 = float(ring[i, 0]), float(ring[i, 1])
-                x2, y2 = float(ring[(i + 1) % v, 0]), float(ring[(i + 1) % v, 1])
-                if y1 != y2:
-                    es.append({"x1": x1, "y1": y1, "x2": x2, "y2": y2})
-        rows.append((int(p["aoi_id"]), es, wrapped))
-    return spark.createDataFrame(
-        rows,
-        "aoi_id long, edges array<struct<x1 double, y1 double, x2 double, y2 double>>, "
-        "wrapped boolean",
-    )
+def _cell_edges(
+    edges: np.ndarray, cover: np.ndarray, interior: np.ndarray, cover_res: int
+) -> np.ndarray:
+    """(cells, edges) keep-mask: an edge stays on a boundary cell's row
+    iff its latitude span overlaps the cell's row band, padded by a
+    slack far above the rounding of the tile-cell encoder. Any other
+    edge lies wholly above or below every point the cell can hold, so
+    its crossing term is false. The grid's top and bottom rows stay
+    unbounded (the encoder clamps out-of-range latitudes into them);
+    interior cells keep no edges (they are never ray-cast)."""
+    n = 1 << cover_res
+    h = 180.0 / n
+    _, y = cells.cell_to_xy(cover)
+    lo = np.where(y == 0, -np.inf, -90.0 + y * h - 1e-6 * h)
+    hi = np.where(y == n - 1, np.inf, -90.0 + (y + 1) * h + 1e-6 * h)
+    ymin = np.minimum(edges[:, 1], edges[:, 3])
+    ymax = np.maximum(edges[:, 1], edges[:, 3])
+    return (ymax >= lo[:, None]) & (ymin <= hi[:, None]) & ~interior[:, None]
 
 
 def crossing_count_expr(edges: F.Column, lon: F.Column, lat: F.Column) -> F.Column:
@@ -284,16 +301,14 @@ def pip_join(
         "lat",
         cell_parent_col(F.col(tile_cell_col), TILE_RES, cover_res).alias("cover_cell"),
     )
-    coarse = pts.join(cover, "cover_cell")
     # interior cells are provably contained; only boundary-cell tiles
-    # pay the exact ray cast (each AOI's edge array rides in the
-    # broadcast; the crossing count is a per-row array aggregate)
-    aoi_edges = F.broadcast(build_aoi_edges_df(spark, aois))
+    # pay the exact ray cast over their cover row's edge list (the
+    # crossing count is a per-row array aggregate)
     lon_adj = F.when(
         F.col("wrapped") & (F.col("lon") < 0.0), F.col("lon") + 360.0
     ).otherwise(F.col("lon"))
     out = (
-        coarse.join(aoi_edges, "aoi_id")
+        pts.join(cover, "cover_cell")
         .where(
             F.col("interior")
             | (crossing_count_expr(F.col("edges"), lon_adj, F.col("lat")) % 2 == 1)

@@ -8,14 +8,20 @@ A pipeline is a named sequence of stages. Each stage:
   1. is SKIPPED if the checkpoint log already holds a ``done`` marker
      for (run_id, stage) — the generalization of the reference's
      ``.embeddings_complete`` marker skip
-     (gelos/embedding_generation.py:58-61);
+     (gelos/embedding_generation.py:58-61). The check reads the
+     checkpoint MANIFEST only (no Spark job): a stage's lineage is
+     committed under the partition tag ``{run_id}/{stage}`` in the
+     same atomic commit that holds its ``done`` row, so the tag is
+     present exactly when the marker is;
   2. otherwise computes its DataFrame and commits it to the stage's
      SnapshotTable with ``overwrite_partition(partition=stage)`` —
      idempotent: a crash after data-write but before the marker
      re-runs the stage and replaces, never duplicates;
-  3. then appends lineage rows to the checkpoint table: one row per
+  3. then commits lineage rows to the checkpoint table: one row per
      written data file (the physical output partition) with row count
-     + byte size, plus one ``done`` marker row with wall-clock ms.
+     + byte size, plus one ``done`` marker row with wall-clock ms. The
+     few rows are written on the driver as one pyarrow parquet file
+     (``SnapshotTable.overwrite_partition_arrow``) — no Spark job.
 
 The checkpoint log itself is a SnapshotTable, so markers commit with
 the same atomic-rename protocol and are queryable as a DataFrame
@@ -29,6 +35,7 @@ from __future__ import annotations
 import time
 from collections.abc import Callable
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -37,6 +44,11 @@ from gelos_spark.tables.snapshot import SnapshotTable
 CHECKPOINT_SCHEMA = (
     "run_id string, stage string, partition_id string, rows_in long, "
     "rows_out long, bytes long, status string, wall_ms long, ts double"
+)
+_ARROW_TYPES = {"string": pa.string(), "long": pa.int64(), "double": pa.float64()}
+#: CHECKPOINT_SCHEMA as the Arrow schema of a driver-written lineage file
+CHECKPOINT_ARROW_SCHEMA = pa.schema(
+    [(name, _ARROW_TYPES[typ]) for name, typ in (c.split() for c in CHECKPOINT_SCHEMA.split(", "))]
 )
 
 
@@ -51,23 +63,21 @@ class CheckpointLog:
         return self.table.read(self.spark)
 
     def done_stages(self, run_id: str) -> set[str]:
-        if self.table.is_empty():
-            return set()
-        rows = (
-            self.read()
-            .where((F.col("run_id") == run_id) & (F.col("status") == "done"))
-            .select("stage")
-            .distinct()
-            .collect()
-        )
-        return {r.stage for r in rows}
+        # manifest only: record() commits each stage's done marker under
+        # the tag f"{run_id}/{stage}", so the tag stands for the marker
+        prefix = f"{run_id}/"
+        return {
+            tag[len(prefix):]
+            for tag in self.table.partitions()
+            if isinstance(tag, str) and tag.startswith(prefix)
+        }
 
     def record(self, rows: list[tuple]) -> None:
-        df = self.spark.createDataFrame(rows, CHECKPOINT_SCHEMA)
+        table = pa.Table.from_arrays(list(zip(*rows)), schema=CHECKPOINT_ARROW_SCHEMA)
         # one checkpoint commit per stage, tagged by (run, stage) so a
         # re-run replaces its own lineage instead of duplicating it
         run_id, stage = rows[0][0], rows[0][1]
-        self.table.overwrite_partition(df.coalesce(1), partition=f"{run_id}/{stage}")
+        self.table.overwrite_partition_arrow(table, partition=f"{run_id}/{stage}")
 
     def lineage(self, run_id: str) -> DataFrame:
         return self.read().where(F.col("run_id") == run_id).orderBy("stage", "partition_id")

@@ -59,8 +59,9 @@ Layout under ``root``:
 
 At cluster scale the same protocol works on any store with atomic
 rename (HDFS) or conditional put (S3); data-file writes are fully
-distributed (df.write.parquet) — only the tiny manifest commit and
-the footer-stat harvest are driver-side, exactly like Iceberg's.
+distributed (df.write.parquet) — only the tiny manifest commit, the
+footer-stat harvest and the few-row checkpoint lineage file
+(``overwrite_partition_arrow``, one pyarrow write) are driver-side.
 
 Concurrency contract: ONE writer per table at a time (the engine's
 actual shapes — each pipeline stage owns its table, the streaming
@@ -80,6 +81,7 @@ import time
 import uuid
 from typing import Any
 
+import pyarrow as pa
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -122,6 +124,17 @@ def _file_column_stats(meta: "pq.FileMetaData") -> dict[str, list]:
             continue  # NaN bounds can't order — skip, stay conservative
         stats[name] = [mn, mx]
     return stats
+
+
+def _file_entry(path: str, meta: "pq.FileMetaData", partition: str | None) -> dict:
+    """Manifest entry of one committed parquet data file."""
+    return {
+        "path": path,
+        "rows": meta.num_rows,
+        "bytes": os.path.getsize(path),
+        "partition": partition,
+        "stats": _file_column_stats(meta),
+    }
 
 
 def _as_ranges(pred) -> list[tuple]:
@@ -295,15 +308,7 @@ class SnapshotTable:
             if meta.num_rows == 0:
                 empties.append(path)  # range partitions can be empty
                 continue
-            out.append(
-                {
-                    "path": path,
-                    "rows": meta.num_rows,
-                    "bytes": os.path.getsize(path),
-                    "partition": partition,
-                    "stats": _file_column_stats(meta),
-                }
-            )
+            out.append(_file_entry(path, meta, partition))
         if not out and empties and keep_empty_if_none:
             # a legitimately EMPTY commit (stage produced 0 rows) must
             # still register one schema-bearing file when the TABLE
@@ -386,6 +391,19 @@ class SnapshotTable:
             df, partition, cluster_by, num_files, keep_empty_if_none=not kept
         )
         return self._commit(kept + new_files)
+
+    def overwrite_partition_arrow(self, table: pa.Table, partition: str) -> int:
+        """``overwrite_partition`` for a few driver-side rows: write
+        ``table`` as ONE parquet file with pyarrow (no Spark job) and
+        commit it with the same unique data dir, footer stats, tag
+        replacement and atomic pointer rename. The checkpoint lineage
+        commit (plans/checkpoint.py) is the caller."""
+        kept = [f for f in self.files() if f["partition"] != partition]
+        commit_dir = os.path.join(self.root, "data", uuid.uuid4().hex)
+        os.makedirs(commit_dir)
+        path = os.path.join(commit_dir, "part-00000.parquet")
+        pq.write_table(table, path)
+        return self._commit(kept + [_file_entry(path, pq.read_metadata(path), partition)])
 
     def overwrite(
         self,

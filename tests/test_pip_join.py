@@ -259,3 +259,115 @@ def test_stale_classified_cover_is_loud(spark):
         build_cover_df(spark, aois, 6, classified=short)
     with _pytest.raises(ValueError, match="2 entries for 4"):
         aoi_cell_ranges(aois, 6, classified=short)
+
+
+# ------------------------------- per-cell edge lists: exactness probes
+
+_H8 = 180.0 / (1 << 8)  # cover-cell row height at cover_res 8
+
+
+def _edge_probe_aois():
+    """AOIs whose vertices and horizontal edges sit on cover-cell row
+    boundaries (multiples of the res-8 row height), an antimeridian one,
+    a holed one, and one with an edge ending 1e-25 below the equator
+    row boundary (an edge the row band must keep)."""
+    h = _H8
+    return [
+        {"aoi_id": 0, "name": "stairs",
+         "ring": [(0.0, 0.0), (8 * h, 0.0), (8 * h, 3 * h), (5 * h, 3 * h), (5 * h, 6 * h),
+                  (2 * h, 6 * h), (2 * h, 9 * h), (0.0, 9 * h)]},
+        {"aoi_id": 1, "name": "slanted",
+         "ring": [(-20.0, -40 * h), (-12.0, -36 * h), (-13.0, -30 * h),
+                  (-17.5, -27 * h), (-22.0, -33 * h)]},
+        {"aoi_id": 2, "name": "am_steps",
+         "ring": [(175.0, -7 * h), (-175.0, -7 * h), (-175.0, 5 * h), (-178.0, 5 * h),
+                  (-178.0, 9 * h), (175.0, 9 * h)]},
+        {"aoi_id": 3, "name": "donut",
+         "ring": [(30.0, 10 * h), (40.0, 10 * h), (40.0, 24 * h), (30.0, 24 * h)],
+         "holes": [[(33.0, 14 * h), (37.0, 14 * h), (37.0, 19 * h), (33.0, 19 * h)]]},
+        {"aoi_id": 4, "name": "below_equator",
+         "ring": [(-5.0, -5.0), (5.0, -5.0), (5.0, -1e-25), (2.0, -1e-25),
+                  (2.0, 3.0), (-5.0, 3.0)]},
+    ]
+
+
+def _edge_probe_points(aois: list[dict], resolutions: list[int]) -> pd.DataFrame:
+    """Points exactly on every vertex, along every horizontal edge, and
+    on every cover-cell row boundary an AOI spans (at each resolution),
+    plus their one-ulp neighbours in latitude."""
+    from gelos_spark.functions.cells import unwrap_rings
+
+    def canon(x):  # unwrapped frame -> [-180, 180)
+        return np.where(x >= 180.0, x - 360.0, x)
+
+    lon, lat = [], []
+    for p in aois:
+        outer, hs, _ = unwrap_rings(np.asarray(p["ring"], dtype=np.float64), p.get("holes"))
+        for orig, ring in zip([p["ring"]] + list(p.get("holes") or []), [outer] + hs):
+            orig = np.asarray(orig, dtype=np.float64)
+            lon.append(orig[:, 0])
+            lat.append(orig[:, 1])
+            nxt = np.roll(ring, -1, axis=0)
+            flat = ring[:, 1] == nxt[:, 1]
+            for t in (0.25, 0.5, 0.75):
+                lon.append(canon(ring[flat, 0] + t * (nxt[flat, 0] - ring[flat, 0])))
+                lat.append(ring[flat, 1])
+        xs = np.concatenate([np.linspace(outer[:, 0].min() - 1, outer[:, 0].max() + 1, 37),
+                             outer[:, 0]])
+        for res in resolutions:
+            h = 180.0 / (1 << res)
+            y0 = int(np.floor((outer[:, 1].min() + 90.0) / h)) - 1
+            y1 = int(np.floor((outer[:, 1].max() + 90.0) / h)) + 2
+            for b in -90.0 + np.arange(y0, y1) * h:
+                lon.append(canon(xs))
+                lat.append(np.full(len(xs), b))
+    lon, lat = np.concatenate(lon), np.concatenate(lat)
+    lon = np.concatenate([lon, lon, lon, [0.5, 0.5, -3.0]])
+    lat = np.concatenate([lat, np.nextafter(lat, -np.inf), np.nextafter(lat, np.inf),
+                          [-1e-20, -1e-30, -1e-20]])
+    return pd.DataFrame(
+        {"image_id": [f"e{i:06d}" for i in range(len(lon))], "lon": lon, "lat": lat}
+    )
+
+
+@pytest.mark.parametrize("cover_res", [8, None])
+def test_edge_pruned_refine_exact_on_boundaries(spark, cover_res):
+    """Points on cover-cell row boundaries, on polygon vertices and on
+    horizontal edges — wrapped and holed AOIs included — get exactly
+    the NumPy ray-cast oracle's assignments."""
+    aois = _edge_probe_aois()
+    pdf = _edge_probe_points(aois, [8, pick_cover_res(aois)])
+    got = pip_join(spark, spark.createDataFrame(pdf), aois, cover_res=cover_res).toPandas()
+    exp = _brute_pip_rings(pdf, aois)
+    assert set(zip(got["aoi_id"].tolist(), got["image_id"].tolist())) == exp
+    assert {a for a, _ in exp} == {0, 1, 2, 3, 4}
+    # the edge that ends 1e-25 below the equator crosses these points
+    probe = pdf[pdf.lat == -1e-20]["image_id"].tolist()
+    assert {(4, i) for i in probe} <= exp
+    # plain single-ring AOIs agree with the single-ring oracle too
+    plain = [a for a in aois if a["aoi_id"] in (0, 1, 4)]
+    assert {(a, i) for a, i in exp if a in (0, 1, 4)} == _brute_pip(pdf, plain)
+
+
+def test_cover_rows_carry_only_their_row_band_edges(spark):
+    """Interior cover rows carry no edges; boundary rows carry a subset
+    of the AOI's non-horizontal edges, strictly smaller for most."""
+    from gelos_spark.operators.pip_join import build_cover_df
+
+    aois = synth.aoi_polygons(4, seed=42, vertices=48)
+    cover = build_cover_df(spark, aois, pick_cover_res(aois)).toPandas()
+    n_edges = cover.groupby("aoi_id")["edges"].apply(lambda s: max(len(e) for e in s))
+    sizes = cover["edges"].map(len)
+    assert (sizes[cover["interior"]] == 0).all()
+    boundary = ~cover["interior"]
+    assert (sizes[boundary] > 0).all()
+    assert (sizes[boundary] < cover.loc[boundary, "aoi_id"].map(n_edges)).mean() > 0.5
+    assert (n_edges <= 48).all()
+
+
+def test_pip_join_empty_aoi_list(spark):
+    out = pip_join(spark, synth.tracker_df(spark, 200, seed=1), [])
+    assert out.schema.simpleString() == (
+        "struct<aoi_id:bigint,image_id:string,lon:double,lat:double>"
+    )
+    assert out.count() == 0

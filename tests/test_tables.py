@@ -13,7 +13,7 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
-from gelos_spark.plans.checkpoint import Pipeline, resume_delta
+from gelos_spark.plans.checkpoint import CHECKPOINT_SCHEMA, Pipeline, resume_delta
 from gelos_spark.tables.snapshot import SnapshotTable
 
 
@@ -569,3 +569,109 @@ def test_rollback_switches_current_and_preserves_history(spark, tmp_path):
     assert t.snapshots() == [s1, s3]
     with pytest.raises(ValueError, match="committed chain"):
         t.rollback(s2)
+
+
+# ------------------------------------- checkpoint bookkeeping (driver)
+
+
+def _jobs_launched(spark, group, fn):
+    """Number of Spark jobs ``fn`` launches, counted through a job
+    group once the listener bus has delivered every job event."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _must_not_run(sp):
+    raise AssertionError("a done stage must be skipped")
+
+
+def test_done_check_launches_no_spark_jobs(spark, tmp_path):
+    """The resume check answers from the checkpoint manifest: 0 jobs
+    per check, and a full resume of N stages launches at most N jobs
+    (the schema reads of the frames ``stage`` returns)."""
+    root = str(tmp_path / "run")
+    stages = ["s1", "s2", "s3"]
+    p1 = Pipeline(spark, root, "r1")
+    for name in stages:
+        p1.stage(name, lambda sp: sp.range(0, 20))
+    p2 = Pipeline(spark, root, "r1")
+    assert _jobs_launched(spark, "done-check", lambda: p2.log.done_stages("r1")) == 0
+    assert p2.log.done_stages("r1") == set(stages)
+
+    def resume():
+        for name in stages:
+            p2.stage(name, _must_not_run)
+
+    assert _jobs_launched(spark, "full-resume", resume) <= len(stages)
+    assert p2.skipped == stages and p2.executed == []
+
+
+def test_resume_skips_stage_with_spark_written_lineage(spark, tmp_path):
+    """A checkpoint table whose lineage was committed by a Spark write
+    (the earlier on-disk format) still resume-skips its stage, and the
+    log reads back with CHECKPOINT_SCHEMA's types over a mix of Spark-
+    and pyarrow-written lineage files."""
+    root = str(tmp_path / "run")
+    p1 = Pipeline(spark, root, "r1")
+    p1.table("s1").overwrite_partition(spark.range(0, 5), partition="s1")
+    rows = [
+        ("r1", "s1", "part-00000.parquet", -1, 5, 100, "file", 7, 1.5),
+        ("r1", "s1", "__stage__", -1, 5, -1, "done", 7, 1.5),
+    ]
+    p1.log.table.overwrite_partition(
+        spark.createDataFrame(rows, CHECKPOINT_SCHEMA), partition="r1/s1"
+    )
+    p2 = Pipeline(spark, root, "r1")
+    p2.stage("s1", _must_not_run)
+    p2.stage("s2", lambda sp: p2.output("s1").withColumn("y", F.col("id") + 1))
+    assert p2.skipped == ["s1"] and p2.executed == ["s2"]
+
+    want = spark.createDataFrame([], CHECKPOINT_SCHEMA).schema
+    log = p2.log.read()
+    assert [(f.name, f.dataType) for f in log.schema] == [(f.name, f.dataType) for f in want]
+    done = {r.stage: r.rows_out for r in log.where("status = 'done'").collect()}
+    assert done == {"s1": 5, "s2": 5}
+
+
+def test_crash_in_lineage_commit_reruns_stage_without_duplicates(
+    spark, tmp_path, monkeypatch
+):
+    """Die at the checkpoint table's commit point, after the stage's
+    data commit: the stage has no done marker, so a resume re-runs it,
+    and its lineage ends up committed exactly once."""
+    root = str(tmp_path / "run")
+    real_point = SnapshotTable._point_current
+
+    def dying_point(self, sid):
+        if self.root.endswith("_checkpoints"):
+            raise RuntimeError("killed at the commit point")
+        return real_point(self, sid)
+
+    p1 = Pipeline(spark, root, "r1")
+    p1.stage("s1", lambda sp: sp.range(0, 30).repartition(3))
+    monkeypatch.setattr(SnapshotTable, "_point_current", dying_point)
+    with pytest.raises(RuntimeError, match="commit point"):
+        p1.stage("s2", lambda sp: sp.range(0, 40).repartition(2))
+    monkeypatch.undo()
+
+    p2 = Pipeline(spark, root, "r1")
+    assert p2.log.done_stages("r1") == {"s1"}
+    p2.stage("s1", _must_not_run)
+    p2.stage("s2", lambda sp: sp.range(0, 40).repartition(2))
+    assert p2.skipped == ["s1"] and p2.executed == ["s2"]
+
+    lin = p2.log.lineage("r1").collect()
+    for stage, n in (("s1", 30), ("s2", 40)):
+        rows = [r for r in lin if r.stage == stage]
+        ids = [r.partition_id for r in rows]
+        assert len(ids) == len(set(ids))  # no duplicate lineage rows
+        assert [r.rows_out for r in rows if r.status == "done"] == [n]
+        assert sum(r.rows_out for r in rows if r.status == "file") == n
+    assert p2.output("s2").count() == 40
