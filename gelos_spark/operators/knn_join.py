@@ -16,29 +16,36 @@ Algorithm (iterative DataFrame loop — SURVEY.md §4 item 2):
   Round i explores the shell of cells with grid Chebyshev distance in
   (r_{i-1}, r_i] of each ACTIVE query's cell. The initial radius r_0
   is chosen from the measured density so the first disk is expected
-  to hold ~3k candidates — the common case finishes in ONE round. A
-  query finalizes when it holds >= k candidates whose k-th distance is
-  <= the conservative lower bound on anything outside the explored
-  disk (``_bound_km_col``). Queries still unresolved after a fixed
-  number of ring rounds, or once the next disk would wrap the grid
-  (2r+1 > n: shells would alias cells of earlier rounds), take ONE
-  exact brute-force pass shared by all of them.
+  to hold ~3*k candidates (``_initial_radius``); when the data is
+  clustered the k-th distance may still beat the bound only after a
+  second or third round. A query finalizes when its rank-k candidate
+  by (dist_km, image_id) is within the conservative lower bound on
+  anything outside the explored disk (``_finished``,
+  ``_bound_km_col``). Queries still unresolved after a fixed number
+  of ring rounds, or once the next disk would wrap the grid (2r+1 >
+  n: shells would alias cells of earlier rounds), take ONE exact
+  brute-force pass shared by all of them.
 
   The QUERY side is carried in one of two ways, chosen by size:
     - ``knn_join`` (a retrieval request set): pulled to the driver
       once; shells are computed in driver NumPy
       (functions/cells.cell_shell_batch) and shipped per round as a
-      broadcast DataFrame — ONE distributed action per round (the ids
-      of the finished queries) and zero Python stages in the executor
-      plan. Small inputs skip the rings and take the exact pass
-      directly (``brute_force_pairs``).
+      broadcast DataFrame. The running top-k (at most sum(k) rows)
+      lives on the driver between rounds: ONE Spark action per round
+      collects the active queries' ranked top-k rows with their stop
+      flag, and the unfinished queries' rows are re-shipped into the
+      next round's pool. The exact pass is collected the same way, and
+      the result is built from the collected rows. Small inputs skip
+      the rings and take the exact pass directly
+      (``brute_force_pairs``).
     - ``knn_join_distributed`` (a corpus-sized query table, dispatched
-      to automatically past ``max_queries``): the query side stays a
-      DataFrame; shells come from the same kernel in a pandas UDF and
-      the finished-query split is a semi/anti join.
+      to automatically past ``max_queries``): the query side and the
+      running top-k stay DataFrames; shells come from the same kernel
+      in a pandas UDF and the finished-query split is a semi/anti join
+      on the stop rows.
   Both carriers share the tile index, the candidate select, the
-  per-round top-k merge, the stop bound, the wrap rule, the exact pass
-  and the final re-rank, so their outputs are bit-identical.
+  per-round top-k ranking, the stop rule, the wrap rule and the exact
+  pass, so their outputs are bit-identical.
 
 Determinism: ranking orders by (dist, image_id) — the id tie-break
 makes the output exact-match reproducible at any parallelism
@@ -68,12 +75,14 @@ DRIVER_RING_ROUNDS = 3
 DISTRIBUTED_RING_ROUNDS = 11
 
 
-def _schemas(qid_type: str) -> tuple[str, str, str]:
-    """(shell, query, out) schemas with the caller's query-id type
-    carried through — string ids work the same as the default long."""
+def _schemas(qid_type: str) -> tuple[str, str, str, str]:
+    """(shell, query, pool, out) schemas with the caller's query-id
+    type carried through — string ids work the same as the default
+    long. The pool is a ring round's candidate rows."""
     return (
         f"query_id {qid_type}, qlon double, qlat double, k int, cell long",
         f"query_id {qid_type}, qlon double, qlat double, k int",
+        f"query_id {qid_type}, qlon double, qlat double, k int, image_id string, dist_km double",
         f"query_id {qid_type}, rank int, image_id string, dist_km double",
     )
 
@@ -171,21 +180,20 @@ def _topk(pool: DataFrame) -> DataFrame:
     return pool.withColumn("rank", F.row_number().over(w)).where(F.col("rank") <= F.col("k"))
 
 
-def _ring_topk(topk: DataFrame | None, shell: DataFrame, tiles_c: DataFrame) -> DataFrame:
+def _ring_topk(prev: DataFrame | None, shell: DataFrame, tiles_c: DataFrame) -> DataFrame:
     """One ring round: the shell's (query, cell) rows join the tile
-    index, and their candidates merge into the running top-k
-    (persisted for the next round)."""
+    index, and their candidates merge with the unfinished queries'
+    previous top-k rows (pool columns) into a new ranked top-k."""
     cand = _with_dist(shell.join(tiles_c, "cell"))
-    pool = cand if topk is None else topk.unionByName(cand)
-    return _topk(pool).drop("rank").persist()
+    return _topk(cand if prev is None else prev.unionByName(cand))
 
 
 def _exact_topk(tiles: DataFrame, queries: DataFrame) -> DataFrame:
     """The exact brute-force pass: every query (query_id, qlon, qlat,
-    k) against every tile. Complete by construction, so any partial
-    ring candidates of these queries are dropped."""
+    k) against every tile, ranked. Complete by construction, so any
+    partial ring candidates of these queries are dropped."""
     pairs = tiles.select("image_id", "lon", "lat").crossJoin(queries)
-    return _topk(_with_dist(pairs)).drop("rank")
+    return _topk(_with_dist(pairs))
 
 
 def _exact_now(rounds: int, max_rounds: int, r: int, n_grid: int) -> bool:
@@ -215,39 +223,14 @@ def _bound_km_col(qlat: F.Column, res: int, r: int) -> F.Column:
     return F.lit(float(r)) * F.least(F.lit(h_km), F.greatest(w_km, F.lit(0.0)))
 
 
-def _finished(topk: DataFrame, res: int, r: int) -> DataFrame:
-    """Ids of the queries done after exploring the radius-r disk: they
-    hold >= k candidates and the k-th distance beats the bound."""
-    return (
-        topk.groupBy("query_id")
-        .agg(
-            F.count("*").alias("cnt"),
-            F.max("dist_km").alias("kth"),
-            F.first("qlat").alias("qlat"),
-            F.first("k").alias("kk"),
-        )
-        .where(
-            (F.col("cnt") >= F.col("kk"))
-            & (F.col("kth") <= _bound_km_col(F.col("qlat"), res, r))
-        )
-        .select("query_id")
+def _finished(res: int, r: int) -> F.Column:
+    """True on the row that finishes its query after the radius-r
+    disk: the rank-k row, when its distance is within the bound on
+    every unvisited cell. A query holding fewer than k candidates has
+    no such row and keeps expanding."""
+    return (F.col("rank") == F.col("k")) & (
+        F.col("dist_km") <= _bound_km_col(F.col("qlat"), res, r)
     )
-
-
-def _finish(
-    finalized: list[DataFrame], checkpoint: bool | str, caches: list[DataFrame]
-) -> DataFrame:
-    """Union the per-round finalized top-k frames, re-rank, order by
-    (query_id, rank) and apply the materialization policy."""
-    out = finalized[0]
-    for f in finalized[1:]:
-        out = out.unionByName(f)
-    result = (
-        _topk(out)
-        .select("query_id", "rank", "image_id", "dist_km")
-        .orderBy("query_id", "rank")
-    )
-    return finalize(result, checkpoint, caches=caches)
 
 
 def _shell_pdf(q: pd.DataFrame, res: int, r0: int, r1: int) -> pd.DataFrame:
@@ -296,10 +279,10 @@ def knn_join(
 
     ``checkpoint``: materialization policy for the returned frame
     (plans/materialize.finalize) — True = eager localCheckpoint
-    (default; round caches released now), "reliable" = durable
-    ``DataFrame.checkpoint()`` for cluster executor-loss survival,
-    False = the composable lazy plan (caches stay persisted; the
-    caller owns their lifetime).
+    (default), "reliable" = durable ``DataFrame.checkpoint()`` for
+    cluster executor-loss survival, False = the frame as built from
+    the collected rows. The result is assembled on the driver, so no
+    cache is left persisted under any policy.
 
     Cost-based path selection: when tiles x queries <=
     ``brute_force_pairs`` one exact brute-force pass is cheaper than
@@ -307,14 +290,17 @@ def knn_join(
     measured crossover on local[32] is ~2-10M pairs — above it the
     brute pass's per-query window shuffle dominates and ring pruning
     wins), so every query takes the exact pass. The tile count is
-    ``n_tiles_hint`` (or a count) before the tiles are indexed, and
-    the measured count after, so an overestimated hint still ends in
-    the exact pass. Ring expansion is the 10^12-tile design; results
-    are identical either way (both exact, ties broken by id). Set
+    ``n_tiles_hint`` before the tiles are indexed (a count only when
+    ``res`` must be derived from it), and the measured count after,
+    so an overestimated or missing hint still ends in the exact pass.
+    Ring expansion is the 10^12-tile design; results are identical
+    either way (both exact, ties broken by id). Set
     ``brute_force_pairs=0`` to force the ring path.
     """
-    n_hint = n_tiles_hint if n_tiles_hint is not None else tiles.count()
+    n_hint = n_tiles_hint
     if res is None:
+        if n_hint is None:
+            n_hint = tiles.count()
         res = default_res(n_hint)
     n_grid = 1 << res
 
@@ -340,57 +326,68 @@ def knn_join(
     else:
         q = queries.toPandas()
     q = q[["query_id", "lon", "lat", "k"]].copy()
-    shell_schema, query_schema, out_schema = _schemas(_qid_type(queries, q))
+    shell_schema, query_schema, pool_schema, out_schema = _schemas(_qid_type(queries, q))
     if len(q) == 0:
         return spark.createDataFrame([], out_schema)
+    out_cols = ["query_id", "rank", "image_id", "dist_km"]
 
-    def exact(tiles_df: DataFrame, active: pd.DataFrame) -> DataFrame:
-        # the few queries broadcast against the tile table
+    def exact(tiles_df: DataFrame, active: pd.DataFrame) -> pd.DataFrame:
+        # the few queries broadcast against the tile table; collected
         qdf = spark.createDataFrame(
             active[["query_id", "lon", "lat", "k"]].rename(
                 columns={"lon": "qlon", "lat": "qlat"}
             ),
             query_schema,
         )
-        return _exact_topk(tiles_df, F.broadcast(qdf))
+        return _exact_topk(tiles_df, F.broadcast(qdf)).select(*out_cols).toPandas()
 
-    if n_hint * len(q) <= brute_force_pairs:
+    def result(ranked: list[pd.DataFrame]) -> DataFrame:
+        out = pd.concat([r[out_cols] for r in ranked], ignore_index=True)
+        out = out.sort_values(["query_id", "rank"], kind="stable")
+        return finalize(spark.createDataFrame(out, out_schema), checkpoint)
+
+    if n_hint is not None and n_hint * len(q) <= brute_force_pairs:
         # small input: no cell column, no persist, no density aggregate
         # (none of them feed the exact pass)
-        return _finish([exact(tiles, q)], checkpoint, [])
+        return result([exact(tiles, q)])
 
     q["qcell"] = cells.cell_encode(q["lon"].to_numpy(), q["lat"].to_numpy(), res)
     tiles_c, stats = _index_tiles(tiles, res)
-    # the measured count re-applies the size rule (an overestimated
-    # hint), and an empty tile table goes straight to the exact pass
+    # the measured count re-applies the size rule (an overestimated or
+    # missing hint), and an empty tile table goes straight to the exact
+    # pass
     small = stats["n"] * len(q) <= brute_force_pairs
 
-    topk: DataFrame | None = None  # accumulated per-query top-k so far
-    finalized: list[DataFrame] = []
-    persisted: list[DataFrame] = [tiles_c]
+    done: list[pd.DataFrame] = []  # finished queries' ranked top-k rows
+    prev: pd.DataFrame | None = None  # unfinished queries' top-k rows
     active = q
     r_prev = -1
     r_cur = _initial_radius(stats, res, int(q["k"].max()))
     rounds = 0
 
-    while len(active) > 0:
-        if small or _exact_now(rounds, DRIVER_RING_ROUNDS, r_cur, n_grid):
-            finalized.append(exact(tiles_c, active))
-            break
-        shell = spark.createDataFrame(_shell_pdf(active, res, r_prev, r_cur), shell_schema)
-        topk = _ring_topk(topk, F.broadcast(shell), tiles_c)
-        persisted.append(topk)
-
-        # ONE distributed action per round: the ids of finished queries
-        done_ids = [row["query_id"] for row in _finished(topk, res, r_cur).collect()]
-        if done_ids:
-            finalized.append(topk.where(F.col("query_id").isin(done_ids)))
-            topk = topk.where(~F.col("query_id").isin(done_ids))
+    try:
+        while len(active) > 0:
+            if small or _exact_now(rounds, DRIVER_RING_ROUNDS, r_cur, n_grid):
+                done.append(exact(tiles_c, active))
+                break
+            shell = spark.createDataFrame(_shell_pdf(active, res, r_prev, r_cur), shell_schema)
+            kept = None if prev is None else spark.createDataFrame(prev, pool_schema)
+            # ONE Spark action per round: the active queries' ranked top-k
+            ranked = (
+                _ring_topk(kept, F.broadcast(shell), tiles_c)
+                .withColumn("stop", _finished(res, r_cur))
+                .toPandas()
+            )
+            done_ids = ranked.loc[ranked["stop"], "query_id"]
+            fin = ranked["query_id"].isin(done_ids)
+            done.append(ranked[fin])
+            prev = ranked[~fin].drop(columns=["rank", "stop"])
             active = active[~active["query_id"].isin(done_ids)]
-        rounds += 1
-        r_prev, r_cur = r_cur, min(r_cur * 3, n_grid)
-
-    return _finish(finalized, checkpoint, persisted)
+            rounds += 1
+            r_prev, r_cur = r_cur, min(r_cur * 3, n_grid)
+    finally:
+        tiles_c.unpersist()
+    return result(done)
 
 
 def _shell_udf(res: int, r0: int, r1: int):
@@ -435,9 +432,9 @@ def knn_join_distributed(
         layout (``spark.sql.shuffle.partitions`` buckets); each
         round's shell join reuses that partitioning, so only the
         (much smaller) shell side shuffles per round;
-      - the finished-query split is a semi/anti join on the same
-        bound (the driver sees ONE scalar per round — the active
-        count);
+      - the finished-query split is a semi/anti join on the rank-k
+        rows that satisfy the shared stop rule (the driver sees ONE
+        scalar per round — the active count);
       - queries still active after DISTRIBUTED_RING_ROUNDS rounds, or
         once the disk would wrap the grid, take the exact cross-join
         pass (k > population returns all, like knn_join).
@@ -448,7 +445,7 @@ def knn_join_distributed(
         n_hint = n_tiles_hint if n_tiles_hint is not None else tiles.count()
         res = default_res(n_hint)
     n_grid = 1 << res
-    out_schema = _schemas(queries.schema["query_id"].dataType.simpleString())[2]
+    out_schema = _schemas(queries.schema["query_id"].dataType.simpleString())[3]
 
     parts = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
     tiles_c, stats = _index_tiles(tiles, res, parts)
@@ -467,8 +464,8 @@ def knn_join_distributed(
         tiles_c.unpersist()
         return spark.createDataFrame([], out_schema)
 
-    topk: DataFrame | None = None
-    finalized: list[DataFrame] = []
+    prev: DataFrame | None = None  # unfinished queries' top-k rows
+    finalized: list[DataFrame] = []  # ranked top-k frames, one per pass
     persisted: list[DataFrame] = [tiles_c, active]
     r_prev = -1
     r_cur = _initial_radius(stats, res, int(k_max_row))
@@ -482,19 +479,23 @@ def knn_join_distributed(
         shell = active.select(
             *qside, F.explode(_shell_udf(res, r_prev, r_cur)(F.col("qcell"))).alias("cell")
         )
-        topk = _ring_topk(topk, shell, tiles_c)
-        persisted.append(topk)
+        ranked = _ring_topk(prev, shell, tiles_c).persist()
+        persisted.append(ranked)
 
-        qdone = _finished(topk, res, r_cur)
-        finalized.append(topk.join(qdone, "query_id", "left_semi"))
+        qdone = ranked.where(_finished(res, r_cur)).select("query_id")
+        finalized.append(ranked.join(qdone, "query_id", "left_semi"))
         next_active = active.join(qdone, "query_id", "left_anti").persist()
         persisted.append(next_active)
         n_active = next_active.count()
-        topk = topk.join(qdone, "query_id", "left_anti")
+        prev = ranked.join(qdone, "query_id", "left_anti").drop("rank")
         active = next_active
         if n_active == 0:
             break
         rounds += 1
         r_prev, r_cur = r_cur, min(r_cur * 3, n_grid)
 
-    return _finish(finalized, checkpoint, persisted)
+    out = finalized[0]
+    for f in finalized[1:]:
+        out = out.unionByName(f)
+    result = out.select("query_id", "rank", "image_id", "dist_km").orderBy("query_id", "rank")
+    return finalize(result, checkpoint, caches=persisted)

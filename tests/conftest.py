@@ -12,6 +12,26 @@ def spark():
 
 
 @pytest.fixture
+def jobs_launched(spark):
+    """``jobs_launched(group, fn)``: the number of Spark jobs ``fn``
+    launches, counted through a job group once the listener bus has
+    delivered every job event."""
+    sc = spark.sparkContext
+
+    def count(group, fn):
+        sc.setJobGroup(group, group)
+        try:
+            fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    return count
+
+
+@pytest.fixture
 def collect_sizes(monkeypatch):
     """Row counts of every ``DataFrame.toPandas()`` collect made while
     the test runs. The spy sits on the class that defines toPandas in

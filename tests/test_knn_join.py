@@ -152,19 +152,58 @@ def test_knn_distributed_empty_queries(spark):
     assert knn_join_distributed(spark, tiles, queries, n_tiles_hint=100).count() == 0
 
 
-def test_knn_distributed_multi_round_finalization(spark, monkeypatch):
+def _tied_tiles(spark, n: int, seed: int):
+    """Tiles in groups of three sharing one coordinate, so that
+    (dist_km, image_id) ties straddle rank k."""
+    pdf = synth.tracker_df(spark, n, seed=seed).select("image_id", "lon", "lat").toPandas()
+    pdf[["lon", "lat"]] = pdf[["lon", "lat"]].to_numpy()[np.arange(n) // 3 * 3]
+    return spark.createDataFrame(pdf, "image_id string, lon double, lat double"), pdf
+
+
+@pytest.mark.parametrize("qid", ["bigint", "double", "string"])
+def test_knn_distributed_multi_round_finalization(spark, monkeypatch, qid):
     """Force several ring rounds (initial radius pinned to 1) so
     queries finalize across DIFFERENT rounds via the column-math bound
-    — exercising the per-round left_semi/left_anti splitting — and the
-    result still matches the driver-resident path exactly."""
+    — exercising the per-round left_semi/left_anti split of the
+    distributed carrier and the driver carrier's re-shipped top-k rows
+    — over tiles whose duplicated coordinates put (dist_km, image_id)
+    ties across rank k. Both carriers match the NumPy brute force
+    exactly, for int, float and string query ids."""
     from gelos_spark.operators import knn_join as kj
 
     monkeypatch.setattr(kj, "_initial_radius", lambda *a, **k: 1)
-    tiles = synth.tracker_df(spark, 3000, seed=21)
-    queries = synth.query_df(spark, 16, 3000, seed=21, k=5)
+    reshipped = []
+    real_ring = kj._ring_topk
+
+    def ring(prev, *a):
+        reshipped.append(prev is not None)
+        return real_ring(prev, *a)
+
+    monkeypatch.setattr(kj, "_ring_topk", ring)
+    tiles, tiles_pdf = _tied_tiles(spark, 3000, seed=21)
+    qpdf = synth.query_df(spark, 16, 3000, seed=21, k=5).toPandas()
+    qpdf["query_id"] = {
+        "bigint": qpdf["query_id"],
+        "double": qpdf["query_id"] + 0.5,
+        "string": "q" + qpdf["query_id"].astype(str),
+    }[qid]
+    queries = spark.createDataFrame(qpdf, f"query_id {qid}, lon double, lat double, k int")
+
+    exp = _brute_knn(tiles_pdf, qpdf).sort_values(["query_id", "rank"], ignore_index=True)
+    beyond = _brute_knn(tiles_pdf, qpdf.assign(k=qpdf["k"] + 1))
+    kth = beyond[beyond["rank"] == 5].set_index("query_id")["dist_km"]
+    nxt = beyond[beyond["rank"] == 6].set_index("query_id")["dist_km"]
+    assert (kth == nxt).any()  # a tie straddles rank k
+
     a = kj.knn_join(spark, tiles, queries, n_tiles_hint=3000, brute_force_pairs=0)
+    assert reshipped.count(True) >= 1  # rows re-shipped between rounds
+    got = a.toPandas()
+    assert got[["query_id", "rank", "image_id"]].values.tolist() == exp[
+        ["query_id", "rank", "image_id"]
+    ].values.tolist()
+    np.testing.assert_allclose(got["dist_km"].to_numpy(), exp["dist_km"].to_numpy(), rtol=1e-12)
     b = kj.knn_join_distributed(spark, tiles, queries, n_tiles_hint=3000)
-    assert _sorted_rows(a) == _sorted_rows(b)
+    pd.testing.assert_frame_equal(got, b.toPandas())
 
 
 def test_knn_corpus_sized_queries_auto_dispatch(spark, collect_sizes):
@@ -195,3 +234,73 @@ def test_knn_max_queries_none_skips_probe(spark):
     got = knn_join(spark, tiles, queries, n_tiles_hint=400, max_queries=None)
     brute = knn_join(spark, tiles, queries, n_tiles_hint=400)
     assert _sorted_rows(got) == _sorted_rows(brute)
+
+
+@pytest.mark.parametrize("bf_pairs", [0, 2_000_000])
+def test_knn_res_without_hint_counts_no_tiles(spark, monkeypatch, bf_pairs):
+    """Given ``res`` and no ``n_tiles_hint``, knn_join never counts the
+    tiles: the measured index stats apply the size rule instead. The
+    rows equal those of the hinted call."""
+    from pyspark.sql.classic.dataframe import DataFrame
+
+    tiles = synth.tracker_df(spark, 1500, seed=5)
+    queries = synth.query_df(spark, 12, 1500, seed=5, k=6).toPandas()
+    hinted = knn_join(
+        spark, tiles, queries, res=7, n_tiles_hint=1500, brute_force_pairs=bf_pairs
+    ).toPandas()
+    counts = []
+    real = DataFrame.count
+    monkeypatch.setattr(DataFrame, "count", lambda self: counts.append(1) or real(self))
+    got = knn_join(spark, tiles, queries, res=7, brute_force_pairs=bf_pairs).toPandas()
+    monkeypatch.undo()
+    assert counts == []
+    pd.testing.assert_frame_equal(got, hinted)
+
+
+def test_knn_ring_call_driver_action_budget(spark, monkeypatch, collect_sizes, jobs_launched):
+    """A two-round ring call (initial radius pinned to 2) launches at
+    most 11 Spark jobs: the query collect, the index aggregate, one
+    collect per ring round and the result checkpoint. Every collect
+    holds at most max(max_queries + 1, sum of k) rows."""
+    from gelos_spark.operators import knn_join as kj
+
+    monkeypatch.setattr(kj, "_initial_radius", lambda *a, **k: 2)
+    rounds = []
+    real_ring = kj._ring_topk
+    monkeypatch.setattr(kj, "_ring_topk", lambda *a: rounds.append(1) or real_ring(*a))
+    tiles = synth.tracker_df(spark, 3000, seed=21)
+    queries = synth.query_df(spark, 16, 3000, seed=21, k=5)
+    collect_sizes.clear()
+    out = []
+
+    def call():
+        out.append(
+            kj.knn_join(
+                spark, tiles, queries, n_tiles_hint=3000, brute_force_pairs=0, max_queries=16
+            )
+        )
+
+    jobs = jobs_launched("knn_budget", call)
+    assert len(rounds) == 2
+    assert jobs <= 11, jobs
+    assert collect_sizes and max(collect_sizes) <= max(16 + 1, 16 * 5), collect_sizes
+    assert out[0].count() == 16 * 5
+
+
+def test_knn_ring_call_leaves_no_cache(spark):
+    """A ring call with checkpoint=False leaves no new persisted RDD
+    behind: the tile index is released once the last pass returns, and
+    the running top-k never was a cache."""
+    sc = spark.sparkContext
+
+    def cached():
+        return set(sc._jsc.getPersistentRDDs().keySet().toArray())
+
+    tiles = synth.tracker_df(spark, 2000, seed=4)
+    queries = synth.query_df(spark, 12, 2000, seed=4, k=5)
+    before = cached()
+    out = knn_join(
+        spark, tiles, queries, n_tiles_hint=2000, brute_force_pairs=0, checkpoint=False
+    )
+    assert cached() - before == set()
+    assert len(out.collect()) == 12 * 5

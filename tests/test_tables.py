@@ -574,25 +574,11 @@ def test_rollback_switches_current_and_preserves_history(spark, tmp_path):
 # ------------------------------------- checkpoint bookkeeping (driver)
 
 
-def _jobs_launched(spark, group, fn):
-    """Number of Spark jobs ``fn`` launches, counted through a job
-    group once the listener bus has delivered every job event."""
-    sc = spark.sparkContext
-    sc.setJobGroup(group, group)
-    try:
-        fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    return len(sc.statusTracker().getJobIdsForGroup(group))
-
-
 def _must_not_run(sp):
     raise AssertionError("a done stage must be skipped")
 
 
-def test_done_check_launches_no_spark_jobs(spark, tmp_path):
+def test_done_check_launches_no_spark_jobs(spark, tmp_path, jobs_launched):
     """The resume check answers from the checkpoint manifest: 0 jobs
     per check, and a full resume of N stages launches at most N jobs
     (the schema reads of the frames ``stage`` returns)."""
@@ -602,14 +588,14 @@ def test_done_check_launches_no_spark_jobs(spark, tmp_path):
     for name in stages:
         p1.stage(name, lambda sp: sp.range(0, 20))
     p2 = Pipeline(spark, root, "r1")
-    assert _jobs_launched(spark, "done-check", lambda: p2.log.done_stages("r1")) == 0
+    assert jobs_launched("done-check", lambda: p2.log.done_stages("r1")) == 0
     assert p2.log.done_stages("r1") == set(stages)
 
     def resume():
         for name in stages:
             p2.stage(name, _must_not_run)
 
-    assert _jobs_launched(spark, "full-resume", resume) <= len(stages)
+    assert jobs_launched("full-resume", resume) <= len(stages)
     assert p2.skipped == stages and p2.executed == []
 
 
