@@ -1490,7 +1490,8 @@ def _fmt_latlon(spark, sf_dir):
 @_q(
     "near_dup_components",
     # pairs -> transitive duplicate clusters (operators/dedup
-    # .connected_components, large-star/small-star contraction;
+    # .connected_components: a driver union-find at this size,
+    # large-star/small-star contraction past DRIVER_CC_EDGES edges;
     # dedup_near's survivor selection sits on top). Edge set: the
     # banded-Hamming join over a derived fingerprint designed so
     # CONSECUTIVE docs chain within groups of 16 (hamming 2; doc i vs

@@ -220,11 +220,12 @@ def main():
     )
 
     # near-dup clustering end to end: simhash pairs over the full
-    # documents table -> large-star/small-star connected components ->
-    # one survivor per duplicate cluster (dedup_near). Measured since
-    # r6 (new operator), outside the headline sum like the other
-    # post-r1 keys; cost = corpus simhash + 2-3 scalar-edge
-    # contraction rounds.
+    # documents table -> connected components (driver union-find up
+    # to DRIVER_CC_EDGES edges, large-star/small-star contraction
+    # above) -> one survivor per duplicate cluster (dedup_near).
+    # Measured since r6 (new operator), outside the headline sum like
+    # the other post-r1 keys; cost = corpus simhash + one bounded edge
+    # collect.
     docs_tbl = documents.select("doc_id", "text")
 
     def dedup_cc_pipeline():

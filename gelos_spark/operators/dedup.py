@@ -28,6 +28,7 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -697,6 +698,37 @@ def embedding_dup_pairs(
 
 # ------------------------------------------- pairs -> components -> survivors
 
+# canonical edges at or below which connected_components collects the
+# edge set and finds components on the driver. A 1M-edge collect is at
+# most tens of MB of Arrow, and the union-find over it takes under 1 s;
+# above it, star contraction keeps the edges distributed.
+DRIVER_CC_EDGES = 1_000_000
+
+
+def _driver_components(a: np.ndarray, b: np.ndarray, n: int) -> np.ndarray:
+    """Union-find over ``n`` node codes joined by edges ``a[i] -- b[i]``:
+    returns ``lab`` with ``lab[x]`` the smallest code in x's component.
+
+    Hooks ROOTS, not nodes: each round every root takes the min of the
+    roots it shares an edge with, then pointer jumping flattens every
+    tree back to depth one. Each tree with an edge to another tree
+    merges every round, so rounds are O(log n). Hooking node labels
+    instead moves a label one hop per round, O(diameter): a long chain
+    with shuffled labels takes as many rounds as it has nodes."""
+    lab = np.arange(n)
+    while True:
+        ra, rb = lab[a], lab[b]
+        if np.array_equal(ra, rb):
+            return lab
+        m = np.minimum(ra, rb)
+        np.minimum.at(lab, ra, m)
+        np.minimum.at(lab, rb, m)
+        while True:
+            jumped = lab[lab]
+            if np.array_equal(jumped, lab):
+                break
+            lab = jumped
+
 
 def connected_components(
     pairs: DataFrame,
@@ -712,35 +744,65 @@ def connected_components(
     lets a pipeline keep one survivor per duplicate CLUSTER rather
     than per pair (``dedup_near`` below composes the two).
 
-    Algorithm: alternating large-star / small-star contraction (the
-    public MapReduce connected-components algorithm of Kiveris et al.,
-    "Connected Components in MapReduce and Beyond", SoCC'14) instead
-    of min-label propagation — propagation needs O(graph diameter)
-    rounds, so a 10k-document duplication CHAIN would take 10k
-    shuffles, while star contraction converges in O(log^2 n) rounds on
-    any graph (2-3 rounds for typical near-dup clusters). 100 TB
-    shape: every round is groupBy/join/distinct over SCALAR id pairs
-    (payloads never enter), the edge frame is localCheckpoint'ed per
-    round so iterative lineage never compounds, and the only driver
-    action per round is one (count, xor-hash) fixpoint probe — the
-    same convergence-probe pattern as ``ivf_train``'s Lloyd loop.
-    Superseded rounds' checkpoint blocks are freed by the context
-    cleaner when their frames go out of scope (the engine-wide
-    localCheckpoint policy, plans/materialize.py) — transient peak
-    storage is O(rounds x |edges|) of SCALAR pairs between GCs, a
-    few id-pair copies, not payload data.
+    Two engines, chosen by edge count. The first action is one bounded
+    Arrow collect of the canonical edges, ``limit(DRIVER_CC_EDGES+1)``
+    (the same guard as ``knn_join``'s query collect):
+
+      - at or below ``DRIVER_CC_EDGES`` edges, a NumPy union-find over
+        ``np.unique`` codes finds the components on the driver, and the
+        result is a local relation (a broadcast side in any join) that
+        keeps the pairs' id type. A request-sized edge set costs this
+        one job instead of star contraction's per-round stage jobs.
+      - above it, alternating large-star / small-star contraction (the
+        public MapReduce connected-components algorithm of Kiveris et
+        al., "Connected Components in MapReduce and Beyond", SoCC'14)
+        instead of min-label propagation — propagation needs O(graph
+        diameter) rounds, so a 10k-document duplication CHAIN would
+        take 10k shuffles, while star contraction converges in
+        O(log^2 n) rounds on any graph (2-3 rounds for typical near-dup
+        clusters). 100 TB shape: every round is groupBy/join/distinct
+        over SCALAR id pairs (payloads never enter), the edge frame is
+        localCheckpoint'ed per round so iterative lineage never
+        compounds, and the only driver action per round is one
+        (count, xor-hash) fixpoint probe — the same convergence-probe
+        pattern as ``ivf_train``'s Lloyd loop. Superseded rounds'
+        checkpoint blocks are freed by the context cleaner when their
+        frames go out of scope (the engine-wide localCheckpoint policy,
+        plans/materialize.py) — transient peak storage is
+        O(rounds x |edges|) of SCALAR pairs between GCs, a few id-pair
+        copies, not payload data.
+
+    Both engines order ids the same way: Spark's ``least``/``min`` and
+    ``np.unique`` agree on numbers, and on strings Python's code-point
+    order equals Spark's UTF-8 byte order.
 
     No reference analog (the reference's dedup is exact-path only —
     SURVEY §2 training-data family)."""
+    from gelos_spark.plans.materialize import finalize
+
     # canonical "down" edges (u > v); self-pairs dropped
-    edges = (
-        pairs.select(
-            F.greatest(F.col(left), F.col(right)).alias("u"),
-            F.least(F.col(left), F.col(right)).alias("v"),
+    canon = pairs.select(
+        F.greatest(F.col(left), F.col(right)).alias("u"),
+        F.least(F.col(left), F.col(right)).alias("v"),
+    ).where(F.col("u") != F.col("v"))
+    # no dedup before the collect: duplicate edges never change a
+    # union-find, they only use up some of the slack under the bound
+    tbl = canon.limit(DRIVER_CC_EDGES + 1).toArrow()
+    if tbl.num_rows <= DRIVER_CC_EDGES:
+        col = pa.concat_arrays([tbl.column("u").combine_chunks(), tbl.column("v").combine_chunks()])
+        _, first, inv = np.unique(
+            col.to_numpy(zero_copy_only=False), return_index=True, return_inverse=True
         )
-        .where(F.col("u") != F.col("v"))
-        .dropDuplicates(["u", "v"])
-        # lazy: the fixpoint probe right below is the first action, so
+        lab = _driver_components(inv[: tbl.num_rows], inv[tbl.num_rows :], len(first))
+        ids = col.take(first)
+        out = pairs.sparkSession.createDataFrame(
+            pa.table({"id": ids, "component": ids.take(lab)})
+        )
+        return finalize(out, checkpoint)
+
+    edges = (
+        canon.dropDuplicates(["u", "v"])
+        # lazy: the fixpoint probe right below is its first action, so
         # the checkpoint materializes inside the probe's job — one
         # fewer driver-scheduled job per round (measured: 96 -> 87
         # jobs on a 64-chain; wall-clock neutral at test scale where
@@ -758,10 +820,8 @@ def connected_components(
     from pyspark.sql import Window
 
     # no pre-loop probe: round 1's fixpoint probe is the first action
-    # (it materializes the initial checkpoint on the way) — one fewer
-    # driver action per call. An empty edge set just converges on the
-    # first probe and falls through to the (empty, correctly-typed)
-    # final aggregate below.
+    # on the edges (it materializes the initial checkpoint on the
+    # way) — one fewer driver action per call.
     prev = None
     for _ in range(max_rounds):
         # large-star: for each node u, link every LARGER neighbor v to
@@ -812,8 +872,6 @@ def connected_components(
         .agg(F.min("component").alias("component"))
         .orderBy("id")
     )
-    from gelos_spark.plans.materialize import finalize
-
     return finalize(out, checkpoint)
 
 
@@ -832,15 +890,16 @@ def dedup_near(
     returns ONE deterministic survivor per cluster (the min id) —
     the near-dup twin of ``dedup_exact``'s survivor choice. The
     component map covers only paired ids, so the join's small side is
-    the duplicate set, not the corpus (AQE broadcasts it when it
-    fits)."""
+    the duplicate set, not the corpus: up to ``DRIVER_CC_EDGES`` edges
+    it is a driver-built local relation, which the join broadcasts;
+    above that AQE broadcasts the star-contraction map when it fits."""
     if keep not in ("all", "canonical"):
         raise ValueError(f"keep must be 'all' or 'canonical', got {keep!r}")
-    # compose the component map lazily: its plan reads the per-round
-    # checkpointed edges anyway (lineage already truncated), so an
-    # eager materialization here would only add a driver action and a
-    # store/reload of the map; Catalyst's EliminateSorts drops the
-    # map's internal orderBy under the join
+    # compose the component map lazily: it is a local relation or
+    # reads the per-round checkpointed edges (lineage already
+    # truncated), so an eager materialization here would only add a
+    # driver action and a store/reload of the map; Catalyst's
+    # EliminateSorts drops the map's internal orderBy under the join
     comp = connected_components(pairs, left, right, checkpoint=False)
     out = (
         df.join(comp.withColumnRenamed("id", id_col), id_col, "left")

@@ -384,7 +384,9 @@ def _op_hash_sample(spark: SparkSession, pipe: Pipeline, conf: dict) -> DataFram
 @op("connected_components", needs_input=True)
 def _op_connected_components(spark: SparkSession, pipe: Pipeline, conf: dict) -> DataFrame:
     """A pairs stage -> (id, component): transitive duplicate
-    clusters via large-star/small-star contraction (operators/dedup)."""
+    clusters (operators/dedup) — a driver union-find up to
+    ``DRIVER_CC_EDGES`` edges, large-star/small-star contraction
+    above; ``max_rounds`` bounds the contraction loop."""
     from gelos_spark.operators import dedup
 
     return dedup.connected_components(

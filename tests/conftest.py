@@ -33,20 +33,27 @@ def jobs_launched(spark):
 
 @pytest.fixture
 def collect_sizes(monkeypatch):
-    """Row counts of every ``DataFrame.toPandas()`` collect made while
-    the test runs. The spy sits on the class that defines toPandas in
-    PySpark 4.1 (``pyspark.sql.classic.dataframe.DataFrame``): a patch
-    on ``pyspark.sql.DataFrame`` is bypassed, and one on the caller's
+    """Row counts of every ``DataFrame.toPandas()`` and
+    ``DataFrame.toArrow()`` collect made while the test runs. The spies
+    sit on the class that defines both in PySpark 4.1
+    (``pyspark.sql.classic.dataframe.DataFrame``): a patch on
+    ``pyspark.sql.DataFrame`` is bypassed, and one on the caller's
     instance misses the frames an operator derives from it."""
     from pyspark.sql.classic.dataframe import DataFrame
 
     sizes: list[int] = []
-    real = DataFrame.toPandas
+    real_pandas, real_arrow = DataFrame.toPandas, DataFrame.toArrow
 
-    def spy(self, *args, **kwargs):
-        pdf = real(self, *args, **kwargs)
+    def spy_pandas(self, *args, **kwargs):
+        pdf = real_pandas(self, *args, **kwargs)
         sizes.append(len(pdf))
         return pdf
 
-    monkeypatch.setattr(DataFrame, "toPandas", spy)
+    def spy_arrow(self, *args, **kwargs):
+        tbl = real_arrow(self, *args, **kwargs)
+        sizes.append(tbl.num_rows)
+        return tbl
+
+    monkeypatch.setattr(DataFrame, "toPandas", spy_pandas)
+    monkeypatch.setattr(DataFrame, "toArrow", spy_arrow)
     return sizes
