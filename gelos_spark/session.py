@@ -46,6 +46,22 @@ def iceberg_runtime_jar() -> str | None:
     return None
 
 
+def _workers_import_package() -> bool:
+    """Whether a local Python worker can import ``gelos_spark``: its
+    root directory is the cwd (``python -m`` puts it on the daemon's
+    path), a ``PYTHONPATH`` entry or a site-packages directory."""
+    import site
+
+    root = os.path.dirname(os.path.dirname(os.path.realpath(__file__)))
+    dirs = [
+        os.getcwd(),
+        *os.environ.get("PYTHONPATH", "").split(os.pathsep),
+        *site.getsitepackages(),
+        site.getusersitepackages(),
+    ]
+    return any(d and os.path.realpath(d) == root for d in dirs)
+
+
 def get_spark(
     app_name: str = "gelos_spark",
     cpus: int | None = None,
@@ -123,6 +139,16 @@ def get_spark(
         # sessions keep the default (TB inputs -> thousands of splits).
         b = b.config("spark.sql.files.maxPartitionBytes", str(16 * 1024 * 1024))
         b = b.config("spark.sql.files.openCostInBytes", str(1024 * 1024))
+        # Python workers fork from gelos_spark.worker_daemon: every Python
+        # task runs importlib.invalidate_caches(), which under CPython 3.11
+        # re-parses pyspark.zip's ~27k-entry directory once per zip
+        # importer, 150-400 ms a task (3.12 made it lazy, gh-103200); the
+        # daemon re-reads an archive only when it changed. Local-only: a
+        # cluster's executor hosts need not be able to import this
+        # package, nor can local workers when the driver runs outside
+        # the repo (_workers_import_package).
+        if _workers_import_package():
+            b = b.config("spark.python.daemon.module", "gelos_spark.worker_daemon")
     for k, v in (extra_conf or {}).items():
         b = b.config(k, v)
     spark = b.getOrCreate()

@@ -3,9 +3,12 @@
 import numpy as np
 import pandas as pd
 import pytest
+from pyspark.sql import functions as F
 
+from gelos_spark.functions.cell_udfs import cell_encode_col
 from gelos_spark.functions.geometry import points_in_polygon
-from gelos_spark.operators.pip_join import pip_join, pick_cover_res
+from gelos_spark.operators.pip_join import TILE_RES, pip_join, pick_cover_res
+from gelos_spark.plans.checkpoint import Pipeline
 from gelos_spark.sources import synth
 
 
@@ -371,3 +374,22 @@ def test_pip_join_empty_aoi_list(spark):
         "struct<aoi_id:bigint,image_id:string,lon:double,lat:double>"
     )
     assert out.count() == 0
+
+
+def test_staged_assign_driver_action_budget(spark, tmp_path, jobs_launched):
+    """The staged tiles -> cells -> assign pipeline spends at most 4
+    Spark jobs on its assign stage (pip_join fused into the commit),
+    as the benchmark's tiles workload traces; an added count() or
+    collect() fails here."""
+    synth.tracker_df(spark, 4000, seed=101).write.parquet(f"{tmp_path}/tiles")
+    aois = synth.aoi_polygons(8, seed=101, vertices=96)
+    pipe = Pipeline(spark, f"{tmp_path}/staged", "budget")
+    pipe.stage("tiles", lambda sp: sp.read.parquet(f"{tmp_path}/tiles"))
+    pipe.stage("cells", lambda sp: pipe.output("tiles").withColumn(
+        "cell", cell_encode_col(F.col("lon"), F.col("lat"), TILE_RES)))
+    jobs = jobs_launched("pip_budget", lambda: pipe.stage("assign", lambda sp: pip_join(
+        sp, pipe.output("cells"), aois, tile_cell_col="cell", ordered=False)))
+    assert jobs <= 4, f"assign stage launched {jobs} Spark jobs (budget 4)"
+    got = pipe.output("assign").toPandas()
+    tracker = spark.read.parquet(f"{tmp_path}/tiles").toPandas()
+    assert set(zip(got.aoi_id, got.image_id)) == _brute_pip(tracker, aois)
