@@ -1,35 +1,41 @@
 """Approximate-nearest-neighbor similarity search over an embedding
-column (array<float>).
+column (array<float>). Every path returns (query_id, rank, vec_id,
+cosine), ranked by (cosine desc, vec_id asc) through `_rank_topk`, and
+every cosine is bit-identical to the JVM left fold (`_dot_expr`).
 
-Two paths, as the driver brief specifies:
-  - brute-force cosine top-k: the exactness baseline. Queries are the
-    small side -> broadcast; the corpus streams once and every
-    candidate pair is scored by the Arrow pair scorer
-    (`_cosine_pairs_frame` — bit-identical to the JVM
-    zip_with/aggregate fold it replaced, ~10x faster); top-k per
-    query is a window with (score desc, id asc) determinism.
+  - brute-force cosine top-k: the exactness baseline. The query side
+    is request-sized and broadcasts (one bounded collect); the corpus
+    streams once through the block kernel (`_block_cosine_batches`),
+    so pairs exist only as matrix indices inside a task.
   - LSH-bucketed (random-hyperplane signs = SimHash-for-vectors):
-    the 100 TB path. Each vector maps to a small set of bucket keys
-    (nbits-bit sign pattern x ntables); candidates come from an
-    equi-join on (table, bucket) — no all-pairs blowup — then exact
-    cosine re-rank. Recall grows with ntables; exactness is restored
-    per-candidate, so returned scores are true cosines.
+    each vector maps to a small set of bucket keys (nbits-bit sign
+    pattern x ntables); candidates come from an equi-join on (table,
+    bucket), no all-pairs blowup, then the Arrow pair scorer
+    (`_cosine_pairs_frame`) re-ranks them exactly. Recall grows with
+    ntables.
+  - IVF (inverted lists): Lloyd-trained centroids, one centroid
+    scoring kernel (`_centroid_scorer`, float or exact-integer) for
+    assignment, training and probing, and a scorer chosen by the size
+    of the query side. A request-sized query set (it fits the bounded
+    ``limit(max_queries+1).toArrow()`` collect) is probed on the
+    driver and broadcasts against the probed lists of the index; a
+    corpus-sized one stays distributed and meets the index in a
+    cogroup on the list id.
 """
 
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 
 def _dot_expr(a: str, b: str) -> F.Column:
     """Reference JVM left-fold dot product. No longer on any hot path
-    (every scorer goes through `_cosine_pairs_frame`), kept as the
-    semantics `_fold_dot` must reproduce bit-for-bit —
-    test_fold_dot_bit_equals_jvm pins the two against each other."""
+    (every scorer runs the `_fold_dot` order, pair-wise or block-wise),
+    kept as the semantics both kernels must reproduce bit-for-bit —
+    test_fold_dot_bit_equals_jvm and
+    test_block_cosine_bit_equals_jvm_fold pin them against it."""
     return F.expr(
         f"aggregate(zip_with({a}, {b}, (x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), "
         f"0D, (acc, p) -> acc + p)"
@@ -129,7 +135,13 @@ def brute_force_topk(
                 b.column("vec_id"), C, _fold_norms(C), qid_arr, Q, qn, schema
             )
 
-    scored = src.mapInArrow(fn, f"query_id {qidt}, vec_id {vidt}, cosine double")
+    return _rank_topk(src.mapInArrow(fn, f"query_id {qidt}, vec_id {vidt}, cosine double"), k)
+
+
+def _rank_topk(scored: DataFrame, k: int) -> DataFrame:
+    """(query_id, vec_id, cosine) -> the top-k per query, ranked by
+    (cosine desc, vec_id asc), cosine rounded to 6 places: the output
+    contract every top-k path shares."""
     w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("vec_id").asc())
     return (
         scored.withColumn("rank", F.row_number().over(w))
@@ -202,22 +214,17 @@ def _fold_dot(a: np.ndarray, b: np.ndarray) -> np.ndarray:
     return acc
 
 
-def _cosine_pairs_frame(df: DataFrame, dim: int | None = None) -> DataFrame:
-    """Candidate-pair scorer for the corpus-scale ANN paths: a frame
-    of (query_id, vec_id, qv, cv, qn, cn) pairs -> (query_id, vec_id,
-    cosine) via ``mapInArrow``. The JVM higher-order-function dot
-    costs ~145ns/element on this VM (measured round 6: 9.3s for 1M
-    pairs x dim 64 in the ivf self-search bench); this kernel reads
-    both vector columns as single Arrow buffers (``_list_matrix``) and
-    computes the fold-ordered dot batch-level — same bits, ~10x less
-    time. Norms arrive precomputed (JVM ``_norm_expr`` at index/probe
-    build), and the output is scalars-only, so the window shuffle
-    that follows never carries vectors.
-
-    ``dim=None`` infers the dimensionality per batch from the first
-    row's list offsets (callers like ``brute_force_topk`` have no
-    centroid matrix to read it from); `_list_matrix` then validates
-    every row against it, so ragged inputs still fail loudly."""
+def _cosine_pairs_frame(df: DataFrame, dim: int) -> DataFrame:
+    """Candidate-pair scorer of ``lsh_topk``: a frame of (query_id,
+    vec_id, qv, cv, qn, cn) pairs -> (query_id, vec_id, cosine) via
+    ``mapInArrow``. The JVM higher-order-function dot costs
+    ~145ns/element on this VM (measured round 6: 9.3s for 1M pairs x
+    dim 64); this kernel reads both vector columns as single Arrow
+    buffers (``_list_matrix``, which validates every row against
+    ``dim``) and computes the fold-ordered dot batch-level — same
+    bits, ~10x less time. Norms arrive precomputed (JVM
+    ``_norm_expr``), and the output is scalars-only, so the window
+    shuffle that follows never carries vectors."""
     import pyarrow as pa
 
     qit = df.schema["query_id"].dataType.simpleString()
@@ -227,12 +234,8 @@ def _cosine_pairs_frame(df: DataFrame, dim: int | None = None) -> DataFrame:
         for b in batches:
             if b.num_rows == 0:
                 continue
-            d = dim
-            if d is None:
-                off = np.asarray(b.column("qv").offsets, dtype=np.int64)
-                d = int(off[1] - off[0])
-            qm = _list_matrix(b.column("qv"), b.num_rows, d)
-            cm = _list_matrix(b.column("cv"), b.num_rows, d)
+            qm = _list_matrix(b.column("qv"), b.num_rows, dim)
+            cm = _list_matrix(b.column("cv"), b.num_rows, dim)
             qn = np.asarray(b.column("qn"), dtype=np.float64)
             cn = np.asarray(b.column("cn"), dtype=np.float64)
             cos = _fold_dot(cm, qm) / (cn * qn)
@@ -396,14 +399,7 @@ def lsh_topk(
     # deduping after scoring keeps identical rows while the dedup
     # exchange carries 3 scalars per candidate instead of two
     # dim-length vectors (guide §2.3; measured -25% on q_lsh_topk)
-    cand = _cosine_pairs_frame(pairs, dim).dropDuplicates(["query_id", "vec_id"])
-    w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("vec_id").asc())
-    return (
-        cand.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "rank", "vec_id", F.round("cosine", 6).alias("cosine"))
-        .orderBy("query_id", "rank")
-    )
+    return _rank_topk(_cosine_pairs_frame(pairs, dim).dropDuplicates(["query_id", "vec_id"]), k)
 
 
 def recall_at_k(ann: DataFrame, exact: DataFrame, k: int) -> float:
@@ -415,31 +411,139 @@ def recall_at_k(ann: DataFrame, exact: DataFrame, k: int) -> float:
 
 # ----------------------------------------------------------------- IVF
 
-def _cogroup_block_scored(
-    index: DataFrame, qdf: DataFrame, qidt: str, vidt: str, dim: int
-) -> DataFrame:
-    """Score IVF candidates with a cogroup on the inverted-list id:
-    each cid's index vectors and probing queries meet ONCE as two
-    blocks, and the block kernel (`_block_cosine_batches`) scores the
-    full cross inside the task — an equi-join would pair-expand both
-    vectors into every candidate row before the scorer, shipping
-    ~(2 x dim) doubles per PAIR through Arrow; this ships each vector
-    once per probed list and emits scalars. Same candidate set (every
-    index row of a probed list x every query probing it), same bits
-    (the kernel keeps the `_fold_dot` order).
+def _centroid_scorer(centroids: np.ndarray, quantize: bool = False):
+    """The one centroid-scoring kernel of the IVF family: returns
+    ``score(m)`` mapping a ``[N, dim]`` float64 row matrix to ``[N, K]``
+    scores. Assignment (``_assign_frame``), Lloyd training
+    (``ivf_train``) and both probes take its argmax or stable argsort,
+    so ties go to the LOWEST cid everywhere, like SQL's row_number
+    ORDER BY score DESC, cid. Built on the driver, so a bad centroid
+    matrix fails before any Spark job; the closure pickles into tasks.
 
-    This is the CORPUS x CORPUS regime's scorer (`_ivf_topk_distributed`
-    — the query side is itself a table and most lists are probed, so
-    the cid shuffle it costs is the bucketed layout `ivf_index`
-    prescribes anyway): a group must fit a task (list size x dim
-    doubles per side — bounded by n_centroids sizing), and the
-    accumulator is query-chunked inside the kernel. The request-sized
-    driver-probe path keeps the broadcast equi-join + pair scorer
-    instead — broadcasting a handful of probes streams the index with
-    zero shuffle, which a cogroup cannot do."""
+    Float form: cosine of the 1e-12-clamped normalised rows and
+    centroids. ``quantize=True`` (the portable path): centroids are an
+    INTEGER matrix, rows quantize to ``floor(x*1000 + 0.5)``, and the
+    score is exact-int dot / |c|. Integer products are exact and
+    sqrt/division correctly rounded, so the scores (and the probed
+    lists) agree across engines."""
+    if quantize:
+        cq = centroids.astype(np.int64)
+        cnorm = np.sqrt((cq.astype(np.float64) ** 2).sum(axis=1))
+        if (cnorm == 0).any():
+            # an all-zero quantized centroid would divide to NaN and
+            # swallow the whole corpus into one list, and DuckDB's 0/0
+            # semantics differ, breaking the cross-engine agreement
+            # the quantize path exists for. Fail loudly.
+            raise ValueError(
+                "quantize=True: centroid(s) with all-zero quantization "
+                f"(rows {np.flatnonzero(cnorm == 0).tolist()}): scale up "
+                "the vectors or drop degenerate centroids"
+            )
+
+        def score(m: np.ndarray) -> np.ndarray:
+            mq = np.floor(m * 1000.0 + 0.5).astype(np.int64)
+            return (mq @ cq.T).astype(np.float64) / cnorm[None, :]
+
+    else:
+        cn = centroids / np.maximum(np.linalg.norm(centroids, axis=1, keepdims=True), 1e-12)
+
+        def score(m: np.ndarray) -> np.ndarray:
+            mn = m / np.maximum(np.linalg.norm(m, axis=1, keepdims=True), 1e-12)
+            return mn @ cn.T
+
+    return score
+
+
+def _probe_lists(score, m: np.ndarray, nprobe: int) -> np.ndarray:
+    """``[N, nprobe]`` list ids, best first; the stable sort keeps the
+    lowest cid on score ties (the argmax tie rule of assignment)."""
+    return np.argsort(-score(m), axis=1, kind="stable")[:, :nprobe]
+
+
+def _broadcast_probe_scored(
+    index: DataFrame, qtbl, score, nprobe: int, dim: int, qidt: str, vidt: str
+) -> DataFrame:
+    """Request-sized IVF scorer: the collected query table is probed on
+    the driver, ``(query ids, Q, |Q|, probe lists)`` broadcasts, the
+    index is filtered in the JVM to the probed lists, and one
+    ``mapInArrow`` scores each list's index rows against the queries
+    probing it with the block kernel. Each vector crosses the Arrow
+    boundary once, the index streams with zero shuffle, and the output
+    is scalars-only (the ``brute_force_topk`` shape)."""
     import pyarrow as pa
 
-    def score(left: pa.Table, right: pa.Table) -> pa.Table:
+    Q = _list_matrix(qtbl.column("qv").combine_chunks(), qtbl.num_rows, dim)
+    probes = _probe_lists(score, Q, nprobe)
+    bc = index.sparkSession.sparkContext.broadcast(
+        (qtbl.column("query_id").combine_chunks(), Q, _fold_norms(Q), probes)
+    )
+    probed = index.where(F.col("cid").isin(np.unique(probes).tolist()))
+
+    def fn(batches):
+        qid_arr, Q, qn, probes = bc.value
+        members = {int(c): np.flatnonzero((probes == c).any(axis=1)) for c in np.unique(probes)}
+        for b in batches:
+            if b.num_rows == 0:
+                continue
+            schema = pa.schema(
+                [
+                    ("query_id", qid_arr.type),
+                    ("vec_id", b.column("vec_id").type),
+                    ("cosine", pa.float64()),
+                ]
+            )
+            cid = np.asarray(b.column("cid"))
+            C = _list_matrix(b.column("cv"), b.num_rows, dim)
+            cn = np.asarray(b.column("cn"), dtype=np.float64)
+            for c in np.unique(cid):
+                rows, qs = np.flatnonzero(cid == c), members[int(c)]
+                yield from _block_cosine_batches(
+                    b.column("vec_id").take(pa.array(rows)), C[rows], cn[rows],
+                    qid_arr.take(pa.array(qs)), Q[qs], qn[qs], schema,
+                )
+
+    return probed.select("vec_id", "cv", "cn", "cid").mapInArrow(
+        fn, f"query_id {qidt}, vec_id {vidt}, cosine double"
+    )
+
+
+def _cogroup_block_scored(
+    index: DataFrame, q_src: DataFrame, score, nprobe: int, dim: int, qidt: str, vidt: str
+) -> DataFrame:
+    """Corpus-sized IVF scorer: the query table stays distributed. A
+    ``mapInArrow`` probe runs the centroid kernel per batch and emits
+    each query's nprobe list ids, the probe rows explode on cid, and a
+    cogroup on cid meets each list's index vectors and probing queries
+    ONCE as two blocks, scored by the block kernel inside the task.
+    An equi-join would pair-expand both vectors into every candidate
+    row; this ships each vector once per probed list and emits
+    scalars. The cid shuffle it costs is the bucketed layout
+    ``ivf_index`` prescribes anyway: when the query side is a corpus,
+    most lists are probed. A group must fit a task (list size x dim
+    doubles per side, bounded by n_centroids sizing), and the
+    accumulator is query-chunked inside the kernel."""
+    import pyarrow as pa
+
+    qvt = q_src.schema["qv"].dataType.simpleString()
+
+    def probe_fn(batches):
+        for b in batches:
+            if b.num_rows == 0:
+                continue
+            order = _probe_lists(score, _list_matrix(b.column("qv"), b.num_rows, dim), nprobe)
+            offsets = pa.array(np.arange(0, (b.num_rows + 1) * nprobe, nprobe, dtype=np.int32))
+            lists = pa.ListArray.from_arrays(offsets, pa.array(order.ravel().astype(np.int32)))
+            yield pa.RecordBatch.from_arrays(
+                [b.column("query_id"), b.column("qv"), lists],
+                names=["query_id", "qv", "__probes"],
+            )
+
+    qdf = (
+        q_src.mapInArrow(probe_fn, f"query_id {qidt}, qv {qvt}, __probes array<int>")
+        .select("query_id", "qv", _norm_expr("qv").alias("qn"), F.explode("__probes").alias("cid"))
+    )
+
+    def block(left: pa.Table, right: pa.Table) -> pa.Table:
         schema = pa.schema(
             [
                 ("query_id", right.schema.field("query_id").type),
@@ -469,8 +573,8 @@ def _cogroup_block_scored(
     return (
         index.select("vec_id", "cv", "cn", "cid")
         .groupBy("cid")
-        .cogroup(qdf.select("query_id", "qv", "qn", "cid").groupBy("cid"))
-        .applyInArrow(score, f"query_id {qidt}, vec_id {vidt}, cosine double")
+        .cogroup(qdf.groupBy("cid"))
+        .applyInArrow(block, f"query_id {qidt}, vec_id {vidt}, cosine double")
     )
 
 
@@ -481,39 +585,15 @@ def _assign_frame(
     centroids: np.ndarray,
     quantize: bool = False,
 ) -> DataFrame:
-    """(id, vec) -> (vec_id, cv, cid) with the nearest-centroid (by
-    cosine) list id, computed in ``mapInArrow``: the vector column is
-    read as one Arrow buffer (``_list_matrix`` — offsets-validated
-    flatten+reshape), so input conversion, the [N, K] matmul, and
-    output assembly are all batch-level, zero per-row Python (the
-    round-5 ``_bucket_codes_frame`` pattern applied to the IVF
-    family's last per-row input stack)."""
+    """(id, vec) -> (vec_id, cv, cid) with the argmax list id of
+    `_centroid_scorer`, computed in ``mapInArrow``: the vector column
+    is read as one Arrow buffer (``_list_matrix``), so input
+    conversion, the [N, K] matmul and output assembly are all
+    batch-level, zero per-row Python."""
     import pyarrow as pa
 
-    if quantize:
-        # portable path: centroids are an INTEGER matrix; score =
-        # exact-int dot / |c| — integer products are exact and
-        # sqrt/division are correctly rounded, so the score doubles
-        # (and the argmax, ties to the LOWEST cid like SQL's
-        # row_number ORDER BY score DESC, cid) agree across engines
-        cq = centroids.astype(np.int64)
-        cnorm = np.sqrt((cq.astype(np.float64) ** 2).sum(axis=1))
-        if (cnorm == 0).any():
-            # an all-zero quantized centroid would divide to NaN and
-            # swallow the whole corpus into one list — and DuckDB's
-            # 0/0 semantics differ, breaking the cross-engine
-            # agreement the quantize path exists for. Fail loudly.
-            raise ValueError(
-                "quantize=True: centroid(s) with all-zero quantization "
-                f"(rows {np.flatnonzero(cnorm == 0).tolist()}) — scale up "
-                "the vectors or drop degenerate centroids"
-            )
-        dim = cq.shape[1]
-    else:
-        cn = centroids / np.maximum(
-            np.linalg.norm(centroids, axis=1, keepdims=True), 1e-12
-        )
-        dim = cn.shape[1]
+    score = _centroid_scorer(centroids, quantize)
+    dim = centroids.shape[1]
     idt = df.schema[id_col].dataType.simpleString()
     vt = df.schema[vec_col].dataType.simpleString()
     src = df.select(F.col(id_col).alias("vec_id"), F.col(vec_col).alias("cv"))
@@ -523,13 +603,7 @@ def _assign_frame(
             if b.num_rows == 0:
                 continue
             m = _list_matrix(b.column("cv"), b.num_rows, dim)
-            if quantize:
-                mq = np.floor(m * 1000.0 + 0.5).astype(np.int64)
-                scores = (mq @ cq.T).astype(np.float64) / cnorm[None, :]
-                cid = np.argmax(scores, axis=1).astype(np.int32)
-            else:
-                mn = m / np.maximum(np.linalg.norm(m, axis=1, keepdims=True), 1e-12)
-                cid = np.argmax(mn @ cn.T, axis=1).astype(np.int32)
+            cid = np.argmax(score(m), axis=1).astype(np.int32)
             yield pa.RecordBatch.from_arrays(
                 [b.column("vec_id"), b.column("cv"), pa.array(cid)],
                 names=["vec_id", "cv", "cid"],
@@ -571,9 +645,8 @@ def ivf_train(
     dim = cents.shape[1]
     vecs = corpus.select(F.col(vec_col).alias("v"))
     for _ in range(iters):
-        cn = cents / np.maximum(np.linalg.norm(cents, axis=1, keepdims=True), 1e-12)
 
-        def partial_sums(batches, cn=cn, k=n_centroids, dim=dim):
+        def partial_sums(batches, score=_centroid_scorer(cents), k=n_centroids, dim=dim):
             sums = np.zeros((k, dim), dtype=np.float64)
             cnts = np.zeros(k, dtype=np.int64)
             seen = False
@@ -582,8 +655,7 @@ def ivf_train(
                     continue
                 seen = True
                 m = _list_matrix(b.column("v"), b.num_rows, dim)
-                mn = m / np.maximum(np.linalg.norm(m, axis=1, keepdims=True), 1e-12)
-                cid = np.argmax(mn @ cn.T, axis=1)
+                cid = np.argmax(score(m), axis=1)
                 np.add.at(sums, cid, m)
                 np.add.at(cnts, cid, 1)
             if not seen:
@@ -626,7 +698,7 @@ def ivf_index(
     this is the table you persist bucketed by cid — probes touch only
     nprobe lists instead of the full corpus. ``quantize=True`` takes
     INTEGER centroids and assigns by exact-integer scoring (the
-    ``ivf_portable`` oracle path, see _assign_frame)."""
+    ``ivf_portable`` oracle path, see `_centroid_scorer`)."""
     return _assign_frame(corpus, id_col, vec_col, centroids, quantize=quantize).select(
         "vec_id", "cv", _norm_expr("cv").alias("cn"), "cid"
     )
@@ -650,176 +722,30 @@ def ivf_topk(
     brute_force_topk; recall grows with nprobe (nprobe = n_centroids
     degenerates to exact search).
 
-    ``collect_queries=True`` (the retrieval-API default) picks the
-    probe lists in driver NumPy — right for request-sized query sets.
-    A query frame larger than ``max_queries`` is NOT collected: the
-    call auto-dispatches to the distributed probe (identical rows) —
-    the same bounded-collect-IS-the-guard contract as ``knn_join`` /
-    ``brute_force_topk``, folded into the one collect this path needs
-    anyway, so a corpus-sized frame can never OOM the driver here.
-    ``max_queries=None`` skips the guard (caller asserts the frame is
-    request-sized). ``collect_queries=False`` keeps the query table
-    distributed: the tiny centroid matrix broadcasts into a vectorized
-    pandas UDF that emits each query's nprobe list ids, then the same
-    bucketed join runs — use this when the "queries" are themselves a
-    corpus (e.g. full-table ANN self-search). Identical results either
-    way."""
+    One probe kernel (`_centroid_scorer`), two scorers chosen by the
+    size of the query side. ``collect_queries=True`` (the
+    retrieval-API default) makes one bounded
+    ``limit(max_queries+1).toArrow()`` collect; a query set that fits
+    is request-sized and takes the broadcast block scorer
+    (`_broadcast_probe_scored`). A larger one, or
+    ``collect_queries=False`` (the queries are themselves a corpus,
+    e.g. full-table ANN self-search), stays distributed and takes the
+    cogroup block scorer (`_cogroup_block_scored`). So a corpus-sized
+    frame can never OOM the driver here; ``max_queries=None`` skips the
+    bound (the caller asserts the frame is request-sized). Both
+    scorers return identical rows, with ``quantize=True`` too (the
+    exact-integer ``ivf_portable`` probe; pass the INTEGER centroids
+    the index was built with)."""
     nprobe = min(nprobe, len(centroids))
-    if not collect_queries:
-        if quantize:
-            # the distributed probe scores with float centroid math —
-            # silently falling back would diverge from the quantized
-            # assignment and the ivf_portable oracle
-            raise ValueError(
-                "ivf_topk: quantize=True requires collect_queries=True "
-                "(the portable path is a verification surface for "
-                "request-sized query sets)"
-            )
-        return _ivf_topk_distributed(
-            spark, index, centroids, queries, k, nprobe, qid_col, qvec_col
-        )
-    q_src = queries.select(F.col(qid_col).alias("query_id"), F.col(qvec_col).alias("qv"))
-    qpdf = (q_src if max_queries is None else q_src.limit(max_queries + 1)).toPandas()
-    if max_queries is not None and len(qpdf) > max_queries:
-        if quantize:
-            raise ValueError(
-                f"ivf_topk: quantize=True collects the query side and got "
-                f"> {max_queries} query rows; the portable path is for "
-                "request-sized query sets (raise max_queries only if the "
-                "collect genuinely fits the driver)"
-            )
-        return _ivf_topk_distributed(
-            spark, index, centroids, queries, k, nprobe, qid_col, qvec_col
-        )
-    qm = np.stack([np.asarray(v, dtype=np.float64) for v in qpdf["qv"]])
-    if quantize:
-        # portable probe selection: same exact-integer scoring as the
-        # quantized assignment; stable sort keeps the LOWEST cid on
-        # score ties, matching SQL row_number (score DESC, cid)
-        cq = centroids.astype(np.int64)
-        cnorm = np.sqrt((cq.astype(np.float64) ** 2).sum(axis=1))
-        if (cnorm == 0).any():
-            raise ValueError(
-                "quantize=True: centroid(s) with all-zero quantization "
-                f"(rows {np.flatnonzero(cnorm == 0).tolist()})"
-            )
-        qq = np.floor(qm * 1000.0 + 0.5).astype(np.int64)
-        scores = (qq @ cq.T).astype(np.float64) / cnorm[None, :]
-        order = np.argsort(-scores, axis=1, kind="stable")[:, :nprobe]
-    else:
-        qn = qm / np.maximum(np.linalg.norm(qm, axis=1, keepdims=True), 1e-12)
-        cn = centroids / np.maximum(
-            np.linalg.norm(centroids, axis=1, keepdims=True), 1e-12
-        )
-        order = np.argsort(-(qn @ cn.T), axis=1)[:, :nprobe]  # [Q, nprobe]
-    probes = pd.DataFrame(
-        {
-            # keep native Python values (np scalars break inference-free
-            # createDataFrame); the id keeps whatever type the caller's
-            # qid_col has — string image_ids work the same as ints
-            "query_id": list(np.repeat(qpdf["query_id"].to_numpy(), nprobe)),
-            "qv": [v.tolist() for v in np.repeat(qm, nprobe, axis=0)],
-            "cid": [int(c) for c in order.ravel()],
-        }
-    )
-    # explicit schema: plain (non-Arrow) sessions cannot infer the
-    # type of list-of-np.float64 cells (CANNOT_INFER_TYPE_FOR_FIELD);
-    # the query_id field type is taken from the input schema rather
-    # than hardcoded, so non-integer id columns survive the round-trip
-    qid_type = queries.schema[qid_col].dataType
-    schema = T.StructType(
-        [
-            T.StructField("query_id", qid_type),
-            T.StructField("qv", T.ArrayType(T.DoubleType())),
-            T.StructField("cid", T.IntegerType()),
-        ]
-    )
-    qdf = spark.createDataFrame(probes, schema).withColumn("qn", _norm_expr("qv"))
-    # request-sized probes BROADCAST: the index streams with ZERO
-    # shuffle and only probed-list candidates reach the pair scorer —
-    # a cogroup here would shuffle the whole corpus-sized index by cid
-    # to serve a handful of queries. The cogroup block scorer is the
-    # corpus x corpus regime's tool (_ivf_topk_distributed).
-    cand = _cosine_pairs_frame(
-        index.join(F.broadcast(qdf), "cid").select(
-            "query_id", "vec_id", "qv", "cv", "qn", "cn"
-        ),
-        dim=int(centroids.shape[1]),
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("vec_id").asc())
-    return (
-        cand.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "rank", "vec_id", F.round("cosine", 6).alias("cosine"))
-        .orderBy("query_id", "rank")
-    )
-
-
-def _ivf_topk_distributed(
-    spark: SparkSession,
-    index: DataFrame,
-    centroids: np.ndarray,
-    queries: DataFrame,
-    k: int,
-    nprobe: int,
-    qid_col: str,
-    qvec_col: str,
-) -> DataFrame:
-    """Distributed IVF probe: the normalized centroid matrix (tiny)
-    broadcasts into a vectorized ``mapInArrow`` stage that assigns
-    each query row its nprobe nearest list ids; the probe table then
-    equi-joins the inverted index on cid (a shuffle keyed by list id —
-    the bucketed join, no broadcast of the query side, which may be
-    corpus-sized here). Input conversion and probe-list assembly are
-    batch-level Arrow (``_list_matrix`` + ``ListArray.from_arrays``) —
-    zero per-row Python even when the query side is the corpus. Same
-    math, same ordering, identical rows to the driver-side path."""
-    import pyarrow as pa
-
-    cn_mat = centroids / np.maximum(
-        np.linalg.norm(centroids, axis=1, keepdims=True), 1e-12
-    )
-    bc = spark.sparkContext.broadcast(cn_mat)
-    dim = cn_mat.shape[1]
+    score = _centroid_scorer(centroids, quantize)
+    dim = int(centroids.shape[1])
     qidt = queries.schema[qid_col].dataType.simpleString()
-    qvt = queries.schema[qvec_col].dataType.simpleString()
-    qsrc = queries.select(F.col(qid_col).alias("query_id"), F.col(qvec_col).alias("qv"))
-
-    def probe_fn(batches):
-        c = bc.value
-        npb = min(nprobe, c.shape[0])
-        for b in batches:
-            if b.num_rows == 0:
-                continue
-            qm = _list_matrix(b.column("qv"), b.num_rows, dim)
-            qn = qm / np.maximum(np.linalg.norm(qm, axis=1, keepdims=True), 1e-12)
-            order = np.argsort(-(qn @ c.T), axis=1)[:, :npb]
-            offsets = pa.array(np.arange(0, (b.num_rows + 1) * npb, npb, dtype=np.int32))
-            probes = pa.ListArray.from_arrays(
-                offsets, pa.array(order.ravel().astype(np.int32))
+    vidt = index.schema["vec_id"].dataType.simpleString()
+    q_src = queries.select(F.col(qid_col).alias("query_id"), F.col(qvec_col).alias("qv"))
+    if collect_queries:
+        qtbl = (q_src if max_queries is None else q_src.limit(max_queries + 1)).toArrow()
+        if max_queries is None or qtbl.num_rows <= max_queries:
+            return _rank_topk(
+                _broadcast_probe_scored(index, qtbl, score, nprobe, dim, qidt, vidt), k
             )
-            yield pa.RecordBatch.from_arrays(
-                [b.column("query_id"), b.column("qv"), probes],
-                names=["query_id", "qv", "__probes"],
-            )
-
-    qdf = (
-        qsrc.mapInArrow(probe_fn, f"query_id {qidt}, qv {qvt}, __probes array<int>")
-        .withColumn("cid", F.explode("__probes"))
-        .drop("__probes")
-        .withColumn("qn", _norm_expr("qv"))
-    )
-    cand = _cogroup_block_scored(
-        index,
-        qdf,
-        qidt=qidt,
-        vidt=index.schema["vec_id"].dataType.simpleString(),
-        dim=dim,
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("vec_id").asc())
-    return (
-        cand.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "rank", "vec_id", F.round("cosine", 6).alias("cosine"))
-        .orderBy("query_id", "rank")
-    )
+    return _rank_topk(_cogroup_block_scored(index, q_src, score, nprobe, dim, qidt, vidt), k)

@@ -480,15 +480,7 @@ def _op_ann_topk(spark: SparkSession, pipe: Pipeline, conf: dict) -> DataFrame:
             # the SQL-reproducible path (ivf_portable oracle):
             # training-free integer centroids — the quantized first
             # n_centroids corpus vectors by id order — and exact-int
-            # scoring; request-sized query sets only (the quantized
-            # probe collects)
-            if not qids:
-                raise ValueError(
-                    "ann_topk: method 'ivf' with portable: true needs "
-                    "query_ids (the portable probe is a request-sized "
-                    "verification surface; use the Lloyd path for "
-                    "corpus self-search)"
-                )
+            # scoring
             import numpy as np
 
             cpdf = df.orderBy(id_col).limit(n_cents).select(vec_col).toPandas()

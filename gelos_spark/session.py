@@ -15,37 +15,6 @@ from pyspark.sql import SparkSession
 
 DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
-ICEBERG_CATALOG = "gelos_iceberg"
-
-
-def iceberg_runtime_jar() -> str | None:
-    """Probe for an Iceberg Spark runtime jar (SURVEY.md §7.0): the
-    explicit ``GELOS_ICEBERG_JAR`` override, then ``$SPARK_HOME/jars``
-    / pyspark's bundled jars dir, then the local ivy cache. Returns
-    the jar path or None (offline sandboxes have none — the
-    snapshot-manifest layer then stands in)."""
-    import glob
-
-    explicit = os.environ.get("GELOS_ICEBERG_JAR")
-    if explicit:
-        return explicit if os.path.exists(explicit) else None
-    roots = []
-    if os.environ.get("SPARK_HOME"):
-        roots.append(os.path.join(os.environ["SPARK_HOME"], "jars"))
-    try:
-        import pyspark
-
-        roots.append(os.path.join(os.path.dirname(pyspark.__file__), "jars"))
-    except ImportError:  # pragma: no cover
-        pass
-    roots.append(os.path.expanduser("~/.ivy2/jars"))
-    for r in roots:
-        hits = glob.glob(os.path.join(r, "iceberg-spark-runtime*.jar"))
-        if hits:
-            return sorted(hits)[-1]
-    return None
-
-
 def _workers_import_package() -> bool:
     """Whether a local Python worker can import ``gelos_spark``: its
     root directory is the cwd (``python -m`` puts it on the daemon's
@@ -111,26 +80,6 @@ def get_spark(
             str(64 * 1024 * 1024),
         )
     )
-    jar = iceberg_runtime_jar()
-    if jar:
-        # real Iceberg auto-engages when the runtime resolves
-        # (SURVEY.md §7.0); tables.open_table routes through this
-        # catalog, the snapshot-manifest layer otherwise
-        import tempfile
-
-        wh = os.environ.get(
-            "GELOS_ICEBERG_WAREHOUSE",
-            os.path.join(tempfile.gettempdir(), "gelos_warehouse"),
-        )
-        b = (
-            b.config("spark.jars", jar)
-            .config(
-                f"spark.sql.catalog.{ICEBERG_CATALOG}",
-                "org.apache.iceberg.spark.SparkCatalog",
-            )
-            .config(f"spark.sql.catalog.{ICEBERG_CATALOG}.type", "hadoop")
-            .config(f"spark.sql.catalog.{ICEBERG_CATALOG}.warehouse", wh)
-        )
     if master.startswith("local"):
         # local-scale scan granularity: default 128MB packs a whole
         # bench table into 1-2 input splits, serializing every narrow

@@ -452,7 +452,9 @@ def test_simhash_and_ann_config_ops(spark, tmp_path):
 def test_ann_topk_ivf_method(spark, tmp_path):
     """ann_topk's ivf method trains, indexes, and probes in one stage;
     with nprobe == n_centroids every list is scanned, so the result
-    must equal the exact brute-force stage row for row."""
+    must equal the exact brute-force stage row for row. The same holds
+    for the portable (quantized) probe over a corpus self-search, which
+    stays distributed."""
     from gelos_spark.plans import config as cfg
 
     conf = {
@@ -481,12 +483,27 @@ def test_ann_topk_ivf_method(spark, tmp_path):
                 "input": "emb",
                 "args": {"k": 5, "method": "brute", "query_ids": [0, 1, 2]},
             },
+            {
+                "name": "ivf_self",
+                "op": "ann_topk",
+                "input": "emb",
+                "args": {"k": 5, "method": "ivf", "portable": True, "n_centroids": 8, "nprobe": 8},
+            },
+            {
+                "name": "exact_self",
+                "op": "ann_topk",
+                "input": "emb",
+                "args": {"k": 5, "method": "brute"},
+            },
         ],
     }
     pipe = cfg.build_pipeline(spark, conf, root=str(tmp_path / "run"))
     ivf = sorted(map(tuple, pipe.output("ivf").collect()))
     exact = sorted(map(tuple, pipe.output("exact").collect()))
     assert len(exact) == 15 and ivf == exact
+    ivf_self = sorted(map(tuple, pipe.output("ivf_self").collect()))
+    exact_self = sorted(map(tuple, pipe.output("exact_self").collect()))
+    assert len(exact_self) > 15 and ivf_self == exact_self
 
 
 def test_ann_topk_rejects_empty_and_oversized_query_ids(spark, tmp_path):

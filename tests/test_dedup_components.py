@@ -290,6 +290,20 @@ def test_dedup_near_driver_action_budget(spark, jobs_launched):
     assert jobs <= 9, jobs
 
 
+def test_phash_dup_pairs_driver_action_budget(spark, jobs_launched):
+    """phash_dup_pairs(...).count() keeps its measured job count (4:
+    the banded join's stages), so an added count()/collect() in the
+    operator fails here."""
+    images = _phash_images(spark)
+    n = []
+    jobs = jobs_launched(
+        "phash_pairs_budget",
+        lambda: n.append(dedup.phash_dup_pairs(images, max_hamming=4).count()),
+    )
+    assert n == [144]
+    assert jobs <= 4, jobs
+
+
 def test_minhash_lsh_pairs_driver_action_budget(spark, jobs_launched):
     """minhash_lsh_pairs(...).count() keeps its measured job count, so
     an added count()/collect() in the operator fails here."""

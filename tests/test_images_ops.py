@@ -21,6 +21,16 @@ def test_decode_stats_phash_matches(spark):
     assert all(0.0 <= r.mean_lum <= 255.0 for r in out)
 
 
+def test_decode_stats_driver_action_budget(spark, jobs_launched):
+    """decode_stats(...).count() keeps its measured job count (2), so
+    an added count()/collect() in the operator fails here."""
+    images = _images(spark)
+    n = []
+    jobs = jobs_launched("decode_budget", lambda: n.append(imops.decode_stats(images).count()))
+    assert n == [24]
+    assert jobs <= 2, jobs
+
+
 def test_psnr_roundtrip_lossy_passes_40db(spark):
     out = imops.psnr_roundtrip(_images(spark), fmt="qdct").collect()
     assert len(out) == 24

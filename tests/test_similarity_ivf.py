@@ -53,10 +53,9 @@ def test_list_matrix_validates_per_row_lengths():
 
 
 def test_fold_dot_bit_equals_jvm(spark):
-    """Every top-k scorer now runs through the Arrow pair scorer
-    (`_cosine_pairs_frame` / `_fold_dot`), whose contract is
-    BIT-identity with the JVM `aggregate(zip_with(...))` left fold it
-    replaced — not closeness. Pin the two against each other on
+    """The Arrow pair scorer (`_cosine_pairs_frame` / `_fold_dot`)
+    carries BIT-identity with the JVM `aggregate(zip_with(...))` left
+    fold it replaced — not closeness. Pin the two against each other on
     adversarial float data (9 orders of magnitude, sign flips: any
     summation-order deviation shows up in the low bits here), at a
     dim (37) that exercises the odd/non-power-of-two path."""
@@ -84,7 +83,7 @@ def test_fold_dot_bit_equals_jvm(spark):
     }
     arrow = {
         r["vec_id"]: r["cosine"]
-        for r in sim._cosine_pairs_frame(df).collect()  # qn=cn=1 -> raw dot
+        for r in sim._cosine_pairs_frame(df, dim).collect()  # qn=cn=1 -> raw dot
     }
     assert len(jvm) == n
     for i in range(n):
@@ -142,11 +141,9 @@ def test_block_cosine_bit_equals_jvm_fold(spark):
 
 
 def test_cosine_pairs_frame_infers_dim_and_rejects_ragged(spark):
-    """dim=None (the brute_force_topk path, which has no centroid
-    matrix to read the dimensionality from) infers dim from the first
-    row's offsets per batch; every other row is then validated against
-    it by _list_matrix, so a ragged pair frame still fails loudly
-    instead of reshaping wrong."""
+    """The pair scorer validates every row against the ``dim`` its
+    caller passes (lsh_topk knows it from the hyperplanes), so a
+    ragged pair frame fails loudly instead of reshaping wrong."""
     ok = spark.createDataFrame(
         pd.DataFrame(
             {
@@ -159,7 +156,7 @@ def test_cosine_pairs_frame_infers_dim_and_rejects_ragged(spark):
             }
         )
     )
-    got = {r["vec_id"]: r["cosine"] for r in sim._cosine_pairs_frame(ok).collect()}
+    got = {r["vec_id"]: r["cosine"] for r in sim._cosine_pairs_frame(ok, 3).collect()}
     assert got == {10: 1.0, 11: 1.0}
 
     ragged = spark.createDataFrame(
@@ -175,7 +172,7 @@ def test_cosine_pairs_frame_infers_dim_and_rejects_ragged(spark):
         ).astype({"query_id": "int64"})
     )
     with pytest.raises(Exception):  # Spark surfaces the executor-side shape error
-        sim._cosine_pairs_frame(ragged.coalesce(1)).collect()
+        sim._cosine_pairs_frame(ragged.coalesce(1), 2).collect()
 
 
 def test_ivf_train_deterministic(spark, emb):
@@ -199,21 +196,67 @@ def test_ivf_recall_and_exact_degeneration(spark, emb):
     a = [(x.query_id, x.rank, x.vec_id) for x in full.collect()]
     b = [(x.query_id, x.rank, x.vec_id) for x in exact.collect()]
     assert a == b
+    # an empty request-sized query set is an empty result, not an error
+    assert sim.ivf_topk(spark, index, cents, q.limit(0), k=10).count() == 0
 
 
 def test_ivf_distributed_probe_identical_to_driver_path(spark):
-    """collect_queries=False (distributed probe assignment) returns
-    exactly the rows of the driver-side path, full and partial probe."""
+    """collect_queries=False (the corpus-sized cogroup scorer) returns
+    exactly the rows of the request-sized broadcast scorer, full and
+    partial probe, for Lloyd centroids and for the quantized portable
+    probe."""
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
+    cents = sim.ivf_train(emb, n_centroids=8, iters=2, seed=7)
+    qpdf = emb.where("vec_id < 8").orderBy("vec_id").toPandas()
+    qcents = np.floor(
+        np.stack([np.asarray(v, dtype=np.float64) for v in qpdf.embedding]) * 1000.0 + 0.5
+    ).astype(np.int64)
+    q = emb.where("vec_id < 12").selectExpr("vec_id AS query_id", "embedding")
+    for c, quantize in ((cents, False), (qcents, True)):
+        index = sim.ivf_index(emb, c, quantize=quantize)
+        for nprobe in (8, 2):
+            a = sim.ivf_topk(spark, index, c, q, k=10, nprobe=nprobe, quantize=quantize)
+            b = sim.ivf_topk(
+                spark, index, c, q, k=10, nprobe=nprobe, collect_queries=False,
+                quantize=quantize,
+            )
+            assert [tuple(r) for r in a.collect()] == [tuple(r) for r in b.collect()]
+
+
+def test_ivf_quantize_rejects_all_zero_centroid(spark, emb):
+    """A centroid that quantizes to all zeros would score NaN against
+    every row and swallow the corpus into one list; the quantized
+    scorer raises before any Spark job, at index build and at probe."""
+    cents = np.ones((4, 16), dtype=np.int64)
+    cents[2] = 0
+    q = emb.where("vec_id < 4").selectExpr("vec_id AS query_id", "embedding")
+    with pytest.raises(ValueError, match="all-zero"):
+        sim.ivf_index(emb, cents, quantize=True)
+    index = sim.ivf_index(emb, np.ones((4, 16), dtype=np.int64), quantize=True)
+    for collect_queries in (True, False):
+        with pytest.raises(ValueError, match="all-zero"):
+            sim.ivf_topk(
+                spark, index, cents, q, k=3, nprobe=2, quantize=True,
+                collect_queries=collect_queries,
+            )
+
+
+def test_ivf_topk_request_sized_driver_action_budget(spark, emb, jobs_launched):
+    """A request-sized ivf_topk call plus its result collect launches
+    at most 6 Spark jobs: the bounded query collect, then the ranked
+    result's stages. 6 is what the pair-join probe this path replaced
+    took; the broadcast block scorer takes 5. An added count() or
+    collect() in the operator fails here."""
     cents = sim.ivf_train(emb, n_centroids=8, iters=2, seed=7)
     index = sim.ivf_index(emb, cents)
     q = emb.where("vec_id < 12").selectExpr("vec_id AS query_id", "embedding")
-    for nprobe in (8, 2):
-        a = sim.ivf_topk(spark, index, cents, q, k=10, nprobe=nprobe)
-        b = sim.ivf_topk(
-            spark, index, cents, q, k=10, nprobe=nprobe, collect_queries=False
-        )
-        assert [tuple(r) for r in a.collect()] == [tuple(r) for r in b.collect()]
+    rows = []
+    jobs = jobs_launched(
+        "ivf_budget",
+        lambda: rows.extend(sim.ivf_topk(spark, index, cents, q, k=10, nprobe=2).collect()),
+    )
+    assert len(rows) == 120
+    assert jobs <= 6, jobs
 
 
 def test_ivf_corpus_self_search_stays_distributed(spark):
@@ -326,18 +369,25 @@ def test_brute_force_topk_rejects_dim_mismatch(spark):
 
 
 def test_brute_force_topk_keeps_narrow_id_types(spark):
-    """int32 query ids must survive the broadcast round-trip: the
+    """int32 and string query ids must survive the broadcast
+    round-trip of brute_force_topk and of request-sized ivf_topk: the
     query side is collected via toArrow (type-faithful), so the
     emitted batches match the declared mapInArrow schema."""
     corpus = spark.createDataFrame(
         [(i, [float(i), 1.0]) for i in range(6)], "vec_id long, embedding array<double>"
     )
-    q = spark.range(2).selectExpr(
-        "CAST(id AS INT) AS query_id", "array(CAST(id AS DOUBLE), 1.0D) AS embedding"
-    )
-    out = sim.brute_force_topk(corpus, q, k=3)
-    assert out.schema["query_id"].dataType.simpleString() == "int"
-    assert out.count() == 6
+    cents = np.array([[1.0, 1.0], [5.0, 1.0]])
+    index = sim.ivf_index(corpus, cents)
+    for qid, qidt in (("CAST(id AS INT)", "int"), ("CONCAT('q', id)", "string")):
+        q = spark.range(2).selectExpr(
+            f"{qid} AS query_id", "array(CAST(id AS DOUBLE), 1.0D) AS embedding"
+        )
+        out = sim.brute_force_topk(corpus, q, k=3)
+        assert out.schema["query_id"].dataType.simpleString() == qidt
+        assert out.count() == 6
+        ivf = sim.ivf_topk(spark, index, cents, q, k=3, nprobe=2)
+        assert ivf.schema["query_id"].dataType.simpleString() == qidt
+        assert [tuple(r) for r in ivf.collect()] == [tuple(r) for r in out.collect()]
 
 
 def test_lsh_portable_matches_numpy_reference(spark):
@@ -431,7 +481,7 @@ def test_ivf_topk_corpus_sized_queries_auto_dispatch(spark, collect_sizes):
     """ivf_topk(collect_queries=True) must NEVER fully collect a query
     frame past max_queries (the silent-OOM edge the knn_join /
     brute_force_topk guards already close): the probe is the bounded
-    limit(max_queries+1).toPandas() collect the path needs anyway, and
+    limit(max_queries+1).toArrow() collect the path needs anyway, and
     on overflow the call routes to the distributed probe, returning
     rows identical to calling it directly. Every collect the call
     makes is recorded and must hold at most max_queries+1 rows."""

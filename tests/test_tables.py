@@ -314,35 +314,6 @@ def test_resume_delta(spark):
     assert sorted(r.k for r in left.collect()) == list(range(4, 10))
 
 
-def test_iceberg_probe_and_fallback(spark, tmp_path, monkeypatch):
-    """SURVEY §7.0 autodetect: offline (no runtime jar) the probe
-    returns None, the session carries no Iceberg catalog, and
-    open_table cleanly routes to the snapshot-manifest layer."""
-    from gelos_spark import session as ses
-    from gelos_spark.tables.iceberg import IcebergTable, iceberg_enabled, open_table
-
-    assert ses.iceberg_runtime_jar() is None  # sandbox has no jar
-    assert iceberg_enabled(spark) is False
-    t = open_table(spark, str(tmp_path / "tbl"))
-    assert isinstance(t, SnapshotTable)
-    t.append(spark.range(0, 5).coalesce(1))
-    assert t.read(spark).count() == 5
-
-    # explicit override pointing at a real file -> probe finds it
-    fake = tmp_path / "iceberg-spark-runtime-3.5_2.12-1.5.0.jar"
-    fake.write_bytes(b"PK")
-    monkeypatch.setenv("GELOS_ICEBERG_JAR", str(fake))
-    assert ses.iceberg_runtime_jar() == str(fake)
-    monkeypatch.setenv("GELOS_ICEBERG_JAR", str(tmp_path / "missing.jar"))
-    assert ses.iceberg_runtime_jar() is None
-
-    # the facade validates identifiers without needing a live catalog
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError):
-        IcebergTable(spark, "bad name; drop")
-
-
 def test_pruned_read_or_of_ranges(spark, tmp_path):
     """A predicate may be an OR of ranges ({col: [(lo,hi), ...]}) —
     the polygon-cover pushdown shape. Union semantics must be exact
