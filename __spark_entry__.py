@@ -30,7 +30,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from gelos_spark.functions import text as tx
-from gelos_spark.functions.cell_udfs import cell_encode_col, cell_encode_udf, cell_parent_col
+from gelos_spark.functions.cell_udfs import cell_encode_col, cell_parent_col
 from gelos_spark.functions.geometry import haversine_col, haversine_sql, pip_sql
 from gelos_spark.operators import dedup, similarity
 from gelos_spark.operators.knn_join import knn_join
@@ -517,7 +517,7 @@ def _haversine(spark, sf_dir):
 def _cell_encode(spark, sf_dir):
     (customer,) = _tables(spark, sf_dir, "customer")
     pts = _points_df(customer, "c_custkey")
-    enc = pts.withColumn("cell12", cell_encode_udf(12)(F.col("lon"), F.col("lat")))
+    enc = pts.withColumn("cell12", cell_encode_col(F.col("lon"), F.col("lat"), 12))
     return enc.select(
         "image_id", "cell12", cell_parent_col(F.col("cell12"), 12, 5).alias("cell5")
     )
@@ -549,7 +549,7 @@ def _pyramid_rollup(spark, sf_dir):
         _coord_col("c_custkey", _LON).alias("lon"),
         _coord_col("c_custkey", _LAT).alias("lat"),
     )
-    leaf = pts.withColumn("cell", cell_encode_udf(6)(F.col("lon"), F.col("lat")))
+    leaf = pts.withColumn("cell", cell_encode_col(F.col("lon"), F.col("lat"), 6))
     return vector_pyramid(leaf, 6, 2, cat_col="cat")
 
 

@@ -1,29 +1,16 @@
-"""Vectorized Spark wrappers for the cell-index kernels.
+"""Spark column expressions for the cell-index kernels.
 
-Only two Python surfaces exist (input_hint: "no per-row Python"):
-scalar pandas UDFs for lon/lat -> cell encoding, and pure column
-expressions for everything hierarchical (parent/prefix arithmetic is
-bit-shifting, which stays JVM-side in whole-stage codegen).
+No Python UDF lives here (input_hint: "no per-row Python"): lon/lat
+-> cell encoding and everything hierarchical (parent/prefix
+arithmetic is bit-shifting) are pure column expressions that stay
+JVM-side in whole-stage codegen, bit-identical to the NumPy kernels
+in functions/cells.py.
 """
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
-
-from gelos_spark.functions import cells
-
-
-def cell_encode_udf(res: int):
-    """pandas_udf: (lon, lat) -> int64 cell id at ``res``."""
-
-    @F.pandas_udf(T.LongType())
-    def _encode(lon: pd.Series, lat: pd.Series) -> pd.Series:
-        return pd.Series(cells.cell_encode(lon.to_numpy(), lat.to_numpy(), res))
-
-    return _encode
 
 
 _SPREAD_STEPS = (

@@ -20,8 +20,8 @@ res 26 a cell is ~0.6m x 0.3m at the equator — far below tile size
 at 10^12-image scale, so the hierarchy covers every zoom the pyramid
 (operators/pyramid.py) needs.
 
-All kernels take/return NumPy arrays and are wrapped in pandas UDFs
-by the operators; none contain per-row Python.
+All kernels take/return NumPy arrays and run on the driver or inside
+the operators' vectorized UDFs; none contain per-row Python.
 """
 
 from __future__ import annotations
@@ -140,52 +140,6 @@ def cell_bounds(cell: np.ndarray, res: int) -> tuple[np.ndarray, np.ndarray, np.
     return lon0, lat0, lon0 + 360.0 / n, lat0 + 180.0 / n
 
 
-def cell_ring(cell: int, res: int, r: int) -> np.ndarray:
-    """Cells at Chebyshev grid distance exactly ``r`` from ``cell``
-    (r=0 -> the cell itself). x wraps around the antimeridian, y is
-    clamped out (cells past the poles are dropped). Driver-side helper
-    for the kNN ring-expansion loop (SURVEY.md §2.3 J5)."""
-    n = 1 << res
-    x, y = cell_to_xy(np.asarray([cell]))
-    x0, y0 = int(x[0]), int(y[0])
-    if r == 0:
-        return np.asarray([cell], dtype=np.int64)
-    side = np.arange(-r, r + 1)
-    top = np.stack([side, np.full_like(side, r)], axis=1)
-    bot = np.stack([side, np.full_like(side, -r)], axis=1)
-    mid = np.arange(-r + 1, r)
-    left = np.stack([np.full_like(mid, -r), mid], axis=1)
-    right = np.stack([np.full_like(mid, r), mid], axis=1)
-    off = np.concatenate([top, bot, left, right], axis=0)
-    xs = (x0 + off[:, 0]) % n
-    ys = y0 + off[:, 1]
-    keep = (ys >= 0) & (ys < n)
-    return np.sort(xy_to_cell(xs[keep], ys[keep]))
-
-
-def cell_disk_batch(cells: np.ndarray, res: int, r: int) -> tuple[np.ndarray, np.ndarray]:
-    """Vectorized ring shell for many cells at once: returns
-    (row_index, shell_cell) pairs — the exploded form the kNN join
-    consumes. Ring r shell has <= 8r cells per input (r=0 -> 1)."""
-    n = 1 << res
-    x, y = cell_to_xy(np.asarray(cells))
-    if r == 0:
-        idx = np.arange(len(x))
-        return idx, xy_to_cell(x, y)
-    side = np.arange(-r, r + 1)
-    top = np.stack([side, np.full_like(side, r)], axis=1)
-    bot = np.stack([side, np.full_like(side, -r)], axis=1)
-    mid = np.arange(-r + 1, r)
-    left = np.stack([np.full_like(mid, -r), mid], axis=1)
-    right = np.stack([np.full_like(mid, r), mid], axis=1)
-    off = np.concatenate([top, bot, left, right], axis=0)  # [m, 2]
-    xs = (x[:, None] + off[None, :, 0]) % n  # [k, m]
-    ys = y[:, None] + off[None, :, 1]
-    keep = (ys >= 0) & (ys < n)
-    idx = np.broadcast_to(np.arange(len(x))[:, None], xs.shape)[keep]
-    return idx, xy_to_cell(xs[keep], ys[keep])
-
-
 def _range_offsets(r0: int, r1: int) -> np.ndarray:
     """(dx, dy) offsets with Chebyshev distance in (r0, r1] — the
     shell between two square rings (r0 = -1 includes the center)."""
@@ -234,16 +188,6 @@ def unwrap_ring(ring: np.ndarray) -> tuple[np.ndarray, bool]:
     return out, True
 
 
-def cover_bbox(lon_min: float, lat_min: float, lon_max: float, lat_max: float, res: int) -> np.ndarray:
-    """All res-r cells intersecting a lon/lat bbox. ``lon_max`` may
-    exceed 180 (the unwrapped antimeridian frame): x indices wrap
-    modulo the grid, so the cover splits across +-180 automatically.
-    Conservative cover for the PIP coarse join; exactness comes from
-    ray-cast refinement."""
-    cells, _ = _cover_grid(lon_min, lat_min, lon_max, lat_max, res)
-    return np.sort(cells)
-
-
 def _cover_grid(
     lon_min: float, lat_min: float, lon_max: float, lat_max: float, res: int
 ) -> tuple[np.ndarray, tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray]]:
@@ -287,30 +231,21 @@ def unwrap_rings(
     return outer, hs, wrapped
 
 
-def polygon_cover(
-    ring: np.ndarray, res: int, prune: bool = True, holes: list | None = None
-) -> np.ndarray:
-    """Cells at res ``res`` whose rectangle may intersect the polygon
-    (SURVEY.md §2.6 G6). Starts from the bbox cover; when ``prune`` is
-    set, drops cells that provably do not touch the polygon."""
-    cells, _ = polygon_cover_classified(
-        np.asarray(ring, dtype=np.float64), res, prune=prune, holes=holes
-    )
-    return cells
-
-
 def polygon_cover_classified(
-    ring: np.ndarray, res: int, prune: bool = True, holes: list | None = None
+    ring: np.ndarray, res: int, holes: list | None = None
 ) -> tuple[np.ndarray, np.ndarray]:
     """Polygon cover with an INTERIOR flag per cell (SURVEY.md §2.6 G6).
 
-    Returns (cells, interior). A cell is interior when all four of its
-    corners are inside the polygon AND no polygon edge's bbox overlaps
-    the cell rect — every point of such a cell is provably inside, so
-    the PIP join can skip ray-cast refinement for its tiles (the bulk
-    of any large AOI's area). Cells kept but not interior are boundary
-    cells (no polygon vertex inside, no corner inside, no overlapping
-    edge -> dropped entirely).
+    Returns (cells, interior): the cells at ``res`` whose rectangle may
+    intersect the polygon — the bbox cover minus the cells that
+    provably do not touch it (bboxes of <= 4 cells are kept whole). A
+    cell is interior when all four of its corners are inside the
+    polygon AND no polygon edge's bbox overlaps the cell rect — every
+    point of such a cell is provably inside, so the PIP join can skip
+    ray-cast refinement for its tiles (the bulk of any large AOI's
+    area). Cells kept but not interior are boundary cells (no polygon
+    vertex inside, no corner inside, no overlapping edge -> dropped
+    entirely).
 
     ``holes``: optional inner rings. Containment is multi-ring
     even-odd parity, and vertex/edge tests run over every ring — so a
@@ -365,7 +300,7 @@ def polygon_cover_classified(
         & (emax_y[None, :] >= lat0[:, None])
     ).any(axis=1)
     interior = all_corners_in & ~overlap & ~has_vertex
-    if not prune or len(cells) <= 4:
+    if len(cells) <= 4:
         return cells, interior
     keep = has_vertex | any_corner_in | overlap
     return cells[keep], interior[keep]

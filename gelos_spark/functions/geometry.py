@@ -69,17 +69,6 @@ def points_in_rings(px: np.ndarray, py: np.ndarray, rings: list) -> np.ndarray:
     return (total % 2).astype(bool)
 
 
-def points_in_polygon_chunked(
-    px: np.ndarray, py: np.ndarray, ring: np.ndarray, chunk: int = 65536
-) -> np.ndarray:
-    """Bounded-memory variant for large point batches (the [N, E]
-    broadcast is chunked over N)."""
-    out = np.empty(len(px), dtype=bool)
-    for s in range(0, len(px), chunk):
-        out[s : s + chunk] = points_in_polygon(px[s : s + chunk], py[s : s + chunk], ring)
-    return out
-
-
 def haversine_np(
     lon1: np.ndarray, lat1: np.ndarray, lon2: np.ndarray, lat2: np.ndarray
 ) -> np.ndarray:

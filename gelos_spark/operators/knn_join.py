@@ -37,7 +37,7 @@ Algorithm (iterative DataFrame loop — SURVEY.md §4 item 2):
       next round's pool. The exact pass is collected the same way, and
       the result is built from the collected rows. Small inputs skip
       the rings and take the exact pass directly
-      (``brute_force_pairs``).
+      (``BRUTE_FORCE_PAIRS``).
     - ``knn_join_distributed`` (a corpus-sized query table, dispatched
       to automatically past ``max_queries``): the query side and the
       running top-k stay DataFrames; shells come from the same kernel
@@ -59,6 +59,7 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -73,6 +74,9 @@ from gelos_spark.plans.materialize import finalize
 # query side, so that carrier keeps expanding longer.
 DRIVER_RING_ROUNDS = 3
 DISTRIBUTED_RING_ROUNDS = 11
+# tiles x queries at or below which the driver carrier skips the rings
+# and takes one exact brute-force pass (see knn_join's docstring)
+BRUTE_FORCE_PAIRS = 2_000_000
 
 
 def _schemas(qid_type: str) -> tuple[str, str, str, str]:
@@ -254,7 +258,6 @@ def knn_join(
     queries: DataFrame | pd.DataFrame,
     res: int | None = None,
     n_tiles_hint: int | None = None,
-    brute_force_pairs: int = 2_000_000,
     checkpoint: bool | str = True,
     max_queries: int | None = 100_000,
 ) -> DataFrame:
@@ -275,7 +278,7 @@ def knn_join(
     collect this path needs anyway (``limit(n+1).toPandas()``), so it
     costs ZERO extra Spark actions. ``max_queries=None`` skips the
     guard (caller asserts the frame is request-sized);
-    ``brute_force_pairs`` applies only to the driver-resident path.
+    ``BRUTE_FORCE_PAIRS`` applies only to the driver-resident path.
 
     ``checkpoint``: materialization policy for the returned frame
     (plans/materialize.finalize) — True = eager localCheckpoint
@@ -284,18 +287,19 @@ def knn_join(
     the collected rows. The result is assembled on the driver, so no
     cache is left persisted under any policy.
 
-    Cost-based path selection: when tiles x queries <=
-    ``brute_force_pairs`` one exact brute-force pass is cheaper than
-    ring expansion (each ring round costs a full distributed action;
-    measured crossover on local[32] is ~2-10M pairs — above it the
-    brute pass's per-query window shuffle dominates and ring pruning
-    wins), so every query takes the exact pass. The tile count is
-    ``n_tiles_hint`` before the tiles are indexed (a count only when
-    ``res`` must be derived from it), and the measured count after,
-    so an overestimated or missing hint still ends in the exact pass.
+    Cost-based path selection: when tiles x queries <= the module
+    constant ``BRUTE_FORCE_PAIRS`` one exact brute-force pass is
+    cheaper than ring expansion (each ring round costs a full
+    distributed action; measured crossover on local[32] is ~2-10M
+    pairs — above it the brute pass's per-query window shuffle
+    dominates and ring pruning wins), so every query takes the exact
+    pass. The tile count is ``n_tiles_hint`` before the tiles are
+    indexed (a count only when ``res`` must be derived from it), and
+    the measured count after, so an overestimated or missing hint
+    still ends in the exact pass.
     Ring expansion is the 10^12-tile design; results are identical
-    either way (both exact, ties broken by id). Set
-    ``brute_force_pairs=0`` to force the ring path.
+    either way (both exact, ties broken by id). Setting
+    ``BRUTE_FORCE_PAIRS = 0`` forces the ring path.
     """
     n_hint = n_tiles_hint
     if res is None:
@@ -346,7 +350,7 @@ def knn_join(
         out = out.sort_values(["query_id", "rank"], kind="stable")
         return finalize(spark.createDataFrame(out, out_schema), checkpoint)
 
-    if n_hint is not None and n_hint * len(q) <= brute_force_pairs:
+    if n_hint is not None and n_hint * len(q) <= BRUTE_FORCE_PAIRS:
         # small input: no cell column, no persist, no density aggregate
         # (none of them feed the exact pass)
         return result([exact(tiles, q)])
@@ -356,7 +360,7 @@ def knn_join(
     # the measured count re-applies the size rule (an overestimated or
     # missing hint), and an empty tile table goes straight to the exact
     # pass
-    small = stats["n"] * len(q) <= brute_force_pairs
+    small = stats["n"] * len(q) <= BRUTE_FORCE_PAIRS
 
     done: list[pd.DataFrame] = []  # finished queries' ranked top-k rows
     prev: pd.DataFrame | None = None  # unfinished queries' top-k rows
@@ -394,15 +398,18 @@ def _shell_udf(res: int, r0: int, r1: int):
     """pandas_udf: query cell -> array<long> of shell cells with grid
     Chebyshev distance in (r0, r1] (the same cells.cell_shell_batch
     kernel the driver-resident path uses, now running per Arrow batch
-    on executors)."""
+    on executors). The shells are row-major in ``idx``, so the per-row
+    counts give the list offsets and the array column is built in one
+    Arrow call."""
 
     @F.pandas_udf("array<long>")
     def _shell(qc: pd.Series) -> pd.Series:
         arr = qc.to_numpy()
         idx, out = cells.cell_shell_batch(arr, res, r0, r1)
         counts = np.bincount(idx, minlength=len(arr))
-        splits = np.split(out, np.cumsum(counts)[:-1])
-        return pd.Series([s.tolist() for s in splits])
+        offsets = np.concatenate(([0], np.cumsum(counts))).astype(np.int32)
+        lists = pa.ListArray.from_arrays(offsets, pa.array(out, pa.int64()))
+        return pd.Series(pd.arrays.ArrowExtensionArray(lists))
 
     return _shell
 

@@ -11,11 +11,10 @@ Three-phase plan, designed for the 10^12-tile scale:
      (functions/cells.polygon_cover_classified). The exploded
      (aoi_id, cover_cell, interior) table is tiny relative to tiles,
      so the join `tiles JOIN cover ON tile_cell_prefix = cover_cell`
-     broadcasts — the tile table is NEVER shuffled; each tile
-     partition streams against the broadcast map. With a huge AOI set
-     the same plan degrades gracefully to a shuffled hash join on
-     cover_cell (drop the broadcast hint) — still keyed on cell id,
-     as the north rule requires.
+     always broadcasts — the tile table is NEVER shuffled; each tile
+     partition streams against the broadcast map. The cover is built
+     as a pandas frame on the driver, so any cover that fits there
+     fits a broadcast.
   2. INTERIOR SHORTCUT: tiles in interior cells are contained by
      construction — the bulk of a large AOI's area never reaches the
      refinement at all.
@@ -149,10 +148,10 @@ def aoi_cell_ranges(
     pruning (``SnapshotTable.read(where={"cell": ranges})``).
 
     The cover is a superset of every contained tile by construction
-    (polygon_cover keeps any cell that may touch the polygon), so a
-    PIP join over the pruned read returns exactly the assignments of a
-    full-table scan — only the files whose Morton range can't hold an
-    AOI tile are never opened. At 10^12-tile scale this is the step
+    (polygon_cover_classified keeps any cell that may touch the
+    polygon), so a PIP join over the pruned read returns exactly the
+    assignments of a full-table scan — only the files whose Morton
+    range can't hold an AOI tile are never opened. At 10^12-tile scale this is the step
     that turns a city-sized query against a planet-sized table into a
     city-sized scan."""
     cover_res = cover_res or pick_cover_res(aois)
@@ -270,7 +269,6 @@ def pip_join(
     aois: list[dict],
     cover_res: int | None = None,
     tile_cell_col: str | None = None,
-    broadcast_cover: bool = True,
     ordered: bool = True,
     classified_cover: list[tuple] | None = None,
 ) -> DataFrame:
@@ -286,9 +284,7 @@ def pip_join(
     table is wasted shuffle at 10^12-tile scale.
     """
     cover_res = cover_res or pick_cover_res(aois)
-    cover = build_cover_df(spark, aois, cover_res, classified=classified_cover)
-    if broadcast_cover:
-        cover = F.broadcast(cover)
+    cover = F.broadcast(build_cover_df(spark, aois, cover_res, classified=classified_cover))
 
     if tile_cell_col is None:
         # pure JVM column expression — the coarse phase runs entirely in

@@ -20,9 +20,9 @@ RASTER path — one zoom step:
     float64 is order-independent.
 
 VECTOR path — per-cell statistics rollup:
-  counts/caption rollups are pure column aggregations; parent counts
-  are re-aggregations of child counts (partial aggregation: Spark
-  map-side combines make the multi-level rollup shuffle-light).
+  counts are pure column aggregations: each leaf (cell, cat) count
+  is summed into all of its ancestors in one fused plan (Spark
+  map-side combines keep the multi-level rollup shuffle-light).
 
 The shuffle is keyed on the parent cell id — exactly the north
 rule's "shuffle partitioning keyed on cell_id". Payload rows shuffle
@@ -133,8 +133,6 @@ def vector_pyramid(
     leaf_res: int,
     min_res: int,
     cat_col: str = "lulc",
-    strategy: str = "auto",
-    checkpoint: bool | str = True,
 ) -> DataFrame:
     """Vector side of the pyramid: per-cell tile counts + per-category
     counts at every zoom level. Returns (res, cell, n_tiles, n_cat)
@@ -148,84 +146,40 @@ def vector_pyramid(
     arrays through every level — ObjectHashAggregate, no codegen, and
     per-cell sets blow up with category cardinality).
 
-    Two rollup strategies over the pair table:
+    The rollup is ONE lazy plan: each leaf pair explodes to its L
+    (res, parent-cell) ancestors, then one groupBy(res, cell, cat) and
+    one groupBy(res, cell). Shuffle volume is <= L x 4^leaf_res x
+    n_cats rows REGARDLESS of input size, and the plan compiles 3
+    stages instead of ~2L (first-execution codegen of ~2L distinct
+    plans dominates shallow-pyramid latency). Nothing is persisted, so
+    the operator sits outside the plans/materialize checkpoint policy
+    (which covers operators that persist intermediates) and returns
+    the lazy plan: a caller's filter reaches the scan.
 
-      - ``fused`` — ONE lazy plan: explode each leaf pair to its L
-        (res, parent-cell) ancestors, one groupBy(res, cell, cat),
-        one groupBy(res, cell). Shuffle volume <= L x 4^leaf_res x
-        n_cats rows REGARDLESS of input size, and plan-compile cost
-        is 3 stages instead of ~2L (first-execution codegen of ~2L
-        distinct plans dominates shallow-pyramid latency).
-      - ``hierarchical`` — each level re-aggregates the one below it
-        (a table ~4x smaller each step). For DEEP pyramids the leaf
-        pair table can approach the input's distinct-key count, and
-        the geometric decay (~1.33x leaf) beats the explode's Lx.
-
-    ``auto`` picks fused while L x 4^leaf_res stays small (<= 2^26),
-    hierarchical beyond — the 100 TB deep-pyramid path.
-
-    ``checkpoint`` (plans/materialize.finalize) governs how the
-    HIERARCHICAL result materializes: True = eager localCheckpoint
-    (level caches released now), "reliable" = durable
-    ``DataFrame.checkpoint()``, False = the composable lazy plan (the
-    level caches stay persisted; caller owns their lifetime). The
-    fused strategy persists nothing and always returns the lazy,
-    fully-composable plan."""
-    n_levels = leaf_res - min_res + 1
-    fused = strategy == "fused" or (
-        strategy == "auto" and n_levels * (4 ** leaf_res) <= (1 << 26)
-    )
+    Trade-off: a DEEP pyramid (L x 4^leaf_res beyond ~2^26) whose leaf
+    pair table approaches the input's distinct-key count explodes L
+    times that table, where a level-by-level re-aggregation (each
+    level ~4x smaller than the one below) would shuffle ~1.33x it."""
     pairs = tiles_with_cell.groupBy("cell", F.col(cat_col).alias("cat")).agg(
         F.count("*").alias("n")
     )
-    if fused:
-        from gelos_spark.plans.materialize import finalize
-
-        def _fused_finalize(df: DataFrame) -> DataFrame:
-            # no caches to release -> the default stays the lazy plan;
-            # an explicit "reliable" still gets its durable checkpoint
-            return finalize(df, checkpoint) if checkpoint == "reliable" else df
-
-        ancestors = F.array(
-            *[
-                F.struct(
-                    F.lit(r).alias("res"),
-                    cell_parent_col(F.col("cell"), leaf_res, r).alias("cell"),
-                )
-                for r in range(leaf_res, min_res - 1, -1)
-            ]
-        )
-        return _fused_finalize(
-            pairs.select(F.explode(ancestors).alias("rc"), "cat", "n")
-            .groupBy(F.col("rc.res").alias("res"), F.col("rc.cell").alias("cell"), "cat")
-            .agg(F.sum("n").alias("n"))
-            # (res, cell, cat) unique -> n_cat = count(*)
-            .groupBy("res", "cell")
-            .agg(F.sum("n").alias("n_tiles"), F.count("*").cast("long").alias("n_cat"))
-            .orderBy("res", "cell")
-        )
-
-    pairs = pairs.persist()
-    levels = [(leaf_res, pairs)]
-    cur = pairs
-    for res in range(leaf_res - 1, min_res - 1, -1):
-        cur = (
-            cur.groupBy(cell_parent_col(F.col("cell"), res + 1, res).alias("cell"), "cat")
-            .agg(F.sum("n").alias("n"))
-            .persist()
-        )
-        levels.append((res, cur))
-    out = None
-    for res, lvl in levels:
-        # (cell, cat) is unique per level, so n_cat = count(*)
-        stats = lvl.groupBy("cell").agg(
-            F.sum("n").alias("n_tiles"), F.count("*").cast("long").alias("n_cat")
-        ).select(F.lit(res).alias("res"), "cell", "n_tiles", "n_cat")
-        out = stats if out is None else out.unionByName(stats)
-    from gelos_spark.plans.materialize import finalize
-
-    return finalize(
-        out.orderBy("res", "cell"), checkpoint, caches=[lvl for _, lvl in levels]
+    ancestors = F.array(
+        *[
+            F.struct(
+                F.lit(r).alias("res"),
+                cell_parent_col(F.col("cell"), leaf_res, r).alias("cell"),
+            )
+            for r in range(leaf_res, min_res - 1, -1)
+        ]
+    )
+    return (
+        pairs.select(F.explode(ancestors).alias("rc"), "cat", "n")
+        .groupBy(F.col("rc.res").alias("res"), F.col("rc.cell").alias("cell"), "cat")
+        .agg(F.sum("n").alias("n"))
+        # (res, cell, cat) unique -> n_cat = count(*)
+        .groupBy("res", "cell")
+        .agg(F.sum("n").alias("n_tiles"), F.count("*").cast("long").alias("n_cat"))
+        .orderBy("res", "cell")
     )
 
 

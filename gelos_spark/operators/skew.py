@@ -123,23 +123,3 @@ def salted_join(
     f = with_salt(fact, key, hot, n_salt, uid)
     d = explode_salts(dim, key, hot, n_salt)
     return f.join(d, [key, SALT_COL], how).drop(SALT_COL)
-
-
-def salted_count(
-    df: DataFrame,
-    key: str,
-    hot: list | None = None,
-    n_salt: int | None = None,
-    uid: str | None = None,
-) -> DataFrame:
-    """groupBy(key).count() as a two-stage salted aggregation:
-    partial count on (key, salt) then final sum on key. Equals the
-    direct groupBy for any salt assignment (count is decomposable);
-    used where AQE can't help (hash aggregation, not join). Defaults
-    auto-derive hot/n_salt like ``salted_join`` (explicit ``hot`` +
-    default ``n_salt`` -> DEFAULT_SALT, no pre-pass)."""
-    uid = uid or key
-    hot, n_salt = _resolve_salting(df, key, hot, n_salt)
-    salted = with_salt(df, key, hot, n_salt, uid)
-    partial = salted.groupBy(key, SALT_COL).agg(F.count("*").alias("_pc"))
-    return partial.groupBy(key).agg(F.sum("_pc").alias("count"))

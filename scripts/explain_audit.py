@@ -85,7 +85,7 @@ def main():
     # 3. broadcast dimension join
     cases["join_tracker"] = entry._join_tracker(spark, SF_DIR)
 
-    # 4. vector pyramid (hierarchical rollup)
+    # 4. vector pyramid (fused rollup)
     pts = entry._points_df(read("lineitem"), "l_orderkey").withColumn(
         "cell", cell_encode_col(F.col("lon"), F.col("lat"), 8)
     ).withColumn("cat", F.lit("x"))

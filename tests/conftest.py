@@ -12,6 +12,16 @@ def spark():
 
 
 @pytest.fixture
+def force_ring(monkeypatch):
+    """Send every driver-carrier ``knn_join`` call in the test down the
+    ring path: no tiles x queries product fits under a zero
+    ``BRUTE_FORCE_PAIRS``."""
+    from gelos_spark.operators import knn_join
+
+    monkeypatch.setattr(knn_join, "BRUTE_FORCE_PAIRS", 0)
+
+
+@pytest.fixture
 def jobs_launched(spark):
     """``jobs_launched(group, fn)``: the number of Spark jobs ``fn``
     launches, counted through a job group once the listener bus has

@@ -1,6 +1,8 @@
 """Cell index kernels vs brute-force per-point references
 (SURVEY.md §7.1 M1)."""
 
+import re
+
 import numpy as np
 import pytest
 
@@ -48,18 +50,24 @@ def test_parent_is_prefix():
     np.testing.assert_array_equal(cells.cell_parent(fine, 15, 9), coarse)
 
 
+def _ring(cell: int, res: int, r: int) -> np.ndarray:
+    """Cells at Chebyshev distance exactly r: the (r-1, r] shell."""
+    _, shell = cells.cell_shell_batch(np.asarray([cell]), res, r - 1, r)
+    return np.sort(shell)
+
+
 def test_ring_counts_and_disjoint():
     c = int(cells.cell_encode(np.asarray([10.0]), np.asarray([20.0]), 10)[0])
     seen = set()
     for r in range(4):
-        ring = cells.cell_ring(c, 10, r)
+        ring = _ring(c, 10, r)
         assert len(ring) == (1 if r == 0 else 8 * r)
         assert not (set(ring.tolist()) & seen)
         seen |= set(ring.tolist())
     # all ring members are within Chebyshev distance exactly r
     x0, y0 = cells.cell_to_xy(np.asarray([c]))
     for r in (1, 3):
-        xs, ys = cells.cell_to_xy(cells.cell_ring(c, 10, r))
+        xs, ys = cells.cell_to_xy(_ring(c, 10, r))
         cheb = np.maximum(np.abs(xs - x0[0]), np.abs(ys - y0[0]))
         np.testing.assert_array_equal(cheb, np.full_like(cheb, r))
 
@@ -69,30 +77,40 @@ def test_ring_wraps_antimeridian_and_clamps_pole():
     n = 1 << res
     # cell at x=0 (lon=-180 edge): ring must wrap to x=n-1, not go negative
     c = int(cells.xy_to_cell(np.asarray([0]), np.asarray([n // 2]))[0])
-    ring = cells.cell_ring(c, res, 1)
+    ring = _ring(c, res, 1)
     xs, _ = cells.cell_to_xy(ring)
     assert (n - 1) in xs.tolist() and len(ring) == 8
     # cell at y=n-1 (north edge): rows past the pole are dropped
     c2 = int(cells.xy_to_cell(np.asarray([5]), np.asarray([n - 1]))[0])
-    ring2 = cells.cell_ring(c2, res, 1)
+    ring2 = _ring(c2, res, 1)
     assert len(ring2) == 5
 
 
 def test_disk_batch_matches_single_rings():
+    """A batch of cells expands to the same per-row shells as a
+    brute-force scan of the grid by Chebyshev distance (x wraps)."""
     rng = np.random.default_rng(3)
     lon = rng.uniform(-170, 170, 20)
     lat = rng.uniform(-80, 80, 20)
-    cs = cells.cell_encode(lon, lat, 9)
+    res = 9
+    n = 1 << res
+    cs = cells.cell_encode(lon, lat, res)
     for r in (0, 1, 2):
-        idx, shell = cells.cell_disk_batch(cs, 9, r)
+        idx, shell = cells.cell_shell_batch(cs, res, r - 1, r)
         for i, c in enumerate(cs):
-            got = np.sort(shell[idx == i])
-            np.testing.assert_array_equal(got, cells.cell_ring(int(c), 9, r))
+            (x0,), (y0,) = cells.cell_to_xy(np.asarray([c]))
+            dx = np.arange(-r, r + 1)
+            gx, gy = np.meshgrid((x0 + dx) % n, y0 + dx)
+            ring = np.maximum(*np.abs(np.meshgrid(dx, dx))) == r
+            want = np.sort(cells.xy_to_cell(gx[ring], gy[ring]))
+            np.testing.assert_array_equal(np.sort(shell[idx == i]), want)
 
 
 def test_cover_bbox_contains_all_inner_points():
+    """The cover of a rectangle holds the cell of every point inside it."""
     res = 8
-    cover = set(cells.cover_bbox(-10.0, 20.0, -2.0, 31.0, res).tolist())
+    rect = np.asarray([[-10.0, 20.0], [-2.0, 20.0], [-2.0, 31.0], [-10.0, 31.0]])
+    cover = set(cells.polygon_cover_classified(rect, res)[0].tolist())
     rng = np.random.default_rng(4)
     lon = rng.uniform(-10, -2, 300)
     lat = rng.uniform(20, 31, 300)
@@ -103,7 +121,7 @@ def test_cover_bbox_contains_all_inner_points():
 def test_polygon_cover_superset_of_inside_cells():
     ring = np.asarray([[0.0, 0.0], [4.0, 1.0], [5.0, 5.0], [1.0, 4.0]])
     res = 9
-    cover = set(cells.polygon_cover(ring, res).tolist())
+    cover = set(cells.polygon_cover_classified(ring, res)[0].tolist())
     rng = np.random.default_rng(5)
     lon = rng.uniform(-1, 6, 2000)
     lat = rng.uniform(-1, 6, 2000)
@@ -113,13 +131,19 @@ def test_polygon_cover_superset_of_inside_cells():
     for c in cells.cell_encode(lon[inside], lat[inside], res):
         assert int(c) in cover
     # pruning actually prunes vs the plain bbox
-    bbox = cells.cover_bbox(0.0, 0.0, 5.0, 5.0, res)
-    assert len(cover) < len(bbox)
+    bbox = np.asarray([[0.0, 0.0], [5.0, 0.0], [5.0, 5.0], [0.0, 5.0]])
+    assert len(cover) < len(cells.polygon_cover_classified(bbox, res)[0])
 
 
-def test_cell_encode_col_matches_numpy_kernel(spark):
+def test_cell_encode_col_matches_numpy_kernel(spark, tmp_path):
     """The JVM column-expression encoder must be bit-identical to the
-    NumPy kernel at several resolutions, including edge coordinates."""
+    NumPy kernel at several resolutions, including edge coordinates,
+    and it is the encoder the ``cell_encode`` and ``pyramid_rollup``
+    entry queries run: their plans hold no Python evaluation node."""
+    import importlib
+    import pathlib
+    import sys
+
     import pandas as pd
     from pyspark.sql import functions as F
 
@@ -145,6 +169,14 @@ def test_cell_encode_col_matches_numpy_kernel(spark):
         )
         want = cells.cell_encode(lon, lat, res)
         assert (got == want).all(), f"mismatch at res {res}"
+
+    sys.path.insert(0, str(pathlib.Path(__file__).resolve().parents[1]))
+    entry = importlib.import_module("__spark_entry__")
+    customer = pd.DataFrame({"c_custkey": np.arange(1, 65), "c_mktsegment": ["A", "B"] * 32})
+    spark.createDataFrame(customer).write.parquet(str(tmp_path / "customer.parquet"))
+    for name in ("cell_encode", "pyramid_rollup"):
+        plan = entry.queries()[name](spark, str(tmp_path))._jdf.queryExecution().executedPlan()
+        assert not re.search(r"ArrowEvalPython|BatchEvalPython", plan.toString()), name
 
 
 def test_cell_ranges_prefix_blocks_and_merging():

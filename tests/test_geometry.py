@@ -62,17 +62,6 @@ def test_pip_edge_determinism():
     assert a[0] and not a[1]
 
 
-def test_pip_chunked_equals_unchunked():
-    rng = np.random.default_rng(0)
-    ring = np.asarray([[0, 0], [6, 1], [7, 6], [3, 8], [-1, 4]], dtype=float)
-    px = rng.uniform(-3, 9, 10000)
-    py = rng.uniform(-2, 10, 10000)
-    np.testing.assert_array_equal(
-        geometry.points_in_polygon_chunked(px, py, ring, chunk=777),
-        geometry.points_in_polygon(px, py, ring),
-    )
-
-
 def test_haversine_known_values():
     # London -> Paris ~= 343.5 km
     d = geometry.haversine_np(-0.1278, 51.5074, 2.3522, 48.8566)

@@ -7,6 +7,7 @@ import pandas as pd
 import pytest
 
 from gelos_spark.functions.geometry import haversine_np
+from gelos_spark.operators import knn_join as kj
 from gelos_spark.operators.knn_join import knn_join
 from gelos_spark.sources import synth
 
@@ -27,19 +28,18 @@ def _brute_knn(tracker: pd.DataFrame, queries: pd.DataFrame) -> pd.DataFrame:
 @pytest.mark.parametrize(
     "n,q,k,seed,bf_pairs",
     [
-        # bf_pairs=0 forces the ring-expansion path (the 10^12-tile
-        # design); the default exercises the cost-based brute path
+        # BRUTE_FORCE_PAIRS=0 forces the ring-expansion path (the
+        # 10^12-tile design); 50M exercises the cost-based brute path
         (400, 16, 5, 42, 0),
         (2000, 40, 10, 11, 0),
         (2000, 40, 10, 11, 50_000_000),
     ],
 )
-def test_knn_exact_vs_bruteforce(spark, n, q, k, seed, bf_pairs):
+def test_knn_exact_vs_bruteforce(spark, monkeypatch, n, q, k, seed, bf_pairs):
+    monkeypatch.setattr(kj, "BRUTE_FORCE_PAIRS", bf_pairs)
     tracker = synth.tracker_df(spark, n, seed=seed)
     queries = synth.query_df(spark, q, n, seed=seed, k=k)
-    got = knn_join(
-        spark, tracker, queries, n_tiles_hint=n, brute_force_pairs=bf_pairs
-    ).toPandas()
+    got = knn_join(spark, tracker, queries, n_tiles_hint=n).toPandas()
     exp = _brute_knn(tracker.toPandas(), queries.toPandas())
     assert got[["query_id", "rank", "image_id"]].values.tolist() == exp[
         ["query_id", "rank", "image_id"]
@@ -47,12 +47,13 @@ def test_knn_exact_vs_bruteforce(spark, n, q, k, seed, bf_pairs):
     np.testing.assert_allclose(got["dist_km"].to_numpy(), exp["dist_km"].to_numpy(), rtol=1e-12)
 
 
-def test_knn_path_selection_identical(spark):
+def test_knn_path_selection_identical(spark, monkeypatch):
     """The optimizer's two physical strategies return identical rows."""
     tracker = synth.tracker_df(spark, 1500, seed=5)
     queries = synth.query_df(spark, 24, 1500, seed=5, k=7)
-    ring = knn_join(spark, tracker, queries, n_tiles_hint=1500, brute_force_pairs=0)
     brute = knn_join(spark, tracker, queries, n_tiles_hint=1500)
+    monkeypatch.setattr(kj, "BRUTE_FORCE_PAIRS", 0)
+    ring = knn_join(spark, tracker, queries, n_tiles_hint=1500)
     pd.testing.assert_frame_equal(ring.toPandas(), brute.toPandas())
 
 
@@ -74,16 +75,15 @@ def test_knn_resolution_invariant(spark):
     pd.testing.assert_frame_equal(a, b)
 
 
-def test_knn_string_query_ids(spark):
+def test_knn_string_query_ids(spark, monkeypatch):
     """String query ids flow through both physical paths (the id type
     is carried from the caller's schema, not hardcoded)."""
     tracker = synth.tracker_df(spark, 800, seed=8)
     qpdf = synth.query_df(spark, 10, 800, seed=8, k=4).toPandas()
     qpdf["query_id"] = ["q" + str(v) for v in qpdf["query_id"]]
     for bf in (0, 2_000_000):
-        got = knn_join(
-            spark, tracker, qpdf, n_tiles_hint=800, brute_force_pairs=bf
-        ).toPandas()
+        monkeypatch.setattr(kj, "BRUTE_FORCE_PAIRS", bf)
+        got = knn_join(spark, tracker, qpdf, n_tiles_hint=800).toPandas()
         assert got["query_id"].str.startswith("q").all()
         assert len(got) == 40
 
@@ -95,12 +95,12 @@ def _sorted_rows(df):
     return sorted((r.query_id, r.rank, r.image_id, round(r.dist_km, 9)) for r in df.collect())
 
 
-def test_knn_distributed_identical_to_driver_path(spark):
+def test_knn_distributed_identical_to_driver_path(spark, force_ring):
     from gelos_spark.operators.knn_join import knn_join_distributed
 
     tiles = synth.tracker_df(spark, 2000, seed=42)
     queries = synth.query_df(spark, 24, 2000, seed=42, k=6)
-    a = knn_join(spark, tiles, queries, n_tiles_hint=2000, brute_force_pairs=0)
+    a = knn_join(spark, tiles, queries, n_tiles_hint=2000)
     b = knn_join_distributed(spark, tiles, queries, n_tiles_hint=2000)
     assert _sorted_rows(a) == _sorted_rows(b)
 
@@ -161,7 +161,7 @@ def _tied_tiles(spark, n: int, seed: int):
 
 
 @pytest.mark.parametrize("qid", ["bigint", "double", "string"])
-def test_knn_distributed_multi_round_finalization(spark, monkeypatch, qid):
+def test_knn_distributed_multi_round_finalization(spark, monkeypatch, force_ring, qid):
     """Force several ring rounds (initial radius pinned to 1) so
     queries finalize across DIFFERENT rounds via the column-math bound
     — exercising the per-round left_semi/left_anti split of the
@@ -169,8 +169,6 @@ def test_knn_distributed_multi_round_finalization(spark, monkeypatch, qid):
     — over tiles whose duplicated coordinates put (dist_km, image_id)
     ties across rank k. Both carriers match the NumPy brute force
     exactly, for int, float and string query ids."""
-    from gelos_spark.operators import knn_join as kj
-
     monkeypatch.setattr(kj, "_initial_radius", lambda *a, **k: 1)
     reshipped = []
     real_ring = kj._ring_topk
@@ -195,7 +193,7 @@ def test_knn_distributed_multi_round_finalization(spark, monkeypatch, qid):
     nxt = beyond[beyond["rank"] == 6].set_index("query_id")["dist_km"]
     assert (kth == nxt).any()  # a tie straddles rank k
 
-    a = kj.knn_join(spark, tiles, queries, n_tiles_hint=3000, brute_force_pairs=0)
+    a = kj.knn_join(spark, tiles, queries, n_tiles_hint=3000)
     assert reshipped.count(True) >= 1  # rows re-shipped between rounds
     got = a.toPandas()
     assert got[["query_id", "rank", "image_id"]].values.tolist() == exp[
@@ -243,27 +241,26 @@ def test_knn_res_without_hint_counts_no_tiles(spark, monkeypatch, bf_pairs):
     rows equal those of the hinted call."""
     from pyspark.sql.classic.dataframe import DataFrame
 
+    monkeypatch.setattr(kj, "BRUTE_FORCE_PAIRS", bf_pairs)
     tiles = synth.tracker_df(spark, 1500, seed=5)
     queries = synth.query_df(spark, 12, 1500, seed=5, k=6).toPandas()
-    hinted = knn_join(
-        spark, tiles, queries, res=7, n_tiles_hint=1500, brute_force_pairs=bf_pairs
-    ).toPandas()
+    hinted = knn_join(spark, tiles, queries, res=7, n_tiles_hint=1500).toPandas()
     counts = []
     real = DataFrame.count
     monkeypatch.setattr(DataFrame, "count", lambda self: counts.append(1) or real(self))
-    got = knn_join(spark, tiles, queries, res=7, brute_force_pairs=bf_pairs).toPandas()
+    got = knn_join(spark, tiles, queries, res=7).toPandas()
     monkeypatch.undo()
     assert counts == []
     pd.testing.assert_frame_equal(got, hinted)
 
 
-def test_knn_ring_call_driver_action_budget(spark, monkeypatch, collect_sizes, jobs_launched):
+def test_knn_ring_call_driver_action_budget(
+    spark, monkeypatch, force_ring, collect_sizes, jobs_launched
+):
     """A two-round ring call (initial radius pinned to 2) launches at
     most 11 Spark jobs: the query collect, the index aggregate, one
     collect per ring round and the result checkpoint. Every collect
     holds at most max(max_queries + 1, sum of k) rows."""
-    from gelos_spark.operators import knn_join as kj
-
     monkeypatch.setattr(kj, "_initial_radius", lambda *a, **k: 2)
     rounds = []
     real_ring = kj._ring_topk
@@ -275,9 +272,7 @@ def test_knn_ring_call_driver_action_budget(spark, monkeypatch, collect_sizes, j
 
     def call():
         out.append(
-            kj.knn_join(
-                spark, tiles, queries, n_tiles_hint=3000, brute_force_pairs=0, max_queries=16
-            )
+            kj.knn_join(spark, tiles, queries, n_tiles_hint=3000, max_queries=16)
         )
 
     jobs = jobs_launched("knn_budget", call)
@@ -287,7 +282,7 @@ def test_knn_ring_call_driver_action_budget(spark, monkeypatch, collect_sizes, j
     assert out[0].count() == 16 * 5
 
 
-def test_knn_ring_call_leaves_no_cache(spark):
+def test_knn_ring_call_leaves_no_cache(spark, force_ring):
     """A ring call with checkpoint=False leaves no new persisted RDD
     behind: the tile index is released once the last pass returns, and
     the running top-k never was a cache."""
@@ -299,8 +294,6 @@ def test_knn_ring_call_leaves_no_cache(spark):
     tiles = synth.tracker_df(spark, 2000, seed=4)
     queries = synth.query_df(spark, 12, 2000, seed=4, k=5)
     before = cached()
-    out = knn_join(
-        spark, tiles, queries, n_tiles_hint=2000, brute_force_pairs=0, checkpoint=False
-    )
+    out = knn_join(spark, tiles, queries, n_tiles_hint=2000, checkpoint=False)
     assert cached() - before == set()
     assert len(out.collect()) == 12 * 5

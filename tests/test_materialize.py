@@ -1,7 +1,8 @@
 """Operator-return materialization policy (plans/materialize.finalize):
-checkpoint=True / False / "reliable" on knn_join, vector_pyramid, and
-minhash_lsh_pairs — identical rows under every policy, composable lazy
-plans under False, durable checkpoint files under "reliable".
+checkpoint=True / False / "reliable" on knn_join and minhash_lsh_pairs
+— identical rows under every policy, composable lazy plans under
+False, durable checkpoint files under "reliable" — and the lazy plan
+vector_pyramid always returns.
 """
 
 from __future__ import annotations
@@ -56,30 +57,17 @@ def test_knn_checkpoint_modes_identical(spark, tmp_path):
     assert any(p.is_file() for p in ckpts)
 
 
-def test_pyramid_checkpoint_modes_identical(spark, tmp_path):
-    cells = _tiles_cells(spark)
-    a = vector_pyramid(cells, 6, 3, strategy="hierarchical")  # default True
-    b = vector_pyramid(cells, 6, 3, strategy="hierarchical", checkpoint=False)
-    plan = b._jdf.queryExecution().optimizedPlan().toString()
-    assert "ExistingRDD" not in plan and "LogicalRDD" not in plan
-    fused = vector_pyramid(cells, 6, 3, strategy="fused")
-    assert _rows(a) == _rows(b) == _rows(fused)
-    spark.sparkContext.setCheckpointDir(str(tmp_path / "ckpt"))
-    c = vector_pyramid(cells, 6, 3, strategy="hierarchical", checkpoint="reliable")
-    assert _rows(a) == _rows(c)
-
-
 def test_fused_pyramid_filter_reaches_scan(spark, tmp_path):
-    """checkpoint=False composition end-to-end: the fused (lazy)
-    pyramid over a parquet table keeps the FileScan in the plan, so a
-    post-return filter lands in the same Catalyst tree as the scan —
-    impossible across a checkpoint boundary."""
+    """Lazy composition end-to-end: the fused pyramid over a parquet
+    table keeps the FileScan in the plan, so a post-return filter lands
+    in the same Catalyst tree as the scan — impossible across a
+    checkpoint boundary."""
     p = str(tmp_path / "tiles.parquet")
     synth.tracker_df(spark, 400, seed=5).write.parquet(p)
     cells = spark.read.parquet(p).withColumn(
         "cell", cell_encode_col(F.col("lon"), F.col("lat"), 5)
     )
-    out = vector_pyramid(cells, 5, 3, strategy="fused").where(F.col("res") == 4)
+    out = vector_pyramid(cells, 5, 3).where(F.col("res") == 4)
     phys = out._jdf.queryExecution().executedPlan().toString()
     assert "Scan parquet" in phys or "FileScan" in phys
     assert "ExistingRDD" not in phys

@@ -49,16 +49,6 @@ def test_pip_join_parallelism_invariant(spark):
     pd.testing.assert_frame_equal(a, b)
 
 
-def test_pip_join_no_broadcast_same_result(spark):
-    """Dropping the broadcast hint (huge-AOI degradation path) gives
-    identical rows."""
-    aois = synth.aoi_polygons(6, seed=9)
-    t = synth.tracker_df(spark, 600, seed=9)
-    a = pip_join(spark, t, aois, broadcast_cover=True).toPandas()
-    b = pip_join(spark, t, aois, broadcast_cover=False).toPandas()
-    pd.testing.assert_frame_equal(a, b)
-
-
 def test_pick_cover_res_bounds():
     aois = synth.aoi_polygons(16, seed=42)
     res = pick_cover_res(aois)

@@ -1,6 +1,6 @@
 """Raster + vector pyramiding (SURVEY.md §2.4 A7): quadtree zoom
-rollup via grouped applyInPandas, cogrouped merge, and the
-hierarchical vector rollup's equivalence with per-level recomputation."""
+rollup via grouped applyInPandas, cogrouped merge, and the fused
+vector rollup's equivalence with per-level recomputation."""
 
 from __future__ import annotations
 
@@ -9,6 +9,7 @@ import pandas as pd
 from pyspark.sql import functions as F
 
 from gelos_spark.functions import cells, codec
+from gelos_spark.functions.cell_udfs import cell_encode_col
 from gelos_spark.operators import pyramid
 
 
@@ -97,49 +98,21 @@ def test_vector_pyramid_matches_per_level_recompute(spark):
         }
     )
     df = spark.createDataFrame(pdf)
-    leaf_res = 7
-    enc = df.withColumn(
-        "cell",
-        F.udf(lambda lo, la: int(cells.cell_encode(np.array([lo]), np.array([la]), leaf_res)[0]), "long")(
-            "lon", "lat"
-        ),
-    )
-    out = pyramid.vector_pyramid(enc, leaf_res, 3, cat_col="cat").collect()
-    got = {(r.res, r.cell): (r.n_tiles, r.n_cat) for r in out}
-    # NumPy oracle per level
-    cell_leaf = cells.cell_encode(pdf["lon"].to_numpy(), pdf["lat"].to_numpy(), leaf_res)
-    for res in range(leaf_res, 2, -1):
-        parents = cell_leaf >> (2 * (leaf_res - res))
-        for c in np.unique(parents):
-            m = parents == c
-            want = (int(m.sum()), len(set(pdf["cat"][m])))
-            assert got[(res, int(c))] == want
-    assert len(got) == sum(
-        len(np.unique(cell_leaf >> (2 * (leaf_res - r)))) for r in range(leaf_res, 2, -1)
-    )
-
-
-def test_vector_pyramid_strategies_identical(spark):
-    rng = np.random.default_rng(11)
-    n = 3000
-    pdf = pd.DataFrame(
-        {
-            "k": np.arange(n),
-            "lon": rng.uniform(-60, 60, n),
-            "lat": rng.uniform(-50, 50, n),
-            "cat": rng.choice(list("abc"), n),
-        }
-    )
-    df = spark.createDataFrame(pdf)
-    enc = df.withColumn(
-        "cell",
-        F.udf(lambda lo, la: int(cells.cell_encode(np.array([lo]), np.array([la]), 6)[0]), "long")(
-            "lon", "lat"
-        ),
-    )
-    a = pyramid.vector_pyramid(enc, 6, 2, cat_col="cat", strategy="fused").collect()
-    b = pyramid.vector_pyramid(enc, 6, 2, cat_col="cat", strategy="hierarchical").collect()
-    assert [tuple(r) for r in a] == [tuple(r) for r in b]
-    # auto picks fused at this depth: one lazy plan, same rows
-    c = pyramid.vector_pyramid(enc, 6, 2, cat_col="cat").collect()
-    assert [tuple(r) for r in c] == [tuple(r) for r in a]
+    # 12 -> 3 is a deep pyramid (ten levels over 4^12 leaf cells): the
+    # ancestor explode is largest there relative to the leaf pair table
+    for leaf_res, min_res in ((7, 3), (12, 3)):
+        enc = df.withColumn("cell", cell_encode_col(F.col("lon"), F.col("lat"), leaf_res))
+        out = pyramid.vector_pyramid(enc, leaf_res, min_res, cat_col="cat").collect()
+        got = {(r.res, r.cell): (r.n_tiles, r.n_cat) for r in out}
+        # NumPy oracle per level
+        cell_leaf = cells.cell_encode(pdf["lon"].to_numpy(), pdf["lat"].to_numpy(), leaf_res)
+        levels = range(leaf_res, min_res - 1, -1)
+        for res in levels:
+            parents = cell_leaf >> (2 * (leaf_res - res))
+            for c in np.unique(parents):
+                m = parents == c
+                want = (int(m.sum()), len(set(pdf["cat"][m])))
+                assert got[(res, int(c))] == want
+        assert len(got) == sum(
+            len(np.unique(cell_leaf >> (2 * (leaf_res - r)))) for r in levels
+        )
