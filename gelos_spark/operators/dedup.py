@@ -19,6 +19,12 @@ Design notes for 100 TB scale:
     rotated prefix bands (pigeonhole over 4 bands of 16 bits for
     Hamming distance <= 3).
   - Embedding near-dup uses the similarity operator's LSH path.
+  - Every operator returns its plan and leaves no cache for the
+    caller to release: a per-row frame that a self-join reads twice
+    is a lazy ``localCheckpoint``, materialized by the first action
+    on the result and freed by the context cleaner once the caller
+    drops it. A caller that needs durability writes the result (a
+    ``Pipeline.stage`` commit) or calls ``df.checkpoint()``.
 
 All text hashing uses splitmix64 over UTF-8 shingle bytes — seeded,
 platform-independent, reproducible.
@@ -396,7 +402,6 @@ def minhash_lsh_pairs(
     shingle_k: int = 5,
     seed: int = 42,
     min_jaccard: float = 0.5,
-    checkpoint: bool | str = True,
     portable: bool = False,
 ) -> DataFrame:
     """Near-duplicate pairs via MinHash + LSH banding.
@@ -412,12 +417,9 @@ def minhash_lsh_pairs(
     (contract query ``minhash_portable``); identical pipeline shape,
     slower kernel.
 
-    ``checkpoint`` (plans/materialize.finalize): True eagerly
-    localCheckpoints and releases the signature cache; "reliable"
-    uses a durable ``DataFrame.checkpoint()`` (cluster executor-loss
-    survival); False returns the un-materialized plan (for `.explain`
-    auditing or callers composing it further) — the signature cache
-    then stays persisted until the session drops it.
+    The signature frame is a lazy ``localCheckpoint`` read by both
+    aliases of the banded self-join, so the first action on the
+    returned plan hashes the corpus once.
     """
     rows_per_band = num_hashes // bands
     # signature hashing is the CPU-heavy stage: spread it across the
@@ -427,7 +429,7 @@ def minhash_lsh_pairs(
     make_udf = minhash_udf_portable if portable else minhash_udf
     sigs = src.select(
         F.col(id_col).alias("id"), make_udf(num_hashes, shingle_k, seed)(F.col(text_col)).alias("sig")
-    ).persist()
+    ).localCheckpoint(eager=False)
 
     # band hash -> equi-join key: xxhash64 of the band's slice
     # (production) or the slice's value string (portable/oracle path —
@@ -457,7 +459,7 @@ def minhash_lsh_pairs(
     est = F.expr(
         "aggregate(zip_with(l.sig, r.sig, (x, y) -> IF(x = y, 1, 0)), 0, (acc, v) -> acc + v)"
     ) / F.lit(float(num_hashes))
-    out = (
+    return (
         left.join(right, (F.col("l.band") == F.col("r.band")) & (F.col("l.bh") == F.col("r.bh")))
         .where(F.col("l.id") < F.col("r.id"))
         .select(
@@ -469,9 +471,6 @@ def minhash_lsh_pairs(
         .dropDuplicates(["id_a", "id_b"])
         .orderBy("id_a", "id_b")
     )
-    from gelos_spark.plans.materialize import finalize
-
-    return finalize(out, checkpoint, caches=[sigs])
 
 
 # ------------------------------------------ banded hamming (simhash,
@@ -536,7 +535,6 @@ def simhash_pairs(
     text_col: str = "text",
     max_hamming: int = 3,
     seed: int = 42,
-    checkpoint: bool | str = True,
     portable: bool = False,
 ) -> DataFrame:
     """Near-dup pairs with Hamming(simhash(text)) <= max_hamming: the
@@ -546,24 +544,16 @@ def simhash_pairs(
     path (contract query ``simhash_portable``); the 64-bit pigeonhole
     banding stays valid (top bits constant-equal).
 
-    The (id, simhash) signature frame is persisted across the banded
-    self-join's two aliases — without it Catalyst plans two scans and
-    the simhash pandas-UDF hashes the full corpus twice (the same
-    signature-cache shape as ``minhash_lsh_pairs``). ``checkpoint``
-    routes through plans/materialize.finalize exactly like minhash:
-    True (default) eagerly localCheckpoints the pairs and releases the
-    cache; "reliable" uses a durable ``DataFrame.checkpoint()``;
-    False returns the lazy plan (the cache then stays persisted —
-    caller-owned lifetime)."""
+    The (id, simhash) signature frame is a lazy ``localCheckpoint``
+    read by both aliases of the banded self-join — without it Catalyst
+    plans two scans and the simhash pandas-UDF hashes the full corpus
+    twice (the same signature-frame shape as ``minhash_lsh_pairs``)."""
     src = _spread(docs)
     sh_udf = simhash_udf_portable(seed) if portable else simhash_udf(seed)
     sh = src.select(
         F.col(id_col).alias("id"), sh_udf(F.col(text_col)).alias("sh")
-    ).persist()
-    out = hamming_hash_pairs(sh, "id", "sh", max_hamming)
-    from gelos_spark.plans.materialize import finalize
-
-    return finalize(out, checkpoint, caches=[sh])
+    ).localCheckpoint(eager=False)
+    return hamming_hash_pairs(sh, "id", "sh", max_hamming)
 
 
 def phash_dup_pairs(
@@ -591,7 +581,6 @@ def ngram_jaccard_pairs(
     min_jaccard: float = 0.2,
     block_col: str | None = None,
     allow_cross_join: bool = False,
-    checkpoint: bool | str = True,
 ) -> DataFrame:
     """Exact word-n-gram Jaccard similarity for candidate pairs —
     pure column expressions (no UDF): split -> sliding n-grams via
@@ -600,9 +589,8 @@ def ngram_jaccard_pairs(
     band key) bounds the self-join and is REQUIRED: without a block
     this is an all-pairs cartesian product, which must be an explicit
     opt-in (``allow_cross_join=True``, test scale only). The gram-set
-    frame is persisted across the self-join (computed once, not once
-    per alias); ``checkpoint`` routes the release through
-    plans/materialize.finalize like the other pair operators."""
+    frame is a lazy ``localCheckpoint`` read by both aliases of the
+    self-join (computed once, not once per alias)."""
     if block_col is None and not allow_cross_join:
         raise ValueError(
             "ngram_jaccard_pairs without block_col is an all-pairs crossJoin; "
@@ -615,11 +603,15 @@ def ngram_jaccard_pairs(
             f"i -> concat_ws(' ', slice(split(lower({text_col}), '\\\\s+'), i + 1, {n})))"
         )
     )
-    # persist the per-doc gram sets across the self-join's two aliases:
+    # checkpoint the per-doc gram sets for the self-join's two aliases:
     # the tokenize/slice/distinct transform is the heavy stage and
     # would otherwise run over the corpus twice (the simhash/minhash
-    # signature-cache shape)
-    g = docs.select(F.col(id_col).alias("id"), grams.alias("grams"), *( [F.col(block_col).alias("blk")] if block_col else [])).persist()
+    # signature-frame shape)
+    g = docs.select(
+        F.col(id_col).alias("id"),
+        grams.alias("grams"),
+        *([F.col(block_col).alias("blk")] if block_col else []),
+    ).localCheckpoint(eager=False)
     l, r = g.alias("l"), g.alias("r")
     cond = F.col("l.id") < F.col("r.id")
     if block_col:
@@ -628,7 +620,7 @@ def ngram_jaccard_pairs(
         joined = l.crossJoin(r).where(cond)
     inter = F.size(F.array_intersect(F.col("l.grams"), F.col("r.grams")))
     union = F.size(F.array_union(F.col("l.grams"), F.col("r.grams")))
-    out = (
+    return (
         joined.select(
             F.col("l.id").alias("id_a"),
             F.col("r.id").alias("id_b"),
@@ -637,9 +629,6 @@ def ngram_jaccard_pairs(
         .where(F.col("jaccard") >= min_jaccard)
         .orderBy("id_a", "id_b")
     )
-    from gelos_spark.plans.materialize import finalize
-
-    return finalize(out, checkpoint, caches=[g])
 
 
 # ------------------------------------------------- embedding cosine
@@ -651,15 +640,13 @@ def embedding_dup_pairs(
     min_cosine: float = 0.95,
     block_col: str | None = None,
     allow_cross_join: bool = False,
-    checkpoint: bool | str = True,
 ) -> DataFrame:
     """Near-duplicate pairs by embedding cosine similarity — pure
     column math (zip_with dot product / aggregate norms). block_col
     bounds the pair space and is required unless allow_cross_join=True
     (the LSH-bucketed scale variant lives in operators/similarity.py).
-    The (id, vec, norm) frame is persisted across the self-join's two
-    aliases (norms computed once); ``checkpoint`` releases the cache
-    through plans/materialize.finalize like the other pair operators."""
+    The (id, vec, norm) frame is a lazy ``localCheckpoint`` read by
+    both aliases of the self-join (norms computed once)."""
     if block_col is None and not allow_cross_join:
         raise ValueError(
             "embedding_dup_pairs without block_col is an all-pairs crossJoin; "
@@ -673,7 +660,7 @@ def embedding_dup_pairs(
         F.col(vec_col).alias("v"),
         norm(vec_col).alias("nrm"),
         *([F.col(block_col).alias("blk")] if block_col else []),
-    ).persist()
+    ).localCheckpoint(eager=False)
     l, r = e.alias("l"), e.alias("r")
     cond = F.col("l.id") < F.col("r.id")
     joined = (
@@ -682,7 +669,7 @@ def embedding_dup_pairs(
         else l.crossJoin(r).where(cond)
     )
     dot = F.expr("aggregate(zip_with(l.v, r.v, (x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), 0D, (a, p) -> a + p)")
-    out = (
+    return (
         joined.select(
             F.col("l.id").alias("id_a"),
             F.col("r.id").alias("id_b"),
@@ -691,9 +678,6 @@ def embedding_dup_pairs(
         .where(F.col("cosine") >= min_cosine)
         .orderBy("id_a", "id_b")
     )
-    from gelos_spark.plans.materialize import finalize
-
-    return finalize(out, checkpoint, caches=[e])
 
 
 # ------------------------------------------- pairs -> components -> survivors
@@ -735,7 +719,6 @@ def connected_components(
     left: str = "id_a",
     right: str = "id_b",
     max_rounds: int = 25,
-    checkpoint: bool | str = True,
 ) -> DataFrame:
     """Near-dup pairs -> ``(id, component)`` for every id appearing in
     ``pairs``; ``component`` is the MIN id of the connected component.
@@ -767,10 +750,10 @@ def connected_components(
         (count, xor-hash) fixpoint probe — the same convergence-probe
         pattern as ``ivf_train``'s Lloyd loop. Superseded rounds'
         checkpoint blocks are freed by the context cleaner when their
-        frames go out of scope (the engine-wide localCheckpoint policy,
-        plans/materialize.py) — transient peak storage is
+        frames go out of scope — transient peak storage is
         O(rounds x |edges|) of SCALAR pairs between GCs, a few id-pair
-        copies, not payload data.
+        copies, not payload data. The result is a plan over the last
+        round's checkpointed edges.
 
     Both engines order ids the same way: Spark's ``least``/``min`` and
     ``np.unique`` agree on numbers, and on strings Python's code-point
@@ -778,8 +761,6 @@ def connected_components(
 
     No reference analog (the reference's dedup is exact-path only —
     SURVEY §2 training-data family)."""
-    from gelos_spark.plans.materialize import finalize
-
     # canonical "down" edges (u > v); self-pairs dropped
     canon = pairs.select(
         F.greatest(F.col(left), F.col(right)).alias("u"),
@@ -795,10 +776,9 @@ def connected_components(
         )
         lab = _driver_components(inv[: tbl.num_rows], inv[tbl.num_rows :], len(first))
         ids = col.take(first)
-        out = pairs.sparkSession.createDataFrame(
+        return pairs.sparkSession.createDataFrame(
             pa.table({"id": ids, "component": ids.take(lab)})
         )
-        return finalize(out, checkpoint)
 
     edges = (
         canon.dropDuplicates(["u", "v"])
@@ -865,14 +845,13 @@ def connected_components(
         )
 
     roots = edges.select(F.col("v").alias("id"), F.col("v").alias("component"))
-    out = (
+    return (
         edges.select(F.col("u").alias("id"), F.col("v").alias("component"))
         .union(roots)
         .groupBy("id")
         .agg(F.min("component").alias("component"))
         .orderBy("id")
     )
-    return finalize(out, checkpoint)
 
 
 def dedup_near(
@@ -882,7 +861,6 @@ def dedup_near(
     left: str = "id_a",
     right: str = "id_b",
     keep: str = "all",
-    checkpoint: bool | str = True,
 ) -> DataFrame:
     """Corpus + near-dup pairs -> the corpus annotated with
     ``component`` (min id of the duplicate cluster; own id when
@@ -895,12 +873,11 @@ def dedup_near(
     above that AQE broadcasts the star-contraction map when it fits."""
     if keep not in ("all", "canonical"):
         raise ValueError(f"keep must be 'all' or 'canonical', got {keep!r}")
-    # compose the component map lazily: it is a local relation or
-    # reads the per-round checkpointed edges (lineage already
-    # truncated), so an eager materialization here would only add a
-    # driver action and a store/reload of the map; Catalyst's
-    # EliminateSorts drops the map's internal orderBy under the join
-    comp = connected_components(pairs, left, right, checkpoint=False)
+    # the component map is a local relation or reads the per-round
+    # checkpointed edges (lineage already truncated), so it composes
+    # lazily; Catalyst's EliminateSorts drops its internal orderBy
+    # under the join
+    comp = connected_components(pairs, left, right)
     out = (
         df.join(comp.withColumnRenamed("id", id_col), id_col, "left")
         .withColumn("component", F.coalesce("component", F.col(id_col)))
@@ -908,6 +885,4 @@ def dedup_near(
     )
     if keep == "canonical":
         out = out.where("is_canonical").drop("is_canonical")
-    from gelos_spark.plans.materialize import finalize
-
-    return finalize(out.orderBy(id_col), checkpoint)
+    return out.orderBy(id_col)

@@ -42,10 +42,12 @@ Algorithm (iterative DataFrame loop — SURVEY.md §4 item 2):
       to automatically past ``max_queries``): the query side and the
       running top-k stay DataFrames; shells come from the same kernel
       in a pandas UDF and the finished-query split is a semi/anti join
-      on the stop rows.
-  Both carriers share the tile index, the candidate select, the
-  per-round top-k ranking, the stop rule, the wrap rule and the exact
-  pass, so their outputs are bit-identical.
+      on the stop rows. The result is localCheckpointed, then the
+      round caches are released.
+  Neither carrier leaves a cache for its caller to release. Both
+  carriers share the tile index, the candidate select, the per-round
+  top-k ranking, the stop rule, the wrap rule and the exact pass, so
+  their outputs are bit-identical.
 
 Determinism: ranking orders by (dist, image_id) — the id tie-break
 makes the output exact-match reproducible at any parallelism
@@ -66,7 +68,6 @@ from pyspark.sql import functions as F
 from gelos_spark.functions import cells
 from gelos_spark.functions.cell_udfs import cell_encode_col
 from gelos_spark.functions.geometry import haversine_col
-from gelos_spark.plans.materialize import finalize
 
 # ring rounds before the exact terminal pass. A driver round is one
 # action and its stragglers are few, so it hands them to the broadcast
@@ -258,7 +259,6 @@ def knn_join(
     queries: DataFrame | pd.DataFrame,
     res: int | None = None,
     n_tiles_hint: int | None = None,
-    checkpoint: bool | str = True,
     max_queries: int | None = 100_000,
 ) -> DataFrame:
     """k nearest tiles per query point.
@@ -280,12 +280,9 @@ def knn_join(
     guard (caller asserts the frame is request-sized);
     ``BRUTE_FORCE_PAIRS`` applies only to the driver-resident path.
 
-    ``checkpoint``: materialization policy for the returned frame
-    (plans/materialize.finalize) — True = eager localCheckpoint
-    (default), "reliable" = durable ``DataFrame.checkpoint()`` for
-    cluster executor-loss survival, False = the frame as built from
-    the collected rows. The result is assembled on the driver, so no
-    cache is left persisted under any policy.
+    The result is a frame built from the rows collected on the
+    driver, so it reads no cache; the tile index is unpersisted before
+    the call returns.
 
     Cost-based path selection: when tiles x queries <= the module
     constant ``BRUTE_FORCE_PAIRS`` one exact brute-force pass is
@@ -325,7 +322,6 @@ def knn_join(
                 queries,
                 res=res,
                 n_tiles_hint=n_tiles_hint,
-                checkpoint=checkpoint,
             )
     else:
         q = queries.toPandas()
@@ -348,7 +344,7 @@ def knn_join(
     def result(ranked: list[pd.DataFrame]) -> DataFrame:
         out = pd.concat([r[out_cols] for r in ranked], ignore_index=True)
         out = out.sort_values(["query_id", "rank"], kind="stable")
-        return finalize(spark.createDataFrame(out, out_schema), checkpoint)
+        return spark.createDataFrame(out, out_schema)
 
     if n_hint is not None and n_hint * len(q) <= BRUTE_FORCE_PAIRS:
         # small input: no cell column, no persist, no density aggregate
@@ -420,7 +416,6 @@ def knn_join_distributed(
     queries: DataFrame,
     res: int | None = None,
     n_tiles_hint: int | None = None,
-    checkpoint: bool | str = True,
 ) -> DataFrame:
     """k nearest tiles per query point for CORPUS-SIZED query sets.
 
@@ -446,7 +441,9 @@ def knn_join_distributed(
         once the disk would wrap the grid, take the exact cross-join
         pass (k > population returns all, like knn_join).
 
-    ``checkpoint``: materialization policy (plans/materialize.finalize).
+    The ring loop reads persisted frames, so the result is
+    ``localCheckpoint``ed before they are unpersisted: the returned
+    frame never reads through a released cache.
     """
     if res is None:
         n_hint = n_tiles_hint if n_tiles_hint is not None else tiles.count()
@@ -504,5 +501,11 @@ def knn_join_distributed(
     out = finalized[0]
     for f in finalized[1:]:
         out = out.unionByName(f)
-    result = out.select("query_id", "rank", "image_id", "dist_km").orderBy("query_id", "rank")
-    return finalize(result, checkpoint, caches=persisted)
+    result = (
+        out.select("query_id", "rank", "image_id", "dist_km")
+        .orderBy("query_id", "rank")
+        .localCheckpoint()
+    )
+    for df in persisted:
+        df.unpersist()
+    return result

@@ -108,26 +108,6 @@ def pyramid_level_up(level: DataFrame, res: int) -> DataFrame:
     return staged.groupBy("cell_parent").applyInPandas(_rollup_group, RASTER_LEVEL_SCHEMA)
 
 
-def build_pyramid(
-    leaves: DataFrame, leaf_res: int, min_res: int
-) -> dict[int, DataFrame]:
-    """Full raster pyramid: {res: tiles DataFrame} from leaf_res down
-    to min_res. Leaves: (cell, bytes, w, h, fmt, caption); each level
-    is built from the one below (logarithmic number of shuffles, each
-    keyed on the parent cell).
-
-    Each returned level is persisted (level N feeds level N-1, so the
-    cache prevents re-decoding the whole chain per level); the CALLER
-    owns unpersisting the levels it is done with."""
-    levels: dict[int, DataFrame] = {}
-    cur = leaves.withColumn("n_leaves", F.lit(1).cast("long"))
-    levels[leaf_res] = cur
-    for res in range(leaf_res, min_res, -1):
-        cur = pyramid_level_up(cur, res).persist()
-        levels[res - 1] = cur
-    return levels
-
-
 def vector_pyramid(
     tiles_with_cell: DataFrame,
     leaf_res: int,
@@ -151,10 +131,9 @@ def vector_pyramid(
     one groupBy(res, cell). Shuffle volume is <= L x 4^leaf_res x
     n_cats rows REGARDLESS of input size, and the plan compiles 3
     stages instead of ~2L (first-execution codegen of ~2L distinct
-    plans dominates shallow-pyramid latency). Nothing is persisted, so
-    the operator sits outside the plans/materialize checkpoint policy
-    (which covers operators that persist intermediates) and returns
-    the lazy plan: a caller's filter reaches the scan.
+    plans dominates shallow-pyramid latency). Nothing is persisted and
+    the operator returns the lazy plan: a caller's filter reaches the
+    scan.
 
     Trade-off: a DEEP pyramid (L x 4^leaf_res beyond ~2^26) whose leaf
     pair table approaches the input's distinct-key count explodes L

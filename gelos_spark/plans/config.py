@@ -319,10 +319,6 @@ def _op_minhash_pairs(spark: SparkSession, pipe: Pipeline, conf: dict) -> DataFr
         shingle_k=int(conf.get("shingle_k", 5)),
         seed=int(conf.get("seed", 42)),
         min_jaccard=float(conf.get("min_jaccard", 0.5)),
-        # materialization policy pass-through (plans/materialize): a
-        # config author can demand `checkpoint: reliable` so the pair
-        # set survives executor loss on a real cluster
-        checkpoint=conf.get("checkpoint", True),
         # SQL-reproducible kernel (the minhash_portable oracle path)
         portable=bool(conf.get("portable", False)),
     )
@@ -338,7 +334,6 @@ def _op_simhash_pairs(spark: SparkSession, pipe: Pipeline, conf: dict) -> DataFr
         text_col=conf.get("text_col", "text"),
         max_hamming=int(conf.get("max_hamming", 3)),
         seed=int(conf.get("seed", 42)),
-        checkpoint=conf.get("checkpoint", True),
         # SQL-reproducible kernel (the simhash_portable oracle path)
         portable=bool(conf.get("portable", False)),
     )
@@ -394,7 +389,6 @@ def _op_connected_components(spark: SparkSession, pipe: Pipeline, conf: dict) ->
         left=conf.get("left", "id_a"),
         right=conf.get("right", "id_b"),
         max_rounds=int(conf.get("max_rounds", 25)),
-        checkpoint=conf.get("checkpoint", True),
     )
 
 
@@ -413,7 +407,6 @@ def _op_dedup_near(spark: SparkSession, pipe: Pipeline, conf: dict) -> DataFrame
         left=conf.get("left", "id_a"),
         right=conf.get("right", "id_b"),
         keep=conf.get("keep", "all"),
-        checkpoint=conf.get("checkpoint", True),
     )
 
 

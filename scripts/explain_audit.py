@@ -103,11 +103,8 @@ def main():
     # 8. embedding dedup candidate join (banded LSH equi-join)
     from gelos_spark.operators import dedup as _dedup
 
-    # checkpoint=False: audit the COMPUTE plan, not the post-
-    # localCheckpoint ExistingRDD scan the default returns
     cases["minhash_lsh"] = _dedup.minhash_lsh_pairs(
-        read("documents").limit(200), num_hashes=32, bands=8, min_jaccard=0.2,
-        checkpoint=False,
+        read("documents").limit(200), num_hashes=32, bands=8, min_jaccard=0.2
     )
 
     for name, df in cases.items():

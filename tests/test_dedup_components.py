@@ -274,10 +274,11 @@ def _phash_images(spark):
 
 def test_dedup_near_driver_action_budget(spark, jobs_launched):
     """phash pairs -> dedup_near(keep="canonical").count() over a
-    request-sized edge set launches at most 9 Spark jobs: the bounded
+    request-sized edge set launches at most 6 Spark jobs: the bounded
     edge collect (it runs the pair join's stages) and the kept count's
     stages. Star contraction took 21 here, for its per-round fixpoint
-    probes and their AQE stage jobs."""
+    probes and their AQE stage jobs, and an eager checkpoint of the
+    result took 9."""
     images = _phash_images(spark)
     kept = []
 
@@ -287,7 +288,7 @@ def test_dedup_near_driver_action_budget(spark, jobs_launched):
 
     jobs = jobs_launched("dedup_near_budget", call)
     assert kept == [24]
-    assert jobs <= 9, jobs
+    assert jobs <= 6, jobs
 
 
 def test_phash_dup_pairs_driver_action_budget(spark, jobs_launched):
@@ -305,8 +306,10 @@ def test_phash_dup_pairs_driver_action_budget(spark, jobs_launched):
 
 
 def test_minhash_lsh_pairs_driver_action_budget(spark, jobs_launched):
-    """minhash_lsh_pairs(...).count() keeps its measured job count, so
-    an added count()/collect() in the operator fails here."""
+    """minhash_lsh_pairs(...).count() keeps its measured job count (5:
+    the signature checkpoint and banded join's stages; an eager
+    checkpoint of the result took 10), so an added count()/collect()
+    in the operator fails here."""
     rng = np.random.default_rng(9)
     words = [f"w{i}" for i in range(200)]
     texts = [" ".join(rng.choice(words, 30)) for _ in range(40)]
@@ -320,4 +323,4 @@ def test_minhash_lsh_pairs_driver_action_budget(spark, jobs_launched):
         lambda: n.append(dedup.minhash_lsh_pairs(docs, num_hashes=64, bands=16, min_jaccard=0.5).count()),
     )
     assert n[0] >= 10
-    assert jobs <= 10, jobs
+    assert jobs <= 5, jobs

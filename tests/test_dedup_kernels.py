@@ -186,54 +186,45 @@ def test_phash_dup_pairs_on_synth_images(spark):
 
 def test_simhash_signature_cached_across_self_join(spark):
     """The simhash pandas-UDF must hash the corpus ONCE: the signature
-    frame is persisted, so both aliases of the banded self-join read
-    the same InMemoryRelation (the minhash plan shape) instead of
-    planning two UDF scans. checkpoint=False exposes the compute plan
-    for auditing; results are unchanged either way."""
+    frame is checkpointed, so both aliases of the banded self-join
+    scan the same checkpoint RDD (the minhash plan shape) and the
+    returned plan holds no UDF eval node. Without the checkpoint each
+    join side would plan its own UDF scan."""
     texts = [
         ("c%03d" % i, ("kappa lambda mu %d " % (i % 4)) * 3) for i in range(60)
     ]
     docs = spark.createDataFrame(texts, "doc_id string, text string")
-    lazy = dedup.simhash_pairs(docs, max_hamming=6, checkpoint=False)
-    plan = lazy._jdf.queryExecution().executedPlan().toString()
-    # both join sides scan the cache; every UDF eval node lives inside
-    # a cached relation (each InMemoryTableScan prints its cached
-    # child plan, so ArrowEvalPython appears once per relation print —
-    # an uncached regression would show ArrowEvalPython with ZERO
-    # InMemoryRelation nodes)
-    assert plan.count("InMemoryTableScan") >= 2, plan
-    assert plan.count("ArrowEvalPython") <= plan.count("InMemoryRelation"), plan
-    eager = dedup.simhash_pairs(docs, max_hamming=6)
-    assert sorted(map(tuple, lazy.collect())) == sorted(map(tuple, eager.collect()))
-    spark.catalog.clearCache()
+    out = dedup.simhash_pairs(docs, max_hamming=6)
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("Scan ExistingRDD") >= 2, plan
+    assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan, plan
+    assert out.count() > 0
 
 
 def test_pair_operators_cache_their_signature_frames(spark):
     """ngram_jaccard_pairs and embedding_dup_pairs must compute their
     per-row frame (gram sets / vec norms) ONCE across the self-join's
-    two aliases: checkpoint=False exposes the compute plan and both
-    sides must read an InMemoryRelation; values are unchanged vs the
-    materialized default."""
+    two aliases: both sides scan the one checkpointed frame, so the
+    returned plan holds neither the gram transform nor the norm."""
     docs = spark.createDataFrame(
         [("d%02d" % i, "alpha beta gamma delta %d epsilon" % (i % 3)) for i in range(30)],
         "doc_id string, text string",
     )
-    lazy = dedup.ngram_jaccard_pairs(docs, n=2, allow_cross_join=True, checkpoint=False)
-    plan = lazy._jdf.queryExecution().executedPlan().toString()
-    assert plan.count("InMemoryTableScan") >= 2, plan
-    eager = dedup.ngram_jaccard_pairs(docs, n=2, allow_cross_join=True)
-    assert sorted(map(tuple, lazy.collect())) == sorted(map(tuple, eager.collect()))
+    out = dedup.ngram_jaccard_pairs(docs, n=2, allow_cross_join=True)
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("Scan ExistingRDD") >= 2, plan
+    assert "transform(" not in plan, plan
+    assert out.count() > 0
 
     emb = spark.createDataFrame(
         [(i, [float(i % 4), 1.0, float(i % 2)]) for i in range(24)],
         "vec_id long, embedding array<double>",
     )
-    lazy_e = dedup.embedding_dup_pairs(emb, allow_cross_join=True, checkpoint=False)
-    plan_e = lazy_e._jdf.queryExecution().executedPlan().toString()
-    assert plan_e.count("InMemoryTableScan") >= 2, plan_e
-    eager_e = dedup.embedding_dup_pairs(emb, allow_cross_join=True)
-    assert sorted(map(tuple, lazy_e.collect())) == sorted(map(tuple, eager_e.collect()))
-    spark.catalog.clearCache()
+    out_e = dedup.embedding_dup_pairs(emb, allow_cross_join=True)
+    plan_e = out_e._jdf.queryExecution().executedPlan().toString()
+    assert plan_e.count("Scan ExistingRDD") >= 2, plan_e
+    assert "SQRT(" not in plan_e.upper(), plan_e
+    assert out_e.count() > 0
 
 
 def test_minhash_portable_kernel_matches_scalar_reference():
@@ -310,7 +301,6 @@ def test_minhash_portable_pipeline_matches_bruteforce(spark):
                 exp.add((a, b, est))
     assert got == sorted(exp)
     assert (0, 100, 1.0) in exp
-    spark.catalog.clearCache()
 
 
 def test_simhash_portable_kernel_and_pipeline(spark):
@@ -354,4 +344,3 @@ def test_simhash_portable_kernel_and_pipeline(spark):
         for a in sh for b in sh if a < b and bin(sh[a] ^ sh[b]).count("1") <= 3
     )
     assert gotp == exp and len(exp) > 0
-    spark.catalog.clearCache()

@@ -102,6 +102,9 @@ def test_knn_distributed_identical_to_driver_path(spark, force_ring):
     queries = synth.query_df(spark, 24, 2000, seed=42, k=6)
     a = knn_join(spark, tiles, queries, n_tiles_hint=2000)
     b = knn_join_distributed(spark, tiles, queries, n_tiles_hint=2000)
+    # the result is checkpointed before the ring caches are released,
+    # so it never reads through them
+    assert b._jdf.queryExecution().logical().nodeName() == "LogicalRDD"
     assert _sorted_rows(a) == _sorted_rows(b)
 
 
@@ -126,20 +129,6 @@ def test_knn_distributed_desert_and_small_population(spark):
     assert _sorted_rows(a) == _sorted_rows(b)
     got = {r.query_id: r for r in b.groupBy("query_id").count().collect()}
     assert got[0]["count"] == 40  # k=50 > population -> all ranked
-
-
-def test_knn_distributed_checkpoint_false_composable(spark):
-    from gelos_spark.operators.knn_join import knn_join_distributed
-
-    tiles = synth.tracker_df(spark, 500, seed=9)
-    queries = synth.query_df(spark, 8, 500, seed=9, k=4)
-    b = knn_join_distributed(
-        spark, tiles, queries, n_tiles_hint=500, checkpoint=False
-    )
-    plan = b._jdf.queryExecution().optimizedPlan().toString()
-    assert "ExistingRDD" not in plan
-    a = knn_join_distributed(spark, tiles, queries, n_tiles_hint=500)
-    assert _sorted_rows(a) == _sorted_rows(b)
 
 
 def test_knn_distributed_empty_queries(spark):
@@ -258,9 +247,10 @@ def test_knn_ring_call_driver_action_budget(
     spark, monkeypatch, force_ring, collect_sizes, jobs_launched
 ):
     """A two-round ring call (initial radius pinned to 2) launches at
-    most 11 Spark jobs: the query collect, the index aggregate, one
-    collect per ring round and the result checkpoint. Every collect
-    holds at most max(max_queries + 1, sum of k) rows."""
+    most 10 Spark jobs: the query collect, the index aggregate and one
+    collect per ring round (an eager checkpoint of the result took
+    11). Every collect holds at most max(max_queries + 1, sum of k)
+    rows."""
     monkeypatch.setattr(kj, "_initial_radius", lambda *a, **k: 2)
     rounds = []
     real_ring = kj._ring_topk
@@ -277,15 +267,15 @@ def test_knn_ring_call_driver_action_budget(
 
     jobs = jobs_launched("knn_budget", call)
     assert len(rounds) == 2
-    assert jobs <= 11, jobs
+    assert jobs <= 10, jobs
     assert collect_sizes and max(collect_sizes) <= max(16 + 1, 16 * 5), collect_sizes
     assert out[0].count() == 16 * 5
 
 
 def test_knn_ring_call_leaves_no_cache(spark, force_ring):
-    """A ring call with checkpoint=False leaves no new persisted RDD
-    behind: the tile index is released once the last pass returns, and
-    the running top-k never was a cache."""
+    """A ring call leaves no new persisted RDD behind: the tile index
+    is released once the last pass returns, and the running top-k
+    never was a cache."""
     sc = spark.sparkContext
 
     def cached():
@@ -294,6 +284,6 @@ def test_knn_ring_call_leaves_no_cache(spark, force_ring):
     tiles = synth.tracker_df(spark, 2000, seed=4)
     queries = synth.query_df(spark, 12, 2000, seed=4, k=5)
     before = cached()
-    out = knn_join(spark, tiles, queries, n_tiles_hint=2000, checkpoint=False)
+    out = knn_join(spark, tiles, queries, n_tiles_hint=2000)
     assert cached() - before == set()
     assert len(out.collect()) == 12 * 5

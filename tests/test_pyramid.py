@@ -38,7 +38,9 @@ def _leaf_df(spark, res=4, n=12, seed=3):
 def test_raster_pyramid_levels_and_counts(spark):
     res = 4
     leaves = _leaf_df(spark, res=res, n=12)
-    levels = pyramid.build_pyramid(leaves, leaf_res=res, min_res=2)
+    levels = {res: leaves.withColumn("n_leaves", F.lit(1).cast("long"))}
+    for r in (4, 3):
+        levels[r - 1] = pyramid.pyramid_level_up(levels[r], r)
     assert set(levels) == {4, 3, 2}
     # leaf count conservation: n_leaves sums to the leaf count at every level
     for r in (3, 2):
@@ -64,7 +66,9 @@ def test_raster_parent_pixels_are_quadrant_means(spark):
         ),
         "cell long, bytes binary, w int, h int, fmt string, caption string",
     )
-    out = pyramid.build_pyramid(leaf, leaf_res=2, min_res=1)[1].collect()
+    out = pyramid.pyramid_level_up(
+        leaf.withColumn("n_leaves", F.lit(1).cast("long")), 2
+    ).collect()
     assert len(out) == 1
     got = codec.decode(bytes(out[0].bytes), out[0].fmt, 8, 8)
     canvas = np.zeros((16, 16, 3), dtype=np.uint8)
