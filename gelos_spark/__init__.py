@@ -9,12 +9,14 @@ partitioning for all shuffles.
 Layout:
   functions/  pure NumPy kernels + Spark column helpers
               (codec, cell index, geometry, text, arrays)
-  sources/    synthetic seeded generators, testdata loaders,
-              snapshot-manifest table layer (Iceberg fallback)
+  sources/    synthetic seeded generators, AOI and chip-tracker
+              loaders
+  tables/     snapshot-manifest table layer (atomic commits, time
+              travel, manifest-stat pruning) + bucketed tables
   operators/  spatial join (PIP), kNN ring expansion, pyramid
               rollup, dedup family, similarity search, sampling,
               skew handling, multimodal payload ops
-  plans/      end-to-end pipelines + checkpoint/lineage/resume
+  plans/      config-driven pipelines + checkpoint/lineage/resume
   streaming/  structured-streaming ingest + windowed aggregation
 """
 

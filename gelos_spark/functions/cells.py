@@ -87,59 +87,6 @@ def cell_encode(lon: np.ndarray, lat: np.ndarray, res: int) -> np.ndarray:
     return xy_to_cell(x, y)
 
 
-def cell_parent(cell: np.ndarray, res: int, parent_res: int) -> np.ndarray:
-    """Ancestor at ``parent_res`` — also available as the pure Spark
-    column expression ``F.shiftrightunsigned(cell, 2*(res-parent_res))``."""
-    if parent_res > res:
-        raise ValueError("parent_res must be <= res")
-    return np.asarray(cell) >> np.int64(2 * (res - parent_res))
-
-
-def cell_ranges(cells: np.ndarray, res: int, tile_res: int) -> np.ndarray:
-    """Merged [lo, hi] inclusive tile-cell id ranges covered by coarse
-    cells (G4 grid arithmetic; the table-layer pushdown shape).
-
-    A res-``res`` cell ``c`` owns the CONTIGUOUS Morton block
-    ``[c << 2Δ, ((c+1) << 2Δ) - 1]`` at res ``tile_res`` (Δ = tile_res
-    - res) — the quadtree prefix property. Sorting the cover and
-    merging adjacent/overlapping blocks turns any polygon cover into a
-    handful of ranges a manifest scan (tables/snapshot.py
-    ``plan_files``) or any range-pruned index can consume directly.
-    Returns an (n, 2) int64 array."""
-    if tile_res < res:
-        raise ValueError("tile_res must be >= res")
-    cells = np.unique(np.asarray(cells, dtype=np.int64))
-    if cells.size == 0:
-        return np.empty((0, 2), dtype=np.int64)
-    shift = np.int64(2 * (tile_res - res))
-    lo = cells << shift
-    hi = ((cells + np.int64(1)) << shift) - np.int64(1)
-    # merge runs of consecutive coarse cells (sorted, so a run merges
-    # iff the next block starts right after the current one ends)
-    breaks = np.nonzero(lo[1:] > hi[:-1] + np.int64(1))[0]
-    starts = np.concatenate(([0], breaks + 1))
-    ends = np.concatenate((breaks, [cells.size - 1]))
-    return np.stack([lo[starts], hi[ends]], axis=1)
-
-
-def cell_to_lonlat(cell: np.ndarray, res: int) -> tuple[np.ndarray, np.ndarray]:
-    """Cell center (lon, lat)."""
-    n = 1 << res
-    x, y = cell_to_xy(cell)
-    lon = (x.astype(np.float64) + 0.5) / n * 360.0 - 180.0
-    lat = (y.astype(np.float64) + 0.5) / n * 180.0 - 90.0
-    return lon, lat
-
-
-def cell_bounds(cell: np.ndarray, res: int) -> tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray]:
-    """(lon_min, lat_min, lon_max, lat_max) of each cell."""
-    n = 1 << res
-    x, y = cell_to_xy(cell)
-    lon0 = x.astype(np.float64) / n * 360.0 - 180.0
-    lat0 = y.astype(np.float64) / n * 180.0 - 90.0
-    return lon0, lat0, lon0 + 360.0 / n, lat0 + 180.0 / n
-
-
 def _range_offsets(r0: int, r1: int) -> np.ndarray:
     """(dx, dy) offsets with Chebyshev distance in (r0, r1] — the
     shell between two square rings (r0 = -1 includes the center)."""

@@ -3,9 +3,11 @@
 Point-in-polygon uses the classic even-odd crossing test with the
 half-open edge rule ((y1 > p) != (y2 > p) and the strict x
 comparison), which is deterministic for points on edges/vertices —
-required for the exact-output-match criterion (SURVEY.md §7.3). The
-NumPy kernel broadcasts points x edges; the Spark wrapper runs it
-inside a vectorized pandas UDF grouped by polygon id.
+required for the exact-output-match criterion (SURVEY.md §7.3).
+``points_in_rings`` is the NumPy kernel (points x edges, summed over
+an outer ring and its holes); ``pip_sql`` writes the same test as SQL
+for DuckDB oracles, and pip_join's crossing count evaluates it as a
+JVM array aggregate.
 
 Haversine exists in two forms with identical results:
   - ``haversine_col``: a pure Spark column expression (JVM-side,
@@ -23,34 +25,12 @@ from pyspark.sql import functions as F
 EARTH_RADIUS_KM = 6371.0088
 
 
-def points_in_polygon(px: np.ndarray, py: np.ndarray, ring: np.ndarray) -> np.ndarray:
-    """Even-odd crossing count, vectorized over points ([N] bool out).
-
-    ``ring`` is [V, 2] (lon, lat), closed or open (first==last not
-    required). Half-open rule: an edge contributes when
-    (y1 > py) != (y2 > py) and px < x-intersection.
-    """
-    px = np.asarray(px, dtype=np.float64)
-    py = np.asarray(py, dtype=np.float64)
-    ring = np.asarray(ring, dtype=np.float64)
-    if len(ring) >= 2 and ring[0, 0] == ring[-1, 0] and ring[0, 1] == ring[-1, 1]:
-        ring = ring[:-1]
-    x1, y1 = ring[:, 0], ring[:, 1]
-    x2, y2 = np.roll(x1, -1), np.roll(y1, -1)
-    # [N, E] crossing mask
-    cond = (y1[None, :] > py[:, None]) != (y2[None, :] > py[:, None])
-    with np.errstate(divide="ignore", invalid="ignore"):
-        xint = (x2 - x1)[None, :] * (py[:, None] - y1[None, :]) / (y2 - y1)[None, :] + x1[None, :]
-    cross = cond & (px[:, None] < xint)
-    return (cross.sum(axis=1) % 2).astype(bool)
-
-
 def points_in_rings(px: np.ndarray, py: np.ndarray, rings: list) -> np.ndarray:
     """Even-odd containment for a multi-ring polygon (outer ring +
     holes): crossings are summed across ALL rings, odd total = inside.
     Each ring is closed independently (no spurious edge between the
     outer ring's last vertex and a hole's first). With a single ring
-    this equals ``points_in_polygon`` exactly."""
+    this equals the single-ring oracle in tests/oracles.py exactly."""
     total = np.zeros(len(np.asarray(px)), dtype=np.int64)
     for ring in rings:
         ring = np.asarray(ring, dtype=np.float64)

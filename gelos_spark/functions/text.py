@@ -96,30 +96,14 @@ def fingerprint_col(text: Column) -> Column:
     return F.md5(F.encode(prefix, "utf-8"))
 
 
-def rolling_fingerprint_col(
-    text_col_name: str, modulus: int = (1 << 61) - 1, base: int = 257
-) -> Column:
-    """True rolling-hash fingerprint over the first 32 words:
-    fold(h = (h*base + crc32(word)) % p), as pure column math via
-    aggregate() — order-sensitive, unlike a bag-of-words hash.
-    Verified against a zlib.crc32 reference in pytest
-    (tests/test_text.py); crc32 has no DuckDB analog, so the driver
-    contract carries only a rows-only check."""
-    return F.expr(
-        f"aggregate(slice(split(lower({text_col_name}), '\\\\s+'), 1, 32), "
-        f"CAST(0 AS DECIMAL(38, 0)), "
-        f"(acc, x) -> CAST((acc * {base} + crc32(ENCODE(x, 'utf-8'))) % {modulus} AS DECIMAL(38, 0)))"
-    ).cast("long")
-
-
 def rolling_fingerprint_ascii_col(
     text_col_name: str, n_chars: int = 128, modulus: int = (1 << 61) - 1, base: int = 257
 ) -> Column:
     """Character-level rolling hash over the first ``n_chars`` code
-    points of the lowercased text: fold(h = (h*base + codepoint) % p).
-    The oracle-portable twin of ``rolling_fingerprint_col`` — ascii()
-    code points are identical in Spark and DuckDB, so this variant
-    carries an exact DuckDB oracle (crc32 does not exist there).
+    points of the lowercased text: fold(h = (h*base + codepoint) % p),
+    as pure column math via aggregate() — order-sensitive, unlike a
+    bag-of-words hash. ascii() code points are identical in Spark and
+    DuckDB, so the fingerprint carries an exact DuckDB oracle.
     Fold-from-0 equals reduce-from-first-element because
     0*base + c0 = c0, which is what the DuckDB list_reduce oracle
     computes."""

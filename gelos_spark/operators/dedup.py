@@ -42,28 +42,6 @@ from pyspark.sql import types as T
 _MERSENNE = (1 << 61) - 1
 
 
-def _hash_bytes_u64(tokens: list[bytes], seed: int) -> np.ndarray:
-    """Vector of 64-bit hashes for a token list (FNV-1a then
-    splitmix-style finalize; pure NumPy over a byte matrix would be
-    overkill for short shingles — this is batch-level, not per-row
-    Python: called once per document inside an Arrow batch loop)."""
-    out = np.empty(len(tokens), dtype=np.uint64)
-    with np.errstate(over="ignore"):
-        for i, t in enumerate(tokens):
-            h = np.uint64(0xCBF29CE484222325) ^ np.uint64(seed)
-            for b in t:
-                h = (h ^ np.uint64(b)) * np.uint64(0x100000001B3)
-            out[i] = h
-    return out
-
-
-def char_shingles(text: str, k: int = 5) -> list[bytes]:
-    b = text.encode("utf-8", "ignore")
-    if len(b) <= k:
-        return [b]
-    return [b[i : i + k] for i in range(len(b) - k + 1)]
-
-
 def _minhash_coeffs(num_hashes: int, seed: int) -> tuple[np.ndarray, np.ndarray]:
     """Multiply-shift family coefficients: odd multipliers + offsets.
     (a*x + b) over uint64 wraparound — a bijection of Z_2^64 per hash,
@@ -74,17 +52,6 @@ def _minhash_coeffs(num_hashes: int, seed: int) -> tuple[np.ndarray, np.ndarray]
     a = rng.integers(0, 1 << 63, num_hashes, dtype=np.uint64) * np.uint64(2) + np.uint64(1)
     b = rng.integers(0, 1 << 63, num_hashes, dtype=np.uint64)
     return a, b
-
-
-def minhash_signature(text: str, num_hashes: int, k: int = 5, seed: int = 42) -> np.ndarray:
-    """num_hashes-wide MinHash signature via the multiply-shift
-    permutation family over shingle hashes (scalar reference for the
-    batch kernel; tests assert value equality)."""
-    sh = np.unique(_hash_bytes_u64(char_shingles(text, k), seed)).astype(np.uint64)
-    a, b = _minhash_coeffs(num_hashes, seed)
-    with np.errstate(over="ignore"):
-        vals = a[:, None] * sh[None, :] + b[:, None]  # [H, S], uint64 wrap
-    return vals.min(axis=1)
 
 
 _FNV_OFFSET = 0xCBF29CE484222325
@@ -103,8 +70,8 @@ def _concat_bytes(chunks: list[bytes]) -> tuple[np.ndarray, np.ndarray]:
 def _fnv_ragged(flat: np.ndarray, starts: np.ndarray, seed: int) -> np.ndarray:
     """FNV-1a hash of each variable-length byte span — vectorized
     across spans (the loop is over byte POSITIONS, max span length
-    iterations, each step a whole-array op). Bit-identical to
-    _hash_bytes_u64."""
+    iterations, each step a whole-array op). Bit-identical to the
+    scalar per-token FNV oracle in tests/oracles.py."""
     n = len(starts) - 1
     lens = starts[1:] - starts[:-1]
     maxlen = int(lens.max()) if n else 0
@@ -127,7 +94,7 @@ def _shingle_hashes_batch(
 ) -> tuple[np.ndarray, np.ndarray]:
     """All k-byte-shingle FNV hashes for a batch of documents:
     (hashes, doc start offsets). Whole-doc shingle for docs shorter
-    than k (char_shingles semantics). The shingle FNV runs as k
+    than k. The shingle FNV runs as k
     whole-batch vector steps — no per-shingle Python."""
     enc = [t.encode("utf-8", "ignore") for t in texts]
     lens = np.fromiter((len(b) for b in enc), dtype=np.int64, count=len(enc))
@@ -167,7 +134,7 @@ def minhash_batch(texts: list[str], num_hashes: int, k: int = 5, seed: int = 42)
     """[D, num_hashes] MinHash signatures for a document batch —
     the whole batch is one shingle-hash pass + a segment-min reduce
     per permutation chunk (np.minimum.reduceat). Identical values to
-    minhash_signature applied per document."""
+    the scalar per-document oracle in tests/oracles.py."""
     sh, doc_starts = _shingle_hashes_batch(texts, k, seed)
     a, b = _minhash_coeffs(num_hashes, seed)
     d = len(texts)
@@ -226,10 +193,9 @@ def minhash_batch_portable(
     texts: list[str], num_hashes: int, k: int = 5, seed: int = 42
 ) -> np.ndarray:
     """[D, num_hashes] portable MinHash signatures: k-CODE-POINT
-    shingles (whole-doc shingle when shorter, char_shingles
-    semantics) hashed by the seeded polynomial
-    ``h = (h*B + cp) % M``, then ``min((a_i*h + b_i) % M)`` per
-    permutation. Verification path only — the production kernel
+    shingles (whole-doc shingle when shorter) hashed by the seeded
+    polynomial ``h = (h*B + cp) % M``, then ``min((a_i*h + b_i) % M)``
+    per permutation. Verification path only — the production kernel
     (minhash_batch: FNV shingles, multiply-shift over uint64 wrap)
     is ~an order of magnitude faster and stays the default."""
     a, b = _portable_coeffs(num_hashes)
@@ -268,27 +234,12 @@ def minhash_udf_portable(num_hashes: int = 16, k: int = 5, seed: int = 42):
     return _sig
 
 
-def simhash64(text: str, seed: int = 42) -> int:
-    """64-bit SimHash over word tokens (weighted bit-vote)."""
-    toks = [w.encode("utf-8", "ignore") for w in (text or "").lower().split()]
-    if not toks:
-        return 0
-    h = _hash_bytes_u64(toks, seed)
-    bits = ((h[:, None] >> np.arange(64, dtype=np.uint64)[None, :]) & np.uint64(1)).astype(np.int64)
-    votes = (2 * bits - 1).sum(axis=0)
-    val = np.uint64(0)
-    for i in range(64):
-        if votes[i] > 0:
-            val |= np.uint64(1) << np.uint64(i)
-    return int(val.astype(np.int64))
-
-
 def simhash_batch(texts: list[str], seed: int = 42) -> np.ndarray:
     """[D] int64 SimHash values for a document batch. Tokenization is
     one str.split per doc (string prep, not hashing); token hashing is
     the masked-position FNV over the whole batch's tokens at once and
     bit votes reduce per document with np.add.reduceat — identical
-    values to simhash64 per document."""
+    values to the scalar per-document oracle in tests/oracles.py."""
     toks_per_doc = [(t or "").lower().split() for t in texts]
     n_toks = np.fromiter((len(ts) for ts in toks_per_doc), dtype=np.int64, count=len(texts))
     all_toks = [w.encode("utf-8", "ignore") for ts in toks_per_doc for w in ts]

@@ -23,7 +23,7 @@ Three-phase plan, designed for the 10^12-tile scale:
      whose latitude span overlaps the cell's row band (plus a tiny
      slack) — in the one cover broadcast, and the crossing count is a
      per-row array aggregate with the same IEEE float64 expression as
-     the NumPy kernel (geometry.points_in_polygon): ONE scan, ONE
+     the NumPy ray-cast oracle (tests/oracles.py): ONE scan, ONE
      broadcast join, ZERO shuffles, zero Python. A dropped edge lies
      wholly above or below every point the cell can hold, so its
      ``(y1 > lat) != (y2 > lat)`` term is false and the count is
@@ -74,24 +74,7 @@ def pick_cover_res(aois: list[dict], max_cells_per_aoi: int = 2048) -> int:
     return res
 
 
-def classify_covers(aois: list[dict], cover_res: int) -> list[tuple]:
-    """One ``polygon_cover_classified`` result per AOI — factored out
-    so a caller needing both the cover DataFrame and the Morton scan
-    ranges (pip_join_pruned) computes the covers exactly once."""
-    return [
-        cells.polygon_cover_classified(
-            np.asarray(p["ring"], dtype=np.float64), cover_res, holes=p.get("holes")
-        )
-        for p in aois
-    ]
-
-
-def build_cover_df(
-    spark: SparkSession,
-    aois: list[dict],
-    cover_res: int,
-    classified: list[tuple] | None = None,
-) -> DataFrame:
+def build_cover_df(spark: SparkSession, aois: list[dict], cover_res: int) -> DataFrame:
     """Exploded (aoi_id, cover_cell, interior, wrapped, edges) DataFrame.
     Cover generation is driver-side NumPy: the AOI set is the engine's
     small dimension (SURVEY.md §2.6 G6); at scale with millions of AOIs
@@ -105,17 +88,11 @@ def build_cover_df(
     ``wrapped`` marks antimeridian AOIs, whose edge lons are unwrapped.
     The frame is built in pandas with array<double> columns so it goes
     through Arrow; the structs are zipped JVM-side."""
-    if classified is None:
-        classified = classify_covers(aois, cover_res)
-    elif len(classified) != len(aois):
-        # zip would silently drop trailing AOIs from the cover —
-        # misuse (a stale precomputed list) must be loud
-        raise ValueError(
-            f"build_cover_df: classified has {len(classified)} entries "
-            f"for {len(aois)} aois"
-        )
     parts = []
-    for p, (cover, interior) in zip(aois, classified):
+    for p in aois:
+        cover, interior = cells.polygon_cover_classified(
+            np.asarray(p["ring"], dtype=np.float64), cover_res, holes=p.get("holes")
+        )
         edges, wrapped = _aoi_edges(p)
         kept = [edges[keep] for keep in _cell_edges(edges, cover, interior, cover_res)]
         parts.append(pd.DataFrame({
@@ -134,75 +111,6 @@ def build_cover_df(
     return cover_df.select(
         "aoi_id", "cover_cell", "interior", "wrapped",
         F.arrays_zip(*_EDGE_FIELDS).alias("edges"),
-    )
-
-
-def aoi_cell_ranges(
-    aois: list[dict],
-    cover_res: int | None = None,
-    tile_res: int = TILE_RES,
-    classified: list[tuple] | None = None,
-) -> list[tuple[int, int]]:
-    """Merged tile-cell [lo, hi] ranges of the AOI set's union cover —
-    the spatial predicate a snapshot table consumes for manifest file
-    pruning (``SnapshotTable.read(where={"cell": ranges})``).
-
-    The cover is a superset of every contained tile by construction
-    (polygon_cover_classified keeps any cell that may touch the
-    polygon), so a PIP join over the pruned read returns exactly the
-    assignments of a full-table scan — only the files whose Morton
-    range can't hold an AOI tile are never opened. At 10^12-tile scale this is the step
-    that turns a city-sized query against a planet-sized table into a
-    city-sized scan."""
-    cover_res = cover_res or pick_cover_res(aois)
-    if classified is None:
-        classified = classify_covers(aois, cover_res)
-    elif len(classified) != len(aois):
-        # short list ⇒ ranges MISS the dropped AOIs' files ⇒ a pruned
-        # read would silently lose their assignments
-        raise ValueError(
-            f"aoi_cell_ranges: classified has {len(classified)} entries "
-            f"for {len(aois)} aois"
-        )
-    covers = [cover for cover, _interior in classified]
-    if not covers:
-        return []
-    union = np.concatenate(covers)
-    return [tuple(map(int, r)) for r in cells.cell_ranges(union, cover_res, tile_res)]
-
-
-def pip_join_pruned(
-    spark: SparkSession,
-    table,
-    aois: list[dict],
-    cover_res: int | None = None,
-    cell_col: str = "cell",
-    **pip_kwargs,
-) -> DataFrame:
-    """PIP join straight off a snapshot table with spatial pushdown:
-    plan the scan from the AOIs' merged Morton ranges (file-granularity
-    superset — pip_join's cover join applies the exact predicate), then
-    join. Row-identical to ``pip_join(spark, table.read(spark), aois)``
-    while opening only the data files whose cell range can intersect an
-    AOI; ``table.last_scan`` reports the file counts.
-
-    ``table`` is a SnapshotTable (or anything with the same
-    ``read(spark, where=..., residual=...)`` surface) whose rows carry
-    a res-TILE_RES ``cell_col``."""
-    cover_res = cover_res or pick_cover_res(aois)
-    # the covers feed BOTH the scan ranges and the join's cover side —
-    # classify once (cover generation is the expensive planning step)
-    classified = classify_covers(aois, cover_res)
-    ranges = aoi_cell_ranges(aois, cover_res, classified=classified)
-    tiles = table.read(spark, where={cell_col: ranges}, residual=False)
-    return pip_join(
-        spark,
-        tiles,
-        aois,
-        cover_res=cover_res,
-        tile_cell_col=cell_col,
-        classified_cover=classified,
-        **pip_kwargs,
     )
 
 
@@ -252,7 +160,7 @@ def _cell_edges(
 
 def crossing_count_expr(edges: F.Column, lon: F.Column, lat: F.Column) -> F.Column:
     """Even-odd crossing count as a pure array-aggregate expression —
-    the same IEEE float64 arithmetic as geometry.points_in_polygon,
+    the same IEEE float64 arithmetic as the NumPy ray-cast oracle,
     evaluated JVM-side per row with NO join and NO shuffle."""
     def step(acc: F.Column, e: F.Column) -> F.Column:
         crossing = ((e["y1"] > lat) != (e["y2"] > lat)) & (
@@ -270,7 +178,6 @@ def pip_join(
     cover_res: int | None = None,
     tile_cell_col: str | None = None,
     ordered: bool = True,
-    classified_cover: list[tuple] | None = None,
 ) -> DataFrame:
     """Assign every tile centroid to each AOI polygon containing it.
 
@@ -284,7 +191,7 @@ def pip_join(
     table is wasted shuffle at 10^12-tile scale.
     """
     cover_res = cover_res or pick_cover_res(aois)
-    cover = F.broadcast(build_cover_df(spark, aois, cover_res, classified=classified_cover))
+    cover = F.broadcast(build_cover_df(spark, aois, cover_res))
 
     if tile_cell_col is None:
         # pure JVM column expression — the coarse phase runs entirely in

@@ -1,7 +1,8 @@
 """Approximate-nearest-neighbor similarity search over an embedding
 column (array<float>). Every path returns (query_id, rank, vec_id,
 cosine), ranked by (cosine desc, vec_id asc) through `_rank_topk`, and
-every cosine is bit-identical to the JVM left fold (`_dot_expr`).
+every cosine is bit-identical to the JVM left fold
+``aggregate(zip_with(...))`` (the dot-product oracle in tests/oracles.py).
 
   - brute-force cosine top-k: the exactness baseline. The query side
     is request-sized and broadcasts (one bounded collect); the corpus
@@ -28,18 +29,6 @@ from __future__ import annotations
 import numpy as np
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
-
-
-def _dot_expr(a: str, b: str) -> F.Column:
-    """Reference JVM left-fold dot product. No longer on any hot path
-    (every scorer runs the `_fold_dot` order, pair-wise or block-wise),
-    kept as the semantics both kernels must reproduce bit-for-bit —
-    test_fold_dot_bit_equals_jvm and
-    test_block_cosine_bit_equals_jvm_fold pin them against it."""
-    return F.expr(
-        f"aggregate(zip_with({a}, {b}, (x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), "
-        f"0D, (acc, p) -> acc + p)"
-    )
 
 
 def _norm_expr(a: str) -> F.Column:
@@ -201,7 +190,7 @@ def _list_matrix(v, num_rows: int, dim: int) -> np.ndarray:
 
 def _fold_dot(a: np.ndarray, b: np.ndarray) -> np.ndarray:
     """Per-row dot product with the EXACT left-fold summation order of
-    the JVM ``aggregate(zip_with(...))`` expression (`_dot_expr`):
+    the JVM ``aggregate(zip_with(...))`` expression (tests/oracles.py):
     acc = (...((0 + p_0) + p_1)...) + p_{d-1}, each product and add in
     IEEE float64. One vectorized add per dimension (d ops over
     N-length arrays — still batch-level BLAS-ish speed) instead of
@@ -394,19 +383,12 @@ def lsh_topk(
         "query_id", "vec_id", "qv", "cv", "qn", "cn"
     )
     # exact re-rank through the Arrow pair scorer (bit-identical to
-    # the JVM _dot_expr fold — see _fold_dot), THEN dedup: a pair
+    # the JVM left fold — see _fold_dot), THEN dedup: a pair
     # colliding in several tables re-scores to the same cosine, so
     # deduping after scoring keeps identical rows while the dedup
     # exchange carries 3 scalars per candidate instead of two
     # dim-length vectors (guide §2.3; measured -25% on q_lsh_topk)
     return _rank_topk(_cosine_pairs_frame(pairs, dim).dropDuplicates(["query_id", "vec_id"]), k)
-
-
-def recall_at_k(ann: DataFrame, exact: DataFrame, k: int) -> float:
-    """Fraction of exact top-k pairs the ANN result recovered."""
-    hits = ann.join(exact, ["query_id", "vec_id"], "inner").count()
-    total = exact.count()
-    return hits / max(total, 1)
 
 
 # ----------------------------------------------------------------- IVF

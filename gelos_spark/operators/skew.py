@@ -17,8 +17,8 @@ most rows in a few reducer partitions. Two complementary mitigations:
     over every salt value) — tests/test_skew.py asserts equality
     against the unsalted plan.
 
-``hot_keys`` is the cheap pre-pass (count per key, keep keys holding
-more than ``hot_fraction`` of the mean load); at 10^12 scale it runs
+``skew_stats`` is the cheap pre-pass (count per key, keep keys holding
+more than ``factor`` x the mean load); at 10^12 scale it runs
 on a sample or on the previous snapshot's per-cell counts (the vector
 pyramid's res-N level is exactly that table).
 """
@@ -41,7 +41,7 @@ def skew_stats(df: DataFrame, key: str, factor: float = 8.0) -> tuple[list, int]
     with ``n_salt`` DERIVED from the observed skew instead of guessed
     by the caller: the hottest key's rows need ``ceil(max/mean)``
     mean-sized reducer chunks, clamped to [2, MAX_AUTO_SALT] (beyond
-    ~64 the per-salt partial-agg fan-in costs more than residual skew;
+    ~64 the per-salt partial-agg fan-in costs more than the skew left;
     a mis-tuned caller can no longer under-salt). The counts frame is
     persisted for the two tiny actions so the input scans once; at
     10^12 scale run this on a sample or the vector pyramid's per-cell
@@ -56,11 +56,6 @@ def skew_stats(df: DataFrame, key: str, factor: float = 8.0) -> tuple[list, int]
     if not hot or mean <= 0:
         return hot, 1
     return hot, max(2, min(MAX_AUTO_SALT, math.ceil(mx / mean)))
-
-
-def hot_keys(df: DataFrame, key: str, factor: float = 8.0) -> list:
-    """Keys whose row count exceeds ``factor`` x the mean per-key load."""
-    return skew_stats(df, key, factor)[0]
 
 
 def with_salt(df: DataFrame, key: str, hot: list, n_salt: int, uid: str) -> DataFrame:

@@ -26,8 +26,7 @@ A pipeline is a named sequence of stages. Each stage:
 The checkpoint log itself is a SnapshotTable, so markers commit with
 the same atomic-rename protocol and are queryable as a DataFrame
 (per-partition metrics ARE rows, as the north rule requires, not log
-lines). ``resume_delta`` exposes the J6 anti-join: work items minus
-already-done items.
+lines).
 """
 
 from __future__ import annotations
@@ -151,7 +150,3 @@ class Pipeline:
         self.executed.append(name)
         return tbl.read(self.spark)
 
-
-def resume_delta(work: DataFrame, done: DataFrame, key: str) -> DataFrame:
-    """J6 anti-join: rows of ``work`` whose ``key`` is not in ``done``."""
-    return work.join(done.select(key).distinct(), key, "left_anti")

@@ -884,7 +884,3 @@ def load_config(path: str) -> dict:
 
     with open(path) as f:
         return yaml.safe_load(f)
-
-
-def run_config(spark: SparkSession, path: str, **overrides) -> Pipeline:
-    return build_pipeline(spark, load_config(path), **overrides)

@@ -316,9 +316,3 @@ def query_points(q: int, n_tiles: int, seed: int = 42) -> pd.DataFrame:
         }
     )
 
-
-def query_df(spark: SparkSession, q: int, n_tiles: int, seed: int = 42, k: int | None = None) -> DataFrame:
-    pdf = query_points(q, n_tiles, seed)
-    if k is not None:
-        pdf["k"] = np.int32(k)
-    return spark.createDataFrame(pdf)

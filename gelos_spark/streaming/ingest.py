@@ -3,9 +3,9 @@ reference — SURVEY.md §2.9 notes the reference is batch-only with
 resume markers; these are the streaming equivalents the brief's
 Spark-first design calls for).
 
-Three composable pieces, all built on the SAME kernels as the batch
-path (the JVM Morton encoder works unchanged under streaming because
-it is a pure column expression — no Python, no state):
+Four composable pieces. The cell pieces use the SAME kernels as the
+batch path (the JVM Morton encoder works unchanged under streaming
+because it is a pure column expression — no Python, no state):
 
   - ``stream_encode``: readStream source -> cell_encode -> event-time
     projection. Any streaming source (file drop-dir, rate, Kafka)
@@ -14,13 +14,12 @@ it is a pure column expression — no Python, no state):
     coarse cell — the streaming twin of the vector pyramid's leaf
     aggregation (late data beyond the watermark is dropped, the
     standard completeness/latency trade).
-  - ``stream_dedup``: drop duplicate image_ids within the watermark
-    horizon (stateful built-in dropDuplicatesWithinWatermark-style via
-    dropDuplicates on a watermarked stream).
-  - ``sink_to_snapshot``: foreachBatch sink committing each micro-batch
-    to a SnapshotTable partition keyed by batch id — atomic, and
-    idempotent on micro-batch replay (overwrite_partition), the same
-    exactly-once recipe the batch checkpoint layer uses.
+  - ``stream_interval_join``: watermarked stream-stream join of each
+    event to same-key events inside a lookback interval, with state
+    evicted as the watermarks pass.
+  - ``running_cell_stats``: a running per-cell count and first/last
+    event time across micro-batches, kept in applyInPandasWithState
+    state.
 """
 
 from __future__ import annotations
@@ -65,16 +64,6 @@ def windowed_cell_counts(
     )
 
 
-def stream_dedup(stream: DataFrame, watermark: str = "2 minutes") -> DataFrame:
-    """Keep the first arrival per image_id within the watermark
-    horizon (bounded state — the streaming analog of exact dedup).
-
-    Uses dropDuplicatesWithinWatermark: plain dropDuplicates only
-    evicts state when the event-time column is part of the dedup
-    subset, so keying on image_id alone would grow state unboundedly."""
-    return stream.withWatermark("ts", watermark).dropDuplicatesWithinWatermark(["image_id"])
-
-
 def stream_interval_join(
     left: DataFrame,
     right: DataFrame,
@@ -111,38 +100,6 @@ def stream_interval_join(
         *[F.col(f"l.{c}").alias(c) for c in left.columns],
         *[F.col(f"r.{c}").alias(f"{c}{suffix}") for c in vals],
         F.col(f"r.{on}").alias(f"{on}{suffix}"),
-    )
-
-
-def sink_to_snapshot(
-    df: DataFrame,
-    table_root: str,
-    query_name: str,
-    checkpoint: str,
-    cluster_by: list[str] | None = None,
-):
-    """writeStream via foreachBatch into a SnapshotTable: each
-    micro-batch commits atomically as partition ``batch-{id}``;
-    replays of the same micro-batch (after a crash between the data
-    write and Spark's own offset commit) OVERWRITE rather than
-    double-append — end-to-end idempotent. ``cluster_by`` range-sorts
-    each batch's files on the given keys so the manifest stats prune
-    later range scans (the small per-batch files then bin-pack via
-    ``SnapshotTable.compact`` without losing the clustering)."""
-    from gelos_spark.tables.snapshot import SnapshotTable
-
-    table = SnapshotTable(table_root)
-
-    def commit(batch_df: DataFrame, batch_id: int) -> None:
-        table.overwrite_partition(
-            batch_df, partition=f"batch-{batch_id}", cluster_by=cluster_by
-        )
-
-    return (
-        df.writeStream.foreachBatch(commit)
-        .queryName(query_name)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
     )
 
 

@@ -22,13 +22,10 @@ Iceberg semantics the north rule actually uses, from scratch:
     for primitive columns straight from the parquet footers (no data
     read); ``read(where={col: (lo, hi)})`` plans the file list from
     the manifest alone and opens only overlapping files. Pruning is a
-    pure optimization — the residual predicate is re-applied as a
-    Spark filter by default (``residual=False`` opts into the
-    planFiles file-granularity-superset contract for callers whose
-    downstream operator applies the predicate), so results are
-    byte-identical with or without stats. At 10^12-image scale this
-    is THE scan primitive: a cell-range query touches the few data
-    files whose Morton range overlaps, not the table.
+    pure optimization — the range is re-applied as a Spark filter, so
+    results are byte-identical with or without stats. At 10^12-image
+    scale this is THE scan primitive: a cell-range query touches the
+    few data files whose Morton range overlaps, not the table.
   - **clustered writes** (Z-order-style layout): ``cluster_by=`` on
     any write range-partitions + sorts rows by the given keys
     (Morton ``cell_id`` makes one int key already interleave
@@ -41,12 +38,11 @@ Iceberg semantics the north rule actually uses, from scratch:
     of the COMMITTED chain and deletes everything no retained
     snapshot references (including crashed-commit leftovers: orphan
     manifests, data files, stranded pointer tmp files).
-  - **incremental consumption + rollback**: ``read_delta(from, to)``
-    returns exactly the rows appended between two snapshots from the
+  - **incremental consumption**: ``read_delta(from, to)`` returns
+    exactly the rows appended between two snapshots from the
     manifests' file-set difference (append-only intervals only —
-    rewrites raise); ``rollback(sid)`` atomically re-points
-    ``_current`` at a committed snapshot. Snapshot ids are NEVER
-    reused, so what a previously observed id reads can never change.
+    rewrites raise). Snapshot ids are NEVER reused, so what a
+    previously observed id reads can never change.
 
 Layout under ``root``:
   data/<commit-uuid>/*.parquet      immutable data files
@@ -64,13 +60,12 @@ footer-stat harvest and the few-row checkpoint lineage file
 (``overwrite_partition_arrow``, one pyarrow write) are driver-side.
 
 Concurrency contract: ONE writer per table at a time (the engine's
-actual shapes — each pipeline stage owns its table, the streaming
-sink is a single query). Readers are always safe against a
-concurrent writer (they only follow ``_current``), but two
-simultaneous commits would last-write-win the pointer; supporting
-them needs a compare-and-swap on the current pointer plus
-retry-with-rebase, which is exactly the role Iceberg delegates to
-its catalog.
+actual shape — each pipeline stage owns its table). Readers are
+always safe against a concurrent writer (they only follow
+``_current``), but two simultaneous commits would last-write-win the
+pointer; supporting them needs a compare-and-swap on the current
+pointer plus retry-with-rebase, which is exactly the role Iceberg
+delegates to its catalog.
 """
 
 from __future__ import annotations
@@ -137,14 +132,13 @@ def _file_entry(path: str, meta: "pq.FileMetaData", partition: str | None) -> di
     }
 
 
-def _as_ranges(pred) -> list[tuple]:
-    """A predicate is one (lo, hi) tuple or a list of them (OR of
-    ranges — e.g. the Morton ranges of a polygon's cell cover)."""
-    if isinstance(pred, list):
-        if not pred:
-            raise ValueError("empty range list predicate (matches nothing?)")
-        return [tuple(r) for r in pred]
-    return [tuple(pred)]
+def _as_range(pred) -> tuple:
+    """A predicate is one (lo, hi) pair; None leaves that side open."""
+    if not isinstance(pred, tuple) or len(pred) != 2 or any(
+        isinstance(v, (tuple, list)) for v in pred
+    ):
+        raise ValueError(f"where predicate must be one (lo, hi) pair, got {pred!r}")
+    return pred
 
 
 def _range_hits(smin, smax, lo, hi) -> bool:
@@ -156,21 +150,18 @@ def _range_hits(smin, smax, lo, hi) -> bool:
     except TypeError:
         # predicate/stat type mismatch (e.g. int range on a string
         # column): never prune on a comparison we can't evaluate —
-        # the residual filter still applies the caller's predicate
+        # read() still filters rows by the caller's predicate
         return True
     return True
 
 
 def _overlaps(file_entry: dict, where: dict) -> bool:
-    """True iff the file MAY contain rows matching every predicate
-    (each an OR-of-ranges). Missing stats for a column ⇒ keep the
-    file."""
+    """True iff the file MAY contain rows matching every predicate.
+    Missing stats for a column ⇒ keep the file."""
     stats = file_entry.get("stats") or {}
     for col, pred in where.items():
-        if col not in stats:
-            continue
-        smin, smax = stats[col]
-        if not any(_range_hits(smin, smax, lo, hi) for lo, hi in _as_ranges(pred)):
+        lo, hi = _as_range(pred)
+        if col in stats and not _range_hits(*stats[col], lo, hi):
             return False
     return True
 
@@ -212,10 +203,8 @@ class SnapshotTable:
         """Manifest-only scan planning (Iceberg's planFiles): return
         the file entries whose [min, max] stats overlap every
         predicate in ``where`` ({col: (lo, hi)} — None = unbounded on
-        that side, equality = (v, v) — or {col: [(lo, hi), ...]}, an
-        OR of ranges, e.g. a polygon cover's Morton cell ranges).
-        Files without stats for a column are kept — pruning is never
-        allowed to change results."""
+        that side, equality = (v, v)). Files without stats for a
+        column are kept — pruning is never allowed to change results."""
         files = self.files(snapshot_id)
         if not where:
             return files
@@ -226,21 +215,12 @@ class SnapshotTable:
         spark: SparkSession,
         snapshot_id: int | None = None,
         where: dict | None = None,
-        residual: bool = True,
     ) -> DataFrame:
-        """Read a snapshot; with ``where``, plan the file list from
-        manifest stats and open only overlapping files, then re-apply
-        the same ranges as a Spark filter (exactness does not depend
-        on pruning). ``last_scan`` records planned-vs-total file
-        counts for plan audits.
-
-        ``residual=False`` skips the row-level re-filter and returns
-        the FILE-GRANULARITY SUPERSET — Iceberg's planFiles contract,
-        for callers whose downstream operator applies the predicate
-        anyway (e.g. pip_join's cover join after an aoi_cell_ranges
-        pushdown: a 100+-term OR-of-ranges residual over every row
-        costs more than the join that subsumes it; measured 15x at
-        16M rows, PLANS.md)."""
+        """Read a snapshot; with ``where`` ({col: (lo, hi)}), plan the
+        file list from manifest stats and open only overlapping files,
+        then re-apply the same ranges as a Spark filter (exactness does
+        not depend on pruning). ``last_scan`` records planned-vs-total
+        file counts for plan audits."""
         all_files = self.files(snapshot_id)
         if not all_files:
             raise ValueError(f"table {self.root} is empty (no committed snapshot)")
@@ -251,18 +231,14 @@ class SnapshotTable:
             df = spark.read.parquet(all_files[0]["path"]).limit(0)
         else:
             df = spark.read.parquet(*[f["path"] for f in picked])
-        if not residual:
-            return df
         for col, pred in (where or {}).items():
-            clause = None
-            for lo, hi in _as_ranges(pred):
-                term = F.lit(True)
-                if lo is not None:
-                    term = term & (F.col(col) >= F.lit(lo))
-                if hi is not None:
-                    term = term & (F.col(col) <= F.lit(hi))
-                clause = term if clause is None else (clause | term)
-            df = df.filter(clause)
+            lo, hi = _as_range(pred)
+            term = F.lit(True)
+            if lo is not None:
+                term = term & (F.col(col) >= F.lit(lo))
+            if hi is not None:
+                term = term & (F.col(col) <= F.lit(hi))
+            df = df.filter(term)
         return df
 
     read_at = read  # alias: time-travel read
@@ -314,8 +290,8 @@ class SnapshotTable:
             # still register one schema-bearing file when the TABLE
             # would otherwise end up file-less, or read() loses the
             # schema and raises. Callers whose commit keeps other
-            # files pass keep_empty_if_none=False so an idle stream's
-            # empty batches don't accumulate 0-row files forever.
+            # files pass keep_empty_if_none=False so repeated empty
+            # appends don't accumulate 0-row files.
             keep = empties.pop(0)
             out.append(
                 {
@@ -331,11 +307,10 @@ class SnapshotTable:
         return out
 
     def _point_current(self, sid: int) -> None:
-        """The atomic commit point, shared by _commit and rollback:
-        write the pointer to a tmp file, fsync, then os.rename onto
-        ``_current`` — POSIX guarantees readers see either the old or
-        the new pointer, never a torn write. Any durability fix here
-        (e.g. directory fsync) covers both paths."""
+        """The atomic commit point of _commit: write the pointer to a
+        tmp file, fsync, then os.rename onto ``_current`` — POSIX
+        guarantees readers see either the old or the new pointer,
+        never a torn write."""
         tmp = os.path.join(self.root, f"_current.tmp.{uuid.uuid4().hex}")
         with open(tmp, "w") as f:
             f.write(str(sid))
@@ -345,11 +320,11 @@ class SnapshotTable:
 
     def _commit(self, files: list[dict]) -> int:
         parent = self.current_snapshot_id()
-        # never reuse an on-disk manifest id: after a rollback (or a
-        # crashed commit) ids above the parent may exist, and silently
-        # overwriting one would change what read(snapshot_id=...)
-        # returns for a previously observable id. Superseded manifests
-        # are left as orphans for expire_snapshots.
+        # never reuse an on-disk manifest id: after a crashed commit an
+        # id above the parent may exist, and silently overwriting it
+        # would change what read(snapshot_id=...) returns for an id a
+        # reader may have seen. Orphan manifests are left for
+        # expire_snapshots.
         sid = max(self.snapshots() + [parent or 0]) + 1
         man = {
             "snapshot_id": sid,
@@ -446,21 +421,6 @@ class SnapshotTable:
             return self.read(spark, to_snapshot).limit(0)
         return spark.read.parquet(*added)
 
-    def rollback(self, snapshot_id: int) -> int:
-        """Atomically point ``_current`` back at an earlier COMMITTED
-        snapshot (Iceberg's rollback_to_snapshot): readers switch to
-        the old state instantly; later snapshots stay on disk (and
-        readable by id) until expire_snapshots. The rolled-back-to id
-        must be on the committed chain — rolling to a crashed commit's
-        orphan manifest would resurrect a state that never was."""
-        if snapshot_id not in self._committed_chain():
-            raise ValueError(
-                f"rollback: snapshot {snapshot_id} is not on the committed "
-                f"chain {self._committed_chain()}"
-            )
-        self._point_current(snapshot_id)
-        return snapshot_id
-
     # -------------------------------------------------- maintenance
 
     def compact(
@@ -468,7 +428,6 @@ class SnapshotTable:
         spark: SparkSession,
         target_file_bytes: int = 128 << 20,
         cluster_by: list[str] | None = None,
-        merge_partitions: bool = False,
     ) -> int | None:
         """Bin-pack small data files (< ``target_file_bytes``) into
         fewer large ones, per partition tag, committed as ONE normal
@@ -482,21 +441,14 @@ class SnapshotTable:
         (Iceberg's rewrite_data_files). The rewrite itself is a
         distributed read→write; only manifest surgery is driver-side.
 
-        Grouping respects partition tags by default, so
-        ``overwrite_partition`` keeps working per tag.
-        ``merge_partitions=True`` bin-packs ACROSS tags into one
-        ``__compacted__`` tag — the streaming-sink shape (one small
-        file per ``batch-{id}``); only safe once those batch ids can
-        no longer replay (the stream's offset checkpoint has committed
-        past them), since a replayed overwrite_partition can't target
-        rows folded into the merged tag anymore.
+        Grouping respects partition tags, so ``overwrite_partition``
+        keeps working per tag.
         """
         files = self.files()
         by_part: dict[str | None, list[dict]] = {}
         for f in files:
             if f["bytes"] < target_file_bytes:
-                key = "__compacted__" if merge_partitions else f["partition"]
-                by_part.setdefault(key, []).append(f)
+                by_part.setdefault(f["partition"], []).append(f)
         rewritten: set[str] = set()
         new_files: list[dict] = []
         for part, fs in by_part.items():

@@ -6,10 +6,14 @@ design depends on (SURVEY.md §4):
   - small dimensions broadcast (BroadcastHashJoin, never shuffle the
     tile side);
   - relational stages sit inside WholeStageCodegen spans;
-  - Python appears only in the stages designed to hold it (ray-cast
-    refine, payload decode) — everything else is JVM.
+  - Python appears only in the stages designed to hold it (payload
+    decode, NumPy hashing kernels) — everything else is JVM.
 
-Writes PLANS.md at the repo root. Run: python scripts/explain_audit.py
+Writes PLANS.md at the repo root, with expression, plan and RDD ids
+stripped from each plan so a re-run with the same parallelism diffs
+clean. Partition
+counts follow the session's parallelism, which the header records.
+Run: SPARK_GRAFT_CPUS=$(nproc) python scripts/explain_audit.py
 """
 
 from __future__ import annotations
@@ -30,16 +34,19 @@ from gelos_spark.operators.knn_join import knn_join
 from gelos_spark.operators.pip_join import pip_join
 from gelos_spark.operators.pyramid import vector_pyramid
 from gelos_spark.functions.cell_udfs import cell_encode_col
-from gelos_spark.session import get_spark
+from gelos_spark.session import DEFAULT_CPUS, get_spark
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
 
 
 def plan_text(df) -> str:
+    """The formatted plan without its session-counter ids: expression
+    ids (``name#12L`` -> ``name``), exchange plan ids and RDD ids, which
+    shift with everything planned earlier in the session."""
     buf = io.StringIO()
     with redirect_stdout(buf):
         df.explain("formatted")
-    return buf.getvalue()
+    return re.sub(r"#\d+L?|, \[plan_id=\d+\]|(?<=RDD)\[\d+\]", "", buf.getvalue())
 
 
 def check(plan: str, name: str) -> list[str]:
@@ -67,7 +74,8 @@ def main():
     out = ["# PLANS — physical-plan audit of the key operators\n"]
     out.append(
         "Generated by `scripts/explain_audit.py` (`.explain(\"formatted\")` on "
-        f"`{SF_DIR}`). The properties checked are the scale contracts of "
+        f"`{SF_DIR}` at `SPARK_GRAFT_CPUS={DEFAULT_CPUS}`, expression, plan "
+        "and RDD ids stripped). The properties checked are the scale contracts of "
         "SURVEY.md §4: pushdown/pruning at the scan, broadcast of small "
         "dimensions, whole-stage codegen for relational work, Python "
         "confined to the designed vectorized kernels.\n"

@@ -4,9 +4,10 @@
 import re
 
 import numpy as np
-import pytest
 
 from gelos_spark.functions import cells
+
+import oracles
 
 
 def _brute_encode(lon, lat, res):
@@ -37,7 +38,7 @@ def test_roundtrip_center_reencodes_to_same_cell():
     lat = rng.uniform(-90, 90, 200)
     for res in (4, 10, 18):
         c = cells.cell_encode(lon, lat, res)
-        clon, clat = cells.cell_to_lonlat(c, res)
+        clon, clat = oracles.cell_to_lonlat(c, res)
         np.testing.assert_array_equal(cells.cell_encode(clon, clat, res), c)
 
 
@@ -47,7 +48,7 @@ def test_parent_is_prefix():
     lat = rng.uniform(-90, 90, 200)
     fine = cells.cell_encode(lon, lat, 15)
     coarse = cells.cell_encode(lon, lat, 9)
-    np.testing.assert_array_equal(cells.cell_parent(fine, 15, 9), coarse)
+    np.testing.assert_array_equal(oracles.cell_parent(fine, 15, 9), coarse)
 
 
 def _ring(cell: int, res: int, r: int) -> np.ndarray:
@@ -125,7 +126,7 @@ def test_polygon_cover_superset_of_inside_cells():
     rng = np.random.default_rng(5)
     lon = rng.uniform(-1, 6, 2000)
     lat = rng.uniform(-1, 6, 2000)
-    from gelos_spark.functions.geometry import points_in_polygon
+    from oracles import points_in_polygon
 
     inside = points_in_polygon(lon, lat, ring)
     for c in cells.cell_encode(lon[inside], lat[inside], res):
@@ -177,38 +178,3 @@ def test_cell_encode_col_matches_numpy_kernel(spark, tmp_path):
     for name in ("cell_encode", "pyramid_rollup"):
         plan = entry.queries()[name](spark, str(tmp_path))._jdf.queryExecution().executedPlan()
         assert not re.search(r"ArrowEvalPython|BatchEvalPython", plan.toString()), name
-
-
-def test_cell_ranges_prefix_blocks_and_merging():
-    """cell_ranges turns a coarse cover into merged tile-res Morton
-    ranges: membership in some range must EXACTLY equal parent-in-
-    cover (the quadtree prefix property), and consecutive coarse cells
-    must merge into one range."""
-    import numpy as np
-
-    from gelos_spark.functions import cells as C
-
-    res, tile_res = 5, 9
-    rng = np.random.default_rng(7)
-    cover = np.unique(rng.integers(0, 1 << (2 * res), size=40, dtype=np.int64))
-    ranges = C.cell_ranges(cover, res, tile_res)
-
-    # exactness on random tile cells: in-some-range <=> parent in cover
-    tiles = rng.integers(0, 1 << (2 * tile_res), size=5000, dtype=np.int64)
-    parents = C.cell_parent(tiles, tile_res, res)
-    in_cover = np.isin(parents, cover)
-    in_range = np.zeros(len(tiles), dtype=bool)
-    for lo, hi in ranges:
-        in_range |= (tiles >= lo) & (tiles <= hi)
-    assert (in_range == in_cover).all()
-
-    # consecutive cells merge: [4,5,6] at delta=2 -> ONE range
-    merged = C.cell_ranges(np.array([4, 5, 6]), 3, 5)
-    assert merged.tolist() == [[4 << 4, (7 << 4) - 1]]
-    # gap stays split
-    split = C.cell_ranges(np.array([4, 6]), 3, 5)
-    assert len(split) == 2
-
-    assert C.cell_ranges(np.array([], dtype=np.int64), 3, 5).shape == (0, 2)
-    with pytest.raises(ValueError):
-        C.cell_ranges(np.array([1]), 5, 3)

@@ -71,7 +71,7 @@ def test_config_validation_errors(spark):
 def test_yaml_file_runner(spark, tmp_path):
     path = tmp_path / "conf.yaml"
     path.write_text(PIPE_YAML)
-    pipe = cfg.run_config(spark, str(path), root=str(tmp_path / "out"))
+    pipe = cfg.build_pipeline(spark, cfg.load_config(str(path)), root=str(tmp_path / "out"))
     assert pipe.output("assign").count() == 872
 
 

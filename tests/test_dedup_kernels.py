@@ -1,6 +1,6 @@
 """Batch (vectorized) MinHash/SimHash kernels must be value-identical
-to the scalar reference implementations (dedup.minhash_signature /
-dedup.simhash64)."""
+to the scalar reference implementations (tests/oracles.py
+``minhash_signature`` / ``simhash64``)."""
 
 from __future__ import annotations
 
@@ -10,6 +10,8 @@ import pytest
 from pyspark.sql import functions as F
 
 from gelos_spark.operators import dedup
+
+import oracles
 
 CASES = [
     "",
@@ -30,21 +32,21 @@ CASES = [
 def test_minhash_batch_matches_scalar():
     got = dedup.minhash_batch(CASES, num_hashes=32, k=5, seed=42)
     for i, t in enumerate(CASES):
-        want = dedup.minhash_signature(t, 32, 5, 42).astype(np.int64)
+        want = oracles.minhash_signature(t, 32, 5, 42).astype(np.int64)
         assert (got[i] == want).all(), f"minhash mismatch for case {i}: {t!r}"
 
 
 def test_minhash_batch_other_seed_and_k():
     got = dedup.minhash_batch(CASES, num_hashes=16, k=3, seed=7)
     for i, t in enumerate(CASES):
-        want = dedup.minhash_signature(t, 16, 3, 7).astype(np.int64)
+        want = oracles.minhash_signature(t, 16, 3, 7).astype(np.int64)
         assert (got[i] == want).all()
 
 
 def test_simhash_batch_matches_scalar():
     got = dedup.simhash_batch(CASES, seed=42)
     for i, t in enumerate(CASES):
-        assert got[i] == dedup.simhash64(t, 42), f"simhash mismatch for case {i}: {t!r}"
+        assert got[i] == oracles.simhash64(t, 42), f"simhash mismatch for case {i}: {t!r}"
 
 
 def test_simhash_batch_random_docs():
@@ -55,7 +57,7 @@ def test_simhash_batch_random_docs():
     ]
     got = dedup.simhash_batch(docs, seed=42)
     for i, t in enumerate(docs):
-        assert got[i] == dedup.simhash64(t, 42)
+        assert got[i] == oracles.simhash64(t, 42)
 
 
 def test_minhash_lsh_pairs_matches_bruteforce_lsh(spark):
@@ -76,7 +78,7 @@ def test_minhash_lsh_pairs_matches_bruteforce_lsh(spark):
         ).collect()
     }
 
-    sigs = {d: dedup.minhash_signature(t, num_hashes, k, seed) for d, t in texts}
+    sigs = {d: oracles.minhash_signature(t, num_hashes, k, seed) for d, t in texts}
     rpb = num_hashes // bands
     exp = {}
     ids = sorted(sigs)
@@ -111,7 +113,7 @@ def test_simhash_pairs_matches_bruteforce(spark):
         (r.id_a, r.id_b): r.hamming
         for r in dedup.simhash_pairs(docs, max_hamming=max_h, seed=seed).collect()
     }
-    sh = {d: dedup.simhash64(t, seed) for d, t in texts}
+    sh = {d: oracles.simhash64(t, seed) for d, t in texts}
     ids = sorted(sh)
     exp = {}
     for i, a in enumerate(ids):

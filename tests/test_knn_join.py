@@ -11,6 +11,8 @@ from gelos_spark.operators import knn_join as kj
 from gelos_spark.operators.knn_join import knn_join
 from gelos_spark.sources import synth
 
+import oracles
+
 
 def _brute_knn(tracker: pd.DataFrame, queries: pd.DataFrame) -> pd.DataFrame:
     rows = []
@@ -38,7 +40,7 @@ def _brute_knn(tracker: pd.DataFrame, queries: pd.DataFrame) -> pd.DataFrame:
 def test_knn_exact_vs_bruteforce(spark, monkeypatch, n, q, k, seed, bf_pairs):
     monkeypatch.setattr(kj, "BRUTE_FORCE_PAIRS", bf_pairs)
     tracker = synth.tracker_df(spark, n, seed=seed)
-    queries = synth.query_df(spark, q, n, seed=seed, k=k)
+    queries = oracles.query_df(spark, q, n, seed=seed, k=k)
     got = knn_join(spark, tracker, queries, n_tiles_hint=n).toPandas()
     exp = _brute_knn(tracker.toPandas(), queries.toPandas())
     assert got[["query_id", "rank", "image_id"]].values.tolist() == exp[
@@ -50,7 +52,7 @@ def test_knn_exact_vs_bruteforce(spark, monkeypatch, n, q, k, seed, bf_pairs):
 def test_knn_path_selection_identical(spark, monkeypatch):
     """The optimizer's two physical strategies return identical rows."""
     tracker = synth.tracker_df(spark, 1500, seed=5)
-    queries = synth.query_df(spark, 24, 1500, seed=5, k=7)
+    queries = oracles.query_df(spark, 24, 1500, seed=5, k=7)
     brute = knn_join(spark, tracker, queries, n_tiles_hint=1500)
     monkeypatch.setattr(kj, "BRUTE_FORCE_PAIRS", 0)
     ring = knn_join(spark, tracker, queries, n_tiles_hint=1500)
@@ -60,7 +62,7 @@ def test_knn_path_selection_identical(spark, monkeypatch):
 def test_knn_k_exceeds_population(spark):
     """k larger than the tile count: returns every tile, ranked."""
     tracker = synth.tracker_df(spark, 7, seed=5)
-    queries = synth.query_df(spark, 3, 7, seed=5, k=50)
+    queries = oracles.query_df(spark, 3, 7, seed=5, k=50)
     got = knn_join(spark, tracker, queries, n_tiles_hint=7).toPandas()
     assert (got.groupby("query_id").size() == 7).all()
 
@@ -69,7 +71,7 @@ def test_knn_resolution_invariant(spark):
     """The search resolution is a performance knob, never a results
     knob."""
     tracker = synth.tracker_df(spark, 300, seed=8)
-    queries = synth.query_df(spark, 10, 300, seed=8, k=4)
+    queries = oracles.query_df(spark, 10, 300, seed=8, k=4)
     a = knn_join(spark, tracker, queries, res=4).toPandas()
     b = knn_join(spark, tracker, queries, res=9).toPandas()
     pd.testing.assert_frame_equal(a, b)
@@ -79,7 +81,7 @@ def test_knn_string_query_ids(spark, monkeypatch):
     """String query ids flow through both physical paths (the id type
     is carried from the caller's schema, not hardcoded)."""
     tracker = synth.tracker_df(spark, 800, seed=8)
-    qpdf = synth.query_df(spark, 10, 800, seed=8, k=4).toPandas()
+    qpdf = oracles.query_df(spark, 10, 800, seed=8, k=4).toPandas()
     qpdf["query_id"] = ["q" + str(v) for v in qpdf["query_id"]]
     for bf in (0, 2_000_000):
         monkeypatch.setattr(kj, "BRUTE_FORCE_PAIRS", bf)
@@ -99,7 +101,7 @@ def test_knn_distributed_identical_to_driver_path(spark, force_ring):
     from gelos_spark.operators.knn_join import knn_join_distributed
 
     tiles = synth.tracker_df(spark, 2000, seed=42)
-    queries = synth.query_df(spark, 24, 2000, seed=42, k=6)
+    queries = oracles.query_df(spark, 24, 2000, seed=42, k=6)
     a = knn_join(spark, tiles, queries, n_tiles_hint=2000)
     b = knn_join_distributed(spark, tiles, queries, n_tiles_hint=2000)
     # the result is checkpointed before the ring caches are released,
@@ -168,7 +170,7 @@ def test_knn_distributed_multi_round_finalization(spark, monkeypatch, force_ring
 
     monkeypatch.setattr(kj, "_ring_topk", ring)
     tiles, tiles_pdf = _tied_tiles(spark, 3000, seed=21)
-    qpdf = synth.query_df(spark, 16, 3000, seed=21, k=5).toPandas()
+    qpdf = oracles.query_df(spark, 16, 3000, seed=21, k=5).toPandas()
     qpdf["query_id"] = {
         "bigint": qpdf["query_id"],
         "double": qpdf["query_id"] + 0.5,
@@ -205,7 +207,7 @@ def test_knn_corpus_sized_queries_auto_dispatch(spark, collect_sizes):
     from gelos_spark.operators.knn_join import knn_join_distributed
 
     tiles = synth.tracker_df(spark, 800, seed=9)
-    queries = synth.query_df(spark, 60, 800, seed=9, k=4)
+    queries = oracles.query_df(spark, 60, 800, seed=9, k=4)
     collect_sizes.clear()  # count only knn_join's collects
     got = knn_join(spark, tiles, queries, n_tiles_hint=800, max_queries=50)
     assert collect_sizes and max(collect_sizes) <= 51, collect_sizes
@@ -217,7 +219,7 @@ def test_knn_max_queries_none_skips_probe(spark):
     """max_queries=None keeps the legacy contract: the caller asserts
     the frame is request-sized and the driver-resident path runs."""
     tiles = synth.tracker_df(spark, 400, seed=3)
-    queries = synth.query_df(spark, 12, 400, seed=3, k=3)
+    queries = oracles.query_df(spark, 12, 400, seed=3, k=3)
     got = knn_join(spark, tiles, queries, n_tiles_hint=400, max_queries=None)
     brute = knn_join(spark, tiles, queries, n_tiles_hint=400)
     assert _sorted_rows(got) == _sorted_rows(brute)
@@ -232,7 +234,7 @@ def test_knn_res_without_hint_counts_no_tiles(spark, monkeypatch, bf_pairs):
 
     monkeypatch.setattr(kj, "BRUTE_FORCE_PAIRS", bf_pairs)
     tiles = synth.tracker_df(spark, 1500, seed=5)
-    queries = synth.query_df(spark, 12, 1500, seed=5, k=6).toPandas()
+    queries = oracles.query_df(spark, 12, 1500, seed=5, k=6).toPandas()
     hinted = knn_join(spark, tiles, queries, res=7, n_tiles_hint=1500).toPandas()
     counts = []
     real = DataFrame.count
@@ -256,7 +258,7 @@ def test_knn_ring_call_driver_action_budget(
     real_ring = kj._ring_topk
     monkeypatch.setattr(kj, "_ring_topk", lambda *a: rounds.append(1) or real_ring(*a))
     tiles = synth.tracker_df(spark, 3000, seed=21)
-    queries = synth.query_df(spark, 16, 3000, seed=21, k=5)
+    queries = oracles.query_df(spark, 16, 3000, seed=21, k=5)
     collect_sizes.clear()
     out = []
 
@@ -282,7 +284,7 @@ def test_knn_ring_call_leaves_no_cache(spark, force_ring):
         return set(sc._jsc.getPersistentRDDs().keySet().toArray())
 
     tiles = synth.tracker_df(spark, 2000, seed=4)
-    queries = synth.query_df(spark, 12, 2000, seed=4, k=5)
+    queries = oracles.query_df(spark, 12, 2000, seed=4, k=5)
     before = cached()
     out = knn_join(spark, tiles, queries, n_tiles_hint=2000)
     assert cached() - before == set()

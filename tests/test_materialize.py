@@ -12,6 +12,8 @@ from gelos_spark.operators.knn_join import knn_join
 from gelos_spark.operators.pyramid import vector_pyramid
 from gelos_spark.sources import synth
 
+import oracles
+
 
 def _rows(df):
     return sorted(tuple(r) for r in df.collect())
@@ -23,7 +25,7 @@ def test_knn_result_composes_with_caller_filter(spark):
     tree Catalyst sees and selects the same rows as filtering the full
     result."""
     tiles = synth.tracker_df(spark, 800, seed=3)
-    q = synth.query_df(spark, 6, 800, seed=3, k=4)
+    q = oracles.query_df(spark, 6, 800, seed=3, k=4)
     out = knn_join(spark, tiles, q, n_tiles_hint=800)
     plan = out._jdf.queryExecution().optimizedPlan().toString()
     assert "ExistingRDD" not in plan and "LogicalRDD" not in plan

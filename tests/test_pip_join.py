@@ -6,10 +6,11 @@ import pytest
 from pyspark.sql import functions as F
 
 from gelos_spark.functions.cell_udfs import cell_encode_col
-from gelos_spark.functions.geometry import points_in_polygon
 from gelos_spark.operators.pip_join import TILE_RES, pip_join, pick_cover_res
 from gelos_spark.plans.checkpoint import Pipeline
 from gelos_spark.sources import synth
+
+from oracles import points_in_polygon
 
 
 def _brute_pip(tracker: pd.DataFrame, aois: list[dict]) -> set[tuple[int, str]]:
@@ -224,34 +225,12 @@ def test_pip_join_antimeridian_donut(spark):
 
 
 def test_points_in_rings_single_ring_equals_polygon():
-    from gelos_spark.functions.geometry import points_in_polygon, points_in_rings
+    from gelos_spark.functions.geometry import points_in_rings
 
     ring = np.asarray([(-5.0, -5.0), (5.0, -5.0), (0.0, 6.0)])
     rng = np.random.default_rng(3)
     px, py = rng.uniform(-8, 8, 500), rng.uniform(-8, 8, 500)
     assert (points_in_rings(px, py, [ring]) == points_in_polygon(px, py, ring)).all()
-
-
-def test_stale_classified_cover_is_loud(spark):
-    """A precomputed cover list shorter than the AOI set must raise:
-    for build_cover_df a zip would drop AOIs from the join; for
-    aoi_cell_ranges the scan ranges would miss their files (silent
-    wrong results in a pruned read)."""
-    import pytest as _pytest
-
-    from gelos_spark.operators.pip_join import (
-        aoi_cell_ranges,
-        build_cover_df,
-        classify_covers,
-    )
-    from gelos_spark.sources import synth
-
-    aois = synth.aoi_polygons(4, seed=42)
-    short = classify_covers(aois[:2], 6)
-    with _pytest.raises(ValueError, match="2 entries for 4"):
-        build_cover_df(spark, aois, 6, classified=short)
-    with _pytest.raises(ValueError, match="2 entries for 4"):
-        aoi_cell_ranges(aois, 6, classified=short)
 
 
 # ------------------------------- per-cell edge lists: exactness probes

@@ -11,6 +11,8 @@ from pyspark.sql import functions as F
 
 from gelos_spark.operators import similarity as sim
 
+import oracles
+
 
 @pytest.fixture(scope="module")
 def emb(spark):
@@ -78,7 +80,7 @@ def test_fold_dot_bit_equals_jvm(spark):
     jvm = {
         r["vec_id"]: r["d"]
         for r in df.select(
-            "vec_id", (sim._dot_expr("cv", "qv")).alias("d")
+            "vec_id", (oracles._dot_expr("cv", "qv")).alias("d")
         ).collect()
     }
     arrow = {
@@ -131,7 +133,7 @@ def test_block_cosine_bit_equals_jvm_fold(spark):
             "query_id",
             "vec_id",
             (
-                sim._dot_expr("cv", "qv")
+                oracles._dot_expr("cv", "qv")
                 / (sim._norm_expr("cv") * sim._norm_expr("qv"))
             ).alias("c"),
         ).collect()
@@ -189,7 +191,7 @@ def test_ivf_recall_and_exact_degeneration(spark, emb):
     )
     exact = sim.brute_force_topk(emb, q, k=10)
     ann = sim.ivf_topk(spark, index, cents, q, k=10, nprobe=2)
-    r = sim.recall_at_k(ann, exact, 10)
+    r = oracles.recall_at_k(ann, exact, 10)
     assert r >= 0.9, f"recall@10 too low: {r}"
     # probing every list == exact search
     full = sim.ivf_topk(spark, index, cents, q, k=10, nprobe=8)
@@ -321,7 +323,7 @@ def test_lsh_topk_recall_vs_brute_force(spark):
     )
     exact = sim.brute_force_topk(emb, q, k=10)
     ann = sim.lsh_topk(spark, emb, q, k=10, nbits=8, ntables=12, seed=42)
-    r = sim.recall_at_k(ann, exact, 10)
+    r = oracles.recall_at_k(ann, exact, 10)
     assert r >= 0.85, f"LSH recall@10 too low: {r}"
     ex = {(x.query_id, x.vec_id): x.cosine for x in exact.collect()}
     for row in ann.collect():

@@ -1,7 +1,6 @@
 """Structured-Streaming ingest: file-source micro-batches through the
-cell encoder, watermarked windowed counts, stream dedup, and the
-idempotent SnapshotTable foreachBatch sink — results must equal the
-batch computation over the same rows."""
+cell encoder, watermarked windowed counts and running per-cell state —
+results must equal the batch computation over the same rows."""
 
 from __future__ import annotations
 
@@ -11,7 +10,6 @@ from pyspark.sql import functions as F
 
 from gelos_spark.functions import cells
 from gelos_spark.streaming import ingest
-from gelos_spark.tables.snapshot import SnapshotTable
 
 
 def _write_batches(spark, src_dir):
@@ -28,7 +26,7 @@ def _write_batches(spark, src_dir):
                 "ts": base + pd.Timedelta(seconds=int(i % 180)),
             }
         )
-    # duplicate ids land in drop 2 (stream_dedup must keep firsts)
+    # duplicate ids land in drop 2, one second after their firsts
     dup = [dict(r, ts=r["ts"] + pd.Timedelta(seconds=1)) for r in rows[:50]]
     pdf = pd.DataFrame(rows)
     spark.createDataFrame(pdf.iloc[:200]).coalesce(1).write.mode("overwrite").parquet(
@@ -75,45 +73,6 @@ def test_stream_counts_match_batch(spark, tmp_path):
     for w, c in zip(dup_ts, dup5):
         want[(w.isoformat(), int(c))] += 1
     assert got == dict(want)
-
-
-def test_stream_dedup_and_snapshot_sink(spark, tmp_path):
-    src = str(tmp_path / "src2")
-    _write_batches(spark, src)
-    stream = (
-        spark.readStream.schema(ingest.STREAM_SCHEMA)
-        .option("recursiveFileLookup", True)
-        .parquet(src)
-    )
-    deduped = ingest.stream_dedup(ingest.stream_encode(stream, res=16))
-    table_root = str(tmp_path / "snap")
-    q = ingest.sink_to_snapshot(
-        deduped, table_root, "dedup_sink", str(tmp_path / "ckpt"), cluster_by=["cell"]
-    ).start()
-    q.awaitTermination(120)
-    t = SnapshotTable(table_root)
-    out = t.read(spark)
-    ids = [r.image_id for r in out.select("image_id").collect()]
-    assert len(ids) == len(set(ids)) == 400  # duplicates dropped
-    # micro-batch partitions committed with lineage-friendly tags
-    parts = t.partitions()
-    assert all(p.startswith("batch-") for p in parts)
-    # clustered batches carry cell stats -> later range scans prune
-    # (an empty batch keeps one schema-bearing 0-row file, no stats);
-    # compacting the small per-batch files preserves content exactly
-    assert all("cell" in f["stats"] for f in t.files() if f["rows"] > 0)
-    assert any(f["rows"] > 0 for f in t.files())
-    from pyspark.sql import functions as F
-
-    pre = out.agg(F.bit_xor(F.xxhash64("image_id", "cell"))).collect()
-    # merge_partitions folds the per-batch tags into one (safe once
-    # replay is impossible, i.e. after awaitTermination): fewer files,
-    # same rows bit for bit
-    n_files = len(t.files())
-    assert t.compact(spark, cluster_by=["cell"], merge_partitions=True) is not None
-    assert len(t.files()) < n_files
-    post = t.read(spark).agg(F.bit_xor(F.xxhash64("image_id", "cell"))).collect()
-    assert pre == post
 
 
 def test_running_cell_stats_state_across_batches(spark, tmp_path):

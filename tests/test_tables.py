@@ -13,7 +13,7 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
-from gelos_spark.plans.checkpoint import CHECKPOINT_SCHEMA, Pipeline, resume_delta
+from gelos_spark.plans.checkpoint import CHECKPOINT_SCHEMA, Pipeline
 from gelos_spark.tables.snapshot import SnapshotTable
 
 
@@ -307,71 +307,17 @@ def test_lineage_rows(spark, tmp_path):
     assert len(files) >= 1  # one lineage row per written partition file
 
 
-def test_resume_delta(spark):
-    work = spark.range(0, 10).withColumnRenamed("id", "k")
-    done = spark.range(0, 4).withColumnRenamed("id", "k")
-    left = resume_delta(work, done, "k")
-    assert sorted(r.k for r in left.collect()) == list(range(4, 10))
-
-
 def test_pruned_read_or_of_ranges(spark, tmp_path):
-    """A predicate may be an OR of ranges ({col: [(lo,hi), ...]}) —
-    the polygon-cover pushdown shape. Union semantics must be exact
-    and still prune."""
+    """A predicate is one (lo, hi) pair: an OR-of-ranges list, an empty
+    list or a pair of pairs is rejected before any file is planned, not
+    read as some other range."""
     t = SnapshotTable(str(tmp_path / "t"))
-    t.append(_cells_df(spark), cluster_by=["cell"], num_files=8)
-    ranges = [(0, 60_000), (500_000, 560_000), (900_000, 999_999)]
-    got = t.read(spark, where={"cell": ranges})
-    n = got.count()
-    assert 0 < t.last_scan["files_read"] < 8
-    cond = None
-    for lo, hi in ranges:
-        term = F.col("cell").between(lo, hi)
-        cond = term if cond is None else (cond | term)
-    full = t.read(spark).filter(cond)
-    assert n == full.count() > 0
-    assert _xor(got, "id", "cell") == _xor(full, "id", "cell")
-    with pytest.raises(ValueError):
-        t.read(spark, where={"cell": []})
-
-
-def test_spatial_pushdown_pip_join_exact(spark, tmp_path):
-    """End-to-end spatial predicate pushdown: AOI polygons -> quadtree
-    cover -> merged Morton tile-cell ranges (aoi_cell_ranges) ->
-    manifest file pruning -> PIP join. The cover is a superset of any
-    contained tile, so the join over the pruned read must equal the
-    full-table join row for row while opening fewer files."""
-    from gelos_spark.operators.pip_join import aoi_cell_ranges, pip_join
-    from gelos_spark.sources import synth
-
-    tiles = synth.tracker_df(spark, 8000, seed=42)
-    from gelos_spark.functions.cell_udfs import cell_encode_col
-
-    cells_df = tiles.withColumn(
-        "cell", cell_encode_col(F.col("lon"), F.col("lat"), 16)
-    )
-    t = SnapshotTable(str(tmp_path / "tiles"))
-    t.overwrite(cells_df, cluster_by=["cell"], num_files=16)
-
-    aois = synth.aoi_polygons(6, seed=42)
-    ranges = aoi_cell_ranges(aois)
-    assert ranges  # non-degenerate cover
-
-    pruned = t.read(spark, where={"cell": ranges})
-    got = pip_join(spark, pruned, aois, tile_cell_col="cell")
-    assert 0 < t.last_scan["files_read"] < t.last_scan["files_total"]
-
-    exp = pip_join(spark, t.read(spark), aois, tile_cell_col="cell")
-    g = [tuple(r) for r in got.select("aoi_id", "image_id").collect()]
-    e = [tuple(r) for r in exp.select("aoi_id", "image_id").collect()]
-    assert g == e and len(g) > 0
-
-    # the one-call convenience wires the same pushdown
-    from gelos_spark.operators.pip_join import pip_join_pruned
-
-    conv = pip_join_pruned(spark, t, aois)
-    assert [tuple(r) for r in conv.select("aoi_id", "image_id").collect()] == e
-    assert t.last_scan["files_read"] < t.last_scan["files_total"]
+    t.append(_cells_df(spark, 200), cluster_by=["cell"], num_files=2)
+    for pred in ([(0, 60_000), (500_000, 560_000)], [], ((0, 1), (2, 3)), (0, 1, 2)):
+        with pytest.raises(ValueError, match="one \\(lo, hi\\) pair"):
+            t.read(spark, where={"cell": pred})
+        with pytest.raises(ValueError, match="one \\(lo, hi\\) pair"):
+            t.plan_files({"cell": pred})
 
 
 def test_prune_type_mismatch_is_conservative(spark, tmp_path):
@@ -520,26 +466,6 @@ def test_read_delta_incremental_consumption(spark, tmp_path):
     t.compact(spark, target_file_bytes=1 << 20)
     with pytest.raises(ValueError, match="not\\s+append-only"):
         t.read_delta(spark, s2)
-
-
-def test_rollback_switches_current_and_preserves_history(spark, tmp_path):
-    t = SnapshotTable(str(tmp_path / "t"))
-    s1 = t.append(spark.range(0, 10).coalesce(1))
-    s2 = t.append(spark.range(10, 20).coalesce(1))
-    assert t.rollback(s1) == s1
-    assert t.read(spark).count() == 10  # readers see the old state
-    assert t.read(spark, snapshot_id=s2).count() == 20  # s2 still readable
-    # a commit after rollback starts a NEW history without reusing s2
-    s3 = t.append(spark.range(100, 103).coalesce(1))
-    assert s3 == s2 + 1
-    assert t.read(spark).count() == 13
-    assert t.read(spark, snapshot_id=s2).count() == 20  # untouched
-    assert t._committed_chain() == [s1, s3]
-    # expire reclaims the superseded branch
-    t.expire_snapshots(keep_last=2)
-    assert t.snapshots() == [s1, s3]
-    with pytest.raises(ValueError, match="committed chain"):
-        t.rollback(s2)
 
 
 # ------------------------------------- checkpoint bookkeeping (driver)

@@ -1,15 +1,14 @@
 """Text-analysis column builders vs pure-Python/NumPy references.
 
-The SQL-expressible ones (langid, token_count, quality, md5
-fingerprint) are DuckDB-oracle-checked through the driver contract;
-``rolling_fingerprint_col`` folds crc32 word hashes (no DuckDB
-analog), so its oracle lives here: an exact zlib.crc32 reference.
+The SQL-expressible ones (langid, token_count, quality, md5 and
+rolling fingerprints) are DuckDB-oracle-checked through the driver
+contract; here the rolling fingerprint is pinned on the properties
+that make it a fingerprint: word order and partitioning.
 """
 
 from __future__ import annotations
 
 import re
-import zlib
 
 import pytest
 
@@ -17,24 +16,6 @@ import pandas as pd
 from pyspark.sql import functions as F
 
 from gelos_spark.functions import text as tx
-
-MOD = (1 << 61) - 1
-BASE = 257
-
-
-def rolling_ref(text: str, modulus: int = MOD, base: int = 257) -> int:
-    """Reference rolling hash: fold h = (h*base + crc32(word)) % p over
-    the first 32 lowercased whitespace-split words. The explicit class
-    [ \\t\\n\\x0b\\f\\r] is exactly Java's \\s (the engine tokenizer's
-    semantics) — unlike Python's Unicode-aware \\s, which would also
-    split on \\xa0/\\u2028 and silently diverge; both keep
-    leading/trailing empty tokens at limit -1."""
-    words = re.split(r"[ \t\n\x0b\f\r]+", (text or "").lower())[:32]
-    h = 0
-    for w in words:
-        h = (h * base + zlib.crc32(w.encode("utf-8"))) % modulus
-    return h
-
 
 TEXTS = [
     "The quick brown fox jumps over the lazy dog",
@@ -45,53 +26,43 @@ TEXTS = [
     "",
     "single",
     "unicode façade naïve — ünïcödé tokens",
-    " ".join(f"w{i}" for i in range(100)),  # > 32 words: only first 32 count
-    " ".join(f"w{i}" for i in range(32)),  # exactly the first-32 prefix
+    " ".join(f"w{i}" for i in range(100)),  # > 128 chars: only the prefix counts
+    " ".join(f"w{i}" for i in range(100))[:128],  # exactly that prefix
     "tabs\tand\nnewlines   collapse",
-    "vertical\x0btab splits in java regex but not re2 \\s",
-    "nbsp\xa0and line-sep do NOT split (java \\s is ascii-only)",
 ]
 
 
-def test_rolling_fingerprint_matches_crc32_reference(spark):
-    df = spark.createDataFrame(
-        pd.DataFrame({"doc_id": range(len(TEXTS)), "text": TEXTS})
-    )
-    got = {
+def _fingerprints(df) -> dict:
+    return {
         r["doc_id"]: r["rfp"]
         for r in df.select(
-            "doc_id", tx.rolling_fingerprint_col("text").alias("rfp")
+            "doc_id", tx.rolling_fingerprint_ascii_col("text").alias("rfp")
         ).collect()
     }
-    for i, t in enumerate(TEXTS):
-        assert got[i] == rolling_ref(t), f"doc {i}: {t!r}"
+
+
+def _docs(spark):
+    return spark.createDataFrame(
+        pd.DataFrame({"doc_id": range(len(TEXTS)), "text": TEXTS})
+    )
 
 
 def test_rolling_fingerprint_is_order_sensitive(spark):
-    # same word bag, different order -> different fingerprint (the
-    # property that distinguishes it from the md5 bag fingerprint)
-    assert rolling_ref(TEXTS[1]) != rolling_ref(TEXTS[2])
-    # >32-word doc fingerprints only its first-32-word prefix
-    assert rolling_ref(TEXTS[8]) == rolling_ref(" ".join(f"w{i}" for i in range(32)))
+    got = _fingerprints(_docs(spark))
+    # same characters, different word order -> different fingerprint
+    # (the property that distinguishes it from the md5 bag fingerprint)
+    assert got[1] != got[2]
+    assert got[0] == got[1]  # case-folded
+    # a doc longer than n_chars fingerprints only its prefix
+    assert got[8] == got[9]
+    assert len(set(got.values())) == len(TEXTS) - 2
 
 
 def test_rolling_fingerprint_partitioning_invariant(spark):
-    df = spark.createDataFrame(
-        pd.DataFrame({"doc_id": range(len(TEXTS)), "text": TEXTS})
-    )
-    a = sorted(
-        (r["doc_id"], r["rfp"])
-        for r in df.coalesce(1)
-        .select("doc_id", tx.rolling_fingerprint_col("text").alias("rfp"))
-        .collect()
-    )
-    b = sorted(
-        (r["doc_id"], r["rfp"])
-        for r in df.repartition(7)
-        .select("doc_id", tx.rolling_fingerprint_col("text").alias("rfp"))
-        .collect()
-    )
-    assert a == b
+    df = _docs(spark)
+    a = _fingerprints(df.coalesce(1))
+    b = _fingerprints(df.repartition(7))
+    assert a == b and len(a) == len(TEXTS)
 
 
 def test_top_terms_brute_force_and_grouped(spark):
