@@ -26,8 +26,10 @@ Design notes for 100 TB scale:
     drops it. A caller that needs durability writes the result (a
     ``Pipeline.stage`` commit) or calls ``df.checkpoint()``.
 
-All text hashing uses splitmix64 over UTF-8 shingle bytes — seeded,
-platform-independent, reproducible.
+The text kernels hash UTF-8 shingle and token bytes with seeded 64-bit
+FNV-1a (``_fnv_ragged``) — platform-independent, reproducible. The
+``portable`` twins swap it for polynomial mixes mod 2^31-1 that SQL
+recomputes exactly.
 """
 
 from __future__ import annotations

@@ -109,15 +109,15 @@ class Pipeline:
         rows_in: int = -1,
         cluster_by: list[str] | None = None,
         num_files: int | None = None,
-    ) -> DataFrame:
-        """Run (or resume-skip) one stage; returns its committed
-        output. ``cluster_by`` commits the stage table range-sorted on
-        the given keys so manifest min/max stats prune later range
-        scans (tables/snapshot.py)."""
+    ) -> None:
+        """Run (or resume-skip) one stage; ``output(name)`` reads what
+        it committed. ``cluster_by`` commits the stage table
+        range-sorted on the given keys so manifest min/max stats prune
+        later range scans (tables/snapshot.py)."""
         tbl = self.table(name)
         if name in self.log.done_stages(self.run_id):
             self.skipped.append(name)
-            return tbl.read(self.spark)
+            return
 
         t0 = time.time()
         df = fn(self.spark)
@@ -148,5 +148,4 @@ class Pipeline:
         )
         self.log.record(lineage)
         self.executed.append(name)
-        return tbl.read(self.spark)
 

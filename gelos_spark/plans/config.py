@@ -1,8 +1,8 @@
 """Config-driven pipeline assembly (SURVEY.md §2.8 U3).
 
-The reference builds entire runs from YAML: jsonargparse turns
-``class_path``/``init_args`` dicts into live datamodule/task objects
-(/root/reference/gelos/embedding_generation.py:63-75), and the
+The reference builds entire runs from YAML: jsonargparse binds each
+``class_path``/``init_args`` mapping against the target's signature
+and instantiates it (gelos/embedding_generation.py:63-75), and the
 documented example config must round-trip (instantiate + execute) in
 tests (tests/test_data.py:368-399). The engine analog maps a YAML (or
 plain-dict) stage list onto ``plans.checkpoint.Pipeline``: each stage
@@ -12,130 +12,99 @@ prior stage's committed output. Because stages run through Pipeline,
 every config-built run inherits checkpoint lineage + idempotent
 resume for free.
 
-Registered ops are thin adapters over the public operator modules;
-new ops register with ``@op("name")`` — the extensibility surface the
-reference exposes via dataset subclassing (gelos/gelosdataset.py:77).
+A stage's ``args`` are the keyword arguments of the op's callable, and
+its signature is the one statement of what the stage accepts:
+``validate_config`` binds every stage before any runs, so an unknown
+key, or a parameter with no default that is absent or null, is a
+``ValueError`` naming the stage. A new op is one ``_OPS`` entry — the
+extensibility surface the reference exposes via dataset subclassing
+(gelos/gelosdataset.py:77): the callable (the operator itself where its
+signature already is the stage's contract, else a small adapter
+below), the leading positional arguments the runner passes, and the
+args that name earlier stages.
 """
 
 from __future__ import annotations
 
+import inspect
+import os
+import re
 from collections.abc import Callable
-from typing import Any
+from dataclasses import dataclass, field
 
+import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from gelos_spark.functions import sampling, sessions
+from gelos_spark.functions import text as tx
+from gelos_spark.functions.cell_udfs import cell_encode_col
+from gelos_spark.operators import dedup, images, multisensor, similarity
+from gelos_spark.operators import projection as prj
+from gelos_spark.operators.asof import asof_join
+from gelos_spark.operators.interval import range_join
+from gelos_spark.operators.knn_join import knn_join
+from gelos_spark.operators.model import embed_stacks
+from gelos_spark.operators.pip_join import pip_join
+from gelos_spark.operators.plotting import scatter_png
+from gelos_spark.operators.pyramid import vector_pyramid
 from gelos_spark.plans.checkpoint import Pipeline
-
-_OPS: dict[str, Callable[..., DataFrame]] = {}
-# declared contract per op: which arg keys MUST be present, and
-# whether the stage needs ``input`` wiring — validated up front at
-# build time, so a KeyError escaping an operator is a genuine
-# operator bug, never silently relabelled as a config error
-_OP_REQUIRED: dict[str, tuple[str, ...]] = {}
-_OP_NEEDS_INPUT: dict[str, bool] = {}
+from gelos_spark.sources import synth
+from gelos_spark.sources.aoi import read_aoi_geojson
+from gelos_spark.sources.tracker import read_tracker
+from gelos_spark.tables import bucketed
 
 
-def op(name: str, required: tuple[str, ...] = (), needs_input: bool = False):
-    def reg(fn):
-        _OPS[name] = fn
-        _OP_REQUIRED[name] = tuple(required)
-        _OP_NEEDS_INPUT[name] = needs_input
-        return fn
+@dataclass(frozen=True)
+class _Op:
+    """A registered op: the runner calls ``fn([spark,] [input,] **args)``
+    after replacing each ``refs`` arg — a stage name, or a list of them
+    where the value is ``list`` — with the named stages' outputs."""
 
-    return reg
-
-
-def registered_ops() -> list[str]:
-    return sorted(_OPS)
+    fn: Callable[..., DataFrame]
+    spark: bool = False  # pass the SparkSession first
+    needs_input: bool = False  # then the ``input`` stage's frame
+    refs: dict[str, type] = field(default_factory=dict)
 
 
-# ----------------------------------------------------------- op set
-# each op: (spark, pipe, conf: dict) -> DataFrame.  ``conf`` is the
-# stage's ``args`` dict; ``conf["__input__"]`` (injected by the
-# runner from the stage's ``input`` key) is the upstream DataFrame.
+# ---------------------------------------------------------- adapters
+# One per op whose operator signature is not already the stage's
+# contract: a renamed or hidden parameter, a different default, or
+# real logic. Parameters after the leading positional ones are the
+# stage's ``args``.
 
 
-@op("synth_tracker", required=("n",))
-def _op_synth_tracker(spark: SparkSession, pipe: Pipeline, conf: dict) -> DataFrame:
-    from gelos_spark.sources import synth
-
-    return synth.tracker_df(spark, int(conf["n"]), seed=int(conf.get("seed", 42)))
+def _op_synth_tracker(spark: SparkSession, *, n: int, seed: int = 42) -> DataFrame:
+    return synth.tracker_df(spark, int(n), seed=int(seed))
 
 
-@op("synth_images", required=("n",))
-def _op_synth_images(spark: SparkSession, pipe: Pipeline, conf: dict) -> DataFrame:
-    from gelos_spark.sources import synth
-
-    return synth.images_df(
-        spark, int(conf["n"]), w=int(conf.get("w", 64)), seed=int(conf.get("seed", 42))
-    )
+def _op_synth_images(spark: SparkSession, *, n: int, w: int = 64, seed: int = 42) -> DataFrame:
+    return synth.images_df(spark, int(n), w=int(w), seed=int(seed))
 
 
-@op("cell_encode", needs_input=True)
-def _op_cell_encode(spark: SparkSession, pipe: Pipeline, conf: dict) -> DataFrame:
-    from gelos_spark.functions.cell_udfs import cell_encode_col
-
-    df = conf["__input__"]
-    res = int(conf.get("res", 16))
-    return df.withColumn(
-        conf.get("out_col", "cell"),
-        cell_encode_col(F.col(conf.get("lon_col", "lon")), F.col(conf.get("lat_col", "lat")), res),
-    )
+def _op_cell_encode(
+    df: DataFrame, *, res: int = 16, out_col: str = "cell", lon_col: str = "lon",
+    lat_col: str = "lat",
+) -> DataFrame:
+    return df.withColumn(out_col, cell_encode_col(F.col(lon_col), F.col(lat_col), int(res)))
 
 
-@op("pip_join", needs_input=True)
-def _op_pip_join(spark: SparkSession, pipe: Pipeline, conf: dict) -> DataFrame:
-    from gelos_spark.operators.pip_join import pip_join
-    from gelos_spark.sources import synth
-
-    if "aoi_geojson" in conf:
+def _op_pip_join(
+    spark: SparkSession, df: DataFrame, *, aoi_geojson: str | None = None,
+    aoi_id_key: str | None = None, n_aois: int = 16, seed: int = 42,
+    aoi_vertices: int | None = None, tile_cell_col: str | None = None, ordered: bool = False,
+) -> DataFrame:
+    if aoi_geojson is not None:
         # real AOI inputs (Polygon/MultiPolygon incl. holes)
-        from gelos_spark.sources.aoi import read_aoi_geojson
-
-        aois = read_aoi_geojson(conf["aoi_geojson"], id_key=conf.get("aoi_id_key"))
+        aois = read_aoi_geojson(aoi_geojson, id_key=aoi_id_key)
     else:
-        aois = synth.aoi_polygons(
-            int(conf.get("n_aois", 16)),
-            seed=int(conf.get("seed", 42)),
-            vertices=conf.get("aoi_vertices"),
-        )
-    return pip_join(
-        spark,
-        conf["__input__"],
-        aois,
-        tile_cell_col=conf.get("tile_cell_col"),
-        ordered=bool(conf.get("ordered", False)),
-    )
+        aois = synth.aoi_polygons(int(n_aois), seed=int(seed), vertices=aoi_vertices)
+    return pip_join(spark, df, aois, tile_cell_col=tile_cell_col, ordered=bool(ordered))
 
 
-@op("vector_pyramid", required=("leaf_res", "min_res"), needs_input=True)
-def _op_vector_pyramid(spark: SparkSession, pipe: Pipeline, conf: dict) -> DataFrame:
-    from gelos_spark.operators.pyramid import vector_pyramid
-
-    return vector_pyramid(
-        conf["__input__"],
-        int(conf["leaf_res"]),
-        int(conf["min_res"]),
-        cat_col=conf.get("cat_col", "lulc"),
-    )
-
-
-@op("decode_stats", needs_input=True)
-def _op_decode_stats(spark: SparkSession, pipe: Pipeline, conf: dict) -> DataFrame:
-    from gelos_spark.operators import images as imops
-
-    return imops.decode_stats(conf["__input__"])
-
-
-@op("sample_n", required=("n",), needs_input=True)
-def _op_sample_n(spark: SparkSession, pipe: Pipeline, conf: dict) -> DataFrame:
-    from gelos_spark.operators.projection import sample_ids_hash_order
-
-    return sample_ids_hash_order(
-        conf["__input__"], conf.get("id_col", "image_id"), int(conf["n"]),
-        seed=int(conf.get("seed", 42)),
-    )
+def _op_sample_n(df: DataFrame, *, n: int, id_col: str = "image_id", seed: int = 42) -> DataFrame:
+    return prj.sample_ids_hash_order(df, id_col, int(n), seed=int(seed))
 
 
 # -------------------------- model-inference chain (U2 completion):
@@ -145,131 +114,74 @@ def _op_sample_n(spark: SparkSession, pipe: Pipeline, conf: dict) -> DataFrame:
 # embedding_generation.py:63-79, tsne_transform.py:8-11)
 
 
-@op("synth_multisensor", required=("n",))
-def _op_synth_multisensor(spark: SparkSession, pipe: Pipeline, conf: dict) -> DataFrame:
-    from gelos_spark.operators import multisensor as ms
-
-    return ms.multisensor_df(
-        spark,
-        int(conf["n"]),
-        sensors=conf.get("sensors"),
-        t_steps=int(conf.get("t_steps", 3)),
-        w=int(conf.get("w", 16)),
-        seed=int(conf.get("seed", 42)),
+def _op_synth_multisensor(
+    spark: SparkSession, *, n: int, sensors: dict | None = None, t_steps: int = 3,
+    w: int = 16, seed: int = 42,
+) -> DataFrame:
+    return multisensor.multisensor_df(
+        spark, int(n), sensors=sensors, t_steps=int(t_steps), w=int(w), seed=int(seed)
     )
 
 
-@op("stack_sensors", required=("bands",), needs_input=True)
-def _op_stack_sensors(spark: SparkSession, pipe: Pipeline, conf: dict) -> DataFrame:
-    from gelos_spark.operators import multisensor as ms
+def _op_stack_sensors(
+    df: DataFrame, *, bands: dict, want: dict | None = None, output: str = "dict",
+    repeat_t: int = 1,
+) -> DataFrame:
+    return multisensor.stack_sensors(df, bands, want=want, output=output, repeat_t=int(repeat_t))
 
-    return ms.stack_sensors(
-        conf["__input__"],
-        conf["bands"],
-        want=conf.get("want"),
-        output=conf.get("output", "dict"),
-        repeat_t=int(conf.get("repeat_t", 1)),
+
+def _op_normalize_stacks(
+    df: DataFrame, *, bands: dict, means: dict | None = None, stds: dict | None = None,
+    class_means: dict | None = None, class_stds: dict | None = None,
+) -> DataFrame:
+    return multisensor.normalize_stacks(
+        df, bands, means=means, stds=stds, class_means=class_means, class_stds=class_stds
     )
 
 
-@op("normalize_stacks", required=("bands",), needs_input=True)
-def _op_normalize_stacks(spark: SparkSession, pipe: Pipeline, conf: dict) -> DataFrame:
-    from gelos_spark.operators import multisensor as ms
-
-    return ms.normalize_stacks(
-        conf["__input__"],
-        conf["bands"],
-        means=conf.get("means"),
-        stds=conf.get("stds"),
-        class_means=conf.get("class_means"),
-        class_stds=conf.get("class_stds"),
-    )
+def _op_embed(
+    df: DataFrame, *, model: str = "linear_seeded", model_args: dict | None = None,
+    dtype: str = "float32",
+) -> DataFrame:
+    return embed_stacks(df, model, model_args, dtype=dtype)
 
 
-@op("embed", needs_input=True)
-def _op_embed(spark: SparkSession, pipe: Pipeline, conf: dict) -> DataFrame:
-    from gelos_spark.operators.model import embed_stacks
-
-    return embed_stacks(
-        conf["__input__"],
-        conf.get("model", "linear_seeded"),
-        conf.get("model_args"),
-        dtype=conf.get("dtype", "float32"),
-    )
+def _op_pca_project(
+    df: DataFrame, *, vec_col: str = "embedding", k: int = 2, id_col: str = "image_id"
+) -> DataFrame:
+    model = prj.pca_train(df, vec_col=vec_col, k=int(k))
+    return prj.pca_project(df, model, id_col=id_col, vec_col=vec_col)
 
 
-@op("pca_project", needs_input=True)
-def _op_pca_project(spark: SparkSession, pipe: Pipeline, conf: dict) -> DataFrame:
-    from gelos_spark.operators import projection as prj
-
-    df = conf["__input__"]
-    vec_col = conf.get("vec_col", "embedding")
-    model = prj.pca_train(df, vec_col=vec_col, k=int(conf.get("k", 2)))
-    return prj.pca_project(
-        df, model, id_col=conf.get("id_col", "image_id"), vec_col=vec_col
-    )
+def _op_resize(df: DataFrame, *, w: int, h: int, fmt: str = "raw") -> DataFrame:
+    return images.resize(df, int(w), int(h), fmt=fmt)
 
 
-@op("resize", required=("w", "h"), needs_input=True)
-def _op_resize(spark: SparkSession, pipe: Pipeline, conf: dict) -> DataFrame:
-    from gelos_spark.operators import images as imops
-
-    return imops.resize(
-        conf["__input__"], int(conf["w"]), int(conf["h"]), fmt=conf.get("fmt", "raw")
-    )
-
-
-@op("frame_sample", required=("sensors", "stride"), needs_input=True)
-def _op_frame_sample(spark: SparkSession, pipe: Pipeline, conf: dict) -> DataFrame:
-    from gelos_spark.operators import multisensor as ms
-
-    return ms.frame_sample(
-        conf["__input__"], list(conf["sensors"]), int(conf["stride"]),
-        offset=int(conf.get("offset", 0)),
-    )
-
-
-@op("plot_scatter", required=("x_col", "y_col", "cat_col", "path"), needs_input=True)
-def _op_plot_scatter(spark: SparkSession, pipe: Pipeline, conf: dict) -> DataFrame:
+def _op_plot_scatter(
+    spark: SparkSession, df: DataFrame, *, x_col: str, y_col: str, cat_col: str,
+    path: str, size: int = 900, point: int = 3,
+) -> DataFrame:
     """S8 figure sink as a pipeline stage (the reference's
     transformation CLI ends in category-colored scatters,
     gelos/plotting.py:48-58): render the upstream coordinate frame
     through the engine's own PNG writer, commit a 1-row metadata
     frame (path, points, bytes) so the figure rides the lineage."""
-    import os
-
-    from gelos_spark.operators.plotting import scatter_png
-
-    pdf = conf["__input__"].toPandas()
-    meta = scatter_png(
-        pdf,
-        conf["x_col"],
-        conf["y_col"],
-        conf["cat_col"],
-        conf["path"],
-        size=int(conf.get("size", 900)),
-        point=int(conf.get("point", 3)),
-    )
+    meta = scatter_png(df.toPandas(), x_col, y_col, cat_col, path, size=int(size), point=int(point))
     return spark.createDataFrame(
         [(meta["path"], int(meta["n_points"]), int(os.path.getsize(meta["path"])))],
         "path string, n_points long, bytes long",
     )
 
 
-@op("tsne", needs_input=True)
-def _op_tsne(spark: SparkSession, pipe: Pipeline, conf: dict) -> DataFrame:
-    from gelos_spark.operators import projection as prj
-
+def _op_tsne(
+    spark: SparkSession, df: DataFrame, *, id_col: str = "image_id",
+    vec_col: str = "embedding", model_name: str = "engine", strategy: str = "full",
+    n_sample: int = 1000, perplexity: float = 30.0, n_iter: int = 300, seed: int = 42,
+) -> DataFrame:
     pdf = prj.tsne_coords(
-        conf["__input__"],
-        id_col=conf.get("id_col", "image_id"),
-        vec_col=conf.get("vec_col", "embedding"),
-        model_name=conf.get("model_name", "engine"),
-        strategy=conf.get("strategy", "full"),
-        n_sample=int(conf.get("n_sample", 1000)),
-        perplexity=float(conf.get("perplexity", 30.0)),
-        n_iter=int(conf.get("n_iter", 300)),
-        seed=int(conf.get("seed", 42)),
+        df, id_col=id_col, vec_col=vec_col, model_name=model_name, strategy=strategy,
+        n_sample=int(n_sample), perplexity=float(perplexity), n_iter=int(n_iter),
+        seed=int(seed),
     )
     return spark.createDataFrame(pdf)
 
@@ -278,140 +190,57 @@ def _op_tsne(spark: SparkSession, pipe: Pipeline, conf: dict) -> DataFrame:
 # (round 4): the declarative surface previously reached only the
 # geospatial/model chain; a pipeline author could not read an
 # external table or run the dedup / text / similarity family from
-# YAML. Thin adapters only — every kernel lives in its module.
+# YAML. Every kernel lives in its module.
 
 
-@op("read_parquet", required=("path",))
-def _op_read_parquet(spark: SparkSession, pipe: Pipeline, conf: dict) -> DataFrame:
-    df = spark.read.parquet(conf["path"])
-    cols = conf.get("columns")
-    return df.select(*cols) if cols else df
+def _op_read_parquet(spark: SparkSession, *, path: str, columns: list | None = None) -> DataFrame:
+    df = spark.read.parquet(path)
+    return df.select(*columns) if columns else df
 
 
-@op("read_tracker", required=("path",))
-def _op_read_tracker(spark: SparkSession, pipe: Pipeline, conf: dict) -> DataFrame:
-    from gelos_spark.sources.tracker import read_tracker
-
-    return read_tracker(spark, conf["path"], schema=conf.get("schema"))
+def _op_dedup_exact(df: DataFrame, *, key_cols: list, id_col: str = "doc_id") -> DataFrame:
+    return dedup.dedup_exact(df, key_cols=list(key_cols), id_col=id_col)
 
 
-@op("dedup_exact", required=("key_cols",), needs_input=True)
-def _op_dedup_exact(spark: SparkSession, pipe: Pipeline, conf: dict) -> DataFrame:
-    from gelos_spark.operators import dedup
-
-    return dedup.dedup_exact(
-        conf["__input__"],
-        key_cols=list(conf["key_cols"]),
-        id_col=conf.get("id_col", "doc_id"),
-    )
-
-
-@op("minhash_pairs", needs_input=True)
-def _op_minhash_pairs(spark: SparkSession, pipe: Pipeline, conf: dict) -> DataFrame:
-    from gelos_spark.operators import dedup
-
-    return dedup.minhash_lsh_pairs(
-        conf["__input__"],
-        id_col=conf.get("id_col", "doc_id"),
-        text_col=conf.get("text_col", "text"),
-        num_hashes=int(conf.get("num_hashes", 128)),
-        bands=int(conf.get("bands", 32)),
-        shingle_k=int(conf.get("shingle_k", 5)),
-        seed=int(conf.get("seed", 42)),
-        min_jaccard=float(conf.get("min_jaccard", 0.5)),
-        # SQL-reproducible kernel (the minhash_portable oracle path)
-        portable=bool(conf.get("portable", False)),
-    )
-
-
-@op("simhash_pairs", needs_input=True)
-def _op_simhash_pairs(spark: SparkSession, pipe: Pipeline, conf: dict) -> DataFrame:
-    from gelos_spark.operators import dedup
-
-    return dedup.simhash_pairs(
-        conf["__input__"],
-        id_col=conf.get("id_col", "doc_id"),
-        text_col=conf.get("text_col", "text"),
-        max_hamming=int(conf.get("max_hamming", 3)),
-        seed=int(conf.get("seed", 42)),
-        # SQL-reproducible kernel (the simhash_portable oracle path)
-        portable=bool(conf.get("portable", False)),
-    )
-
-
-@op("hash_split", required=("weights",), needs_input=True)
-def _op_hash_split(spark: SparkSession, pipe: Pipeline, conf: dict) -> DataFrame:
+def _op_hash_split(
+    df: DataFrame, *, weights: dict, id_col: str = "doc_id", seed: int = 42,
+    split_col: str = "split",
+) -> DataFrame:
     """Deterministic train/val/test assignment by id-hash bucket
     (functions/sampling.hash_split): stable across runs, partitionings
     and cluster sizes — resume-safe, unlike RNG randomSplit."""
-    from gelos_spark.functions import sampling
-
     return sampling.hash_split(
-        conf["__input__"],
-        id_col=conf.get("id_col", "doc_id"),
-        weights={str(k): float(v) for k, v in dict(conf["weights"]).items()},
-        seed=int(conf.get("seed", 42)),
-        split_col=conf.get("split_col", "split"),
+        df,
+        id_col=id_col,
+        weights={str(k): float(v) for k, v in dict(weights).items()},
+        seed=int(seed),
+        split_col=split_col,
     )
 
 
-@op("hash_sample", required=("fraction",), needs_input=True)
-def _op_hash_sample(spark: SparkSession, pipe: Pipeline, conf: dict) -> DataFrame:
+def _op_hash_sample(
+    df: DataFrame, *, fraction: float | dict, id_col: str = "doc_id",
+    strata_col: str | None = None, seed: int = 42,
+) -> DataFrame:
     """Deterministic (optionally stratified) subsample by id-hash
     bucket — the resume-safe twin of sample/sampleBy; nested fractions
     are supersets."""
-    from gelos_spark.functions import sampling
-
-    frac = conf["fraction"]
-    if isinstance(frac, dict):
-        frac = {str(k): float(v) for k, v in frac.items()}
+    if isinstance(fraction, dict):
+        fraction = {str(k): float(v) for k, v in fraction.items()}
     else:
-        frac = float(frac)
+        fraction = float(fraction)
     return sampling.deterministic_sample(
-        conf["__input__"],
-        id_col=conf.get("id_col", "doc_id"),
-        fraction=frac,
-        strata_col=conf.get("strata_col"),
-        seed=int(conf.get("seed", 42)),
+        df, id_col=id_col, fraction=fraction, strata_col=strata_col, seed=int(seed)
     )
 
 
-@op("connected_components", needs_input=True)
-def _op_connected_components(spark: SparkSession, pipe: Pipeline, conf: dict) -> DataFrame:
-    """A pairs stage -> (id, component): transitive duplicate
-    clusters (operators/dedup) — a driver union-find up to
-    ``DRIVER_CC_EDGES`` edges, large-star/small-star contraction
-    above; ``max_rounds`` bounds the contraction loop."""
-    from gelos_spark.operators import dedup
-
-    return dedup.connected_components(
-        conf["__input__"],
-        left=conf.get("left", "id_a"),
-        right=conf.get("right", "id_b"),
-        max_rounds=int(conf.get("max_rounds", 25)),
-    )
-
-
-@op("dedup_near", required=("pairs",), needs_input=True)
-def _op_dedup_near(spark: SparkSession, pipe: Pipeline, conf: dict) -> DataFrame:
-    """Input corpus + a committed pairs stage (``pairs: <stage name>``)
-    -> corpus annotated with (component, is_canonical), or one
-    survivor per duplicate cluster with ``keep: canonical`` — the
-    near-dup twin of the dedup_exact op."""
-    from gelos_spark.operators import dedup
-
-    return dedup.dedup_near(
-        conf["__input__"],
-        pipe.output(conf["pairs"]),
-        id_col=conf.get("id_col", "doc_id"),
-        left=conf.get("left", "id_a"),
-        right=conf.get("right", "id_b"),
-        keep=conf.get("keep", "all"),
-    )
-
-
-@op("ann_topk", required=("k",), needs_input=True)
-def _op_ann_topk(spark: SparkSession, pipe: Pipeline, conf: dict) -> DataFrame:
+def _op_ann_topk(
+    spark: SparkSession, df: DataFrame, *, k: int, id_col: str = "vec_id",
+    vec_col: str = "embedding", query_ids: list | None = None,
+    max_query_ids: int = 10_000, method: str = "lsh", seed: int = 42, nbits: int = 12,
+    ntables: int = 6, n_centroids: int = 16, iters: int = 3, nprobe: int = 4,
+    portable: bool = False,
+) -> DataFrame:
     """Similarity search as a pipeline stage over an embedding frame:
     ``method: lsh`` (default — bucketed, corpus-scale), ``ivf``
     (train + index + probe in one stage; ``n_centroids``/``nprobe``/
@@ -425,23 +254,19 @@ def _op_ann_topk(spark: SparkSession, pipe: Pipeline, conf: dict) -> DataFrame:
     invert the author's intent. The id list builds an ``isin`` and is
     bounded like the knn/brute query contracts: request-sized only
     (> ``max_query_ids``, default 10k, raises — drive corpus-sized
-    query sets through the self-search path instead)."""
-    from gelos_spark.operators import similarity
-
-    df = conf["__input__"]
-    id_col = conf.get("id_col", "vec_id")
-    vec_col = conf.get("vec_col", "embedding")
-    qids = conf.get("query_ids")
-    # materialize ONCE: a generator/iterator conf value would be
-    # exhausted by the first guard and silently reach isin([]) below
-    qids = None if qids is None else list(qids)
+    query sets through the self-search path instead). ``portable``
+    selects the SQL-reproducible kernels (the lsh/ivf_portable
+    oracle paths)."""
+    # materialize ONCE: a generator/iterator value would be exhausted
+    # by the first guard and silently reach isin([]) below
+    qids = None if query_ids is None else list(query_ids)
     if qids is not None and len(qids) == 0:
         raise ValueError(
             "ann_topk: query_ids is an empty list — refusing to silently fall "
             "back to full corpus x corpus self-search; omit the key (or set it "
             "to null) if self-search is intended"
         )
-    max_qids = int(conf.get("max_query_ids", 10_000))
+    max_qids = int(max_query_ids)
     if qids is not None and len(qids) > max_qids:
         raise ValueError(
             f"ann_topk: {len(qids)} query_ids > max_query_ids={max_qids} "
@@ -449,9 +274,7 @@ def _op_ann_topk(spark: SparkSession, pipe: Pipeline, conf: dict) -> DataFrame:
             "sets should use the self-search path or a join-based filter)"
         )
     queries = df.where(F.col(id_col).isin(qids)) if qids else df
-    k = int(conf["k"])
-    seed = int(conf.get("seed", 42))
-    method = conf.get("method", "lsh")
+    k, seed, portable = int(k), int(seed), bool(portable)
     if method == "brute":
         return similarity.brute_force_topk(
             df, queries, k=k, id_col=id_col, vec_col=vec_col,
@@ -459,23 +282,16 @@ def _op_ann_topk(spark: SparkSession, pipe: Pipeline, conf: dict) -> DataFrame:
         )
     if method == "lsh":
         return similarity.lsh_topk(
-            spark, df, queries, k=k,
-            nbits=int(conf.get("nbits", 12)), ntables=int(conf.get("ntables", 6)),
+            spark, df, queries, k=k, nbits=int(nbits), ntables=int(ntables),
             seed=seed, id_col=id_col, vec_col=vec_col,
-            qid_col=id_col, qvec_col=vec_col,
-            # SQL-reproducible planes (the lsh_portable oracle path)
-            portable=bool(conf.get("portable", False)),
+            qid_col=id_col, qvec_col=vec_col, portable=portable,
         )
     if method == "ivf":
-        n_cents = int(conf.get("n_centroids", 16))
-        portable = bool(conf.get("portable", False))
+        n_cents = int(n_centroids)
         if portable:
-            # the SQL-reproducible path (ivf_portable oracle):
             # training-free integer centroids — the quantized first
             # n_centroids corpus vectors by id order — and exact-int
             # scoring
-            import numpy as np
-
             cpdf = df.orderBy(id_col).limit(n_cents).select(vec_col).toPandas()
             cents = np.floor(
                 np.stack([np.asarray(v, dtype=np.float64) for v in cpdf[vec_col]])
@@ -484,16 +300,14 @@ def _op_ann_topk(spark: SparkSession, pipe: Pipeline, conf: dict) -> DataFrame:
             ).astype(np.int64)
         else:
             cents = similarity.ivf_train(
-                df, n_centroids=n_cents,
-                iters=int(conf.get("iters", 3)), seed=seed,
+                df, n_centroids=n_cents, iters=int(iters), seed=seed,
                 id_col=id_col, vec_col=vec_col,
             )
         index = similarity.ivf_index(
             df, cents, id_col=id_col, vec_col=vec_col, quantize=portable
         )
         return similarity.ivf_topk(
-            spark, index, cents, queries, k=k,
-            nprobe=int(conf.get("nprobe", 4)),
+            spark, index, cents, queries, k=k, nprobe=int(nprobe),
             qid_col=id_col, qvec_col=vec_col,
             # request-sized query sets collect; corpus self-search stays
             # distributed end-to-end
@@ -503,94 +317,20 @@ def _op_ann_topk(spark: SparkSession, pipe: Pipeline, conf: dict) -> DataFrame:
     raise ValueError(f"ann_topk method must be 'lsh', 'ivf', or 'brute', got {method!r}")
 
 
-@op("phash_pairs", needs_input=True)
-def _op_phash_pairs(spark: SparkSession, pipe: Pipeline, conf: dict) -> DataFrame:
-    from gelos_spark.operators import dedup
-
-    return dedup.phash_dup_pairs(
-        conf["__input__"],
-        max_hamming=int(conf.get("max_hamming", 4)),
-        id_col=conf.get("id_col", "image_id"),
-        phash_col=conf.get("phash_col", "phash"),
-    )
-
-
-@op("perturb", needs_input=True)
-def _op_perturb(spark: SparkSession, pipe: Pipeline, conf: dict) -> DataFrame:
+def _op_perturb(
+    df: DataFrame, *, bands: list | tuple = (0,), alpha: float = 0.3, seed: int = 42,
+    id_suffix: str | None = None, id_col: str = "image_id",
+) -> DataFrame:
     """F6 seeded band perturbation as a pipeline stage; ``id_suffix``
     renames the perturbed copies so they can be unioned beside their
     originals (the planted-near-dup fixture shape for phash dedup)."""
-    from gelos_spark.operators import images as imops
-
-    out = imops.perturb_bands(
-        conf["__input__"],
-        bands=tuple(conf.get("bands", [0])),
-        alpha=float(conf.get("alpha", 0.3)),
-        seed=int(conf.get("seed", 42)),
-    )
-    suffix = conf.get("id_suffix")
-    if suffix:
-        id_col = conf.get("id_col", "image_id")
-        out = out.withColumn(id_col, F.concat(F.col(id_col), F.lit(suffix)))
+    out = images.perturb_bands(df, bands=tuple(bands), alpha=float(alpha), seed=int(seed))
+    if id_suffix:
+        out = out.withColumn(id_col, F.concat(F.col(id_col), F.lit(id_suffix)))
     return out
 
 
-@op("top_terms", needs_input=True)
-def _op_top_terms(spark: SparkSession, pipe: Pipeline, conf: dict) -> DataFrame:
-    """Vocabulary analysis stage (functions/text.top_terms): k most
-    frequent terms, global or per ``by`` group."""
-    from gelos_spark.functions.text import top_terms
-
-    kw = {k: conf[k] for k in ("text_col", "k", "by", "min_len") if k in conf}
-    return top_terms(conf["__input__"], **kw)
-
-
-@op("quantile_filter", required=("score_col", "keep_frac", "by", "id_col"), needs_input=True)
-def _op_quantile_filter(spark: SparkSession, pipe: Pipeline, conf: dict) -> DataFrame:
-    """Per-group quality gate (functions/sampling.quantile_filter):
-    keep each group's top keep_frac fraction by score."""
-    from gelos_spark.functions.sampling import quantile_filter
-
-    kw = {
-        k: conf[k]
-        for k in ("score_col", "keep_frac", "by", "id_col", "ascending")
-        if k in conf
-    }
-    return quantile_filter(conf["__input__"], **kw)
-
-
-@op("tf_idf", needs_input=True)
-def _op_tf_idf(spark: SparkSession, pipe: Pipeline, conf: dict) -> DataFrame:
-    """Per-document TF-IDF stage (functions/text.tf_idf): term
-    weights, optionally trimmed to each document's top ``k``."""
-    from gelos_spark.functions.text import tf_idf
-
-    kw = {
-        k: conf[k]
-        for k in ("text_col", "id_col", "min_len", "k", "n_docs")
-        if k in conf
-    }
-    return tf_idf(conf["__input__"], **kw)
-
-
-@op("asof_join", required=("right",), needs_input=True)
-def _op_asof_join(spark: SparkSession, pipe: Pipeline, conf: dict) -> DataFrame:
-    """Nearest-event attribution as a pipeline stage: the input stage
-    is the left side, ``right`` names another COMMITTED stage whose
-    latest at-or-before (or ``direction: forward``) row attaches per
-    ``by`` key. See operators/asof.py for the one-shuffle plan."""
-    from gelos_spark.operators.asof import asof_join
-
-    kw = {
-        k: conf[k]
-        for k in ("on", "by", "right_cols", "direction", "tolerance_us", "tiebreak", "suffix")
-        if k in conf
-    }
-    return asof_join(conf["__input__"], pipe.output(conf["right"]), **kw)
-
-
-@op("sql", required=("query",), needs_input=True)
-def _op_sql(spark: SparkSession, pipe: Pipeline, conf: dict) -> DataFrame:
+def _op_sql(spark: SparkSession, df: DataFrame, *, query: str) -> DataFrame:
     """Ad-hoc SQL stage: one SELECT over the input stage, referenced
     as ``{df}`` or the ``__input__`` identifier (rewritten to the
     ``{df}`` formatter marker — the DataFrame binds through
@@ -598,99 +338,63 @@ def _op_sql(spark: SparkSession, pipe: Pipeline, conf: dict) -> DataFrame:
     could clobber a caller's) — the declarative escape hatch for
     projections/derivations no dedicated op covers (still a single
     Catalyst plan; no Python in the loop)."""
-    import re as _re
-
-    q = conf["query"]
-    if "{df}" not in q:
+    if "{df}" not in query:
         # rewrite the __input__ identifier to the parameter marker so
         # the DataFrame binds through spark.sql's formatter (which
         # registers a uniquely-named view internally) — NEVER a
         # session temp view literally named __input__, which would
         # clobber and then drop a caller's view of the same name
-        q = _re.sub(r"\b__input__\b", "{df}", q)
-    return spark.sql(q, df=conf["__input__"])
+        query = re.sub(r"\b__input__\b", "{df}", query)
+    return spark.sql(query, df=df)
 
 
-@op("range_join", required=("intervals",), needs_input=True)
-def _op_range_join(spark: SparkSession, pipe: Pipeline, conf: dict) -> DataFrame:
-    """Interval-containment attribution as a pipeline stage: the input
-    stage is the event side, ``intervals`` names another COMMITTED
-    stage of [start, end) rows. See operators/interval.py for the
-    explode-to-buckets equi-join plan."""
-    from gelos_spark.operators.interval import range_join
-
-    kw = {
-        k: conf[k]
-        for k in ("on", "start", "end", "by", "interval_cols", "bucket_us", "suffix")
-        if k in conf
-    }
-    return range_join(conf["__input__"], pipe.output(conf["intervals"]), **kw)
-
-
-@op("sessionize", needs_input=True)
-def _op_sessionize(spark: SparkSession, pipe: Pipeline, conf: dict) -> DataFrame:
+def _op_sessionize(
+    df: DataFrame, *, on: str = "ts", by: list | str = "user_id",
+    gap_us: int = 1_800_000_000, stats: bool = False,
+) -> DataFrame:
     """Gap-based session ordinals (functions/sessions.py) as a stage;
     ``stats: true`` emits one row per session instead of per event."""
-    from gelos_spark.functions import sessions
-
-    kw = {k: conf[k] for k in ("on", "by", "gap_us") if k in conf}
-    fn = sessions.session_stats if conf.get("stats") else sessions.sessionize
-    return fn(conf["__input__"], **kw)
+    fn = sessions.session_stats if stats else sessions.sessionize
+    return fn(df, on=on, by=by, gap_us=gap_us)
 
 
-@op("union_stages", required=("others",), needs_input=True)
-def _op_union_stages(spark: SparkSession, pipe: Pipeline, conf: dict) -> DataFrame:
+def _op_union_stages(df: DataFrame, *, others: list, columns: list | None = None) -> DataFrame:
     """Union the input stage with other COMMITTED stages' outputs by
     column name (optional ``columns`` projection applied to every
     side) — the DAG fan-in the single-``input`` wiring can't express."""
-    cols = conf.get("columns")
 
-    def proj(df: DataFrame) -> DataFrame:
-        return df.select(*cols) if cols else df
+    def proj(d: DataFrame) -> DataFrame:
+        return d.select(*columns) if columns else d
 
-    out = proj(conf["__input__"])
-    for name in conf["others"]:
-        out = out.unionByName(proj(pipe.output(name)))
+    out = proj(df)
+    for other in others:
+        out = out.unionByName(proj(other))
     return out
 
 
-@op("text_features", needs_input=True)
-def _op_text_features(spark: SparkSession, pipe: Pipeline, conf: dict) -> DataFrame:
+def _op_text_features(df: DataFrame, *, text_col: str = "text") -> DataFrame:
     """Attach the text-analysis family (language id, quality score,
     token count, fingerprint) as columns — pure column expressions,
     scan-speed."""
-    from gelos_spark.functions import text as tx
-
-    col = conf.get("text_col", "text")
+    col = F.col(text_col)
     return (
-        conf["__input__"]
-        .withColumn("lang", tx.langid_col(F.col(col)))
-        .withColumn("quality", tx.quality_score_col(F.col(col)))
-        .withColumn("n_tokens", tx.token_count_col(F.col(col)))
-        .withColumn("fingerprint", tx.fingerprint_col(F.col(col)))
+        df.withColumn("lang", tx.langid_col(col))
+        .withColumn("quality", tx.quality_score_col(col))
+        .withColumn("n_tokens", tx.token_count_col(col))
+        .withColumn("fingerprint", tx.fingerprint_col(col))
     )
 
 
-@op("knn", required=("queries",), needs_input=True)
-def _op_knn(spark: SparkSession, pipe: Pipeline, conf: dict) -> DataFrame:
+def _op_knn(
+    spark: SparkSession, df: DataFrame, *, queries: list, res: int | None = None,
+    n_tiles_hint: int | None = None,
+) -> DataFrame:
     """kNN retrieval stage: `queries` is a list of [query_id, lon,
     lat, k] rows (config-embedded request set — the driver-resident
     path; from code, knn_join given a Spark query table past its
     max_queries dispatches to knn_join_distributed by itself)."""
-    import pandas as pd
-
-    from gelos_spark.operators.knn_join import knn_join
-
-    q = pd.DataFrame(
-        conf["queries"], columns=["query_id", "lon", "lat", "k"]
-    )
-    return knn_join(
-        spark,
-        conf["__input__"],
-        q,
-        res=conf.get("res"),
-        n_tiles_hint=conf.get("n_tiles_hint"),
-    )
+    q = pd.DataFrame(queries, columns=["query_id", "lon", "lat", "k"])
+    return knn_join(spark, df, q, res=res, n_tiles_hint=n_tiles_hint)
 
 
 # ----------------------- bucketed co-located joins (SURVEY.md §4):
@@ -703,42 +407,35 @@ def _op_knn(spark: SparkSession, pipe: Pipeline, conf: dict) -> DataFrame:
 # embedding_transformation.py:70-73).
 
 
-@op("write_bucketed", required=("table", "key", "n_buckets"), needs_input=True)
-def _op_write_bucketed(spark: SparkSession, pipe: Pipeline, conf: dict) -> DataFrame:
+def _op_write_bucketed(
+    spark: SparkSession, df: DataFrame, *, table: str, key: str, n_buckets: int,
+    mode: str = "overwrite",
+) -> DataFrame:
     """Persist the upstream frame bucketed+sorted by the join key as a
     catalog table; a 1-row metadata frame rides the lineage (table
     name, rows, bucket spec) so the layout commit is resumable and
     auditable like any other stage."""
-    from gelos_spark.tables import bucketed as bk
-
-    df = conf["__input__"]
-    bk.write_bucketed(
-        df, conf["table"], conf["key"], int(conf["n_buckets"]),
-        mode=conf.get("mode", "overwrite"),
-    )
-    rows = spark.table(conf["table"]).count()
+    bucketed.write_bucketed(df, table, key, int(n_buckets), mode=mode)
+    rows = spark.table(table).count()
     return spark.createDataFrame(
-        [(conf["table"], int(rows), int(conf["n_buckets"]), conf["key"])],
+        [(table, int(rows), int(n_buckets), key)],
         "table string, rows long, n_buckets int, key string",
     )
 
 
-@op("bucketed_join", required=("left_table", "right_table", "key"))
-def _op_bucketed_join(spark: SparkSession, pipe: Pipeline, conf: dict) -> DataFrame:
+def _op_bucketed_join(
+    spark: SparkSession, *, left_table: str, right_table: str, key: str,
+    how: str = "inner", require_no_exchange: bool = True,
+) -> DataFrame:
     """Co-located join of two ``write_bucketed`` tables. By default the
     stage REFUSES to run a plan containing a shuffle Exchange — layout
     drift (mismatched keys/bucket counts) silently degrading to a
     double shuffle is exactly the regression this op exists to
     prevent; pass ``require_no_exchange: false`` to allow it."""
-    from gelos_spark.tables import bucketed as bk
-
-    out = bk.colocated_join(
-        spark, conf["left_table"], conf["right_table"], conf["key"],
-        how=conf.get("how", "inner"),
-    )
-    if bool(conf.get("require_no_exchange", True)) and bk.plan_has_exchange(out):
+    out = bucketed.colocated_join(spark, left_table, right_table, key, how=how)
+    if bool(require_no_exchange) and bucketed.plan_has_exchange(out):
         raise ValueError(
-            f"bucketed_join({conf['left_table']}, {conf['right_table']}) plan "
+            f"bucketed_join({left_table}, {right_table}) plan "
             "contains a shuffle Exchange — both tables must be written with "
             "write_bucketed on the same key and n_buckets (set "
             "require_no_exchange: false to run anyway)"
@@ -746,13 +443,76 @@ def _op_bucketed_join(spark: SparkSession, pipe: Pipeline, conf: dict) -> DataFr
     return out
 
 
+# ---------------------------------------------------------- registry
+
+_OPS: dict[str, _Op] = {
+    "synth_tracker": _Op(_op_synth_tracker, spark=True),
+    "synth_images": _Op(_op_synth_images, spark=True),
+    "cell_encode": _Op(_op_cell_encode, needs_input=True),
+    "pip_join": _Op(_op_pip_join, spark=True, needs_input=True),
+    "vector_pyramid": _Op(vector_pyramid, needs_input=True),
+    "decode_stats": _Op(images.decode_stats, needs_input=True),
+    "sample_n": _Op(_op_sample_n, needs_input=True),
+    "synth_multisensor": _Op(_op_synth_multisensor, spark=True),
+    "stack_sensors": _Op(_op_stack_sensors, needs_input=True),
+    "normalize_stacks": _Op(_op_normalize_stacks, needs_input=True),
+    "embed": _Op(_op_embed, needs_input=True),
+    "pca_project": _Op(_op_pca_project, needs_input=True),
+    "resize": _Op(_op_resize, needs_input=True),
+    "frame_sample": _Op(multisensor.frame_sample, needs_input=True),
+    "plot_scatter": _Op(_op_plot_scatter, spark=True, needs_input=True),
+    "tsne": _Op(_op_tsne, spark=True, needs_input=True),
+    "read_parquet": _Op(_op_read_parquet, spark=True),
+    "read_tracker": _Op(read_tracker, spark=True),
+    "dedup_exact": _Op(_op_dedup_exact, needs_input=True),
+    "minhash_pairs": _Op(dedup.minhash_lsh_pairs, needs_input=True),
+    "simhash_pairs": _Op(dedup.simhash_pairs, needs_input=True),
+    "hash_split": _Op(_op_hash_split, needs_input=True),
+    "hash_sample": _Op(_op_hash_sample, needs_input=True),
+    # a pairs stage -> (id, component): transitive duplicate clusters
+    "connected_components": _Op(dedup.connected_components, needs_input=True),
+    # the input corpus + a committed pairs stage -> one survivor per
+    # duplicate cluster (``keep: canonical``) or the annotated corpus
+    "dedup_near": _Op(dedup.dedup_near, needs_input=True, refs={"pairs": str}),
+    "ann_topk": _Op(_op_ann_topk, spark=True, needs_input=True),
+    "phash_pairs": _Op(dedup.phash_dup_pairs, needs_input=True),
+    "perturb": _Op(_op_perturb, needs_input=True),
+    "top_terms": _Op(tx.top_terms, needs_input=True),
+    "quantile_filter": _Op(sampling.quantile_filter, needs_input=True),
+    "tf_idf": _Op(tx.tf_idf, needs_input=True),
+    # the input stage is the left/event side; the ref names the other
+    "asof_join": _Op(asof_join, needs_input=True, refs={"right": str}),
+    "range_join": _Op(range_join, needs_input=True, refs={"intervals": str}),
+    "sql": _Op(_op_sql, spark=True, needs_input=True),
+    "sessionize": _Op(_op_sessionize, needs_input=True),
+    "union_stages": _Op(_op_union_stages, needs_input=True, refs={"others": list}),
+    "text_features": _Op(_op_text_features, needs_input=True),
+    "knn": _Op(_op_knn, spark=True, needs_input=True),
+    "write_bucketed": _Op(_op_write_bucketed, spark=True, needs_input=True),
+    "bucketed_join": _Op(_op_bucketed_join, spark=True),
+}
+
+
+def registered_ops() -> list[str]:
+    return sorted(_OPS)
+
+
+def _settable(entry: _Op) -> dict[str, inspect.Parameter]:
+    """The args a stage of this op may set: the callable's parameters
+    after the leading positional ones the runner passes."""
+    params = list(inspect.signature(entry.fn).parameters.values())
+    return {p.name: p for p in params[entry.spark + entry.needs_input:]}
+
+
 # ------------------------------------------------------------ runner
 
 
 def validate_config(conf: dict) -> None:
     """Fail fast with the reference's validation discipline (unknown
-    band -> ValueError, gelos/gelosdataset.py:61-68): unknown op or
-    missing input wiring is a config error, not a runtime surprise."""
+    band -> ValueError, gelos/gelosdataset.py:61-68): an unknown op or
+    arg, a missing required arg, or input wiring or a stage reference
+    to a stage not defined earlier is a config error, not a runtime
+    surprise."""
     if not isinstance(conf, dict) or "stages" not in conf or not isinstance(conf["stages"], list):
         raise ValueError("config needs a 'stages' list")
     seen: set[str] = set()
@@ -769,6 +529,7 @@ def validate_config(conf: dict) -> None:
             raise ValueError(f"stage name must be a string, got {type(name).__name__}")
         if not isinstance(opname, str) or opname not in _OPS:
             raise ValueError(f"unknown op {opname!r}; registered: {registered_ops()}")
+        entry = _OPS[opname]
         inp = st.get("input")
         if inp is not None and not isinstance(inp, str):
             raise ValueError(
@@ -776,44 +537,42 @@ def validate_config(conf: dict) -> None:
             )
         if inp is not None and inp not in seen:
             raise ValueError(f"stage {name!r} wires input {inp!r} before it is defined")
-        if _OP_NEEDS_INPUT.get(opname) and inp is None:
+        if entry.needs_input and inp is None:
             raise ValueError(f"stage {name!r}: op {opname!r} needs an 'input' stage")
         args = st.get("args") or {}
         if not isinstance(args, dict):
             raise ValueError(
                 f"stage {name!r}: 'args' must be a mapping, got {type(args).__name__}"
             )
-        if opname == "union_stages":
-            others = args.get("others")
-            # a scalar here would TypeError (int) or silently iterate
-            # CHARACTERS (string) — both are config errors, say so
-            if others is not None and not isinstance(others, list):
+        settable = _settable(entry)
+        unknown = [k for k in args if k not in settable]
+        if unknown:
+            hint = (
+                " (YAML 1.1 reads a bare on/off/yes/no key as a boolean: quote it)"
+                if any(isinstance(k, bool) for k in unknown) else ""
+            )
+            raise ValueError(
+                f"stage {name!r} (op {opname!r}) got unknown args {unknown}; "
+                f"it accepts {sorted(settable)}{hint}"
+            )
+        for ref, kind in entry.refs.items():
+            val = args.get(ref)
+            if val is None:
+                continue  # reported as a missing required arg below
+            if not isinstance(val, kind):
+                what = "a list of stage names" if kind is list else "a stage name"
                 raise ValueError(
-                    f"stage {name!r}: 'others' must be a list of stage "
-                    f"names, got {type(others).__name__}"
+                    f"stage {name!r}: {ref!r} must be {what}, got {type(val).__name__}"
                 )
-            for ref in others or []:
-                if ref not in seen:
+            for r in val if kind is list else [val]:
+                if not isinstance(r, str) or r not in seen:
                     raise ValueError(
-                        f"stage {name!r} unions stage {ref!r} before it is defined"
+                        f"stage {name!r}: {ref!r} names stage {r!r} before it is defined"
                     )
-        ref_arg = {"asof_join": "right", "range_join": "intervals"}.get(opname)
-        if ref_arg is not None and args.get(ref_arg) is not None:
-            ref = args[ref_arg]
-            # a non-string ref (list, dict) would TypeError on the set
-            # lookup; a MISSING ref falls through to the required-args
-            # error below instead of a misleading "joins stage None"
-            if not isinstance(ref, str):
-                raise ValueError(
-                    f"stage {name!r}: {ref_arg!r} must be a stage name, "
-                    f"got {type(ref).__name__}"
-                )
-            if ref not in seen:
-                raise ValueError(
-                    f"stage {name!r} joins stage {ref!r} before it is defined"
-                )
         # an explicit `key: null` in YAML is as missing as an absent key
-        missing = [k for k in _OP_REQUIRED.get(opname, ()) if args.get(k) is None]
+        missing = [
+            k for k, p in settable.items() if p.default is p.empty and args.get(k) is None
+        ]
         if missing:
             raise ValueError(
                 f"stage {name!r} (op {opname!r}) is missing required args {missing}"
@@ -832,17 +591,20 @@ def build_pipeline(
         spark, root or conf["root"], run_id or conf.get("run_id", "run1")
     )
     for st in conf["stages"]:
-        args: dict[str, Any] = dict(st.get("args") or {})
-        inp = st.get("input")
 
-        def fn(sp, _op=_OPS[st["op"]], _args=args, _inp=inp):
-            # required args were validated at build time (validate_config)
-            # — any exception from here on is a real operator failure and
+        def fn(sp, _e=_OPS[st["op"]], _args=st.get("args") or {}, _inp=st.get("input")):
+            # args were bound at build time (validate_config) — any
+            # exception from here on is a real operator failure and
             # propagates untranslated
-            if _inp is not None:
-                _args = dict(_args)
-                _args["__input__"] = pipe.output(_inp)
-            return _op(sp, pipe, _args)
+            lead = [sp] if _e.spark else []
+            if _e.needs_input:
+                lead.append(pipe.output(_inp))
+            kw = dict(_args)
+            for ref, kind in _e.refs.items():
+                kw[ref] = (
+                    [pipe.output(r) for r in kw[ref]] if kind is list else pipe.output(kw[ref])
+                )
+            return _e.fn(*lead, **kw)
 
         pipe.stage(
             st["name"],

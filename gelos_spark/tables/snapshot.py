@@ -15,8 +15,7 @@ Iceberg semantics the north rule actually uses, from scratch:
     replace all manifest entries carrying a given partition value —
     re-running a stage cannot double-append.
   - **time travel**: every snapshot's manifest is retained;
-    ``read_at(snapshot_id)`` reads any historical snapshot (the
-    resume path reads lineage "as of" the last good snapshot).
+    ``read(spark, snapshot_id=...)`` reads any historical snapshot.
   - **scan planning from manifest column stats** (Iceberg's
     lower_bounds/upper_bounds): every commit records per-file min/max
     for primitive columns straight from the parquet footers (no data
@@ -240,8 +239,6 @@ class SnapshotTable:
                 term = term & (F.col(col) <= F.lit(hi))
             df = df.filter(term)
         return df
-
-    read_at = read  # alias: time-travel read
 
     def is_empty(self) -> bool:
         return not self.files()

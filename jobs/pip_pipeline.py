@@ -78,16 +78,15 @@ def main():
 
     def timed(name, fn):
         s = time.time()
-        out = pipe.stage(name, fn)
+        pipe.stage(name, fn)
         stage_s[name] = round(time.time() - s, 3)
-        return out
 
-    tiles = timed("tiles", lambda sp: synth.tracker_df(sp, args.n_tiles, seed=args.seed))
+    timed("tiles", lambda sp: synth.tracker_df(sp, args.n_tiles, seed=args.seed))
     if args.stop_after == "tiles":
         _finish(args, pipe, stage_s, t0)
         return
 
-    cells = timed(
+    timed(
         "cells",
         lambda sp: pipe.output("tiles").withColumn(
             "cell", cell_encode_col(F.col("lon"), F.col("lat"), TILE_RES)

@@ -75,10 +75,9 @@ def points_in_polygon(px: np.ndarray, py: np.ndarray, ring: np.ndarray) -> np.nd
 
 
 def _hash_bytes_u64(tokens: list[bytes], seed: int) -> np.ndarray:
-    """Vector of 64-bit hashes for a token list (FNV-1a then
-    splitmix-style finalize; pure NumPy over a byte matrix would be
-    overkill for short shingles — this is batch-level, not per-row
-    Python: called once per document inside an Arrow batch loop)."""
+    """Vector of seeded 64-bit FNV-1a hashes for a token list, one
+    Python loop per byte: the scalar reference the vectorized
+    ``dedup._fnv_ragged`` kernel is checked against."""
     out = np.empty(len(tokens), dtype=np.uint64)
     with np.errstate(over="ignore"):
         for i, t in enumerate(tokens):

@@ -6,6 +6,9 @@ config validation errors."""
 
 from __future__ import annotations
 
+import dataclasses
+import functools
+
 import pytest
 import yaml
 from pyspark.sql import functions as F
@@ -339,10 +342,11 @@ def test_pipeline_kill_resume_chaos(spark, tmp_path, monkeypatch):
     root = str(tmp_path / "chaos")
     real_op = cfg._OPS["minhash_pairs"]
 
-    def _dying_op(sp, pipe, c):
+    @functools.wraps(real_op.fn)  # same signature, so the stage still binds
+    def _dying_op(*args, **kwargs):
         raise RuntimeError("executor lost")  # simulated mid-pipeline kill
 
-    monkeypatch.setitem(cfg._OPS, "minhash_pairs", _dying_op)
+    monkeypatch.setitem(cfg._OPS, "minhash_pairs", dataclasses.replace(real_op, fn=_dying_op))
     with pytest.raises(RuntimeError, match="executor lost"):
         cfg.build_pipeline(spark, conf, root=root)
     monkeypatch.setitem(cfg._OPS, "minhash_pairs", real_op)
@@ -643,7 +647,7 @@ stages:
   - name: attributed
     op: asof_join
     input: purchases
-    args: {right: clicks, on: ts, by: user_id, right_cols: [value], tiebreak: event_id}
+    args: {right: clicks, "on": ts, by: user_id, right_cols: [value], tiebreak: event_id}
 """
     )
     pipe = cfg.build_pipeline(spark, conf, root=str(tmp_path / "run"))
@@ -689,7 +693,7 @@ stages:
   - name: windowed
     op: range_join
     input: events
-    args: {intervals: incidents, on: ts, by: user_id}
+    args: {intervals: incidents, "on": ts, by: user_id}
 """
     )
     pipe = cfg.build_pipeline(spark, conf, root=str(tmp_path / "run"))
@@ -727,3 +731,60 @@ def test_explicit_null_required_arg_fails_validation(spark):
     }
     with pytest.raises(ValueError, match="missing required args"):
         cfg.validate_config(bad)
+
+
+def _docs_then(stage: dict) -> dict:
+    """A config whose first stage ``docs`` is valid (validation never
+    reads the path) followed by ``stage``."""
+    return {
+        "run_id": "v",
+        "stages": [
+            {"name": "docs", "op": "read_parquet", "args": {"path": "documents.parquet"}},
+            stage,
+        ],
+    }
+
+
+@pytest.mark.parametrize(
+    "stage",
+    [
+        # an operator registered directly: a misspelt key must not run
+        # the stage with the defaults it meant to override
+        {"name": "near", "op": "minhash_pairs", "input": "docs",
+         "args": {"num_hashe": 64, "min_jaccard": 0.2}},
+        # an adapter op
+        {"name": "feats", "op": "text_features", "input": "docs",
+         "args": {"text_column": "text"}},
+    ],
+    ids=["direct", "adapter"],
+)
+def test_unknown_arg_fails_validation(stage):
+    key = next(iter(stage["args"]))
+    with pytest.raises(ValueError, match=rf"stage '{stage['name']}'.*unknown args.*'{key}'"):
+        cfg.validate_config(_docs_then(stage))
+
+
+def test_unquoted_yaml_on_key_is_named_as_the_cause():
+    """YAML 1.1 loads a bare ``on:`` key as ``True``; the stage fails
+    validation instead of running with the default ``on``."""
+    stage = yaml.safe_load(
+        "{name: s, op: sessionize, input: docs, args: {on: ts, by: user_id}}"
+    )
+    assert True in stage["args"]
+    with pytest.raises(ValueError, match=r"unknown args \[True\].*quote it"):
+        cfg.validate_config(_docs_then(stage))
+
+
+@pytest.mark.parametrize("ref", ["later", "missing"])
+def test_dedup_near_pairs_must_name_an_earlier_stage(ref):
+    """``pairs`` is a stage reference like ``right`` and ``others``:
+    naming a later or a missing stage fails at validation, which
+    ``build_pipeline`` runs before any stage."""
+    conf = _docs_then(
+        {"name": "kept", "op": "dedup_near", "input": "docs", "args": {"pairs": ref}}
+    )
+    conf["stages"].append(
+        {"name": "later", "op": "simhash_pairs", "input": "docs"}
+    )
+    with pytest.raises(ValueError, match=f"'pairs' names stage '{ref}' before it is defined"):
+        cfg.validate_config(conf)

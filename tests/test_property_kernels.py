@@ -239,7 +239,7 @@ _stage_st = st.fixed_dictionaries(
             st.none(),
             st.sampled_from(
                 ["read_parquet", "sql", "asof_join", "range_join",
-                 "quantile_filter", "union_stages", "nonsense_op"]
+                 "quantile_filter", "union_stages", "dedup_near", "nonsense_op"]
             ),
             st.integers(),
         ),
@@ -249,9 +249,12 @@ _stage_st = st.fixed_dictionaries(
             st.none(),
             st.integers(),  # non-dict args must ValueError, not crash
             st.dictionaries(
-                st.sampled_from(
-                    ["path", "query", "right", "intervals", "others",
-                     "score_col", "keep_frac", "by", "id_col"]
+                st.one_of(
+                    st.sampled_from(
+                        ["path", "query", "right", "intervals", "others", "pairs",
+                         "score_col", "keep_frac", "by", "id_col", "nope"]
+                    ),
+                    st.integers(),  # a non-string key is an unknown arg
                 ),
                 st.one_of(st.none(), st.text(max_size=8), st.integers(),
                           st.lists(st.text(max_size=4), max_size=3)),

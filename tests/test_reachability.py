@@ -8,10 +8,10 @@ module-level code. A def is reached when a reached body uses its name
 (a load of the name or attribute, or a ``from ... import`` of it), and
 the scan runs to a fixpoint, so a use inside another unreached def does
 not count. A method is reached only once its class is; dunder methods
-ride with their class. A top-level def decorated by a call to a
-registrar defined in its own module (the config ``op`` registry) is
-reached. Matching is by bare name, so a name shared with any reached
-use counts as reached: the scan can miss dead code, never invent it.
+ride with their class. A class-body alias of a method (``name =
+method``) is a method of its own, which uses the one it names. Matching
+is by bare name, so a name shared with any reached use counts as
+reached: the scan can miss dead code, never invent it.
 
 Reference implementations the tests compare against live in
 ``tests/oracles.py``, not in the package.
@@ -39,7 +39,6 @@ class Def:
     key: str  # "module:qualname"
     name: str
     cls: str | None  # key of the enclosing class, for methods
-    registered: bool
     uses: set[str] = field(default_factory=set)
 
 
@@ -61,33 +60,39 @@ def _is_dunder(name: str) -> bool:
     return name.startswith("__") and name.endswith("__")
 
 
-def _registered(fn: ast.AST, local: set[str]) -> bool:
-    return any(
-        isinstance(d, ast.Call) and isinstance(d.func, ast.Name) and d.func.id in local
-        for d in fn.decorator_list
-    )
+def _alias(item: ast.stmt, methods: set[str]) -> str | None:
+    """The name a class-body ``name = method`` statement binds."""
+    if (
+        isinstance(item, ast.Assign)
+        and len(item.targets) == 1
+        and isinstance(item.targets[0], ast.Name)
+        and isinstance(item.value, ast.Name)
+        and item.value.id in methods
+    ):
+        return item.targets[0].id
+    return None
 
 
 def _module_defs(module: str, tree: ast.Module) -> tuple[list[Def], set[str]]:
     """The module's defs, and the names its module-level code uses."""
     funcs = (ast.FunctionDef, ast.AsyncFunctionDef)
-    local = {s.name for s in tree.body if isinstance(s, funcs)}
     defs: list[Def] = []
     top: list[ast.stmt] = []
     for stmt in tree.body:
         if isinstance(stmt, funcs):
-            defs.append(Def(f"{module}:{stmt.name}", stmt.name, None,
-                            _registered(stmt, local), _names([stmt])))
+            defs.append(Def(f"{module}:{stmt.name}", stmt.name, None, _names([stmt])))
         elif isinstance(stmt, ast.ClassDef):
             ckey = f"{module}:{stmt.name}"
             own: list[ast.AST] = [*stmt.bases, *stmt.keywords, *stmt.decorator_list]
+            methods = {i.name for i in stmt.body if isinstance(i, funcs)}
             for item in stmt.body:
                 if isinstance(item, funcs) and not _is_dunder(item.name):
-                    defs.append(Def(f"{ckey}.{item.name}", item.name, ckey, False,
-                                    _names([item])))
+                    defs.append(Def(f"{ckey}.{item.name}", item.name, ckey, _names([item])))
+                elif alias := _alias(item, methods):
+                    defs.append(Def(f"{ckey}.{alias}", alias, ckey, _names([item])))
                 else:
                     own.append(item)
-            defs.append(Def(ckey, stmt.name, None, False, _names(own)))
+            defs.append(Def(ckey, stmt.name, None, _names(own)))
         else:
             top.append(stmt)
     return defs, _names(top)
@@ -123,9 +128,7 @@ def unreached(root: Path = ROOT) -> list[str]:
         for d in defs:
             if d.key in reached:
                 continue
-            if d.registered or (
-                d.name in used and (d.cls is None or d.cls in reached)
-            ):
+            if d.name in used and (d.cls is None or d.cls in reached):
                 reached.add(d.key)
                 used |= d.uses
                 changed = True
@@ -148,15 +151,12 @@ def test_allowlist_names_only_unreached_defs():
 
 
 def test_scan_follows_a_chain_to_its_fixpoint(tmp_path):
-    """An unreached def keeps the defs it alone uses unreached; a
-    registered def and a used method of a used class are reached."""
+    """An unreached def keeps the defs it alone uses unreached; a used
+    method of a used class is reached, and an unused alias of a method
+    is not."""
     pkg = tmp_path / PACKAGE
     pkg.mkdir()
     (pkg / "mod.py").write_text(
-        "def reg(fn):\n    return fn\n"
-        "def registrar(name):\n    return reg\n"
-        "@registrar('x')\ndef registered():\n    return helper()\n"
-        "def helper():\n    return 1\n"
         "def dead():\n    return dead_only()\n"
         "def dead_only():\n    return 2\n"
         "def entry():\n    return Box().used()\n"
@@ -164,12 +164,14 @@ def test_scan_follows_a_chain_to_its_fixpoint(tmp_path):
         "    def __init__(self):\n        self.n = 0\n"
         "    def used(self):\n        return 3\n"
         "    def spare(self):\n        return 4\n"
+        "    spare_alias = spare\n"
         "class Orphan:\n    def used(self):\n        return 5\n"
     )
     for f in ROOT_FILES:
         (tmp_path / f).write_text("from gelos_spark.mod import entry\nentry()\n")
     assert unreached(tmp_path) == [
         "gelos_spark.mod:Box.spare",
+        "gelos_spark.mod:Box.spare_alias",
         "gelos_spark.mod:Orphan",
         "gelos_spark.mod:Orphan.used",
         "gelos_spark.mod:dead",

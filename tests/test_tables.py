@@ -266,13 +266,15 @@ def test_pipeline_resume_skips_and_is_identical(spark, tmp_path):
 
     p1 = Pipeline(spark, root, "r1")
     p1.stage("s1", stage1)
-    out1 = p1.stage("s2", stage2_from(p1)).orderBy("v").collect()
+    p1.stage("s2", stage2_from(p1))
+    out1 = p1.output("s2").orderBy("v").collect()
     assert p1.executed == ["s1", "s2"] and p1.skipped == []
 
     # second run with the same run_id: everything skips, same rows
     p2 = Pipeline(spark, root, "r1")
     p2.stage("s1", stage1)
-    out2 = p2.stage("s2", stage2_from(p2)).orderBy("v").collect()
+    p2.stage("s2", stage2_from(p2))
+    out2 = p2.output("s2").orderBy("v").collect()
     assert p2.skipped == ["s1", "s2"] and p2.executed == []
     assert out1 == out2
 
@@ -383,8 +385,8 @@ def test_empty_commit_keeps_schema_readable(spark, tmp_path):
     assert t.total_rows() == 0
     # the stage wrapper's commit-then-read path survives too
     p = Pipeline(spark, str(tmp_path / "p"), "r1")
-    got = p.stage("empty", lambda sp: sp.range(5).where("id > 99"))
-    assert got.count() == 0
+    p.stage("empty", lambda sp: sp.range(5).where("id > 99"))
+    assert p.output("empty").count() == 0
 
 
 def test_compact_converges_and_keeps_clustering(spark, tmp_path):
@@ -477,8 +479,8 @@ def _must_not_run(sp):
 
 def test_done_check_launches_no_spark_jobs(spark, tmp_path, jobs_launched):
     """The resume check answers from the checkpoint manifest: 0 jobs
-    per check, and a full resume of N stages launches at most N jobs
-    (the schema reads of the frames ``stage`` returns)."""
+    per check, and a full resume of three done stages launches 0 jobs
+    (``stage`` returns nothing, so nothing reads the skipped tables)."""
     root = str(tmp_path / "run")
     stages = ["s1", "s2", "s3"]
     p1 = Pipeline(spark, root, "r1")
@@ -492,7 +494,7 @@ def test_done_check_launches_no_spark_jobs(spark, tmp_path, jobs_launched):
         for name in stages:
             p2.stage(name, _must_not_run)
 
-    assert jobs_launched("full-resume", resume) <= len(stages)
+    assert jobs_launched("full-resume", resume) == 0
     assert p2.skipped == stages and p2.executed == []
 
 
