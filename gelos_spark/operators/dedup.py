@@ -12,12 +12,14 @@ Design notes for 100 TB scale:
   - MinHash signatures are computed in a single vectorized pandas
     UDF pass (shingles x permutations as one NumPy min-reduce); LSH
     banding turns near-dup search into an equi-join on
-    (band_id, band_hash) — no O(n^2) pair generation; candidate
+    (band_id, band_hash) — no O(n^2) pair generation; each band set
+    is one array expression posexploded with the position as band
+    id, so the plan's size does not grow with the band count; candidate
     pairs then verify exact Jaccard. The only shuffle is on band
     buckets (skew-safe: a crowded bucket means true duplicates).
   - SimHash reduces each doc to one int64; near-dup = self-join on
-    rotated prefix bands (pigeonhole over 4 bands of 16 bits for
-    Hamming distance <= 3).
+    bit-field bands (pigeonhole over 4 bands of 16 bits for Hamming
+    distance <= 3).
   - Embedding near-dup uses the similarity operator's LSH path.
   - Every operator returns its plan and leaves no cache for the
     caller to release: a per-row frame that a self-join reads twice
@@ -368,12 +370,17 @@ def minhash_lsh_pairs(
     (``minhash_batch_portable``) and the xxhash64 band key for the
     band's value string — the DuckDB-oracle verification path
     (contract query ``minhash_portable``); identical pipeline shape,
-    slower kernel.
+    slower kernel. ``bands`` must be in 1..num_hashes
+    (``ValueError`` otherwise).
 
     The signature frame is a lazy ``localCheckpoint`` read by both
     aliases of the banded self-join, so the first action on the
     returned plan hashes the corpus once.
     """
+    if not 1 <= bands <= num_hashes:
+        # bands=0 divides by zero; bands > num_hashes makes every band
+        # an empty slice, so every doc pair would collide
+        raise ValueError(f"bands must be in 1..num_hashes={num_hashes}, got {bands}")
     rows_per_band = num_hashes // bands
     # signature hashing is the CPU-heavy stage: spread it across the
     # cluster even when the (small on disk, heavy to process) text
@@ -384,20 +391,22 @@ def minhash_lsh_pairs(
         F.col(id_col).alias("id"), make_udf(num_hashes, shingle_k, seed)(F.col(text_col)).alias("sig")
     ).localCheckpoint(eager=False)
 
-    # band hash -> equi-join key: xxhash64 of the band's slice
-    # (production) or the slice's value string (portable/oracle path —
-    # collision-free, reproducible in SQL via string_agg)
-    band_exprs = []
-    for b in range(bands):
-        sl = F.slice("sig", b * rows_per_band + 1, rows_per_band)
-        bh = (
-            F.concat_ws("_", sl.cast("array<string>"))
-            if portable
-            else F.xxhash64(sl.cast("string"))
-        )
-        band_exprs.append(F.struct(F.lit(b).alias("band"), bh.alias("bh")))
-    banded = sigs.select("id", "sig", F.explode(F.array(*band_exprs)).alias("bk")).select(
-        "id", "sig", F.col("bk.band").alias("band"), F.col("bk.bh").alias("bh")
+    # one array of band keys, exploded with its position as the band
+    # id: the plan (and its driver-side build) is the same size at any
+    # band count. The key is xxhash64 of the band's slice (production)
+    # or the slice's value string (portable/oracle path — collision-
+    # free, reproducible in SQL via string_agg). A lambda over the band
+    # index, not an explicit array of `bands` keys: the per-band body is
+    # heavy, and the lambda measured faster per row.
+    sl = f"slice(sig, b * {rows_per_band} + 1, {rows_per_band})"
+    key = (
+        f"concat_ws('_', cast({sl} AS array<string>))"
+        if portable
+        else f"xxhash64(cast({sl} AS string))"
+    )
+    banded = sigs.select(
+        "id", "sig",
+        F.posexplode(F.expr(f"transform(sequence(0, {bands - 1}), b -> {key})")).alias("band", "bh"),
     )
 
     left = banded.alias("l")
@@ -442,23 +451,23 @@ def hamming_hash_pairs(
     equi-join on (band, band_bits), then exact Hamming verify with
     JVM ``bit_count``. No all-pairs path: candidate volume is bounded
     by band-bucket occupancy, the same scale shape as MinHash banding.
-    Returns (id_a, id_b, hamming) with id_a < id_b, ordered."""
+    Returns (id_a, id_b, hamming) with id_a < id_b, ordered; a negative
+    max_hamming raises ``ValueError``."""
+    if max_hamming < 0:
+        raise ValueError(f"max_hamming must be >= 0, got {max_hamming}")
     nb = max_hamming + 1
     width = 64 // nb
     sh = df.select(F.col(id_col).alias("id"), F.col(hash_col).cast("long").alias("sh"))
-    bands = []
-    for b in range(nb):
-        bands.append(
-            F.struct(
-                F.lit(b).alias("band"),
-                F.shiftrightunsigned(F.col("sh"), b * width)
-                .bitwiseAND(F.lit((1 << width) - 1))
-                .alias("bits"),
-            )
-        )
-    banded = sh.select("id", "sh", F.explode(F.array(*bands)).alias("bk")).select(
-        "id", "sh", F.col("bk.band").alias("band"), F.col("bk.bits").alias("bits")
-    )
+    # one explicit array of band bits, exploded with its position as
+    # the band id: one expression at any band count, codegen'd (the
+    # per-band body is tiny, so an explicit array beats a lambda per
+    # row). A single 64-bit band is the hash itself.
+    if nb == 1:
+        bits = "sh"
+    else:
+        mask = (1 << width) - 1
+        bits = ", ".join(f"shiftrightunsigned(sh, {b * width}) & {mask}" for b in range(nb))
+    banded = sh.select("id", "sh", F.posexplode(F.expr(f"array({bits})")).alias("band", "bits"))
     l, r = banded.alias("l"), banded.alias("r")
     # the exact-Hamming verify runs MAP-SIDE, before the pair-dedup
     # shuffle: hamming is a pure function of the two hashes, so

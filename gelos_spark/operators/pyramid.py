@@ -139,21 +139,19 @@ def vector_pyramid(
     pair table approaches the input's distinct-key count explodes L
     times that table, where a level-by-level re-aggregation (each
     level ~4x smaller than the one below) would shuffle ~1.33x it."""
+    if min_res > leaf_res:
+        raise ValueError(f"min_res={min_res} is above leaf_res={leaf_res}: no levels to roll up")
     pairs = tiles_with_cell.groupBy("cell", F.col(cat_col).alias("cat")).agg(
         F.count("*").alias("n")
     )
-    ancestors = F.array(
-        *[
-            F.struct(
-                F.lit(r).alias("res"),
-                cell_parent_col(F.col("cell"), leaf_res, r).alias("cell"),
-            )
-            for r in range(leaf_res, min_res - 1, -1)
-        ]
+    # one array of the leaf's ancestors, leaf first: position p is
+    # the cell at res leaf_res - p (one expression at any level count)
+    ancestors = ", ".join(
+        f"shiftrightunsigned(cell, {2 * p})" for p in range(leaf_res - min_res + 1)
     )
     return (
-        pairs.select(F.explode(ancestors).alias("rc"), "cat", "n")
-        .groupBy(F.col("rc.res").alias("res"), F.col("rc.cell").alias("cell"), "cat")
+        pairs.select(F.posexplode(F.expr(f"array({ancestors})")).alias("pos", "cell"), "cat", "n")
+        .groupBy((F.lit(leaf_res) - F.col("pos")).alias("res"), "cell", "cat")
         .agg(F.sum("n").alias("n"))
         # (res, cell, cat) unique -> n_cat = count(*)
         .groupBy("res", "cell")

@@ -15,8 +15,9 @@ resume for free.
 A stage's ``args`` are the keyword arguments of the op's callable, and
 its signature is the one statement of what the stage accepts:
 ``validate_config`` binds every stage before any runs, so an unknown
-key, or a parameter with no default that is absent or null, is a
-``ValueError`` naming the stage. A new op is one ``_OPS`` entry — the
+key, a parameter with no default that is absent or null, or a
+non-boolean value (a quoted ``"false"`` too) for a ``bool`` parameter
+is a ``ValueError`` naming the stage. A new op is one ``_OPS`` entry — the
 extensibility surface the reference exposes via dataset subclassing
 (gelos/gelosdataset.py:77): the callable (the operator itself where its
 signature already is the stage's contract, else a small adapter
@@ -100,7 +101,7 @@ def _op_pip_join(
         aois = read_aoi_geojson(aoi_geojson, id_key=aoi_id_key)
     else:
         aois = synth.aoi_polygons(int(n_aois), seed=int(seed), vertices=aoi_vertices)
-    return pip_join(spark, df, aois, tile_cell_col=tile_cell_col, ordered=bool(ordered))
+    return pip_join(spark, df, aois, tile_cell_col=tile_cell_col, ordered=ordered)
 
 
 def _op_sample_n(df: DataFrame, *, n: int, id_col: str = "image_id", seed: int = 42) -> DataFrame:
@@ -274,7 +275,7 @@ def _op_ann_topk(
             "sets should use the self-search path or a join-based filter)"
         )
     queries = df.where(F.col(id_col).isin(qids)) if qids else df
-    k, seed, portable = int(k), int(seed), bool(portable)
+    k, seed = int(k), int(seed)
     if method == "brute":
         return similarity.brute_force_topk(
             df, queries, k=k, id_col=id_col, vec_col=vec_col,
@@ -433,7 +434,7 @@ def _op_bucketed_join(
     double shuffle is exactly the regression this op exists to
     prevent; pass ``require_no_exchange: false`` to allow it."""
     out = bucketed.colocated_join(spark, left_table, right_table, key, how=how)
-    if bool(require_no_exchange) and bucketed.plan_has_exchange(out):
+    if require_no_exchange and bucketed.plan_has_exchange(out):
         raise ValueError(
             f"bucketed_join({left_table}, {right_table}) plan "
             "contains a shuffle Exchange — both tables must be written with "
@@ -555,6 +556,14 @@ def validate_config(conf: dict) -> None:
                 f"stage {name!r} (op {opname!r}) got unknown args {unknown}; "
                 f"it accepts {sorted(settable)}{hint}"
             )
+        # a quoted YAML "false" is a truthy string: a bool parameter
+        # takes only a YAML boolean
+        for k, v in args.items():
+            if settable[k].annotation in (bool, "bool") and not isinstance(v, bool):
+                raise ValueError(
+                    f"stage {name!r} (op {opname!r}): {k!r} must be a boolean "
+                    f"(true/false), got {type(v).__name__} {v!r}"
+                )
         for ref, kind in entry.refs.items():
             val = args.get(ref)
             if val is None:

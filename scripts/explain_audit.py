@@ -42,11 +42,15 @@ SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
 def plan_text(df) -> str:
     """The formatted plan without its session-counter ids: expression
     ids (``name#12L`` -> ``name``), exchange plan ids and RDD ids, which
-    shift with everything planned earlier in the session."""
+    shift with everything planned earlier in the session, and the
+    identity hash of a constant-folded array (``UnsafeArrayData@1a2b``),
+    which changes every run."""
     buf = io.StringIO()
     with redirect_stdout(buf):
         df.explain("formatted")
-    return re.sub(r"#\d+L?|, \[plan_id=\d+\]|(?<=RDD)\[\d+\]", "", buf.getvalue())
+    return re.sub(
+        r"#\d+L?|, \[plan_id=\d+\]|(?<=RDD)\[\d+\]|(?<=UnsafeArrayData)@[0-9a-f]+", "", buf.getvalue()
+    )
 
 
 def check(plan: str, name: str) -> list[str]:
@@ -113,6 +117,11 @@ def main():
 
     cases["minhash_lsh"] = _dedup.minhash_lsh_pairs(
         read("documents").limit(200), num_hashes=32, bands=8, min_jaccard=0.2
+    )
+
+    # 9. banded hamming join (phash/simhash) over a 64-bit text hash
+    cases["hamming_pairs"] = _dedup.hamming_hash_pairs(
+        read("documents").select("doc_id", F.xxhash64("text").alias("h")), "doc_id", "h", 3
     )
 
     for name, df in cases.items():

@@ -67,3 +67,40 @@ def collect_sizes(monkeypatch):
     monkeypatch.setattr(DataFrame, "toPandas", spy_pandas)
     monkeypatch.setattr(DataFrame, "toArrow", spy_arrow)
     return sizes
+
+
+@pytest.fixture
+def py4j_commands(spark, monkeypatch):
+    """``py4j_commands(fn)``: the number of py4j commands the driver
+    sends the JVM while ``fn`` runs — the round trips of a plan build.
+    Memory-delete commands are left out and ``gc`` is off while
+    counting: when Python frees its Java references is collector
+    timing, not the cost of the build."""
+    import gc
+
+    from py4j.clientserver import ClientServerConnection
+    from py4j.protocol import MEMORY_COMMAND_NAME, MEMORY_DEL_SUBCOMMAND_NAME
+
+    delete = MEMORY_COMMAND_NAME + MEMORY_DEL_SUBCOMMAND_NAME
+    real = ClientServerConnection.send_command
+    sent: list[str] = []
+
+    def spy(self, command):
+        if not command.startswith(delete):
+            sent.append(command)
+        return real(self, command)
+
+    monkeypatch.setattr(ClientServerConnection, "send_command", spy)
+
+    def count(fn):
+        enabled = gc.isenabled()
+        gc.disable()
+        start = len(sent)
+        try:
+            fn()
+        finally:
+            if enabled:
+                gc.enable()
+        return len(sent) - start
+
+    return count

@@ -121,6 +121,20 @@ def simhash64(text: str, seed: int = 42) -> int:
     return int(val.astype(np.int64))
 
 
+def hamming_pairs(rows: list[tuple[str, int]], max_hamming: int) -> dict[tuple[str, str], int]:
+    """O(n^2) brute force of the banded Hamming join: every (id_a, id_b)
+    with id_a < id_b whose int64 hashes differ in <= max_hamming bits,
+    mapped to that distance."""
+    out = {}
+    for ia, ha in rows:
+        for ib, hb in rows:
+            if ia < ib:
+                d = bin((ha ^ hb) & ((1 << 64) - 1)).count("1")
+                if d <= max_hamming:
+                    out[(ia, ib)] = d
+    return out
+
+
 # ---- similarity: the JVM left-fold dot product, and ANN recall
 
 

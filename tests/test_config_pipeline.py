@@ -788,3 +788,31 @@ def test_dedup_near_pairs_must_name_an_earlier_stage(ref):
     )
     with pytest.raises(ValueError, match=f"'pairs' names stage '{ref}' before it is defined"):
         cfg.validate_config(conf)
+
+
+@pytest.mark.parametrize(
+    "yaml_stage, key",
+    [
+        # an operator registered directly
+        ('{name: near, op: minhash_pairs, input: docs, args: {portable: "false"}}', "portable"),
+        # adapters that cast with bool() before
+        ('{name: pip, op: pip_join, input: docs, args: {ordered: "false"}}', "ordered"),
+        ("{name: ann, op: ann_topk, input: docs, args: {k: 3, portable: 'no'}}", "portable"),
+        ('{name: bj, op: bucketed_join, args: {left_table: a, right_table: b, key: cell, '
+         'require_no_exchange: "false"}}', "require_no_exchange"),
+        # neither null nor 0/1 is a YAML boolean
+        ("{name: s, op: sessionize, input: docs, args: {stats: 1}}", "stats"),
+        ("{name: q, op: quantile_filter, input: docs, args: {ascending: null}}", "ascending"),
+    ],
+    ids=["direct", "pip_join", "ann_topk", "bucketed_join", "int", "null"],
+)
+def test_bool_arg_takes_only_a_yaml_boolean(yaml_stage, key):
+    """A quoted YAML ``"false"`` loads as a truthy string: a ``bool``
+    parameter must reject it at validation instead of switching the
+    option on."""
+    stage = yaml.safe_load(yaml_stage)
+    with pytest.raises(
+        ValueError, match=rf"stage '{stage['name']}' \(op '{stage['op']}'\): '{key}' must be a boolean"
+    ):
+        cfg.validate_config(_docs_then(stage))
+

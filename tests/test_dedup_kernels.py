@@ -113,14 +113,7 @@ def test_simhash_pairs_matches_bruteforce(spark):
         (r.id_a, r.id_b): r.hamming
         for r in dedup.simhash_pairs(docs, max_hamming=max_h, seed=seed).collect()
     }
-    sh = {d: oracles.simhash64(t, seed) for d, t in texts}
-    ids = sorted(sh)
-    exp = {}
-    for i, a in enumerate(ids):
-        for b in ids[i + 1:]:
-            h = bin((sh[a] ^ sh[b]) & ((1 << 64) - 1)).count("1")
-            if h <= max_h:
-                exp[(a, b)] = h
+    exp = oracles.hamming_pairs([(d, oracles.simhash64(t, seed)) for d, t in texts], max_h)
     assert got == exp
     assert len(exp) > 0
 
@@ -146,14 +139,35 @@ def test_hamming_hash_pairs_matches_bruteforce(spark):
         (r.id_a, r.id_b): r.hamming
         for r in dedup.phash_dup_pairs(df, max_hamming=k).collect()
     }
-    exp = {}
-    for (ia, ha) in rows:
-        for (ib, hb) in rows:
-            if ia < ib:
-                d = bin((ha ^ hb) & (2**64 - 1)).count("1")
-                if d <= k:
-                    exp[(ia, ib)] = d
+    assert got == oracles.hamming_pairs(rows, k)
+
+
+def test_hamming_hash_pairs_max_hamming_zero_is_equal_hashes(spark):
+    """max_hamming=0 is one 64-bit band, the hash itself: exactly the
+    equal-hash pairs, across the full signed range."""
+    vals = [0, -1, 1, -(2**63), 2**63 - 1, 0x5555555555555555, -0x5555555555555556]
+    rows = [(f"i{i:02d}_{c}", v) for i, v in enumerate(vals) for c in range(i % 3 + 1)]
+    rows += [("x_near", 1 ^ (1 << 40))]  # one bit from a planted hash
+    df = spark.createDataFrame(rows, "image_id string, phash long")
+    got = {
+        (r.id_a, r.id_b): r.hamming
+        for r in dedup.hamming_hash_pairs(df, "image_id", "phash", max_hamming=0).collect()
+    }
+    exp = oracles.hamming_pairs(rows, 0)
     assert got == exp
+    assert len(exp) == 8  # 2 hashes planted twice (1 pair each), 2 thrice (3 each)
+
+
+def test_banded_joins_reject_bad_band_args(spark):
+    df = spark.createDataFrame([("a", 1)], "doc_id string, h long")
+    with pytest.raises(ValueError, match="max_hamming"):
+        dedup.hamming_hash_pairs(df, "doc_id", "h", max_hamming=-1)
+    docs = spark.createDataFrame([("a", "some text")], "doc_id string, text string")
+    # 0 divides by zero; more bands than hashes makes every band an
+    # empty slice that every pair collides on
+    for bands in (0, -2, 129):
+        with pytest.raises(ValueError, match="bands"):
+            dedup.minhash_lsh_pairs(docs, num_hashes=128, bands=bands)
 
 
 def test_phash_dup_pairs_on_synth_images(spark):

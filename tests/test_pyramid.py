@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+import pytest
 from pyspark.sql import functions as F
 
 from gelos_spark.functions import cells, codec
@@ -120,3 +121,11 @@ def test_vector_pyramid_matches_per_level_recompute(spark):
         assert len(got) == sum(
             len(np.unique(cell_leaf >> (2 * (leaf_res - r)))) for r in levels
         )
+
+
+def test_vector_pyramid_rejects_min_res_above_leaf(spark):
+    """An empty level range would roll up to an empty frame with an
+    untyped ``cell`` column."""
+    tiles = spark.createDataFrame([(5, "a")], "cell long, lulc string")
+    with pytest.raises(ValueError, match="min_res"):
+        pyramid.vector_pyramid(tiles, 4, 6)
