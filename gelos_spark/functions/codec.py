@@ -164,11 +164,11 @@ def mse(a: np.ndarray, b: np.ndarray) -> float:
     return float(np.mean(d * d))
 
 
-def psnr(a: np.ndarray, b: np.ndarray, peak: float = 255.0) -> float:
+def psnr(a: np.ndarray, b: np.ndarray) -> float:
     m = mse(a, b)
     if m == 0:
         return float("inf")
-    return float(10.0 * np.log10(peak * peak / m))
+    return float(10.0 * np.log10(255.0 * 255.0 / m))
 
 
 _DCT32 = np.zeros((32, 32))

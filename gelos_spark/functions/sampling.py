@@ -15,10 +15,10 @@ pipelines).
 
 ``BUCKETS = 1_000_000`` gives ppm-resolution fractions. The default
 bucket expression is ``pmod(xxhash64(id, seed), BUCKETS)`` — Spark's
-64-bit xxhash, well mixed for any id type. ``bucket_expr`` can
-override it (the contract query uses a portable Knuth-style
-multiplicative mix both Spark and DuckDB evaluate exactly, so the
-whole operator is DuckDB-oracle-verified end to end).
+64-bit xxhash, well mixed for any id type. ``hash_split``'s
+``bucket_expr`` can override it (the contract query uses a portable
+Knuth-style multiplicative mix both Spark and DuckDB evaluate
+exactly, so the whole operator is DuckDB-oracle-verified end to end).
 """
 
 from __future__ import annotations
@@ -31,9 +31,7 @@ from pyspark.sql import functions as F
 BUCKETS = 1_000_000
 
 
-def _bucket(id_col: str, seed: int, bucket_expr: Column | None) -> Column:
-    if bucket_expr is not None:
-        return bucket_expr
+def _bucket(id_col: str, seed: int) -> Column:
     return F.pmod(F.xxhash64(F.col(id_col), F.lit(seed)), F.lit(BUCKETS))
 
 
@@ -59,7 +57,7 @@ def hash_split(
         raise ValueError(f"hash_split: weights must be non-negative, sum > 0: {weights}")
     total = float(sum(weights.values()))
     names = list(weights)
-    b = _bucket(id_col, seed, bucket_expr)
+    b = _bucket(id_col, seed) if bucket_expr is None else bucket_expr
     expr = F.lit(names[-1])  # remainder range -> last split
     cum = 0.0
     conds = []
@@ -77,7 +75,6 @@ def deterministic_sample(
     fraction: float | dict,
     strata_col: str | None = None,
     seed: int = 42,
-    bucket_expr: Column | None = None,
 ) -> DataFrame:
     """Keep ~``fraction`` of rows by id-hash bucket — a deterministic
     twin of ``df.sample`` / ``df.sampleBy`` whose kept-set is a pure
@@ -86,7 +83,7 @@ def deterministic_sample(
     nested subsamples are supersets). With ``strata_col`` +
     ``fraction`` as a dict, each stratum gets its own fraction
     (missing strata default to 0.0 — explicitly opt strata in)."""
-    b = _bucket(id_col, seed, bucket_expr)
+    b = _bucket(id_col, seed)
     if strata_col is None:
         if not isinstance(fraction, (int, float)):
             raise ValueError("deterministic_sample: scalar fraction needs no strata_col")

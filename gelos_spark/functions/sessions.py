@@ -31,7 +31,6 @@ def sessionize(
     on: str = "ts",
     by: list[str] | str = "user_id",
     gap_us: int = 1_800_000_000,
-    out_col: str = "session_ord",
 ) -> DataFrame:
     """Attach a 1-based per-key session ordinal; rows with a null
     ``on`` get ordinal null (they belong to no session). ``on`` may
@@ -55,7 +54,7 @@ def sessionize(
     ).otherwise(F.lit(0))
     ord_col = F.sum(new_sess).over(run)
     return df.withColumn(
-        out_col, F.when(F.col(on).isNotNull(), ord_col).otherwise(F.lit(None))
+        "session_ord", F.when(F.col(on).isNotNull(), ord_col).otherwise(F.lit(None))
     )
 
 

@@ -23,9 +23,14 @@ Design notes for 100 TB scale:
   - Embedding near-dup uses the similarity operator's LSH path.
   - Every operator returns its plan and leaves no cache for the
     caller to release: a per-row frame that a self-join reads twice
-    is a lazy ``localCheckpoint``, materialized by the first action
-    on the result and freed by the context cleaner once the caller
-    drops it. A caller that needs durability writes the result (a
+    is a ``localCheckpoint(eager=False)``, computed by the first
+    action on the result and freed by the context cleaner once the
+    caller drops it. It is lazy only above its last shuffle: under
+    AQE, making the checkpoint's RDD runs every shuffle stage beneath
+    it. So ``minhash_lsh_pairs`` and ``simhash_pairs``, whose
+    signature frames sit over ``_spread``'s repartition, launch one
+    Spark job while the plan is built (plans/shapes.json pins the
+    count). A caller that needs durability writes the result (a
     ``Pipeline.stage`` commit) or calls ``df.checkpoint()``.
 
 The text kernels hash UTF-8 shingle and token bytes with seeded 64-bit
@@ -373,9 +378,11 @@ def minhash_lsh_pairs(
     slower kernel. ``bands`` must be in 1..num_hashes
     (``ValueError`` otherwise).
 
-    The signature frame is a lazy ``localCheckpoint`` read by both
-    aliases of the banded self-join, so the first action on the
-    returned plan hashes the corpus once.
+    The signature frame is a ``localCheckpoint(eager=False)`` read
+    by both aliases of the banded self-join, so the first action on
+    the returned plan hashes the corpus once. Building the plan runs
+    ``_spread``'s repartition shuffle (one Spark job): the checkpoint
+    is lazy only above it.
     """
     if not 1 <= bands <= num_hashes:
         # bands=0 divides by zero; bands > num_hashes makes every band
@@ -506,10 +513,13 @@ def simhash_pairs(
     path (contract query ``simhash_portable``); the 64-bit pigeonhole
     banding stays valid (top bits constant-equal).
 
-    The (id, simhash) signature frame is a lazy ``localCheckpoint``
-    read by both aliases of the banded self-join — without it Catalyst
-    plans two scans and the simhash pandas-UDF hashes the full corpus
-    twice (the same signature-frame shape as ``minhash_lsh_pairs``)."""
+    The (id, simhash) signature frame is a
+    ``localCheckpoint(eager=False)`` read by both aliases of the
+    banded self-join — without it Catalyst plans two scans and the
+    simhash pandas-UDF hashes the full corpus twice (the same
+    signature-frame shape as ``minhash_lsh_pairs``). As there,
+    building the plan runs ``_spread``'s repartition shuffle (one
+    Spark job); the hashing waits for the first action."""
     src = _spread(docs)
     sh_udf = simhash_udf_portable(seed) if portable else simhash_udf(seed)
     sh = src.select(

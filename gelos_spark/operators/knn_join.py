@@ -116,9 +116,9 @@ def default_res(n_tiles: int) -> int:
     return int(np.clip(int(np.log2(max(n_tiles, 2)) / 2) + 1, 3, 14))
 
 
-def _initial_radius(stats: dict, res: int, k_max: int, target_mult: float = 3.0) -> int:
+def _initial_radius(stats: dict, res: int, k_max: int) -> int:
     """Smallest disk radius whose expected candidate count is
-    >= target_mult * k, from the measured tile density: occupancy over
+    >= 3 * k, from the measured tile density: occupancy over
     the data bbox x tiles-per-occupied-cell."""
     n = 1 << res
     n_tiles, occ = max(stats["n"], 1), max(stats["occ"], 1)
@@ -129,7 +129,7 @@ def _initial_radius(stats: dict, res: int, k_max: int, target_mult: float = 3.0)
     density = occupancy * per_cell  # expected tiles per grid cell
     if density <= 0:
         return 1
-    need = target_mult * k_max / density
+    need = 3.0 * k_max / density
     r = int(np.ceil((np.sqrt(need) - 1.0) / 2.0))
     return int(np.clip(r, 1, max(n // 2, 1)))
 

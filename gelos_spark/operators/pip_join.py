@@ -55,9 +55,9 @@ TILE_RES = 16  # fine tile cell resolution (~600 m cells); prefix-shifts to any 
 _EDGE_FIELDS = ("x1", "y1", "x2", "y2")  # one edge; order of _aoi_edges' columns
 
 
-def pick_cover_res(aois: list[dict], max_cells_per_aoi: int = 2048) -> int:
+def pick_cover_res(aois: list[dict]) -> int:
     """Adaptive covering resolution: fine enough to prune, coarse
-    enough that no AOI explodes into more than ~max_cells."""
+    enough that no AOI explodes into more than ~2048 cells."""
     max_extent = 1e-9
     for p in aois:
         ring, _ = cells.unwrap_ring(np.asarray(p["ring"], dtype=np.float64))
@@ -66,10 +66,10 @@ def pick_cover_res(aois: list[dict], max_cells_per_aoi: int = 2048) -> int:
             float(ring[:, 0].max() - ring[:, 0].min()),
             float(ring[:, 1].max() - ring[:, 1].min()),
         )
-    # cell height at res r is 180/2^r deg; want ~sqrt(max_cells)/2 cells across
+    # cell height at res r is 180/2^r deg; want ~sqrt(2048)/2 cells across
     import math
 
-    target = 180.0 / (max_extent / (math.sqrt(max_cells_per_aoi) / 2.0))
+    target = 180.0 / (max_extent / (math.sqrt(2048) / 2.0))
     res = int(np.clip(math.floor(math.log2(max(target, 1.0))), 3, TILE_RES))
     return res
 

@@ -62,7 +62,6 @@ def scatter_png(
     path: str,
     size: int = 900,
     point: int = 3,
-    margin: float = 0.05,
 ) -> dict:
     """Render and atomically write the scatter PNG. Returns
     {path, colors, size, n_points}. Deterministic: same coords ->
@@ -77,7 +76,7 @@ def scatter_png(
         def norm(v):
             lo, hi = float(v.min()), float(v.max())
             span = (hi - lo) or 1.0
-            pad = margin * span
+            pad = 0.05 * span
             return (v - lo + pad) / (span + 2 * pad)
 
         px = (norm(x) * (size - 1)).astype(np.int64)

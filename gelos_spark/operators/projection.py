@@ -157,7 +157,7 @@ def _pairwise_sq_dists(x: np.ndarray) -> np.ndarray:
     return np.maximum(d, 0.0)
 
 
-def _binary_search_p(dists: np.ndarray, perplexity: float, tol: float = 1e-5) -> np.ndarray:
+def _binary_search_p(dists: np.ndarray, perplexity: float) -> np.ndarray:
     """Row-stochastic affinities with per-row precision found by
     binary search to hit the target perplexity (standard t-SNE)."""
     n = dists.shape[0]
@@ -175,7 +175,7 @@ def _binary_search_p(dists: np.ndarray, perplexity: float, tol: float = 1e-5) ->
             else:
                 p = e / se
                 h = -(p[p > 0] * np.log(p[p > 0])).sum()
-            if abs(h - target) < tol:
+            if abs(h - target) < 1e-5:
                 break
             if h > target:
                 lo = beta
@@ -191,7 +191,6 @@ def tsne_fit(
     x: np.ndarray,
     perplexity: float = 30.0,
     n_iter: int = 300,
-    learning_rate: float = 100.0,
     seed: int = 42,
 ) -> np.ndarray:
     """Exact (O(n^2)) 2-D t-SNE, deterministic: PCA initialization (no
@@ -228,7 +227,7 @@ def tsne_fit(
         m = momentum if it < 20 else final_momentum
         gains = np.where(np.sign(grad) != np.sign(inc), gains + 0.2, gains * 0.8)
         gains = np.maximum(gains, 0.01)
-        inc = m * inc - learning_rate * gains * grad
+        inc = m * inc - 100.0 * gains * grad
         y = y + inc
         y = y - y.mean(axis=0, keepdims=True)
     return y

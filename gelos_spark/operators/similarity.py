@@ -337,7 +337,6 @@ def lsh_topk(
     corpus: DataFrame,
     queries: DataFrame,
     k: int = 10,
-    dim: int | None = None,
     nbits: int = 12,
     ntables: int = 6,
     seed: int = 42,
@@ -357,9 +356,7 @@ def lsh_topk(
     matches DuckDB's fold (the embedding_topk equivalence). The
     DuckDB-oracle verification path (contract query ``lsh_portable``);
     the Gaussian path stays the recall-tested default."""
-    if dim is None:
-        first = corpus.select(F.size(vec_col).alias("d")).first()
-        dim = int(first["d"])
+    dim = int(corpus.select(F.size(vec_col).alias("d")).first()["d"])
     planes = (
         _portable_planes(dim, nbits, ntables)
         if portable

@@ -106,7 +106,6 @@ class Pipeline:
         self,
         name: str,
         fn: Callable[[SparkSession], DataFrame],
-        rows_in: int = -1,
         cluster_by: list[str] | None = None,
         num_files: int | None = None,
     ) -> None:
@@ -132,7 +131,7 @@ class Pipeline:
                 self.run_id,
                 name,
                 f["path"].rsplit("/", 1)[-1],
-                rows_in,
+                -1,  # rows_in: not recorded
                 f["rows"],
                 f["bytes"],
                 "file",
@@ -144,7 +143,7 @@ class Pipeline:
         ]
         total = sum(r[4] for r in lineage)
         lineage.append(
-            (self.run_id, name, "__stage__", rows_in, total, -1, "done", wall_ms, now)
+            (self.run_id, name, "__stage__", -1, total, -1, "done", wall_ms, now)
         )
         self.log.record(lineage)
         self.executed.append(name)

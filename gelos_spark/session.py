@@ -4,7 +4,10 @@ Local-mode knobs follow the scale design in SURVEY.md §4: AQE on
 (runtime re-plan + skew-join splitting), Arrow on (every Python
 surface is vectorized), shuffle partitions sized to cores (the
 cluster deployment would size them to ~2-3x total cores), UTC
-session timezone so DuckDB-oracle comparisons are stable.
+session timezone so DuckDB-oracle comparisons are stable. Join
+strategy is Spark's own per-join choice: broadcast under the 64MB
+threshold, otherwise the spill-safe sort-merge default
+(plans/shapes.json records the joins of every declared query).
 """
 
 from __future__ import annotations
@@ -64,21 +67,6 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        # prefer shuffled-hash over sort-merge when the planner's size
-        # conditions hold (guide §3.1/§9): the engine's hot joins are
-        # banded equi-self-joins over modest per-partition sides, where
-        # skipping both sorts wins. The planner (and AQE's runtime
-        # SMJ->SHJ rewrite below) falls back to sort-merge only when its
-        # SIZE ESTIMATE says a build side is too big to hash: a build
-        # side it underestimates is hashed anyway and can OOM an
-        # executor at cluster scale, where sort-merge would sort and
-        # spill. Measured -7% on the minhash/simhash/knn suite
-        # (OPTIMIZATION_r07.md).
-        .config("spark.sql.join.preferSortMergeJoin", "false")
-        .config(
-            "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
-            str(64 * 1024 * 1024),
-        )
     )
     if master.startswith("local"):
         # local-scale scan granularity: default 128MB packs a whole

@@ -1,8 +1,6 @@
 """Cell index kernels vs brute-force per-point references
 (SURVEY.md §7.1 M1)."""
 
-import re
-
 import numpy as np
 
 from gelos_spark.functions import cells
@@ -136,15 +134,12 @@ def test_polygon_cover_superset_of_inside_cells():
     assert len(cover) < len(cells.polygon_cover_classified(bbox, res)[0])
 
 
-def test_cell_encode_col_matches_numpy_kernel(spark, tmp_path):
+def test_cell_encode_col_matches_numpy_kernel(spark):
     """The JVM column-expression encoder must be bit-identical to the
-    NumPy kernel at several resolutions, including edge coordinates,
-    and it is the encoder the ``cell_encode`` and ``pyramid_rollup``
-    entry queries run: their plans hold no Python evaluation node."""
-    import importlib
-    import pathlib
-    import sys
-
+    NumPy kernel at several resolutions, including edge coordinates.
+    It is the encoder the ``cell_encode`` and ``pyramid_rollup`` entry
+    queries run; plans/shapes.json pins their plans with no Python
+    evaluation node (tests/test_plan_shapes.py)."""
     import pandas as pd
     from pyspark.sql import functions as F
 
@@ -170,11 +165,3 @@ def test_cell_encode_col_matches_numpy_kernel(spark, tmp_path):
         )
         want = cells.cell_encode(lon, lat, res)
         assert (got == want).all(), f"mismatch at res {res}"
-
-    sys.path.insert(0, str(pathlib.Path(__file__).resolve().parents[1]))
-    entry = importlib.import_module("__spark_entry__")
-    customer = pd.DataFrame({"c_custkey": np.arange(1, 65), "c_mktsegment": ["A", "B"] * 32})
-    spark.createDataFrame(customer).write.parquet(str(tmp_path / "customer.parquet"))
-    for name in ("cell_encode", "pyramid_rollup"):
-        plan = entry.queries()[name](spark, str(tmp_path))._jdf.queryExecution().executedPlan()
-        assert not re.search(r"ArrowEvalPython|BatchEvalPython", plan.toString()), name

@@ -92,8 +92,7 @@ def test_stratified_sample_per_stratum_fractions(spark):
 def test_quantile_filter_brute_force_and_contracts(spark):
     """quantile_filter vs a pandas reference (integer-exact
     ceil(n*ppm/1e6) kept, ties by id), the 0.07x100 double-rounding
-    regression, partitioning invariance, ascending mode, and the
-    one-Exchange plan property."""
+    regression, partitioning invariance and ascending mode."""
     from gelos_spark.functions.sampling import quantile_filter
 
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet").select(
@@ -138,15 +137,6 @@ def test_quantile_filter_brute_force_and_contracts(spark):
         ).collect()
     )
     assert len(asc) == len(got) and asc != got
-
-    # one shuffle: both windows share the partition spec
-    plan = (
-        quantile_filter(docs, "n_chars", 0.3, "lang", "doc_id")
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    assert plan.count("Exchange") == 1, plan
 
     with pytest.raises(ValueError, match="by"):
         quantile_filter(docs, "n_chars", 0.3, [], "doc_id")
