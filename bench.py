@@ -32,7 +32,7 @@ from gelos_spark.operators import dedup, similarity
 from gelos_spark.functions.cell_udfs import cell_encode_col
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+CPUS = int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
 
 
 def materialize(df):
@@ -169,8 +169,8 @@ def main():
         lambda: materialize(similarity.brute_force_topk(embeddings, q_emb, k=10)),
     )
 
-    # LSH ANN top-k (Arrow-native bucketize of corpus + queries,
-    # (tbl, bucket) equi-join, exact cosine re-rank) — measured since
+    # LSH ANN top-k (sign-code inverted lists through the IVF
+    # request scorer, exact cosine re-rank) — measured since
     # r6 so the round-5 bucketizer kernel gains round-over-round
     # history like the original six. NOT in the headline sum: the
     # headline's cold-sum definition is pinned to the same six-query

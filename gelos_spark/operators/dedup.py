@@ -48,6 +48,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from gelos_spark.operators.similarity import _norm_expr
+
 _MERSENNE = (1 << 61) - 1
 
 
@@ -547,28 +549,19 @@ def phash_dup_pairs(
 
 def ngram_jaccard_pairs(
     docs: DataFrame,
+    block_col: str,
     id_col: str = "doc_id",
     text_col: str = "text",
     n: int = 3,
     min_jaccard: float = 0.2,
-    block_col: str | None = None,
-    allow_cross_join: bool = False,
 ) -> DataFrame:
     """Exact word-n-gram Jaccard similarity for candidate pairs —
     pure column expressions (no UDF): split -> sliding n-grams via
     transform over an index sequence -> array_distinct ->
     intersect/union cardinality. ``block_col`` (e.g. lang, or an LSH
-    band key) bounds the self-join and is REQUIRED: without a block
-    this is an all-pairs cartesian product, which must be an explicit
-    opt-in (``allow_cross_join=True``, test scale only). The gram-set
-    frame is a lazy ``localCheckpoint`` read by both aliases of the
-    self-join (computed once, not once per alias)."""
-    if block_col is None and not allow_cross_join:
-        raise ValueError(
-            "ngram_jaccard_pairs without block_col is an all-pairs crossJoin; "
-            "pass block_col (e.g. a language or LSH-band key) or opt in "
-            "explicitly with allow_cross_join=True at test scale"
-        )
+    band key) bounds the self-join to pairs within one block. The
+    gram-set frame is a lazy ``localCheckpoint`` read by both aliases
+    of the self-join (computed once, not once per alias)."""
     grams = F.array_distinct(
         F.expr(
             f"transform(sequence(0, greatest(size(split(lower({text_col}), '\\\\s+')) - {n}, 0)), "
@@ -580,16 +573,10 @@ def ngram_jaccard_pairs(
     # would otherwise run over the corpus twice (the simhash/minhash
     # signature-frame shape)
     g = docs.select(
-        F.col(id_col).alias("id"),
-        grams.alias("grams"),
-        *([F.col(block_col).alias("blk")] if block_col else []),
+        F.col(id_col).alias("id"), grams.alias("grams"), F.col(block_col).alias("blk")
     ).localCheckpoint(eager=False)
     l, r = g.alias("l"), g.alias("r")
-    cond = F.col("l.id") < F.col("r.id")
-    if block_col:
-        joined = l.join(r, (F.col("l.blk") == F.col("r.blk")) & cond)
-    else:
-        joined = l.crossJoin(r).where(cond)
+    joined = l.join(r, (F.col("l.blk") == F.col("r.blk")) & (F.col("l.id") < F.col("r.id")))
     inter = F.size(F.array_intersect(F.col("l.grams"), F.col("r.grams")))
     union = F.size(F.array_union(F.col("l.grams"), F.col("r.grams")))
     return (
@@ -607,39 +594,25 @@ def ngram_jaccard_pairs(
 
 def embedding_dup_pairs(
     emb: DataFrame,
+    block_col: str,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     min_cosine: float = 0.95,
-    block_col: str | None = None,
-    allow_cross_join: bool = False,
 ) -> DataFrame:
     """Near-duplicate pairs by embedding cosine similarity — pure
-    column math (zip_with dot product / aggregate norms). block_col
-    bounds the pair space and is required unless allow_cross_join=True
-    (the LSH-bucketed scale variant lives in operators/similarity.py).
-    The (id, vec, norm) frame is a lazy ``localCheckpoint`` read by
-    both aliases of the self-join (norms computed once)."""
-    if block_col is None and not allow_cross_join:
-        raise ValueError(
-            "embedding_dup_pairs without block_col is an all-pairs crossJoin; "
-            "pass block_col or opt in with allow_cross_join=True at test scale"
-        )
-    def norm(c):
-        return F.sqrt(F.expr(f"aggregate({c}, 0D, (a, x) -> a + CAST(x AS DOUBLE) * CAST(x AS DOUBLE))"))
-
+    column math (zip_with dot product / aggregate norms). ``block_col``
+    bounds the pair space to pairs within one block (the LSH-bucketed
+    scale variant lives in operators/similarity.py). The (id, vec,
+    norm) frame is a lazy ``localCheckpoint`` read by both aliases of
+    the self-join (norms computed once)."""
     e = emb.select(
         F.col(id_col).alias("id"),
         F.col(vec_col).alias("v"),
-        norm(vec_col).alias("nrm"),
-        *([F.col(block_col).alias("blk")] if block_col else []),
+        _norm_expr(vec_col).alias("nrm"),
+        F.col(block_col).alias("blk"),
     ).localCheckpoint(eager=False)
     l, r = e.alias("l"), e.alias("r")
-    cond = F.col("l.id") < F.col("r.id")
-    joined = (
-        l.join(r, (F.col("l.blk") == F.col("r.blk")) & cond)
-        if block_col
-        else l.crossJoin(r).where(cond)
-    )
+    joined = l.join(r, (F.col("l.blk") == F.col("r.blk")) & (F.col("l.id") < F.col("r.id")))
     dot = F.expr("aggregate(zip_with(l.v, r.v, (x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), 0D, (a, p) -> a + p)")
     return (
         joined.select(

@@ -39,7 +39,7 @@ Algorithm (iterative DataFrame loop — SURVEY.md §4 item 2):
       the rings and take the exact pass directly
       (``BRUTE_FORCE_PAIRS``).
     - ``knn_join_distributed`` (a corpus-sized query table, dispatched
-      to automatically past ``max_queries``): the query side and the
+      to automatically past ``MAX_QUERIES``): the query side and the
       running top-k stay DataFrames; shells come from the same kernel
       in a pandas UDF and the finished-query split is a semi/anti join
       on the stop rows. The result is localCheckpointed, then the
@@ -78,6 +78,10 @@ DISTRIBUTED_RING_ROUNDS = 11
 # tiles x queries at or below which the driver carrier skips the rings
 # and takes one exact brute-force pass (see knn_join's docstring)
 BRUTE_FORCE_PAIRS = 2_000_000
+# Spark query rows at or below which knn_join collects the query side
+# (one bounded ``limit(MAX_QUERIES+1).toPandas()``) and runs the driver
+# carrier; past it, knn_join_distributed serves the call
+MAX_QUERIES = 100_000
 
 
 def _schemas(qid_type: str) -> tuple[str, str, str, str]:
@@ -259,7 +263,6 @@ def knn_join(
     queries: DataFrame | pd.DataFrame,
     res: int | None = None,
     n_tiles_hint: int | None = None,
-    max_queries: int | None = 100_000,
 ) -> DataFrame:
     """k nearest tiles per query point.
 
@@ -268,16 +271,14 @@ def knn_join(
     Returns (query_id, rank, image_id, dist_km), ordered by
     (query_id, rank).
 
-    A Spark ``queries`` frame with more than ``max_queries`` rows is
-    NOT collected: the call auto-dispatches to
+    A Spark ``queries`` frame with more than the module constant
+    ``MAX_QUERIES`` rows is NOT collected: the call auto-dispatches to
     :func:`knn_join_distributed` (bit-identical results; the query
     side then stays distributed end-to-end), so a corpus-sized query
-    table can never silently OOM the driver here — the same guard
-    contract as ``brute_force_topk(max_queries=)``
-    (operators/similarity.py). The guard is folded into the one
-    collect this path needs anyway (``limit(n+1).toPandas()``), so it
-    costs ZERO extra Spark actions. ``max_queries=None`` skips the
-    guard (caller asserts the frame is request-sized);
+    table can never silently OOM the driver here — the same bound as
+    ``similarity.MAX_QUERIES`` (operators/similarity.py). The guard is
+    folded into the one collect this path needs anyway
+    (``limit(n+1).toPandas()``), so it costs ZERO extra Spark actions.
     ``BRUTE_FORCE_PAIRS`` applies only to the driver-resident path.
 
     The result is a frame built from the rows collected on the
@@ -307,13 +308,13 @@ def knn_join(
 
     if isinstance(queries, pd.DataFrame):
         q = queries
-    elif max_queries is not None:
+    else:
         # guard folded into the one collect the path needs anyway: pull
-        # AT MOST max_queries+1 rows (zero extra Spark actions — a
+        # AT MOST MAX_QUERIES+1 rows (zero extra Spark actions — a
         # separate count() probe costs ~0.6s/call on this VM's
         # per-action overhead) and dispatch on overflow
-        q = queries.limit(max_queries + 1).toPandas()
-        if len(q) > max_queries:
+        q = queries.limit(MAX_QUERIES + 1).toPandas()
+        if len(q) > MAX_QUERIES:
             # corpus-sized query table: never collect it fully — route
             # to the fully-distributed twin (same semantics and output)
             return knn_join_distributed(
@@ -323,8 +324,6 @@ def knn_join(
                 res=res,
                 n_tiles_hint=n_tiles_hint,
             )
-    else:
-        q = queries.toPandas()
     q = q[["query_id", "lon", "lat", "k"]].copy()
     shell_schema, query_schema, pool_schema, out_schema = _schemas(_qid_type(queries, q))
     if len(q) == 0:
@@ -423,7 +422,7 @@ def knn_join_distributed(
     the query side stays a distributed DataFrame end-to-end — the
     carrier for "queries" that are themselves a table (full-corpus
     self-kNN, tile-to-tile retrieval) rather than a request batch;
-    ``knn_join`` dispatches here past its ``max_queries``. Mirrors
+    ``knn_join`` dispatches here past its ``MAX_QUERIES``. Mirrors
     ``ivf_topk(collect_queries=False)``.
 
     Scale design per round (ring radius grows 3x until every query's

@@ -8,20 +8,20 @@ every cosine is bit-identical to the JVM left fold
     is request-sized and broadcasts (one bounded collect); the corpus
     streams once through the block kernel (`_block_cosine_batches`),
     so pairs exist only as matrix indices inside a task.
-  - LSH-bucketed (random-hyperplane signs = SimHash-for-vectors):
-    each vector maps to a small set of bucket keys (nbits-bit sign
-    pattern x ntables); candidates come from an equi-join on (table,
-    bucket), no all-pairs blowup, then the Arrow pair scorer
-    (`_cosine_pairs_frame`) re-ranks them exactly. Recall grows with
-    ntables.
-  - IVF (inverted lists): Lloyd-trained centroids, one centroid
-    scoring kernel (`_centroid_scorer`, float or exact-integer) for
-    assignment, training and probing, and a scorer chosen by the size
-    of the query side. A request-sized query set (it fits the bounded
-    ``limit(max_queries+1).toArrow()`` collect) is probed on the
-    driver and broadcasts against the probed lists of the index; a
-    corpus-sized one stays distributed and meets the index in a
-    cogroup on the list id.
+  - inverted-list search, the two ANN paths. A list function maps a
+    vector to list ids. IVF (Lloyd-trained centroids, one centroid
+    kernel `_centroid_scorer`, float or exact-integer) indexes a
+    vector under its argmax centroid and probes a query's top
+    ``nprobe`` lists. LSH (random-hyperplane signs = SimHash for
+    vectors) indexes and probes each table's nbits-bit sign code,
+    offset by ``table << nbits``; recall grows with ntables. Both
+    build the index with `_index_frame` and pick a scorer by the size
+    of the query side: a query set that fits the bounded
+    ``limit(MAX_QUERIES+1).toArrow()`` collect is probed on the driver
+    and broadcasts against the probed lists of the index
+    (`_broadcast_probe_scored`); a corpus-sized one stays distributed
+    and meets the index in a cogroup on the list id
+    (`_cogroup_block_scored`).
 """
 
 from __future__ import annotations
@@ -30,11 +30,43 @@ import numpy as np
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+# query rows at or below which a top-k call collects its query side
+# (one bounded ``limit(MAX_QUERIES+1).toArrow()``) and broadcasts it.
+# Past it, brute_force_topk raises and the inverted-list paths keep
+# the query side distributed.
+MAX_QUERIES = 100_000
+
+# (index rows x probing queries) of one list in one batch at or above
+# which the request scorer scores the list as a block; a smaller list
+# would pay ~100 us of per-block overhead, so the batch's remaining
+# pairs are gathered and scored together by the pair kernel. Either
+# kernel gives the same bits.
+DENSE_BLOCK_PAIRS = 4096
+# pairs per gather pass of the request scorer's pair kernel, so its
+# index arrays stay ~8 MB whatever a batch's pair count
+GATHER_PAIRS = 1 << 20
+
 
 def _norm_expr(a: str) -> F.Column:
     return F.sqrt(
         F.expr(f"aggregate({a}, 0D, (acc, x) -> acc + CAST(x AS DOUBLE) * CAST(x AS DOUBLE))")
     )
+
+
+def _bounded_collect(q_src: DataFrame):
+    """The one query-side collect of a top-k call, bounded:
+    ``limit(MAX_QUERIES+1).toArrow()``, so a table past the bound shows
+    as ``MAX_QUERIES + 1`` rows. toArrow keeps the Spark column types
+    faithfully (a pandas round trip re-infers e.g. int32 ids as int64
+    and the emitted batches would mismatch the declared mapInArrow
+    schema), and the vectors land as ONE ListArray -> `_list_matrix`,
+    no per-row stack."""
+    return q_src.limit(MAX_QUERIES + 1).toArrow()
+
+
+def _no_rows(spark: SparkSession, qidt: str, vidt: str) -> DataFrame:
+    """The empty top-k result of an empty query set."""
+    return spark.createDataFrame([], f"query_id {qidt}, rank int, vec_id {vidt}, cosine double")
 
 
 def brute_force_topk(
@@ -45,62 +77,47 @@ def brute_force_topk(
     vec_col: str = "embedding",
     qid_col: str = "query_id",
     qvec_col: str = "embedding",
-    max_queries: int | None = 100_000,
 ) -> DataFrame:
     """Exact cosine top-k: corpus streamed ONCE against a broadcast
     query matrix -> window. Returns (query_id, rank, vec_id, cosine)
     ordered.
 
     The query side BROADCASTS (collected once, request-sized — the
-    bounded ``limit(max_queries+1).toArrow()`` probe IS the guard,
+    bounded ``limit(MAX_QUERIES+1).toArrow()`` probe IS the guard,
     the knn_join pattern: zero extra Spark actions), so more than
-    ``max_queries`` rows raises. The corpus is scored by the block
+    ``MAX_QUERIES`` rows raises. The corpus is scored by the block
     kernel (`_block_cosine_batches`): each corpus vector crosses the
     Arrow boundary once, pairs exist only as matrix indices inside
     the kernel, and the output is scalars-only — the previous
     crossJoin pair-expanded every corpus vector ``nq`` times through
     the scorer. Scores stay bit-identical to the JVM fold. Use
-    ``lsh_topk`` or ``ivf_topk(..., collect_queries=False)`` for
-    corpus x corpus search; ``max_queries=None`` opts out of the
-    bound (the query side is still collected — only do this when it
-    genuinely fits on the driver)."""
+    ``lsh_topk`` or ``ivf_topk`` for corpus x corpus search."""
     import pyarrow as pa
 
     spark = corpus.sparkSession
 
     def _overflow():
         raise ValueError(
-            f"brute_force_topk broadcasts the query side: got > {max_queries} "
-            "query rows. For corpus-sized query sets use lsh_topk or "
-            "ivf_topk(collect_queries=False); raise max_queries (or pass "
-            "None) only if the broadcast genuinely fits."
+            f"brute_force_topk broadcasts the query side: got > {MAX_QUERIES} "
+            "query rows. For corpus-sized query sets use lsh_topk or ivf_topk."
         )
 
-    if max_queries is not None and (
-        qid_col not in queries.columns or qvec_col not in queries.columns
-    ):
+    if qid_col not in queries.columns or qvec_col not in queries.columns:
         # the guard fires before column resolution (a corpus-shaped
         # frame passed as queries should hit the size bound, not an
         # unresolved-column error)
-        if queries.limit(max_queries + 1).count() > max_queries:
+        if queries.limit(MAX_QUERIES + 1).count() > MAX_QUERIES:
             _overflow()
     q_src = queries.select(F.col(qid_col).alias("query_id"), F.col(qvec_col).alias("qv"))
-    # toArrow keeps the Spark column types faithfully (a pandas round
-    # trip re-infers e.g. int32 ids as int64 and the emitted batches
-    # would mismatch the declared mapInArrow schema), and the vectors
-    # land as ONE ListArray -> _list_matrix, no per-row stack
-    qtbl = (q_src if max_queries is None else q_src.limit(max_queries + 1)).toArrow()
-    if max_queries is not None and qtbl.num_rows > max_queries:
+    qtbl = _bounded_collect(q_src)
+    if qtbl.num_rows > MAX_QUERIES:
         _overflow()
     qidt = queries.schema[qid_col].dataType.simpleString()
     vidt = corpus.schema[id_col].dataType.simpleString()
     if qtbl.num_rows == 0:
-        return spark.createDataFrame(
-            [], f"query_id {qidt}, rank int, vec_id {vidt}, cosine double"
-        )
+        return _no_rows(spark, qidt, vidt)
     qv = qtbl.column("qv").combine_chunks()
-    qoff = np.asarray(qv.offsets, dtype=np.int64)
-    qm = _list_matrix(qv, qtbl.num_rows, int(qoff[1] - qoff[0]))
+    qm = _list_matrix(qv, qtbl.num_rows, len(qv[0]))
     bc = spark.sparkContext.broadcast(
         (qtbl.column("query_id").combine_chunks(), qm, _fold_norms(qm))
     )
@@ -188,52 +205,20 @@ def _list_matrix(v, num_rows: int, dim: int) -> np.ndarray:
     return m
 
 
-def _fold_dot(a: np.ndarray, b: np.ndarray) -> np.ndarray:
-    """Per-row dot product with the EXACT left-fold summation order of
-    the JVM ``aggregate(zip_with(...))`` expression (tests/oracles.py):
-    acc = (...((0 + p_0) + p_1)...) + p_{d-1}, each product and add in
-    IEEE float64. One vectorized add per dimension (d ops over
-    N-length arrays — still batch-level BLAS-ish speed) instead of
-    ``np.sum``'s pairwise tree, so the result is BIT-IDENTICAL to the
-    JVM scorer, not just close — the oracle-exactness contract every
-    top-k path carries survives the kernel swap."""
-    acc = np.zeros(a.shape[0], dtype=np.float64)
-    for d in range(a.shape[1]):
-        acc += a[:, d] * b[:, d]
+def _fold_dot(at: np.ndarray, ai: np.ndarray, bt: np.ndarray, bi: np.ndarray) -> np.ndarray:
+    """The pair kernel: the dot product of each column pair
+    ``(at[:, ai[p]], bt[:, bi[p]])`` with the EXACT left-fold summation
+    order of the JVM ``aggregate(zip_with(...))`` expression
+    (tests/oracles.py): acc = (...((0 + p_0) + p_1)...) + p_{d-1},
+    each product and add in IEEE float64. ``at`` and ``bt`` are the
+    transposed ``[dim, N]`` row matrices, so each step gathers from one
+    contiguous row: one vectorized add per dimension instead of
+    ``np.sum``'s pairwise tree, and the result is BIT-IDENTICAL to the
+    JVM scorer and to the block kernel, not just close."""
+    acc = np.zeros(ai.size, dtype=np.float64)
+    for d in range(at.shape[0]):
+        acc += at[d][ai] * bt[d][bi]
     return acc
-
-
-def _cosine_pairs_frame(df: DataFrame, dim: int) -> DataFrame:
-    """Candidate-pair scorer of ``lsh_topk``: a frame of (query_id,
-    vec_id, qv, cv, qn, cn) pairs -> (query_id, vec_id, cosine) via
-    ``mapInArrow``. The JVM higher-order-function dot costs
-    ~145ns/element on this VM (measured round 6: 9.3s for 1M pairs x
-    dim 64); this kernel reads both vector columns as single Arrow
-    buffers (``_list_matrix``, which validates every row against
-    ``dim``) and computes the fold-ordered dot batch-level — same
-    bits, ~10x less time. Norms arrive precomputed (JVM
-    ``_norm_expr``), and the output is scalars-only, so the window
-    shuffle that follows never carries vectors."""
-    import pyarrow as pa
-
-    qit = df.schema["query_id"].dataType.simpleString()
-    vit = df.schema["vec_id"].dataType.simpleString()
-
-    def fn(batches):
-        for b in batches:
-            if b.num_rows == 0:
-                continue
-            qm = _list_matrix(b.column("qv"), b.num_rows, dim)
-            cm = _list_matrix(b.column("cv"), b.num_rows, dim)
-            qn = np.asarray(b.column("qn"), dtype=np.float64)
-            cn = np.asarray(b.column("cn"), dtype=np.float64)
-            cos = _fold_dot(cm, qm) / (cn * qn)
-            yield pa.RecordBatch.from_arrays(
-                [b.column("query_id"), b.column("vec_id"), pa.array(cos)],
-                names=["query_id", "vec_id", "cosine"],
-            )
-
-    return df.mapInArrow(fn, f"query_id {qit}, vec_id {vit}, cosine double")
 
 
 def _fold_norms(m: np.ndarray) -> np.ndarray:
@@ -277,59 +262,25 @@ def _block_cosine_batches(vec_arr, C, cn, qid_arr, Q, qn, out_schema, max_cells=
         )
 
 
-def _bucket_codes_frame(
-    df: DataFrame,
-    id_col: str,
-    vec_col: str,
-    planes: np.ndarray,
-    out_id: str,
-    quantize: bool = False,
-) -> DataFrame:
-    """(id, vec) -> (out_id, __v, __codes array<long>) with per-table
-    bucket codes (position = table index), computed in ``mapInArrow``:
-    the vector column is read as ONE Arrow buffer
-    (``ListArray.flatten()`` + reshape — fixed-dim embeddings), so the
-    kernel has zero per-row Python anywhere — input conversion, einsum,
-    and output assembly are all batch-level. (Round 4 vectorized the
-    output via ``codes.tolist()`` in a pandas UDF; the remaining ~0.4s
-    of the 0.44s stage was the per-row ``np.asarray`` input stack this
-    removes.) The JVM ``posexplode`` downstream yields (tbl, bucket)
-    pairs. Per-row lengths are validated from the list offsets
-    (``_list_matrix``); ragged batches fall back to a per-row stack so
-    malformed inputs fail in NumPy with a shape error, not silently."""
-    import pyarrow as pa
-
-    ntables, nbits, dim = planes.shape
-    idt = df.schema[id_col].dataType.simpleString()
-    vt = df.schema[vec_col].dataType.simpleString()
-    src = df.select(F.col(id_col).alias(out_id), F.col(vec_col).alias("__v"))
+def _sign_lists(planes: np.ndarray, quantize: bool):
+    """The LSH list function: each table's nbits-bit sign pattern
+    (bit b set when plane b's dot is positive) offset by
+    ``table << nbits``, so every (table, code) is one list id.
+    ``quantize=True`` (the portable path) quantizes the rows to
+    integers (floor(x*1000 + 0.5), exact in doubles) against the int64
+    planes, so the codes are exact BIGINT arithmetic, reproducible in
+    SQL (the lsh_portable oracle)."""
+    ntables, nbits, _ = planes.shape
     weights = 1 << np.arange(nbits, dtype=np.int64)
+    offsets = np.arange(ntables, dtype=np.int64) << nbits
 
-    def fn(batches):
-        for b in batches:
-            if b.num_rows == 0:
-                continue
-            v = b.column("__v")
-            m = _list_matrix(v, b.num_rows, dim)
-            if quantize:
-                # integer quantization (floor(x*1000 + 0.5), exact in
-                # doubles) + int64 planes -> int64 einsum: bucket
-                # codes are exact BIGINT arithmetic, reproducible in
-                # SQL (the lsh_portable oracle)
-                m = np.floor(m * 1000.0 + 0.5).astype(np.int64)
-            sgn = np.einsum("tbd,nd->ntb", planes, m) > 0  # [N, T, nbits]
-            codes = (sgn * weights[None, None, :]).sum(axis=2)  # [N, T] int64
-            offsets = pa.array(
-                np.arange(0, (b.num_rows + 1) * ntables, ntables, dtype=np.int32)
-            )
-            codes_arr = pa.ListArray.from_arrays(
-                offsets, pa.array(codes.ravel(), type=pa.int64())
-            )
-            yield pa.RecordBatch.from_arrays(
-                [b.column(out_id), v, codes_arr], names=[out_id, "__v", "__codes"]
-            )
+    def lists(m: np.ndarray) -> np.ndarray:
+        if quantize:
+            m = np.floor(m * 1000.0 + 0.5).astype(np.int64)
+        sgn = np.einsum("tbd,nd->ntb", planes, m) > 0  # [N, T, nbits]
+        return (sgn * weights).sum(axis=2) + offsets
 
-    return src.mapInArrow(fn, f"{out_id} {idt}, __v {vt}, __codes array<bigint>")
+    return lists
 
 
 def lsh_topk(
@@ -349,6 +300,14 @@ def lsh_topk(
     """ANN top-k via random-hyperplane LSH buckets + exact cosine
     re-rank of candidates. Output schema matches brute_force_topk.
 
+    The buckets are inverted lists (`_sign_lists`): the corpus is
+    indexed and the queries probe with the same list function, through
+    the IVF scorers and size rule. The bounded query collect also
+    gives the vector width that sizes the hyperplanes; an empty query
+    set returns before any index is built. A pair that collides in
+    several tables scores to the same cosine in each, and is kept
+    once.
+
     ``portable=True`` swaps the Gaussian hyperplanes for deterministic
     INTEGER planes over quantized vectors (``_portable_planes``), so
     bucket codes — and therefore the candidate sets and the final
@@ -356,45 +315,36 @@ def lsh_topk(
     matches DuckDB's fold (the embedding_topk equivalence). The
     DuckDB-oracle verification path (contract query ``lsh_portable``);
     the Gaussian path stays the recall-tested default."""
-    dim = int(corpus.select(F.size(vec_col).alias("d")).first()["d"])
+    qidt = queries.schema[qid_col].dataType.simpleString()
+    vidt = corpus.schema[id_col].dataType.simpleString()
+    q_src = queries.select(F.col(qid_col).alias("query_id"), F.col(qvec_col).alias("qv"))
+    qtbl = _bounded_collect(q_src)
+    if qtbl.num_rows == 0:
+        return _no_rows(spark, qidt, vidt)
+    dim = len(qtbl.column("qv")[0])
     planes = (
         _portable_planes(dim, nbits, ntables)
         if portable
         else _hyperplanes(dim, nbits, ntables, seed)
     )
-
-    c = _bucket_codes_frame(
-        corpus, id_col, vec_col, planes, "vec_id", quantize=portable
-    ).select(
-        "vec_id", F.col("__v").alias("cv"), _norm_expr("__v").alias("cn"),
-        F.posexplode("__codes").alias("tbl", "bucket"),
-    )
-    q = _bucket_codes_frame(
-        queries, qid_col, qvec_col, planes, "query_id", quantize=portable
-    ).select(
-        "query_id", F.col("__v").alias("qv"), _norm_expr("__v").alias("qn"),
-        F.posexplode("__codes").alias("tbl", "bucket"),
-    )
-
-    pairs = c.join(F.broadcast(q), ["tbl", "bucket"]).select(
-        "query_id", "vec_id", "qv", "cv", "qn", "cn"
-    )
-    # exact re-rank through the Arrow pair scorer (bit-identical to
-    # the JVM left fold — see _fold_dot), THEN dedup: a pair
-    # colliding in several tables re-scores to the same cosine, so
-    # deduping after scoring keeps identical rows while the dedup
-    # exchange carries 3 scalars per candidate instead of two
-    # dim-length vectors (guide §2.3; measured -25% on q_lsh_topk)
-    return _rank_topk(_cosine_pairs_frame(pairs, dim).dropDuplicates(["query_id", "vec_id"]), k)
+    lists = _sign_lists(planes, portable)
+    index = _index_frame(corpus, id_col, vec_col, lists, dim)
+    scored = _inverted_topk(index, q_src, qtbl, lists, dim, qidt, vidt)
+    return _rank_topk(scored.dropDuplicates(["query_id", "vec_id"]), k)
 
 
-# ----------------------------------------------------------------- IVF
+# ------------------------------------------------ IVF / inverted lists
+#
+# LSH and IVF are one inverted-list search. A list function maps a
+# ``[N, dim]`` float64 row matrix to ``[N, L]`` int64 list ids; the
+# index holds one row per (vector, list id), and a query is scored
+# against the index rows of the lists its own list function gives.
 
 def _centroid_scorer(centroids: np.ndarray, quantize: bool = False):
     """The one centroid-scoring kernel of the IVF family: returns
     ``score(m)`` mapping a ``[N, dim]`` float64 row matrix to ``[N, K]``
-    scores. Assignment (``_assign_frame``), Lloyd training
-    (``ivf_train``) and both probes take its argmax or stable argsort,
+    scores. Assignment (``ivf_index``), Lloyd training (``ivf_train``)
+    and the probe (``ivf_topk``) take its argmax or stable argsort,
     so ties go to the LOWEST cid everywhere, like SQL's row_number
     ORDER BY score DESC, cid. Built on the driver, so a bad centroid
     matrix fails before any Spark job; the closure pickles into tasks.
@@ -433,52 +383,85 @@ def _centroid_scorer(centroids: np.ndarray, quantize: bool = False):
     return score
 
 
-def _probe_lists(score, m: np.ndarray, nprobe: int) -> np.ndarray:
-    """``[N, nprobe]`` list ids, best first; the stable sort keeps the
-    lowest cid on score ties (the argmax tie rule of assignment)."""
-    return np.argsort(-score(m), axis=1, kind="stable")[:, :nprobe]
-
-
 def _broadcast_probe_scored(
-    index: DataFrame, qtbl, score, nprobe: int, dim: int, qidt: str, vidt: str
+    index: DataFrame, qtbl, lists, dim: int, qidt: str, vidt: str
 ) -> DataFrame:
-    """Request-sized IVF scorer: the collected query table is probed on
-    the driver, ``(query ids, Q, |Q|, probe lists)`` broadcasts, the
-    index is filtered in the JVM to the probed lists, and one
-    ``mapInArrow`` scores each list's index rows against the queries
-    probing it with the block kernel. Each vector crosses the Arrow
-    boundary once, the index streams with zero shuffle, and the output
-    is scalars-only (the ``brute_force_topk`` shape)."""
+    """Request-sized scorer: the collected (non-empty) query table is
+    probed on the driver, and ``(query ids, Q, |Q|, list members)``
+    broadcasts. The members are grouped with one argsort: the query
+    rows probing ``keys[i]`` are ``members[bounds[i]:bounds[i+1]]``.
+    The index is filtered in the JVM to the probed lists by ONE ``IN``
+    expression (an ``isin`` over thousands of ids costs one py4j call
+    per literal), and one ``mapInArrow`` scores each batch: a list
+    whose block (rows x probing queries) holds at least
+    ``DENSE_BLOCK_PAIRS`` pairs through the block kernel, the batch's
+    remaining pairs in one pass of the pair kernel (`_fold_dot`). Each
+    vector crosses the Arrow boundary once, the index streams with
+    zero shuffle, and the output is scalars-only (the
+    ``brute_force_topk`` shape)."""
     import pyarrow as pa
 
     Q = _list_matrix(qtbl.column("qv").combine_chunks(), qtbl.num_rows, dim)
-    probes = _probe_lists(score, Q, nprobe)
+    probes = lists(Q)
+    flat = probes.ravel()
+    order = np.argsort(flat, kind="stable")
+    keys, starts = np.unique(flat[order], return_index=True)
     bc = index.sparkSession.sparkContext.broadcast(
-        (qtbl.column("query_id").combine_chunks(), Q, _fold_norms(Q), probes)
+        (
+            qtbl.column("query_id").combine_chunks(),
+            Q,
+            _fold_norms(Q),
+            keys,
+            np.append(starts, flat.size),
+            order // probes.shape[1],
+        )
     )
-    probed = index.where(F.col("cid").isin(np.unique(probes).tolist()))
+    probed = index.where(F.expr(f"cid IN ({', '.join(map(str, keys.tolist()))})"))
 
     def fn(batches):
-        qid_arr, Q, qn, probes = bc.value
-        members = {int(c): np.flatnonzero((probes == c).any(axis=1)) for c in np.unique(probes)}
+        qid_arr, Q, qn, keys, bounds, members = bc.value
+        QT = np.ascontiguousarray(Q.T)
         for b in batches:
             if b.num_rows == 0:
                 continue
+            vec_arr = b.column("vec_id")
             schema = pa.schema(
-                [
-                    ("query_id", qid_arr.type),
-                    ("vec_id", b.column("vec_id").type),
-                    ("cosine", pa.float64()),
-                ]
+                [("query_id", qid_arr.type), ("vec_id", vec_arr.type), ("cosine", pa.float64())]
             )
-            cid = np.asarray(b.column("cid"))
             C = _list_matrix(b.column("cv"), b.num_rows, dim)
             cn = np.asarray(b.column("cn"), dtype=np.float64)
-            for c in np.unique(cid):
-                rows, qs = np.flatnonzero(cid == c), members[int(c)]
+            cid = np.asarray(b.column("cid"))
+            rows = np.argsort(cid, kind="stable")
+            cids, first, nrows = np.unique(cid[rows], return_index=True, return_counts=True)
+            pos = np.searchsorted(keys, cids)
+            lo, nq = bounds[pos], bounds[pos + 1] - bounds[pos]
+            dense = nrows * nq >= DENSE_BLOCK_PAIRS
+            for f, n, l, m in zip(first[dense], nrows[dense], lo[dense], nq[dense]):
+                r, qs = rows[f : f + n], members[l : l + m]
                 yield from _block_cosine_batches(
-                    b.column("vec_id").take(pa.array(rows)), C[rows], cn[rows],
+                    vec_arr.take(pa.array(r)), C[r], cn[r],
                     qid_arr.take(pa.array(qs)), Q[qs], qn[qs], schema,
+                )
+            # every other pair of the batch: row ri[p] against query
+            # qi[p], gathered from the transposed matrices in passes of
+            # about GATHER_PAIRS pairs (rows of dense lists pair with 0)
+            per_row = np.repeat(nq * ~dense, nrows)
+            if not per_row.any():
+                continue
+            lo_row = np.repeat(lo, nrows)
+            CT = np.ascontiguousarray(C.T)
+            step = max(1, GATHER_PAIRS // int(per_row.max()))
+            for r0 in range(0, rows.size, step):
+                pr = per_row[r0 : r0 + step]
+                if not pr.any():
+                    continue
+                ri = np.repeat(rows[r0 : r0 + step], pr)
+                qi = members[np.repeat(lo_row[r0 : r0 + step] - (np.cumsum(pr) - pr), pr)
+                             + np.arange(ri.size)]
+                cos = _fold_dot(CT, ri, QT, qi) / (cn[ri] * qn[qi])
+                yield pa.RecordBatch.from_arrays(
+                    [qid_arr.take(pa.array(qi)), vec_arr.take(pa.array(ri)), pa.array(cos)],
+                    schema=schema,
                 )
 
     return probed.select("vec_id", "cv", "cn", "cid").mapInArrow(
@@ -487,40 +470,22 @@ def _broadcast_probe_scored(
 
 
 def _cogroup_block_scored(
-    index: DataFrame, q_src: DataFrame, score, nprobe: int, dim: int, qidt: str, vidt: str
+    index: DataFrame, q_src: DataFrame, lists, dim: int, qidt: str, vidt: str
 ) -> DataFrame:
-    """Corpus-sized IVF scorer: the query table stays distributed. A
-    ``mapInArrow`` probe runs the centroid kernel per batch and emits
-    each query's nprobe list ids, the probe rows explode on cid, and a
-    cogroup on cid meets each list's index vectors and probing queries
-    ONCE as two blocks, scored by the block kernel inside the task.
-    An equi-join would pair-expand both vectors into every candidate
-    row; this ships each vector once per probed list and emits
-    scalars. The cid shuffle it costs is the bucketed layout
-    ``ivf_index`` prescribes anyway: when the query side is a corpus,
-    most lists are probed. A group must fit a task (list size x dim
-    doubles per side, bounded by n_centroids sizing), and the
-    accumulator is query-chunked inside the kernel."""
+    """Corpus-sized scorer: the query table stays distributed. The
+    queries go through `_index_frame` with the probe's list function
+    (one row per probed list), and a cogroup on cid meets each list's
+    index vectors and probing queries ONCE as two blocks, scored by
+    the block kernel inside the task. An equi-join would pair-expand
+    both vectors into every candidate row; this ships each vector once
+    per list and emits scalars. The cid shuffle it costs is the
+    bucketed layout `_index_frame` prescribes anyway: when the query
+    side is a corpus, most lists are probed. A group must fit a task
+    (list size x dim doubles per side), and the accumulator is
+    query-chunked inside the kernel."""
     import pyarrow as pa
 
-    qvt = q_src.schema["qv"].dataType.simpleString()
-
-    def probe_fn(batches):
-        for b in batches:
-            if b.num_rows == 0:
-                continue
-            order = _probe_lists(score, _list_matrix(b.column("qv"), b.num_rows, dim), nprobe)
-            offsets = pa.array(np.arange(0, (b.num_rows + 1) * nprobe, nprobe, dtype=np.int32))
-            lists = pa.ListArray.from_arrays(offsets, pa.array(order.ravel().astype(np.int32)))
-            yield pa.RecordBatch.from_arrays(
-                [b.column("query_id"), b.column("qv"), lists],
-                names=["query_id", "qv", "__probes"],
-            )
-
-    qdf = (
-        q_src.mapInArrow(probe_fn, f"query_id {qidt}, qv {qvt}, __probes array<int>")
-        .select("query_id", "qv", _norm_expr("qv").alias("qn"), F.explode("__probes").alias("cid"))
-    )
+    qdf = _index_frame(q_src, "query_id", "qv", lists, dim).toDF("query_id", "qv", "qn", "cid")
 
     def block(left: pa.Table, right: pa.Table) -> pa.Table:
         schema = pa.schema(
@@ -557,22 +522,37 @@ def _cogroup_block_scored(
     )
 
 
-def _assign_frame(
-    df: DataFrame,
-    id_col: str,
-    vec_col: str,
-    centroids: np.ndarray,
-    quantize: bool = False,
+def _inverted_topk(
+    index: DataFrame, q_src: DataFrame, qtbl, lists, dim: int, qidt: str, vidt: str
 ) -> DataFrame:
-    """(id, vec) -> (vec_id, cv, cid) with the argmax list id of
-    `_centroid_scorer`, computed in ``mapInArrow``: the vector column
-    is read as one Arrow buffer (``_list_matrix``), so input
-    conversion, the [N, K] matmul and output assembly are all
-    batch-level, zero per-row Python."""
+    """The size rule both ANN paths share: the broadcast scorer when
+    the bounded query collect ``qtbl`` holds the whole query set
+    (``None``: not collected), the cogroup scorer otherwise."""
+    if qtbl is not None and qtbl.num_rows <= MAX_QUERIES:
+        return _broadcast_probe_scored(index, qtbl, lists, dim, qidt, vidt)
+    return _cogroup_block_scored(index, q_src, lists, dim, qidt, vidt)
+
+
+def _list_array(ids: np.ndarray):
+    """``[N, L]`` list ids -> an Arrow ``list<int64>`` array, one entry
+    of L ids per row."""
     import pyarrow as pa
 
-    score = _centroid_scorer(centroids, quantize)
-    dim = centroids.shape[1]
+    n, width = ids.shape
+    offsets = pa.array(np.arange(0, (n + 1) * width, width, dtype=np.int32))
+    return pa.ListArray.from_arrays(offsets, pa.array(ids.ravel(), type=pa.int64()))
+
+
+def _index_frame(df: DataFrame, id_col: str, vec_col: str, lists, dim: int) -> DataFrame:
+    """(id, vec) -> (vec_id, cv, cn, cid): one row per list id that
+    ``lists`` gives the vector, ``cid`` bigint. The list function runs
+    in one ``mapInArrow`` (the vector column read as one Arrow buffer,
+    `_list_matrix`, which validates every row against ``dim``), the
+    rows explode in the JVM and the norm is the JVM ``_norm_expr``.
+    At scale this is the table to persist bucketed by cid: a probe
+    touches only the lists it names."""
+    import pyarrow as pa
+
     idt = df.schema[id_col].dataType.simpleString()
     vt = df.schema[vec_col].dataType.simpleString()
     src = df.select(F.col(id_col).alias("vec_id"), F.col(vec_col).alias("cv"))
@@ -581,14 +561,15 @@ def _assign_frame(
         for b in batches:
             if b.num_rows == 0:
                 continue
-            m = _list_matrix(b.column("cv"), b.num_rows, dim)
-            cid = np.argmax(score(m), axis=1).astype(np.int32)
+            ids = lists(_list_matrix(b.column("cv"), b.num_rows, dim))
             yield pa.RecordBatch.from_arrays(
-                [b.column("vec_id"), b.column("cv"), pa.array(cid)],
-                names=["vec_id", "cv", "cid"],
+                [b.column("vec_id"), b.column("cv"), _list_array(ids)],
+                names=["vec_id", "cv", "__lists"],
             )
 
-    return src.mapInArrow(fn, f"vec_id {idt}, cv {vt}, cid int")
+    return src.mapInArrow(fn, f"vec_id {idt}, cv {vt}, __lists array<bigint>").select(
+        "vec_id", "cv", _norm_expr("cv").alias("cn"), F.explode("__lists").alias("cid")
+    )
 
 
 def ivf_train(
@@ -673,13 +654,16 @@ def ivf_index(
     vec_col: str = "embedding",
     quantize: bool = False,
 ) -> DataFrame:
-    """Attach the inverted-list id: (vec_id, cv, cn, cid). At scale
-    this is the table you persist bucketed by cid — probes touch only
-    nprobe lists instead of the full corpus. ``quantize=True`` takes
-    INTEGER centroids and assigns by exact-integer scoring (the
-    ``ivf_portable`` oracle path, see `_centroid_scorer`)."""
-    return _assign_frame(corpus, id_col, vec_col, centroids, quantize=quantize).select(
-        "vec_id", "cv", _norm_expr("cv").alias("cn"), "cid"
+    """Attach the inverted-list id, the argmax centroid of
+    `_centroid_scorer`: (vec_id, cv, cn, cid) by `_index_frame`. At
+    scale this is the table you persist bucketed by cid — probes touch
+    only nprobe lists instead of the full corpus. ``quantize=True``
+    takes INTEGER centroids and assigns by exact-integer scoring (the
+    ``ivf_portable`` oracle path)."""
+    score = _centroid_scorer(centroids, quantize)
+    return _index_frame(
+        corpus, id_col, vec_col, lambda m: np.argmax(score(m), axis=1)[:, None],
+        int(centroids.shape[1]),
     )
 
 
@@ -694,37 +678,37 @@ def ivf_topk(
     qvec_col: str = "embedding",
     collect_queries: bool = True,
     quantize: bool = False,
-    max_queries: int | None = 100_000,
 ) -> DataFrame:
     """IVF probe: each query scans only its nprobe nearest inverted
     lists, exact cosine re-rank inside them. Output schema matches
     brute_force_topk; recall grows with nprobe (nprobe = n_centroids
     degenerates to exact search).
 
-    One probe kernel (`_centroid_scorer`), two scorers chosen by the
-    size of the query side. ``collect_queries=True`` (the
-    retrieval-API default) makes one bounded
-    ``limit(max_queries+1).toArrow()`` collect; a query set that fits
-    is request-sized and takes the broadcast block scorer
+    One probe kernel (`_centroid_scorer`; the stable argsort keeps the
+    lowest cid on score ties, the argmax tie rule of the index), two
+    scorers chosen by the size of the query side. ``collect_queries=True``
+    (the retrieval-API default) makes one bounded
+    ``limit(MAX_QUERIES+1).toArrow()`` collect; a query set that fits
+    is request-sized and takes the broadcast scorer
     (`_broadcast_probe_scored`). A larger one, or
     ``collect_queries=False`` (the queries are themselves a corpus,
     e.g. full-table ANN self-search), stays distributed and takes the
     cogroup block scorer (`_cogroup_block_scored`). So a corpus-sized
-    frame can never OOM the driver here; ``max_queries=None`` skips the
-    bound (the caller asserts the frame is request-sized). Both
-    scorers return identical rows, with ``quantize=True`` too (the
-    exact-integer ``ivf_portable`` probe; pass the INTEGER centroids
-    the index was built with)."""
+    frame can never OOM the driver here. Both scorers return identical
+    rows, with ``quantize=True`` too (the exact-integer
+    ``ivf_portable`` probe; pass the INTEGER centroids the index was
+    built with)."""
     nprobe = min(nprobe, len(centroids))
     score = _centroid_scorer(centroids, quantize)
     dim = int(centroids.shape[1])
     qidt = queries.schema[qid_col].dataType.simpleString()
     vidt = index.schema["vec_id"].dataType.simpleString()
     q_src = queries.select(F.col(qid_col).alias("query_id"), F.col(qvec_col).alias("qv"))
-    if collect_queries:
-        qtbl = (q_src if max_queries is None else q_src.limit(max_queries + 1)).toArrow()
-        if max_queries is None or qtbl.num_rows <= max_queries:
-            return _rank_topk(
-                _broadcast_probe_scored(index, qtbl, score, nprobe, dim, qidt, vidt), k
-            )
-    return _rank_topk(_cogroup_block_scored(index, q_src, score, nprobe, dim, qidt, vidt), k)
+    qtbl = _bounded_collect(q_src) if collect_queries else None
+    if qtbl is not None and qtbl.num_rows == 0:
+        return _no_rows(spark, qidt, vidt)
+
+    def probe(m: np.ndarray) -> np.ndarray:
+        return np.argsort(-score(m), axis=1, kind="stable")[:, :nprobe]
+
+    return _rank_topk(_inverted_topk(index, q_src, qtbl, probe, dim, qidt, vidt), k)

@@ -249,7 +249,9 @@ def _op_ann_topk(
     brute_force_topk's broadcast-size guard). ``query_ids`` restricts
     the query side to those ids; omitted (or null), the whole input
     searches against itself (corpus x corpus — bucketed-methods-only
-    territory at scale; ivf then keeps the query side distributed).
+    territory at scale: ivf keeps the query side distributed, and lsh
+    does once it passes ``similarity.MAX_QUERIES`` rows, so neither
+    collects more than ``MAX_QUERIES + 1`` query rows).
     An explicitly EMPTY list raises — it almost certainly meant "no
     queries", and falling back to the (expensive) self-search would
     invert the author's intent. The id list builds an ``isin`` and is
@@ -393,7 +395,7 @@ def _op_knn(
     """kNN retrieval stage: `queries` is a list of [query_id, lon,
     lat, k] rows (config-embedded request set — the driver-resident
     path; from code, knn_join given a Spark query table past its
-    max_queries dispatches to knn_join_distributed by itself)."""
+    MAX_QUERIES dispatches to knn_join_distributed by itself)."""
     q = pd.DataFrame(queries, columns=["query_id", "lon", "lat", "k"])
     return knn_join(spark, df, q, res=res, n_tiles_hint=n_tiles_hint)
 

@@ -16,7 +16,9 @@ import os
 
 from pyspark.sql import SparkSession
 
-DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+# local[N] parallelism: $SPARK_GRAFT_CPUS, else the CPUs this process
+# may run on (what `nproc` reports)
+DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
 
 def _workers_import_package() -> bool:
     """Whether a local Python worker can import ``gelos_spark``: its

@@ -232,20 +232,20 @@ def test_pair_operators_cache_their_signature_frames(spark):
     two aliases: both sides scan the one checkpointed frame, so the
     returned plan holds neither the gram transform nor the norm."""
     docs = spark.createDataFrame(
-        [("d%02d" % i, "alpha beta gamma delta %d epsilon" % (i % 3)) for i in range(30)],
-        "doc_id string, text string",
+        [("d%02d" % i, "alpha beta gamma delta %d epsilon" % (i % 3), 0) for i in range(30)],
+        "doc_id string, text string, blk int",
     )
-    out = dedup.ngram_jaccard_pairs(docs, n=2, allow_cross_join=True)
+    out = dedup.ngram_jaccard_pairs(docs, "blk", n=2)
     assert plan_shapes.node_counts(out).get("Scan ExistingRDD", 0) >= 2
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "transform(" not in plan, plan
     assert out.count() > 0
 
     emb = spark.createDataFrame(
-        [(i, [float(i % 4), 1.0, float(i % 2)]) for i in range(24)],
-        "vec_id long, embedding array<double>",
+        [(i, [float(i % 4), 1.0, float(i % 2)], 0) for i in range(24)],
+        "vec_id long, embedding array<double>, blk int",
     )
-    out_e = dedup.embedding_dup_pairs(emb, allow_cross_join=True)
+    out_e = dedup.embedding_dup_pairs(emb, "blk")
     assert plan_shapes.node_counts(out_e).get("Scan ExistingRDD", 0) >= 2
     plan_e = out_e._jdf.queryExecution().executedPlan().toString()
     assert "SQRT(" not in plan_e.upper(), plan_e

@@ -195,34 +195,25 @@ def test_knn_distributed_multi_round_finalization(spark, monkeypatch, force_ring
     pd.testing.assert_frame_equal(got, b.toPandas())
 
 
-def test_knn_corpus_sized_queries_auto_dispatch(spark, collect_sizes):
-    """A Spark query frame past max_queries must NEVER be fully
+def test_knn_corpus_sized_queries_auto_dispatch(spark, monkeypatch, collect_sizes):
+    """A Spark query frame past MAX_QUERIES must NEVER be fully
     collected to the driver (the silent-OOM edge): knn_join probes via
-    the bounded limit(max_queries+1).toPandas() collect the path
+    the bounded limit(MAX_QUERIES+1).toPandas() collect the path
     already needs (zero extra Spark actions — the collect IS the
     guard), and on overflow routes to knn_join_distributed, returning
     rows identical to calling the distributed path directly. Every
     collect the call makes is recorded and must hold at most
-    max_queries+1 rows."""
+    MAX_QUERIES+1 rows."""
     from gelos_spark.operators.knn_join import knn_join_distributed
 
+    monkeypatch.setattr(kj, "MAX_QUERIES", 50)
     tiles = synth.tracker_df(spark, 800, seed=9)
     queries = oracles.query_df(spark, 60, 800, seed=9, k=4)
     collect_sizes.clear()  # count only knn_join's collects
-    got = knn_join(spark, tiles, queries, n_tiles_hint=800, max_queries=50)
+    got = knn_join(spark, tiles, queries, n_tiles_hint=800)
     assert collect_sizes and max(collect_sizes) <= 51, collect_sizes
     exp = knn_join_distributed(spark, tiles, queries, n_tiles_hint=800)
     assert _sorted_rows(got) == _sorted_rows(exp)
-
-
-def test_knn_max_queries_none_skips_probe(spark):
-    """max_queries=None keeps the legacy contract: the caller asserts
-    the frame is request-sized and the driver-resident path runs."""
-    tiles = synth.tracker_df(spark, 400, seed=3)
-    queries = oracles.query_df(spark, 12, 400, seed=3, k=3)
-    got = knn_join(spark, tiles, queries, n_tiles_hint=400, max_queries=None)
-    brute = knn_join(spark, tiles, queries, n_tiles_hint=400)
-    assert _sorted_rows(got) == _sorted_rows(brute)
 
 
 @pytest.mark.parametrize("bf_pairs", [0, 2_000_000])
@@ -251,8 +242,9 @@ def test_knn_ring_call_driver_action_budget(
     """A two-round ring call (initial radius pinned to 2) launches at
     most 10 Spark jobs: the query collect, the index aggregate and one
     collect per ring round (an eager checkpoint of the result took
-    11). Every collect holds at most max(max_queries + 1, sum of k)
+    11). Every collect holds at most max(MAX_QUERIES + 1, sum of k)
     rows."""
+    monkeypatch.setattr(kj, "MAX_QUERIES", 16)
     monkeypatch.setattr(kj, "_initial_radius", lambda *a, **k: 2)
     rounds = []
     real_ring = kj._ring_topk
@@ -264,7 +256,7 @@ def test_knn_ring_call_driver_action_budget(
 
     def call():
         out.append(
-            kj.knn_join(spark, tiles, queries, n_tiles_hint=3000, max_queries=16)
+            kj.knn_join(spark, tiles, queries, n_tiles_hint=3000)
         )
 
     jobs = jobs_launched("knn_budget", call)

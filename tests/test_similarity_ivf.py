@@ -55,41 +55,40 @@ def test_list_matrix_validates_per_row_lengths():
 
 
 def test_fold_dot_bit_equals_jvm(spark):
-    """The Arrow pair scorer (`_cosine_pairs_frame` / `_fold_dot`)
-    carries BIT-identity with the JVM `aggregate(zip_with(...))` left
-    fold it replaced — not closeness. Pin the two against each other on
-    adversarial float data (9 orders of magnitude, sign flips: any
-    summation-order deviation shows up in the low bits here), at a
-    dim (37) that exercises the odd/non-power-of-two path."""
+    """The in-task pair kernel (`_fold_dot`, the request scorer's pass
+    over the pairs outside dense blocks) carries BIT-identity with the
+    JVM `aggregate(zip_with(...))` left fold — not closeness. Pin the
+    two against each other on adversarial float data (9 orders of
+    magnitude, sign flips: any summation-order deviation shows up in
+    the low bits here), at a dim (37) that exercises the
+    odd/non-power-of-two path, over a gather that repeats and permutes
+    the rows of both sides as the scorer's member index does."""
     rng = np.random.default_rng(99)
     n, dim = 64, 37
     scale = 10.0 ** rng.integers(-4, 5, size=(n, dim))
     qv = rng.standard_normal((n, dim)) * scale
     cv = rng.standard_normal((n, dim)) * scale
+    ci = rng.integers(0, n, size=3 * n)
+    qi = rng.integers(0, n, size=3 * n)
+    got = sim._fold_dot(
+        np.ascontiguousarray(cv.T), ci, np.ascontiguousarray(qv.T), qi
+    )
     pdf = pd.DataFrame(
         {
-            "query_id": range(n),
-            "vec_id": range(n),
-            "qv": [r.tolist() for r in qv],
-            "cv": [r.tolist() for r in cv],
-            "qn": 1.0,
-            "cn": 1.0,
+            "p": range(ci.size),
+            "qv": [qv[i].tolist() for i in qi],
+            "cv": [cv[i].tolist() for i in ci],
         }
     )
-    df = spark.createDataFrame(pdf)
     jvm = {
-        r["vec_id"]: r["d"]
-        for r in df.select(
-            "vec_id", (oracles._dot_expr("cv", "qv")).alias("d")
-        ).collect()
+        r["p"]: r["d"]
+        for r in spark.createDataFrame(pdf)
+        .select("p", oracles._dot_expr("cv", "qv").alias("d"))
+        .collect()
     }
-    arrow = {
-        r["vec_id"]: r["cosine"]
-        for r in sim._cosine_pairs_frame(df, dim).collect()  # qn=cn=1 -> raw dot
-    }
-    assert len(jvm) == n
-    for i in range(n):
-        assert jvm[i] == arrow[i], f"bit mismatch at row {i}: {jvm[i]!r} != {arrow[i]!r}"
+    assert len(jvm) == ci.size
+    for p in range(ci.size):
+        assert jvm[p] == got[p], f"bit mismatch at pair {p}: {jvm[p]!r} != {got[p]!r}"
 
 
 def test_block_cosine_bit_equals_jvm_fold(spark):
@@ -142,39 +141,28 @@ def test_block_cosine_bit_equals_jvm_fold(spark):
         assert got[key] == val, f"bit mismatch at {key}: {got[key]!r} != {val!r}"
 
 
-def test_cosine_pairs_frame_infers_dim_and_rejects_ragged(spark):
-    """The pair scorer validates every row against the ``dim`` its
-    caller passes (lsh_topk knows it from the hyperplanes), so a
-    ragged pair frame fails loudly instead of reshaping wrong."""
-    ok = spark.createDataFrame(
-        pd.DataFrame(
-            {
-                "query_id": [0, 1],
-                "vec_id": [10, 11],
-                "qv": [[1.0, 0.0, 0.0], [0.0, 2.0, 0.0]],
-                "cv": [[1.0, 0.0, 0.0], [0.0, 1.0, 0.0]],
-                "qn": [1.0, 2.0],
-                "cn": [1.0, 1.0],
-            }
-        )
-    )
-    got = {r["vec_id"]: r["cosine"] for r in sim._cosine_pairs_frame(ok, 3).collect()}
-    assert got == {10: 1.0, 11: 1.0}
+def test_lsh_topk_infers_dim_and_rejects_ragged(spark):
+    """lsh_topk reads the vector width from its bounded query collect
+    and validates every row against it: the query matrix on the
+    driver, each index batch in its task. A ragged query side, a
+    ragged corpus or a corpus of another width fails loudly instead of
+    reshaping into wrong rows."""
+    schema = "vec_id long, embedding array<double>"
+    qschema = "query_id long, embedding array<double>"
+    corpus = spark.createDataFrame([(10, [1.0, 0.0, 0.0]), (11, [0.0, 1.0, 0.0])], schema)
+    q = spark.createDataFrame([(0, [1.0, 0.0, 0.0]), (1, [0.0, 2.0, 0.0])], qschema)
+    got = sim.lsh_topk(spark, corpus, q, k=1, nbits=4, ntables=4).collect()
+    assert [tuple(r) for r in got] == [(0, 1, 10, 1.0), (1, 1, 11, 1.0)]
 
-    ragged = spark.createDataFrame(
-        pd.DataFrame(
-            {
-                "query_id": [0, 1],
-                "vec_id": [10, 11],
-                "qv": [[1.0, 0.0], [0.0, 2.0, 0.0, 1.0]],  # 2+4 rows, dim looks like 2
-                "cv": [[1.0, 0.0], [0.0, 1.0, 0.0, 5.0]],
-                "qn": [1.0, 2.0],
-                "cn": [1.0, 1.0],
-            }
-        ).astype({"query_id": "int64"})
-    )
-    with pytest.raises(Exception):  # Spark surfaces the executor-side shape error
-        sim._cosine_pairs_frame(ragged.coalesce(1), 2).collect()
+    ragged_q = spark.createDataFrame([(0, [1.0, 0.0]), (1, [0.0, 2.0, 0.0, 1.0])], qschema)
+    with pytest.raises(ValueError, match="shape"):
+        sim.lsh_topk(spark, corpus, ragged_q, k=1, nbits=4, ntables=4)
+
+    q2 = spark.createDataFrame([(0, [1.0, 0.0])], qschema)
+    ragged = spark.createDataFrame([(10, [1.0, 0.0]), (11, [0.0, 1.0, 0.0, 5.0])], schema)
+    for bad in (ragged.coalesce(1), corpus):  # ragged rows; every row of width 3
+        with pytest.raises(Exception, match="shape"):  # the executor-side error
+            sim.lsh_topk(spark, bad, q2, k=1, nbits=4, ntables=4).collect()
 
 
 def test_ivf_train_deterministic(spark, emb):
@@ -283,25 +271,24 @@ def test_ivf_corpus_self_search_stays_distributed(spark):
     plan = buf.getvalue()
     assert "LocalTableScan" not in plan and "Scan ExistingRDD" not in plan
     assert plan.count("Scan parquet") >= 2  # index side AND query side
-    exact = sim.brute_force_topk(emb, self_q, k=5, qid_col="query_id",
-                                 max_queries=None)
+    exact = sim.brute_force_topk(emb, self_q, k=5, qid_col="query_id")
     assert [tuple(r) for r in out.collect()] == [tuple(r) for r in exact.collect()]
 
 
-def test_brute_force_topk_guards_corpus_sized_query_side(spark):
-    """The query side broadcasts, so a corpus-sized query table must
-    raise with a pointer to the bucketed paths (VERDICT r3 item 5);
-    max_queries=None opts out of the guard."""
+def test_brute_force_topk_guards_corpus_sized_query_side(spark, monkeypatch):
+    """The query side broadcasts, so a query table past MAX_QUERIES
+    must raise with a pointer to the bucketed paths (VERDICT r3 item
+    5)."""
+    monkeypatch.setattr(sim, "MAX_QUERIES", 32)
     rows = [(i, [float(i % 7), float(i % 5), 1.0]) for i in range(64)]
     emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
     with pytest.raises(ValueError, match="lsh_topk"):
-        sim.brute_force_topk(emb, emb, k=3, max_queries=32)
-    # under the bound (or opted out) it runs
+        sim.brute_force_topk(emb, emb, k=3)
+    # under the bound it runs
     q = emb.where(F.col("vec_id") < 4).select(
         F.col("vec_id").alias("query_id"), "embedding"
     )
-    assert sim.brute_force_topk(emb, q, k=3, max_queries=32).count() == 12
-    assert sim.brute_force_topk(emb, q, k=3, max_queries=None).count() == 12
+    assert sim.brute_force_topk(emb, q, k=3).count() == 12
 
 
 def test_lsh_topk_recall_vs_brute_force(spark):
@@ -479,20 +466,21 @@ def test_ivf_portable_matches_numpy_reference(spark):
     assert got == sorted(exp, key=lambda x: (x[0], x[1]))
 
 
-def test_ivf_topk_corpus_sized_queries_auto_dispatch(spark, collect_sizes):
+def test_ivf_topk_corpus_sized_queries_auto_dispatch(spark, monkeypatch, collect_sizes):
     """ivf_topk(collect_queries=True) must NEVER fully collect a query
-    frame past max_queries (the silent-OOM edge the knn_join /
+    frame past MAX_QUERIES (the silent-OOM edge the knn_join /
     brute_force_topk guards already close): the probe is the bounded
-    limit(max_queries+1).toArrow() collect the path needs anyway, and
+    limit(MAX_QUERIES+1).toArrow() collect the path needs anyway, and
     on overflow the call routes to the distributed probe, returning
     rows identical to calling it directly. Every collect the call
-    makes is recorded and must hold at most max_queries+1 rows."""
+    makes is recorded and must hold at most MAX_QUERIES+1 rows."""
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     cents = sim.ivf_train(emb, n_centroids=8, iters=2, seed=7)
     index = sim.ivf_index(emb, cents)
     q = emb.where("vec_id < 40").selectExpr("vec_id AS query_id", "embedding")
+    monkeypatch.setattr(sim, "MAX_QUERIES", 16)
     collect_sizes.clear()  # count only ivf_topk's collects
-    got = sim.ivf_topk(spark, index, cents, q, k=5, nprobe=4, max_queries=16)
+    got = sim.ivf_topk(spark, index, cents, q, k=5, nprobe=4)
     assert collect_sizes and max(collect_sizes) <= 17, collect_sizes
     exp = sim.ivf_topk(
         spark, index, cents,
@@ -500,3 +488,69 @@ def test_ivf_topk_corpus_sized_queries_auto_dispatch(spark, collect_sizes):
         k=5, nprobe=4, collect_queries=False,
     )
     assert [tuple(r) for r in got.collect()] == [tuple(r) for r in exp.collect()]
+
+
+def _rows(df):
+    return [tuple(r) for r in df.collect()]
+
+
+def test_lsh_topk_collects_at_most_max_queries_plus_one(spark, emb, monkeypatch, collect_sizes):
+    """lsh_topk's only query-side collect is the bounded
+    limit(MAX_QUERIES+1).toArrow(): a 16-query call under a bound of 3
+    collects at most 4 rows, plans no broadcast (the query side stays
+    distributed in the cogroup scorer) and returns the rows of the
+    request path."""
+    from pyspark.sql.classic.dataframe import DataFrame
+
+    q = emb.where("vec_id < 16").selectExpr("vec_id AS query_id", "embedding")
+    exp = _rows(sim.lsh_topk(spark, emb, q, k=5, nbits=6, ntables=4))
+    monkeypatch.setattr(sim, "MAX_QUERIES", 3)
+    collect_sizes.clear()
+    out = sim.lsh_topk(spark, emb, q, k=5, nbits=6, ntables=4)
+    assert collect_sizes and max(collect_sizes) <= 4, collect_sizes
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert "BroadcastExchange" not in plan, plan
+    monkeypatch.setattr(DataFrame, "toArrow", lambda self: pytest.fail("second collect"))
+    assert _rows(out) == exp
+
+
+@pytest.mark.parametrize("method", ["ivf", "lsh"])
+def test_request_scorer_kernels_agree(spark, monkeypatch, emb, method):
+    """The request scorer scores a list's block with the block kernel
+    at or above DENSE_BLOCK_PAIRS pairs and every other pair with the
+    pair kernel. Forcing either kernel for every list gives the same
+    rows, bit for bit, for IVF and for LSH, also when the gather runs
+    in passes of a few pairs (GATHER_PAIRS)."""
+    q = emb.where("vec_id < 24").selectExpr("vec_id AS query_id", "embedding")
+    if method == "ivf":
+        cents = sim.ivf_train(emb, n_centroids=8, iters=2, seed=7)
+        index = sim.ivf_index(emb, cents)
+
+        def call():
+            return _rows(sim.ivf_topk(spark, index, cents, q, k=10, nprobe=3))
+    else:
+        def call():
+            return _rows(sim.lsh_topk(spark, emb, q, k=10, nbits=4, ntables=6))
+    got = []
+    for dense, gather in ((0, 1 << 20), (10**12, 1 << 20), (10**12, 7)):
+        monkeypatch.setattr(sim, "DENSE_BLOCK_PAIRS", dense)
+        monkeypatch.setattr(sim, "GATHER_PAIRS", gather)
+        got.append(call())
+    assert len(got[0]) == 240
+    assert got[0] == got[1] == got[2]
+
+
+def test_lsh_topk_request_sized_driver_action_budget(spark, emb, jobs_launched):
+    """A request-sized lsh_topk call plus its result collect launches
+    at most 6 Spark jobs: the bounded query collect, then the stages
+    of the pair dedup and the ranked result. The width probe and the
+    broadcast pair join this path replaced took 7. An added count(),
+    first() or collect() in the operator fails here."""
+    q = emb.where("vec_id < 12").selectExpr("vec_id AS query_id", "embedding")
+    rows = []
+    jobs = jobs_launched(
+        "lsh_budget",
+        lambda: rows.extend(sim.lsh_topk(spark, emb, q, k=10, nbits=6, ntables=4).collect()),
+    )
+    assert len(rows) == 120
+    assert jobs <= 6, jobs
