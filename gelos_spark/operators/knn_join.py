@@ -7,18 +7,24 @@ haversine distance").
 Algorithm (iterative DataFrame loop — SURVEY.md §4 item 2):
 
   The TILE side is the big side (10^12 rows at target scale): it is
-  cell-indexed by a pure JVM column expression and persisted, and one
-  aggregate over it measures tile density. Each round equi-joins the
-  active queries' shell cells against it and only the matched
-  candidates shuffle (keyed by query_id) into the per-query top-k
-  window.
+  cell-indexed by a pure JVM column expression and persisted, and the
+  one write that fills the cache observes the tile density on the way
+  (``_observed``). Each round equi-joins the active queries' shell
+  cells against it and only the matched candidates shuffle (keyed by
+  query_id) into the per-query top-k window. That window is bounded
+  by the literal largest k as well as each query's own k, so Spark
+  keeps at most k_max rows per query and partition before the shuffle
+  (``WindowGroupLimit``).
 
   Round i explores the shell of cells with grid Chebyshev distance in
   (r_{i-1}, r_i] of each ACTIVE query's cell. The initial radius r_0
-  is chosen from the measured density so the first disk is expected
-  to hold ~3*k candidates (``_initial_radius``); when the data is
-  clustered the k-th distance may still beat the bound only after a
-  second or third round. A query finalizes when its rank-k candidate
+  is chosen from the measured density (``_initial_radius``). The
+  driver carrier sizes the first disk for ~30*k candidates, so a
+  request batch usually finishes in one round; its first shell is
+  capped at ``BRUTE_FORCE_PAIRS`` rows (``_driver_radius``). The
+  distributed carrier sizes it for ~3*k. When the data is clustered
+  the k-th distance may still beat the bound only after a second or
+  third round. A query finalizes when its rank-k candidate
   by (dist_km, image_id) is within the conservative lower bound on
   anything outside the explored disk (``_finished``,
   ``_bound_km_col``). Queries still unresolved after a fixed number
@@ -59,10 +65,12 @@ rank — results are bound-invariant.
 
 from __future__ import annotations
 
+import math
+
 import numpy as np
 import pandas as pd
 import pyarrow as pa
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
 from gelos_spark.functions import cells
@@ -120,10 +128,12 @@ def default_res(n_tiles: int) -> int:
     return int(np.clip(int(np.log2(max(n_tiles, 2)) / 2) + 1, 3, 14))
 
 
-def _initial_radius(stats: dict, res: int, k_max: int) -> int:
+def _initial_radius(stats: dict, res: int, candidates: float) -> int:
     """Smallest disk radius whose expected candidate count is
-    >= 3 * k, from the measured tile density: occupancy over
-    the data bbox x tiles-per-occupied-cell."""
+    >= ``candidates``, from the measured tile density: occupancy over
+    the data bbox x tiles-per-occupied-cell. The distributed carrier
+    asks for 3*k candidates, the driver carrier for up to 30*k
+    (``_driver_radius``)."""
     n = 1 << res
     n_tiles, occ = max(stats["n"], 1), max(stats["occ"], 1)
     bx = max((stats["lon1"] - stats["lon0"]) / 360.0 * n, 0.0) + 1.0
@@ -133,16 +143,38 @@ def _initial_radius(stats: dict, res: int, k_max: int) -> int:
     density = occupancy * per_cell  # expected tiles per grid cell
     if density <= 0:
         return 1
-    need = 3.0 * k_max / density
+    need = candidates / density
     r = int(np.ceil((np.sqrt(need) - 1.0) / 2.0))
     return int(np.clip(r, 1, max(n // 2, 1)))
+
+
+def _driver_radius(stats: dict, res: int, k_max: int, n_active: int) -> int:
+    """The driver carrier's first radius: a disk expected to hold
+    ~30*k candidates, so a request batch usually finishes in one ring
+    round (at 3*k nearly every batch needed two). Its first shell of
+    ``n_active * (2r+1)^2`` (query, cell) rows stays at or below
+    ``BRUTE_FORCE_PAIRS``, and the radius never falls below the 3*k
+    one."""
+    r_min = _initial_radius(stats, res, 3 * k_max)
+    r_cap = (math.isqrt(BRUTE_FORCE_PAIRS // n_active) - 1) // 2
+    return max(min(_initial_radius(stats, res, 30 * k_max), r_cap), r_min)
+
+
+def _observed(df: DataFrame, *aggs: F.Column) -> dict:
+    """Materialize the persisted ``df`` with ONE action (a noop write:
+    one Spark job, plus one per shuffle below the cache) and return the
+    aggregates ``aggs`` measured on the way. The observation is
+    unnamed, so concurrent calls never share its metrics."""
+    obs = Observation()
+    df.observe(obs, *aggs).write.format("noop").mode("overwrite").save()
+    return obs.get
 
 
 def _index_tiles(
     tiles: DataFrame, res: int, partitions: int | None = None
 ) -> tuple[DataFrame, dict]:
     """The persisted cell-indexed tile frame and its density stats.
-    One aggregate materializes the index AND measures density.
+    One observed write materializes the index AND measures density.
     ``partitions`` hash-partitions the index by cell first, so each
     round's shell join reuses that layout and only the shell side
     shuffles."""
@@ -152,17 +184,14 @@ def _index_tiles(
     if partitions is not None:
         tiles_c = tiles_c.repartition(partitions, "cell")
     tiles_c = tiles_c.persist()
-    stats = (
-        tiles_c.agg(
-            F.count("*").alias("n"),
-            F.approx_count_distinct("cell").alias("occ"),
-            F.min("lon").alias("lon0"),
-            F.max("lon").alias("lon1"),
-            F.min("lat").alias("lat0"),
-            F.max("lat").alias("lat1"),
-        )
-        .collect()[0]
-        .asDict()
+    stats = _observed(
+        tiles_c,
+        F.count("*").alias("n"),
+        F.approx_count_distinct("cell").alias("occ"),
+        F.min("lon").alias("lon0"),
+        F.max("lon").alias("lon1"),
+        F.min("lat").alias("lat0"),
+        F.max("lat").alias("lat1"),
     )
     return tiles_c, stats
 
@@ -182,27 +211,34 @@ def _with_dist(pairs: DataFrame) -> DataFrame:
     )
 
 
-def _topk(pool: DataFrame) -> DataFrame:
+def _topk(pool: DataFrame, k_max: int) -> DataFrame:
     """Each query's k best candidates by (dist_km, image_id), with
-    their rank."""
+    their rank. ``k_max`` (at least every query's k) is a literal, so
+    Spark limits the window per partition before its shuffle
+    (``WindowGroupLimit``); the per-query ``k`` column alone does
+    not."""
     w = Window.partitionBy("query_id").orderBy(F.col("dist_km").asc(), F.col("image_id").asc())
-    return pool.withColumn("rank", F.row_number().over(w)).where(F.col("rank") <= F.col("k"))
+    return pool.withColumn("rank", F.row_number().over(w)).where(
+        (F.col("rank") <= F.col("k")) & (F.col("rank") <= F.lit(k_max))
+    )
 
 
-def _ring_topk(prev: DataFrame | None, shell: DataFrame, tiles_c: DataFrame) -> DataFrame:
+def _ring_topk(
+    prev: DataFrame | None, shell: DataFrame, tiles_c: DataFrame, k_max: int
+) -> DataFrame:
     """One ring round: the shell's (query, cell) rows join the tile
     index, and their candidates merge with the unfinished queries'
     previous top-k rows (pool columns) into a new ranked top-k."""
     cand = _with_dist(shell.join(tiles_c, "cell"))
-    return _topk(cand if prev is None else prev.unionByName(cand))
+    return _topk(cand if prev is None else prev.unionByName(cand), k_max)
 
 
-def _exact_topk(tiles: DataFrame, queries: DataFrame) -> DataFrame:
+def _exact_topk(tiles: DataFrame, queries: DataFrame, k_max: int) -> DataFrame:
     """The exact brute-force pass: every query (query_id, qlon, qlat,
     k) against every tile, ranked. Complete by construction, so any
     partial ring candidates of these queries are dropped."""
     pairs = tiles.select("image_id", "lon", "lat").crossJoin(queries)
-    return _topk(_with_dist(pairs))
+    return _topk(_with_dist(pairs), k_max)
 
 
 def _exact_now(rounds: int, max_rounds: int, r: int, n_grid: int) -> bool:
@@ -329,6 +365,7 @@ def knn_join(
     if len(q) == 0:
         return spark.createDataFrame([], out_schema)
     out_cols = ["query_id", "rank", "image_id", "dist_km"]
+    k_max = int(q["k"].max())
 
     def exact(tiles_df: DataFrame, active: pd.DataFrame) -> pd.DataFrame:
         # the few queries broadcast against the tile table; collected
@@ -338,7 +375,7 @@ def knn_join(
             ),
             query_schema,
         )
-        return _exact_topk(tiles_df, F.broadcast(qdf)).select(*out_cols).toPandas()
+        return _exact_topk(tiles_df, F.broadcast(qdf), k_max).select(*out_cols).toPandas()
 
     def result(ranked: list[pd.DataFrame]) -> DataFrame:
         out = pd.concat([r[out_cols] for r in ranked], ignore_index=True)
@@ -346,34 +383,34 @@ def knn_join(
         return spark.createDataFrame(out, out_schema)
 
     if n_hint is not None and n_hint * len(q) <= BRUTE_FORCE_PAIRS:
-        # small input: no cell column, no persist, no density aggregate
+        # small input: no cell column, no persist, no density measure
         # (none of them feed the exact pass)
         return result([exact(tiles, q)])
 
-    q["qcell"] = cells.cell_encode(q["lon"].to_numpy(), q["lat"].to_numpy(), res)
     tiles_c, stats = _index_tiles(tiles, res)
-    # the measured count re-applies the size rule (an overestimated or
-    # missing hint), and an empty tile table goes straight to the exact
-    # pass
-    small = stats["n"] * len(q) <= BRUTE_FORCE_PAIRS
-
-    done: list[pd.DataFrame] = []  # finished queries' ranked top-k rows
-    prev: pd.DataFrame | None = None  # unfinished queries' top-k rows
-    active = q
-    r_prev = -1
-    r_cur = _initial_radius(stats, res, int(q["k"].max()))
-    rounds = 0
-
     try:
+        if stats["n"] * len(q) <= BRUTE_FORCE_PAIRS:
+            # the measured count re-applies the size rule (an
+            # overestimated or missing hint), and an empty tile table
+            # goes straight to the exact pass
+            return result([exact(tiles_c, q)])
+
+        q["qcell"] = cells.cell_encode(q["lon"].to_numpy(), q["lat"].to_numpy(), res)
+        done: list[pd.DataFrame] = []  # finished queries' ranked top-k rows
+        prev: pd.DataFrame | None = None  # unfinished queries' top-k rows
+        active = q
+        r_prev = -1
+        r_cur = _driver_radius(stats, res, k_max, len(q))
+        rounds = 0
         while len(active) > 0:
-            if small or _exact_now(rounds, DRIVER_RING_ROUNDS, r_cur, n_grid):
+            if _exact_now(rounds, DRIVER_RING_ROUNDS, r_cur, n_grid):
                 done.append(exact(tiles_c, active))
                 break
             shell = spark.createDataFrame(_shell_pdf(active, res, r_prev, r_cur), shell_schema)
             kept = None if prev is None else spark.createDataFrame(prev, pool_schema)
             # ONE Spark action per round: the active queries' ranked top-k
             ranked = (
-                _ring_topk(kept, F.broadcast(shell), tiles_c)
+                _ring_topk(kept, F.broadcast(shell), tiles_c, k_max)
                 .withColumn("stop", _finished(res, r_cur))
                 .toPandas()
             )
@@ -384,9 +421,9 @@ def knn_join(
             active = active[~active["query_id"].isin(done_ids)]
             rounds += 1
             r_prev, r_cur = r_cur, min(r_cur * 3, n_grid)
+        return result(done)
     finally:
         tiles_c.unpersist()
-    return result(done)
 
 
 def _shell_udf(res: int, r0: int, r1: int):
@@ -461,8 +498,8 @@ def knn_join_distributed(
         .withColumn("qcell", cell_encode_col(F.col("lon"), F.col("lat"), res))
         .persist()
     )
-    k_max_row = active.agg(F.max("k")).collect()[0][0]
-    if k_max_row is None:
+    k_max = _observed(active, F.max("k").alias("k_max"))["k_max"]
+    if k_max is None:
         active.unpersist()
         tiles_c.unpersist()
         return spark.createDataFrame([], out_schema)
@@ -471,18 +508,18 @@ def knn_join_distributed(
     finalized: list[DataFrame] = []  # ranked top-k frames, one per pass
     persisted: list[DataFrame] = [tiles_c, active]
     r_prev = -1
-    r_cur = _initial_radius(stats, res, int(k_max_row))
+    r_cur = _initial_radius(stats, res, 3 * k_max)
     rounds = 0
     qside = ["query_id", F.col("lon").alias("qlon"), F.col("lat").alias("qlat"), "k"]
 
     while True:
         if _exact_now(rounds, DISTRIBUTED_RING_ROUNDS, r_cur, n_grid):
-            finalized.append(_exact_topk(tiles_c, active.select(*qside)))
+            finalized.append(_exact_topk(tiles_c, active.select(*qside), k_max))
             break
         shell = active.select(
             *qside, F.explode(_shell_udf(res, r_prev, r_cur)(F.col("qcell"))).alias("cell")
         )
-        ranked = _ring_topk(prev, shell, tiles_c).persist()
+        ranked = _ring_topk(prev, shell, tiles_c, k_max).persist()
         persisted.append(ranked)
 
         qdone = ranked.where(_finished(res, r_cur)).select("query_id")

@@ -2,9 +2,13 @@
 (FIXTURES.md §6: engine rows must match exactly, including
 (distance, image_id) tie-breaks)."""
 
+import importlib.util
+import pathlib
+
 import numpy as np
 import pandas as pd
 import pytest
+from pyspark.sql import functions as F
 
 from gelos_spark.functions.geometry import haversine_np
 from gelos_spark.operators import knn_join as kj
@@ -12,6 +16,12 @@ from gelos_spark.operators.knn_join import knn_join
 from gelos_spark.sources import synth
 
 import oracles
+
+_spec = importlib.util.spec_from_file_location(
+    "plan_shapes", pathlib.Path(__file__).resolve().parents[1] / "scripts" / "plan_shapes.py"
+)
+plan_shapes = importlib.util.module_from_spec(_spec)
+_spec.loader.exec_module(plan_shapes)
 
 
 def _brute_knn(tracker: pd.DataFrame, queries: pd.DataFrame) -> pd.DataFrame:
@@ -240,10 +250,10 @@ def test_knn_ring_call_driver_action_budget(
     spark, monkeypatch, force_ring, collect_sizes, jobs_launched
 ):
     """A two-round ring call (initial radius pinned to 2) launches at
-    most 10 Spark jobs: the query collect, the index aggregate and one
-    collect per ring round (an eager checkpoint of the result took
-    11). Every collect holds at most max(MAX_QUERIES + 1, sum of k)
-    rows."""
+    most 8 Spark jobs, the measured count: the query collect, the one
+    observed write that fills the tile index and measures its density,
+    and one collect per ring round. Every collect holds at most
+    max(MAX_QUERIES + 1, sum of k) rows."""
     monkeypatch.setattr(kj, "MAX_QUERIES", 16)
     monkeypatch.setattr(kj, "_initial_radius", lambda *a, **k: 2)
     rounds = []
@@ -261,7 +271,7 @@ def test_knn_ring_call_driver_action_budget(
 
     jobs = jobs_launched("knn_budget", call)
     assert len(rounds) == 2
-    assert jobs <= 10, jobs
+    assert jobs <= 8, jobs
     assert collect_sizes and max(collect_sizes) <= max(16 + 1, 16 * 5), collect_sizes
     assert out[0].count() == 16 * 5
 
@@ -281,3 +291,116 @@ def test_knn_ring_call_leaves_no_cache(spark, force_ring):
     out = knn_join(spark, tiles, queries, n_tiles_hint=2000)
     assert cached() - before == set()
     assert len(out.collect()) == 12 * 5
+
+
+def test_knn_empty_tiles_return_no_rows(spark):
+    """An empty tile table with ``res`` and no ``n_tiles_hint``: both
+    carriers return no rows. The empty index has no bbox, so the size
+    rule sends it to the exact pass before any radius is derived."""
+    tiles = spark.createDataFrame([], "image_id string, lon double, lat double")
+    queries = oracles.query_df(spark, 4, 100, seed=3, k=3)
+    assert knn_join(spark, tiles, queries, res=7).count() == 0
+    assert kj.knn_join_distributed(spark, tiles, queries, res=7).count() == 0
+
+
+def test_knn_index_stats_equal_an_aggregate(spark):
+    """The density the caching write observes equals an aggregate over
+    the same cell-indexed frame."""
+    tiles = synth.tracker_df(spark, 2000, seed=6)
+    tiles_c, stats = kj._index_tiles(tiles, 8)
+    try:
+        exp = tiles_c.agg(
+            F.count("*").alias("n"),
+            F.approx_count_distinct("cell").alias("occ"),
+            F.min("lon").alias("lon0"),
+            F.max("lon").alias("lon1"),
+            F.min("lat").alias("lat0"),
+            F.max("lat").alias("lat1"),
+        ).first()
+    finally:
+        tiles_c.unpersist()
+    assert stats == exp.asDict()
+    assert stats["n"] == 2000
+
+
+@pytest.mark.parametrize("bf_pairs", [0, 2_000_000])
+def test_knn_topk_window_is_limited_before_its_shuffle(spark, monkeypatch, bf_pairs):
+    """The ring round's ranked frame (BRUTE_FORCE_PAIRS 0) and the
+    exact pass's (2M) each hold a partial and a final
+    ``WindowGroupLimit``: the literal k_max bound lets each partition
+    keep at most k_max rows per query before the window's shuffle. A
+    per-query ``k`` column alone plans neither."""
+    monkeypatch.setattr(kj, "BRUTE_FORCE_PAIRS", bf_pairs)
+    plans = []
+    for name in ("_ring_topk", "_exact_topk"):
+        real = getattr(kj, name)
+        monkeypatch.setattr(
+            kj, name, lambda *a, _real=real: plans.append(_real(*a)) or plans[-1]
+        )
+    tiles = synth.tracker_df(spark, 2000, seed=4)
+    queries = oracles.query_df(spark, 12, 2000, seed=4, k=5)
+    assert knn_join(spark, tiles, queries, n_tiles_hint=2000).count() == 12 * 5
+    assert plans
+    for df in plans:
+        nodes = plan_shapes.node_counts(df)
+        assert nodes.get("WindowGroupLimit", 0) == 2, nodes
+
+
+def test_knn_bench_batch_finishes_in_one_ring_round(spark, monkeypatch):
+    """A request batch shaped like the benchmark's (16 queries at k=10,
+    half at tiles and half uniform, over 150k tracker tiles: 2.4M
+    pairs, past BRUTE_FORCE_PAIRS) takes exactly one ring round: its
+    first disk is sized for ~30*k candidates. The rows match the NumPy
+    brute force."""
+    n = 150_000
+    rounds = []
+    real_ring = kj._ring_topk
+    monkeypatch.setattr(kj, "_ring_topk", lambda *a: rounds.append(1) or real_ring(*a))
+    tiles = synth.tracker_df(spark, n, seed=101)
+    queries = synth.query_points(16, n, seed=101)
+    got = knn_join(spark, tiles, queries, n_tiles_hint=n).toPandas()
+    assert len(rounds) == 1
+    exp = _brute_knn(tiles.toPandas(), queries)
+    assert got[["query_id", "rank", "image_id"]].values.tolist() == exp[
+        ["query_id", "rank", "image_id"]
+    ].values.tolist()
+
+
+@pytest.mark.parametrize("bf_pairs, r_cap", [(1, None), (64 * 13**2, 6)])
+def test_knn_first_shell_capped_never_below_3k_radius(spark, monkeypatch, bf_pairs, r_cap):
+    """A large active set (64 queries) against a small BRUTE_FORCE_PAIRS.
+    At a cap of 64 x 13^2 (query, cell) rows the first disk is wider
+    than the 3*k one but its radius stays at or below 6, so the first
+    shell holds at most BRUTE_FORCE_PAIRS rows. At a cap of 1 row,
+    which no disk fits, the first disk is the 3*k one. The rows match
+    the NumPy brute force either way."""
+    monkeypatch.setattr(kj, "BRUTE_FORCE_PAIRS", bf_pairs)
+    seen = {}
+    real_index, real_shell = kj._index_tiles, kj._shell_pdf
+
+    def index(*a):
+        tiles_c, seen["stats"] = real_index(*a)
+        return tiles_c, seen["stats"]
+
+    def shell(active, res, r0, r1):
+        out = real_shell(active, res, r0, r1)
+        seen.setdefault("first", (r1, len(out)))
+        return out
+
+    monkeypatch.setattr(kj, "_index_tiles", index)
+    monkeypatch.setattr(kj, "_shell_pdf", shell)
+    tiles = synth.tracker_df(spark, 3000, seed=21)
+    queries = oracles.query_df(spark, 64, 3000, seed=21, k=5).toPandas()
+    got = knn_join(spark, tiles, queries, res=8, n_tiles_hint=3000).toPandas()
+
+    r3 = kj._initial_radius(seen["stats"], 8, 3 * 5)
+    r_first, shell_rows = seen["first"]
+    if r_cap is None:
+        assert r_first == r3
+    else:
+        assert r3 < r_first <= r_cap
+        assert shell_rows <= bf_pairs
+    exp = _brute_knn(tiles.toPandas(), queries)
+    assert got[["query_id", "rank", "image_id"]].values.tolist() == exp[
+        ["query_id", "rank", "image_id"]
+    ].values.tolist()
