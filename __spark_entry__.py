@@ -2109,14 +2109,8 @@ def _lsh_portable(spark, sf_dir):
     "WHERE rank <= 10 ORDER BY query_id, rank",
 )
 def _ivf_portable(spark, sf_dir):
-    import numpy as np
-
     (emb,) = _tables(spark, sf_dir, "embeddings")
-    cpdf = emb.where(F.col("vec_id") < 16).orderBy("vec_id").toPandas()
-    cents = np.floor(
-        np.stack([np.asarray(v, dtype=np.float64) for v in cpdf.embedding]) * 1000.0
-        + 0.5
-    ).astype(np.int64)
+    cents = similarity.portable_centroids(emb, 16, "vec_id", "embedding")
     index = similarity.ivf_index(emb, cents, quantize=True)
     q = emb.where(F.col("vec_id") < 5).select(
         F.col("vec_id").alias("query_id"), "embedding"

@@ -29,7 +29,6 @@ from __future__ import annotations
 import numpy as np
 
 MAX_RES = 26
-EARTH_RADIUS_KM = 6371.0088
 # conservative km per degree of latitude (minimum over the WGS84 meridian)
 KM_PER_DEG_LAT_MIN = 110.567
 

@@ -41,9 +41,9 @@ Algorithm (iterative DataFrame loop — SURVEY.md §4 item 2):
       collects the active queries' ranked top-k rows with their stop
       flag, and the unfinished queries' rows are re-shipped into the
       next round's pool. The exact pass is collected the same way, and
-      the result is built from the collected rows. Small inputs skip
-      the rings and take the exact pass directly
-      (``BRUTE_FORCE_PAIRS``).
+      the result is built from the collected rows. Small inputs, by
+      the tile count the index observes, skip the rings and take the
+      exact pass directly (``BRUTE_FORCE_PAIRS``).
     - ``knn_join_distributed`` (a corpus-sized query table, dispatched
       to automatically past ``MAX_QUERIES``): the query side and the
       running top-k stay DataFrames; shells come from the same kernel
@@ -327,19 +327,16 @@ def knn_join(
     distributed action; measured crossover on local[32] is ~2-10M
     pairs — above it the brute pass's per-query window shuffle
     dominates and ring pruning wins), so every query takes the exact
-    pass. The tile count is ``n_tiles_hint`` before the tiles are
-    indexed (a count only when ``res`` must be derived from it), and
-    the measured count after, so an overestimated or missing hint
-    still ends in the exact pass.
+    pass. The tile count is the one the index observes while it
+    caches; ``n_tiles_hint`` only picks ``res`` (a count when neither
+    is given), so a wrong hint can slow the rings but never sends a
+    large tile table to the exact cross-join.
     Ring expansion is the 10^12-tile design; results are identical
     either way (both exact, ties broken by id). Setting
     ``BRUTE_FORCE_PAIRS = 0`` forces the ring path.
     """
-    n_hint = n_tiles_hint
     if res is None:
-        if n_hint is None:
-            n_hint = tiles.count()
-        res = default_res(n_hint)
+        res = default_res(tiles.count() if n_tiles_hint is None else n_tiles_hint)
     n_grid = 1 << res
 
     if isinstance(queries, pd.DataFrame):
@@ -382,17 +379,11 @@ def knn_join(
         out = out.sort_values(["query_id", "rank"], kind="stable")
         return spark.createDataFrame(out, out_schema)
 
-    if n_hint is not None and n_hint * len(q) <= BRUTE_FORCE_PAIRS:
-        # small input: no cell column, no persist, no density measure
-        # (none of them feed the exact pass)
-        return result([exact(tiles, q)])
-
     tiles_c, stats = _index_tiles(tiles, res)
     try:
         if stats["n"] * len(q) <= BRUTE_FORCE_PAIRS:
-            # the measured count re-applies the size rule (an
-            # overestimated or missing hint), and an empty tile table
-            # goes straight to the exact pass
+            # the observed count alone applies the size rule, and an
+            # empty tile table goes straight to the exact pass
             return result([exact(tiles_c, q)])
 
         q["qcell"] = cells.cell_encode(q["lon"].to_numpy(), q["lat"].to_numpy(), res)
@@ -482,8 +473,7 @@ def knn_join_distributed(
     frame never reads through a released cache.
     """
     if res is None:
-        n_hint = n_tiles_hint if n_tiles_hint is not None else tiles.count()
-        res = default_res(n_hint)
+        res = default_res(tiles.count() if n_tiles_hint is None else n_tiles_hint)
     n_grid = 1 << res
     out_schema = _schemas(queries.schema["query_id"].dataType.simpleString())[3]
 

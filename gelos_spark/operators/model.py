@@ -35,25 +35,6 @@ EMBED_SCHEMA = (
     "image_id string, sensor string, d int, embedding array<double>, checksum double"
 )
 
-# name -> (build_weights(conf) -> dict[str, np.ndarray],
-#          apply(weights, X[n, c]) -> np.ndarray[n, d_out])
-_MODELS: dict[str, tuple[Callable[[dict], dict], Callable[[dict, np.ndarray], np.ndarray]]] = {}
-
-
-def register_model(name: str):
-    """Register a named model; the engine analog of the reference's
-    jsonargparse class_path registry (embedding_generation.py:63-75)."""
-
-    def reg(pair):
-        _MODELS[name] = pair
-        return pair
-
-    return reg
-
-
-def registered_models() -> list[str]:
-    return sorted(_MODELS)
-
 
 def _seeded_matrix(seed: int, rows: int, cols: int, tag: int) -> np.ndarray:
     """Deterministic integer weight matrix in [-20, 20]: a pure
@@ -75,9 +56,6 @@ def _apply_linear(wts: dict, X: np.ndarray) -> np.ndarray:
     return X @ wts["W"]
 
 
-register_model("linear_seeded")((_build_linear, _apply_linear))
-
-
 def _build_mlp(conf: dict) -> dict:
     seed, d_in = int(conf.get("seed", 42)), int(conf["d_in"])
     hidden, d_out = int(conf.get("hidden", 16)), int(conf.get("d_out", 8))
@@ -91,7 +69,18 @@ def _apply_mlp(wts: dict, X: np.ndarray) -> np.ndarray:
     return np.maximum(X @ wts["W1"], 0.0) @ wts["W2"]
 
 
-register_model("mlp_seeded")((_build_mlp, _apply_mlp))
+# name -> (build_weights(conf) -> dict[str, np.ndarray],
+#          apply(weights, X[n, c]) -> np.ndarray[n, d_out]); the engine
+# analog of the reference's jsonargparse class_path registry
+# (embedding_generation.py:63-75)
+_MODELS: dict[str, tuple[Callable[[dict], dict], Callable[[dict, np.ndarray], np.ndarray]]] = {
+    "linear_seeded": (_build_linear, _apply_linear),
+    "mlp_seeded": (_build_mlp, _apply_mlp),
+}
+
+
+def registered_models() -> list[str]:
+    return sorted(_MODELS)
 
 
 def channel_sums(stack: np.ndarray) -> np.ndarray:

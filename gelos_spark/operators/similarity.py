@@ -4,24 +4,29 @@ cosine), ranked by (cosine desc, vec_id asc) through `_rank_topk`, and
 every cosine is bit-identical to the JVM left fold
 ``aggregate(zip_with(...))`` (the dot-product oracle in tests/oracles.py).
 
-  - brute-force cosine top-k: the exactness baseline. The query side
-    is request-sized and broadcasts (one bounded collect); the corpus
-    streams once through the block kernel (`_block_cosine_batches`),
-    so pairs exist only as matrix indices inside a task.
-  - inverted-list search, the two ANN paths. A list function maps a
-    vector to list ids. IVF (Lloyd-trained centroids, one centroid
-    kernel `_centroid_scorer`, float or exact-integer) indexes a
-    vector under its argmax centroid and probes a query's top
-    ``nprobe`` lists. LSH (random-hyperplane signs = SimHash for
-    vectors) indexes and probes each table's nbits-bit sign code,
-    offset by ``table << nbits``; recall grows with ntables. Both
-    build the index with `_index_frame` and pick a scorer by the size
-    of the query side: a query set that fits the bounded
-    ``limit(MAX_QUERIES+1).toArrow()`` collect is probed on the driver
-    and broadcasts against the probed lists of the index
-    (`_broadcast_probe_scored`); a corpus-sized one stays distributed
-    and meets the index in a cogroup on the list id
-    (`_cogroup_block_scored`).
+Every path is one inverted-list search. A list function maps a
+vector to list ids; the corpus is indexed under its ids, and a query
+is scored against the index rows of the lists its own list function
+gives.
+
+  - brute-force cosine top-k, the exactness baseline: ONE list that
+    every corpus row is in and every query probes. The index is a JVM
+    projection, and the query side must be request-sized.
+  - IVF (Lloyd-trained centroids, one centroid kernel
+    `_centroid_scorer`, float or exact-integer) indexes a vector under
+    its argmax centroid and probes a query's top ``nprobe`` lists.
+  - LSH (random-hyperplane signs = SimHash for vectors) indexes and
+    probes each table's nbits-bit sign code, offset by
+    ``table << nbits``; recall grows with ntables.
+
+IVF and LSH build the index with `_index_frame` and pick a scorer by
+the size of the query side: a query set that fits the bounded
+``limit(MAX_QUERIES+1).toArrow()`` collect is probed on the driver and
+broadcasts against the probed lists of the index
+(`_broadcast_probe_scored`); a corpus-sized one stays distributed and
+meets the index in a cogroup on the list id (`_cogroup_block_scored`).
+Brute force takes the broadcast scorer only: in its one list the
+cogroup would be a single task holding the corpus and every query.
 """
 
 from __future__ import annotations
@@ -32,8 +37,8 @@ from pyspark.sql import functions as F
 
 # query rows at or below which a top-k call collects its query side
 # (one bounded ``limit(MAX_QUERIES+1).toArrow()``) and broadcasts it.
-# Past it, brute_force_topk raises and the inverted-list paths keep
-# the query side distributed.
+# Past it, brute_force_topk raises and IVF and LSH keep the query
+# side distributed.
 MAX_QUERIES = 100_000
 
 # (index rows x probing queries) of one list in one batch at or above
@@ -78,70 +83,39 @@ def brute_force_topk(
     qid_col: str = "query_id",
     qvec_col: str = "embedding",
 ) -> DataFrame:
-    """Exact cosine top-k: corpus streamed ONCE against a broadcast
-    query matrix -> window. Returns (query_id, rank, vec_id, cosine)
-    ordered.
+    """Exact cosine top-k: the inverted-list search over ONE list that
+    every corpus row is in and every query probes. Returns (query_id,
+    rank, vec_id, cosine) ordered.
 
-    The query side BROADCASTS (collected once, request-sized — the
-    bounded ``limit(MAX_QUERIES+1).toArrow()`` probe IS the guard,
-    the knn_join pattern: zero extra Spark actions), so more than
-    ``MAX_QUERIES`` rows raises. The corpus is scored by the block
-    kernel (`_block_cosine_batches`): each corpus vector crosses the
-    Arrow boundary once, pairs exist only as matrix indices inside
-    the kernel, and the output is scalars-only — the previous
-    crossJoin pair-expanded every corpus vector ``nq`` times through
-    the scorer. Scores stay bit-identical to the JVM fold. Use
+    The index is a JVM projection (list id 0, the JVM norm), and the
+    request scorer (`_broadcast_probe_scored`) streams the corpus once
+    against the broadcast query matrix. The query side is collected by
+    the bounded ``limit(MAX_QUERIES+1).toArrow()``, so more than
+    ``MAX_QUERIES`` rows raises (module docstring). Use
     ``lsh_topk`` or ``ivf_topk`` for corpus x corpus search."""
-    import pyarrow as pa
-
     spark = corpus.sparkSession
-
-    def _overflow():
+    q_src = queries.select(F.col(qid_col).alias("query_id"), F.col(qvec_col).alias("qv"))
+    qtbl = _bounded_collect(q_src)
+    if qtbl.num_rows > MAX_QUERIES:
         raise ValueError(
             f"brute_force_topk broadcasts the query side: got > {MAX_QUERIES} "
             "query rows. For corpus-sized query sets use lsh_topk or ivf_topk."
         )
-
-    if qid_col not in queries.columns or qvec_col not in queries.columns:
-        # the guard fires before column resolution (a corpus-shaped
-        # frame passed as queries should hit the size bound, not an
-        # unresolved-column error)
-        if queries.limit(MAX_QUERIES + 1).count() > MAX_QUERIES:
-            _overflow()
-    q_src = queries.select(F.col(qid_col).alias("query_id"), F.col(qvec_col).alias("qv"))
-    qtbl = _bounded_collect(q_src)
-    if qtbl.num_rows > MAX_QUERIES:
-        _overflow()
     qidt = queries.schema[qid_col].dataType.simpleString()
     vidt = corpus.schema[id_col].dataType.simpleString()
     if qtbl.num_rows == 0:
         return _no_rows(spark, qidt, vidt)
-    qv = qtbl.column("qv").combine_chunks()
-    qm = _list_matrix(qv, qtbl.num_rows, len(qv[0]))
-    bc = spark.sparkContext.broadcast(
-        (qtbl.column("query_id").combine_chunks(), qm, _fold_norms(qm))
+    index = corpus.select(
+        F.col(id_col).alias("vec_id"),
+        F.col(vec_col).alias("cv"),
+        _norm_expr(vec_col).alias("cn"),
+        F.lit(0).cast("bigint").alias("cid"),
     )
-    src = corpus.select(F.col(id_col).alias("vec_id"), F.col(vec_col).alias("cv"))
-
-    def fn(batches):
-        qid_arr, Q, qn = bc.value
-        dim = Q.shape[1]
-        for b in batches:
-            if b.num_rows == 0:
-                continue
-            C = _list_matrix(b.column("cv"), b.num_rows, dim)
-            schema = pa.schema(
-                [
-                    ("query_id", qid_arr.type),
-                    ("vec_id", b.column("vec_id").type),
-                    ("cosine", pa.float64()),
-                ]
-            )
-            yield from _block_cosine_batches(
-                b.column("vec_id"), C, _fold_norms(C), qid_arr, Q, qn, schema
-            )
-
-    return _rank_topk(src.mapInArrow(fn, f"query_id {qidt}, vec_id {vidt}, cosine double"), k)
+    dim = len(qtbl.column("qv")[0])
+    scored = _broadcast_probe_scored(
+        index, qtbl, lambda m: np.zeros((len(m), 1), np.int64), dim, qidt, vidt
+    )
+    return _rank_topk(scored, k)
 
 
 def _rank_topk(scored: DataFrame, k: int) -> DataFrame:
@@ -162,11 +136,27 @@ def _hyperplanes(dim: int, nbits: int, ntables: int, seed: int) -> np.ndarray:
     return rng.standard_normal((ntables, nbits, dim))
 
 
+def _quantize(m: np.ndarray) -> np.ndarray:
+    """The portable quantizer: ``floor(x*1000 + 0.5)`` as int64, exact
+    in doubles, so integer dot products of quantized rows reproduce in
+    SQL (the oracles write the same expression)."""
+    return np.floor(m * 1000.0 + 0.5).astype(np.int64)
+
+
+def portable_centroids(corpus: DataFrame, n: int, id_col: str, vec_col: str) -> np.ndarray:
+    """Training-free INTEGER IVF centroids for ``quantize=True``: the
+    first ``n`` corpus vectors by id, quantized (the ``ivf_portable``
+    oracle rebuilds them in SQL)."""
+    tbl = corpus.orderBy(id_col).limit(n).select(vec_col).toArrow()
+    v = tbl.column(vec_col).combine_chunks()
+    return _quantize(_list_matrix(v, tbl.num_rows, len(v[0])))
+
+
 def _portable_planes(dim: int, nbits: int, ntables: int) -> np.ndarray:
     """Deterministic INTEGER hyperplanes in [-3, 3] from an arithmetic
     mix (not an RNG — the SQL oracle must rebuild them with plain
     column math). With vectors quantized to integers
-    (floor(x*1000 + 0.5)), every dot product is exact BIGINT/int64
+    (`_quantize`), every dot product is exact BIGINT/int64
     arithmetic, so bucket codes agree bit-for-bit across engines —
     the dedup-family portability trick applied to ANN bucketing."""
     t = np.arange(ntables, dtype=np.uint64)[:, None, None]
@@ -267,7 +257,7 @@ def _sign_lists(planes: np.ndarray, quantize: bool):
     (bit b set when plane b's dot is positive) offset by
     ``table << nbits``, so every (table, code) is one list id.
     ``quantize=True`` (the portable path) quantizes the rows to
-    integers (floor(x*1000 + 0.5), exact in doubles) against the int64
+    integers (`_quantize`) against the int64
     planes, so the codes are exact BIGINT arithmetic, reproducible in
     SQL (the lsh_portable oracle)."""
     ntables, nbits, _ = planes.shape
@@ -276,7 +266,7 @@ def _sign_lists(planes: np.ndarray, quantize: bool):
 
     def lists(m: np.ndarray) -> np.ndarray:
         if quantize:
-            m = np.floor(m * 1000.0 + 0.5).astype(np.int64)
+            m = _quantize(m)
         sgn = np.einsum("tbd,nd->ntb", planes, m) > 0  # [N, T, nbits]
         return (sgn * weights).sum(axis=2) + offsets
 
@@ -351,7 +341,7 @@ def _centroid_scorer(centroids: np.ndarray, quantize: bool = False):
 
     Float form: cosine of the 1e-12-clamped normalised rows and
     centroids. ``quantize=True`` (the portable path): centroids are an
-    INTEGER matrix, rows quantize to ``floor(x*1000 + 0.5)``, and the
+    INTEGER matrix, rows quantize through `_quantize`, and the
     score is exact-int dot / |c|. Integer products are exact and
     sqrt/division correctly rounded, so the scores (and the probed
     lists) agree across engines."""
@@ -370,8 +360,7 @@ def _centroid_scorer(centroids: np.ndarray, quantize: bool = False):
             )
 
         def score(m: np.ndarray) -> np.ndarray:
-            mq = np.floor(m * 1000.0 + 0.5).astype(np.int64)
-            return (mq @ cq.T).astype(np.float64) / cnorm[None, :]
+            return (_quantize(m) @ cq.T).astype(np.float64) / cnorm[None, :]
 
     else:
         cn = centroids / np.maximum(np.linalg.norm(centroids, axis=1, keepdims=True), 1e-12)
@@ -397,8 +386,7 @@ def _broadcast_probe_scored(
     ``DENSE_BLOCK_PAIRS`` pairs through the block kernel, the batch's
     remaining pairs in one pass of the pair kernel (`_fold_dot`). Each
     vector crosses the Arrow boundary once, the index streams with
-    zero shuffle, and the output is scalars-only (the
-    ``brute_force_topk`` shape)."""
+    zero shuffle, and the output is scalars-only."""
     import pyarrow as pa
 
     Q = _list_matrix(qtbl.column("qv").combine_chunks(), qtbl.num_rows, dim)

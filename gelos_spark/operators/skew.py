@@ -33,7 +33,6 @@ from pyspark.sql import functions as F
 SALT_COL = "_salt"
 
 MAX_AUTO_SALT = 64
-DEFAULT_SALT = 16  # when the caller pins hot keys but not n_salt
 
 
 def skew_stats(df: DataFrame, key: str, factor: float = 8.0) -> tuple[list, int]:
@@ -79,42 +78,20 @@ def explode_salts(dim: DataFrame, key: str, hot: list, n_salt: int) -> DataFrame
     return dim.withColumn(SALT_COL, F.explode(salts))
 
 
-def _resolve_salting(
-    df: DataFrame, key: str, hot: list | None, n_salt: int | None
-) -> tuple[list, int]:
-    """Fill in whichever of (hot, n_salt) the caller left to default.
-    Both default -> one skew_stats pre-pass derives both. Explicit hot
-    + default n_salt -> DEFAULT_SALT with NO pre-pass (observed counts
-    must not override an asserted hot set down to n_salt=1). Explicit
-    n_salt + default hot -> pre-pass finds the hot set only."""
-    if hot is not None:
-        return hot, (DEFAULT_SALT if n_salt is None else n_salt)
-    auto_hot, auto_salt = skew_stats(df, key)
-    return auto_hot, (auto_salt if n_salt is None else n_salt)
-
-
 def salted_join(
     fact: DataFrame,
     dim: DataFrame,
     key: str,
     uid: str,
-    hot: list | None = None,
-    n_salt: int | None = None,
+    hot: list,
+    n_salt: int,
     how: str = "inner",
 ) -> DataFrame:
     """Equi-join robust to hot ``key`` values: fact side salted by
     uid-hash, dim side exploded over salts — the hot key's rows spread
     over ``n_salt`` reducers instead of one. Result == plain join.
-
-    With the defaults both the hot set AND ``n_salt`` come from the
-    ``skew_stats`` pre-pass (safe by default — round 6); pass either
-    explicitly to pin them (or to reuse a previously computed stat).
-    An EXPLICIT ``hot`` with default ``n_salt`` gets ``DEFAULT_SALT``
-    (16) and skips the pre-pass entirely: the caller asserted the hot
-    set (e.g. known-hot production keys the current sample doesn't
-    show), so deriving n_salt from observed counts could return 1 and
-    silently disable the salting they asked for."""
-    hot, n_salt = _resolve_salting(fact, key, hot, n_salt)
+    ``skew_stats`` derives both ``hot`` and ``n_salt`` from the fact
+    side's observed counts."""
     f = with_salt(fact, key, hot, n_salt, uid)
     d = explode_salts(dim, key, hot, n_salt)
     return f.join(d, [key, SALT_COL], how).drop(SALT_COL)

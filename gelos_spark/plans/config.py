@@ -33,7 +33,6 @@ import re
 from collections.abc import Callable
 from dataclasses import dataclass, field
 
-import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -292,15 +291,7 @@ def _op_ann_topk(
     if method == "ivf":
         n_cents = int(n_centroids)
         if portable:
-            # training-free integer centroids — the quantized first
-            # n_centroids corpus vectors by id order — and exact-int
-            # scoring
-            cpdf = df.orderBy(id_col).limit(n_cents).select(vec_col).toPandas()
-            cents = np.floor(
-                np.stack([np.asarray(v, dtype=np.float64) for v in cpdf[vec_col]])
-                * 1000.0
-                + 0.5
-            ).astype(np.int64)
+            cents = similarity.portable_centroids(df, n_cents, id_col, vec_col)
         else:
             cents = similarity.ivf_train(
                 df, n_centroids=n_cents, iters=int(iters), seed=seed,

@@ -366,6 +366,27 @@ def test_knn_bench_batch_finishes_in_one_ring_round(spark, monkeypatch):
     ].values.tolist()
 
 
+def test_knn_underestimated_hint_takes_the_ring_path(spark, monkeypatch):
+    """``n_tiles_hint`` only picks the resolution: a hint of 10 over
+    5,000 tiles with 500 queries runs the rings: the size rule reads
+    the tile count the index observes (2.5M pairs, past
+    BRUTE_FORCE_PAIRS), not the 5,000 pairs the hint claims. The rows
+    match the NumPy brute force."""
+    n = 5000
+    rounds = []
+    real_ring = kj._ring_topk
+    monkeypatch.setattr(kj, "_ring_topk", lambda *a: rounds.append(1) or real_ring(*a))
+    tiles = synth.tracker_df(spark, n, seed=13)
+    queries = synth.query_points(500, n, seed=13).assign(k=np.int32(5))
+    got = knn_join(spark, tiles, queries, n_tiles_hint=10).toPandas()
+    assert len(rounds) >= 1
+    exp = _brute_knn(tiles.toPandas(), queries)
+    assert got[["query_id", "rank", "image_id"]].values.tolist() == exp[
+        ["query_id", "rank", "image_id"]
+    ].values.tolist()
+    np.testing.assert_allclose(got["dist_km"].to_numpy(), exp["dist_km"].to_numpy(), rtol=1e-12)
+
+
 @pytest.mark.parametrize("bf_pairs, r_cap", [(1, None), (64 * 13**2, 6)])
 def test_knn_first_shell_capped_never_below_3k_radius(spark, monkeypatch, bf_pairs, r_cap):
     """A large active set (64 queries) against a small BRUTE_FORCE_PAIRS.

@@ -92,9 +92,9 @@ def test_fold_dot_bit_equals_jvm(spark):
 
 
 def test_block_cosine_bit_equals_jvm_fold(spark):
-    """`brute_force_topk` and the IVF cogroup scorer score whole
-    blocks through `_block_cosine_batches` (one outer-product add per
-    dimension). Its contract is the same BIT-identity with the JVM
+    """The request scorer's dense lists and the cogroup scorer score
+    whole blocks through `_block_cosine_batches` (one outer-product
+    add per dimension). Its contract is the same BIT-identity with the JVM
     fold that `_fold_dot` carries — the self-search equality test
     can't prove it alone because both sides of that comparison share
     this kernel. Pin the block kernel's full nc x nq cross (with
@@ -197,10 +197,7 @@ def test_ivf_distributed_probe_identical_to_driver_path(spark):
     probe."""
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     cents = sim.ivf_train(emb, n_centroids=8, iters=2, seed=7)
-    qpdf = emb.where("vec_id < 8").orderBy("vec_id").toPandas()
-    qcents = np.floor(
-        np.stack([np.asarray(v, dtype=np.float64) for v in qpdf.embedding]) * 1000.0 + 0.5
-    ).astype(np.int64)
+    qcents = sim.portable_centroids(emb, 8, "vec_id", "embedding")
     q = emb.where("vec_id < 12").selectExpr("vec_id AS query_id", "embedding")
     for c, quantize in ((cents, False), (qcents, True)):
         index = sim.ivf_index(emb, c, quantize=quantize)
@@ -275,20 +272,85 @@ def test_ivf_corpus_self_search_stays_distributed(spark):
     assert [tuple(r) for r in out.collect()] == [tuple(r) for r in exact.collect()]
 
 
-def test_brute_force_topk_guards_corpus_sized_query_side(spark, monkeypatch):
+def test_brute_force_topk_guards_corpus_sized_query_side(spark, monkeypatch, collect_sizes):
     """The query side broadcasts, so a query table past MAX_QUERIES
-    must raise with a pointer to the bucketed paths (VERDICT r3 item
-    5)."""
+    must raise with a pointer to the bucketed paths, after a collect
+    of at most MAX_QUERIES+1 rows. A query frame without the query id
+    column fails at analysis, before any collect."""
+    from pyspark.errors import AnalysisException
+
     monkeypatch.setattr(sim, "MAX_QUERIES", 32)
     rows = [(i, [float(i % 7), float(i % 5), 1.0]) for i in range(64)]
     emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
     with pytest.raises(ValueError, match="lsh_topk"):
+        sim.brute_force_topk(emb, emb, k=3, qid_col="vec_id")
+    assert collect_sizes == [33]
+    with pytest.raises(AnalysisException):
         sim.brute_force_topk(emb, emb, k=3)
+    assert collect_sizes == [33]
     # under the bound it runs
     q = emb.where(F.col("vec_id") < 4).select(
         F.col("vec_id").alias("query_id"), "embedding"
     )
     assert sim.brute_force_topk(emb, q, k=3).count() == 12
+
+
+@pytest.mark.parametrize("dense", [0, sim.DENSE_BLOCK_PAIRS])
+def test_brute_force_topk_equals_jvm_cross_join(spark, monkeypatch, dense):
+    """brute_force_topk against an independent JVM reference: a
+    crossJoin scored by the `_dot_expr`/`_norm_expr` fold, ranked by
+    row_number over (cosine desc, vec_id asc). Ids, ranks and cosines
+    are equal on adversarial floats spanning 9 orders of magnitude,
+    through the block kernel (every list dense) and the pair kernel
+    (this small a list is below the default DENSE_BLOCK_PAIRS)."""
+    from pyspark.sql import Window
+
+    monkeypatch.setattr(sim, "DENSE_BLOCK_PAIRS", dense)
+    rng = np.random.default_rng(101)
+    nc, nq, dim, k = 23, 11, 37, 8
+    C = rng.standard_normal((nc, dim)) * 10.0 ** rng.integers(-4, 5, size=(nc, dim))
+    Q = rng.standard_normal((nq, dim)) * 10.0 ** rng.integers(-4, 5, size=(nq, dim))
+    corpus = spark.createDataFrame(
+        pd.DataFrame({"vec_id": range(nc), "embedding": [r.tolist() for r in C]})
+    ).repartition(3)
+    q = spark.createDataFrame(
+        pd.DataFrame({"query_id": range(nq), "embedding": [r.tolist() for r in Q]})
+    )
+    got = _rows(sim.brute_force_topk(corpus, q, k=k))
+    w = Window.partitionBy("query_id").orderBy(F.col("c").desc(), F.col("vec_id").asc())
+    ref = (
+        corpus.selectExpr("vec_id", "embedding AS cv")
+        .crossJoin(q.selectExpr("query_id", "embedding AS qv"))
+        .select(
+            "query_id",
+            "vec_id",
+            (
+                oracles._dot_expr("cv", "qv")
+                / (sim._norm_expr("cv") * sim._norm_expr("qv"))
+            ).alias("c"),
+        )
+        .withColumn("rank", F.row_number().over(w))
+        .where(F.col("rank") <= k)
+        .select("query_id", "rank", "vec_id", F.round("c", 6).alias("cosine"))
+        .orderBy("query_id", "rank")
+    )
+    assert len(got) == nq * k
+    assert got == _rows(ref)
+
+
+def test_brute_force_topk_request_sized_driver_action_budget(spark, emb, jobs_launched):
+    """A request-sized brute_force_topk call plus its result collect
+    launches at most 5 Spark jobs, the count of the broadcast block
+    loop this path replaced: the bounded query collect, then the
+    ranked result's stages. An added count() or collect() in the
+    operator fails here."""
+    q = emb.where("vec_id < 12").selectExpr("vec_id AS query_id", "embedding")
+    rows = []
+    jobs = jobs_launched(
+        "brute_budget", lambda: rows.extend(sim.brute_force_topk(emb, q, k=10).collect())
+    )
+    assert len(rows) == 120
+    assert jobs <= 5, jobs
 
 
 def test_lsh_topk_recall_vs_brute_force(spark):

@@ -31,7 +31,7 @@ def test_salted_join_equals_plain(spark):
     plain = sorted((r.uid, r.dv) for r in fact.join(dim, "k").collect())
     salted = sorted(
         (r.uid, r.dv)
-        for r in skew.salted_join(fact, dim, "k", uid="uid", n_salt=8).collect()
+        for r in skew.salted_join(fact, dim, "k", uid="uid", hot=[0], n_salt=8).collect()
     )
     assert plain == salted
 
@@ -53,15 +53,17 @@ def test_skew_stats_autoderives_n_salt(spark):
 
 
 def test_salted_join_auto_equals_plain(spark):
-    """The safe-by-default path: no hot list, no n_salt — both derived
-    from the pre-pass — and the result still equals the plain join."""
+    """The hot set and n_salt come from the skew_stats pre-pass, and
+    the salted join still equals the plain join."""
     fact = _skewed(spark)
     dim = spark.range(0, 97).select(
         F.col("id").alias("k"), (F.col("id") * 10).alias("dv")
     )
     plain = sorted((r.uid, r.dv) for r in fact.join(dim, "k").collect())
+    hot, n_salt = skew.skew_stats(fact, "k")
     auto = sorted(
-        (r.uid, r.dv) for r in skew.salted_join(fact, dim, "k", uid="uid").collect()
+        (r.uid, r.dv)
+        for r in skew.salted_join(fact, dim, "k", uid="uid", hot=hot, n_salt=n_salt).collect()
     )
     assert plain == auto
 
@@ -74,24 +76,18 @@ def test_salt_spreads_hot_key(spark):
     assert [r[skew.SALT_COL] for r in cold] == [0]
 
 
-def test_explicit_hot_default_nsalt_never_disables_salting(spark):
-    """A caller-pinned hot set with default n_salt must get
-    DEFAULT_SALT and skip the pre-pass — deriving n_salt from a table
-    whose OBSERVED counts show no skew would return 1 and silently
-    disable the salting the caller asked for (round-6 review)."""
-    assert skew._resolve_salting(None, "k", [42], None) == ([42], skew.DEFAULT_SALT)
-    assert skew._resolve_salting(None, "k", [42], 4) == ([42], 4)
-
-    # end-to-end: UNskewed fact, explicit hot -> the hot key still
-    # fans out (and the join stays exact)
+def test_explicit_hot_salts_an_unskewed_table(spark):
+    """A caller-pinned hot set salts even a table whose observed
+    counts show no skew: the hot key fans out, and the join stays
+    exact."""
     fact = spark.range(0, 200).selectExpr("id AS uid", "CAST(id % 10 AS INT) AS k")
     dim = spark.range(0, 10).selectExpr("CAST(id AS INT) AS k", "id * 100 AS dv")
-    salted = skew.with_salt(fact, "k", *skew._resolve_salting(None, "k", [3], None), uid="uid")
+    salted = skew.with_salt(fact, "k", [3], 16, uid="uid")
     spread = salted.where(F.col("k") == 3).select(skew.SALT_COL).distinct().count()
     assert spread > 1  # NOT the single-reducer degenerate case
     plain = sorted((r.uid, r.dv) for r in fact.join(dim, "k").collect())
     got = sorted(
         (r.uid, r.dv)
-        for r in skew.salted_join(fact, dim, "k", uid="uid", hot=[3]).collect()
+        for r in skew.salted_join(fact, dim, "k", uid="uid", hot=[3], n_salt=16).collect()
     )
     assert got == plain
